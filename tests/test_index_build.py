@@ -137,16 +137,24 @@ def test_term_stats_bucketed_pushdown(spark, work_dir):
     assert 0 <= b < TERM_STATS_BUCKETS
 
 
-def test_term_stats_write_layout_and_values(spark, work_dir):
+def test_term_stats_write_layout_and_values(spark, work_dir, monkeypatch):
     """Invariants of the cores-wide dictionary write (the explicit
     repartition count that keeps AQE from collapsing the tiny stats
     shuffle to one task): each hash bucket must still land WHOLE in one
-    write task — one file per bucket dir, so the in-bucket (field,
-    term) row-group order the point-lookup pruning relies on survives —
-    and the column-pruned postings read-back must produce term_stats
-    identical to a direct aggregate of the postings table."""
+    write task — one file per bucket dir — with its rows sorted by
+    (field, term), the row-group order the point-lookup pruning relies
+    on; the task count never exceeds the bucket count, however high
+    spark.sql.shuffle.partitions is set; and the column-pruned postings
+    read-back must produce term_stats identical to a direct aggregate
+    of the postings table."""
     import glob
     import os
+    import re
+
+    import pyarrow.parquet as pq
+
+    import yaii_spark.indexer as ix
+    from yaii_spark.storage import TERM_STATS_BUCKETS
 
     idx = f"{work_dir}/ts_wide"
     build_index(
@@ -157,6 +165,32 @@ def test_term_stats_write_layout_and_values(spark, work_dir):
     for d in bucket_dirs:
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
         assert len(files) == 1, f"bucket split across write tasks: {d}"
+        t = pq.read_table(os.path.join(d, files[0]), columns=["field", "term"])
+        keys = list(zip(t.column("field").to_pylist(), t.column("term").to_pylist()))
+        assert keys == sorted(keys), f"bucket rows not (field, term)-sorted: {d}"
+
+    # full recompute under shuffle.partitions far above the bucket
+    # count: the write's exchange is capped at TERM_STATS_BUCKETS tasks
+    plans = []
+    real_write = ix.write_table
+
+    def capturing_write(df, path, **kw):
+        if path.endswith("term_stats"):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_write(df, path, **kw)
+
+    monkeypatch.setattr(ix, "write_table", capturing_write)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(4 * TERM_STATS_BUCKETS))
+    try:
+        ix._write_term_stats_full(
+            spark, idx, spark.read.parquet(os.path.join(idx, "postings"))
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    (plan,) = plans
+    counts = re.findall(r"hashpartitioning\(bucket#\d+, (\d+)\)", plan)
+    assert counts == [str(TERM_STATS_BUCKETS)], plan
     want = {
         (r.field, r.term): (r.df, r.cf)
         for r in spark.read.parquet(os.path.join(idx, "postings"))

@@ -223,38 +223,18 @@ def test_phrase_numpy_matches_exhaustive(docs, terms, slop):
     assert got == want
 
 
-def test_phrase_sliced_transfer_parity(phrase_index, brute, monkeypatch):
-    """Force the sliced-transfer path for EVERY phrase (gates opened)
-    and re-run the whole phrase suite against the exhaustive oracle —
-    the slicing must be invisible to results."""
-    from yaii_spark.queries import executor as X
-
-    monkeypatch.setattr(X, "SELECTIVE_PHRASE_MAX_DF", 1 << 60)
-    monkeypatch.setattr(X, "SELECTIVE_PHRASE_MIN_RATIO", 0)
-    for q in PHRASE_CASES:
-        assert ids(execute_boolean(phrase_index, q)) == brute.evaluate(
-            A.rewrite(q)
-        ), q
-
-
-def test_phrase_slicing_reduces_shipped_bytes(spark, work_dir):
-    """Default gates engage on a skewed corpus (rare term next to a
-    dense one) and the bytes that reach the shuffle drop by >10x: the
-    dense term's position stream is carved to the candidate blocks
-    JVM-side. Results identical to the exhaustive expectation."""
+def test_phrase_rare_next_to_dense(spark, work_dir):
+    """A phrase pairing a rare term with a dense one (the dense term
+    several times in every doc, so its position stream spans many
+    id-blocks): exact and slop results equal the exhaustive
+    expectation."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
-    from yaii_spark.queries import executor as X
     from yaii_spark.synth import PAGES_SCHEMA, render_html
 
     rows = []
     hits = {37, 1200, 1901}
     for i in range(2000):
-        # dense term several times per doc so its position stream has
-        # real bytes; one segment spans 16 id-blocks (2048/128) so the
-        # candidate blocks are a small fraction
         text = "zzdense aa zzdense bb cc zzdense dd" + (
             " zzdense qqrare tail" if i in hits else " word"
         )
@@ -262,40 +242,10 @@ def test_phrase_slicing_reduces_shipped_bytes(spark, work_dir):
             (i, f"https://x/{i}", EPOCH + dt.timedelta(seconds=i),
              render_html(text), text, "en", i)
         )
-    out = f"{work_dir}/slice_idx"
+    out = f"{work_dir}/rare_dense_idx"
     build_index(spark, spark.createDataFrame(rows, PAGES_SCHEMA), out, seg_size=2048)
     cat = IndexCatalog(spark, out)
-    node = A.rewrite(A.phrase(["zzdense", "qqrare"]))
-
-    plan = X._phrase_slice_plan(cat, node)
-    assert plan is not None  # default gates: df(qqrare)=3, ratio 800/3
-    sliced_terms, cand = plan
-    assert ("text", "zzdense") in sliced_terms
-    assert sorted(int(x) for s in cand.values() for x in s) == sorted(hits)
-
-    cols = ["seg_id", "field", "term", "doc_ids_bin", "tfs_bin", "pos_bin",
-            "block_pos_offs", "block_first_ids", "block_tf_offs"]
-    post = cat.postings([("text", "zzdense"), ("text", "qqrare")]).select(*cols)
-    full_bytes = post.agg(F.sum(F.octet_length("pos_bin"))).collect()[0][0]
-    sliced = X._apply_phrase_slicing(post, spark, plan)
-    row = sliced.agg(
-        F.sum(F.coalesce(F.octet_length("pos_bin"), F.lit(0))).alias("kept"),
-        F.sum(
-            F.aggregate(
-                F.coalesce(F.col("_pos_sl"), F.array().cast("array<binary>")),
-                F.lit(0),
-                lambda acc, x: acc + F.octet_length(x),
-            )
-        ).alias("shipped"),
-    ).collect()[0]
-    assert (row.kept or 0) + (row.shipped or 0) < full_bytes / 4, (
-        row.kept, row.shipped, full_bytes
-    )
-
-    # end-to-end through execute_boolean with DEFAULT gates
-    got = ids(execute_boolean(cat, node))
-    assert got == hits
-    # slop over the sliced path too
+    assert ids(execute_boolean(cat, A.phrase(["zzdense", "qqrare"]))) == hits
     assert ids(execute_boolean(cat, A.phrase(["zzdense", "qqrare"], slop=2))) == hits
 
 

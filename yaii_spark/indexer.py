@@ -468,8 +468,12 @@ def _filter_by_seg_ids(df: DataFrame, segs: list[int]) -> DataFrame:
 def _labeled(spark: SparkSession, desc: str, fn, *args, **kwargs):
     """Run fn under a thread-local Spark job description (guide §1.3:
     label your jobs). The build fans its independent writes out over a
-    thread pool; descriptions are per-thread (pinned-thread mode), so
-    each concurrent job carries its own attribution in the UI/REST."""
+    thread pool, so each concurrent job carries its own attribution in
+    the UI/REST — but only in pinned-thread mode
+    (``PYSPARK_PIN_THREAD=true``, the default since Spark 3.2), where
+    every Python thread maps to its own JVM thread. Without pinning the
+    pool's threads share JVM threads and concurrent descriptions can
+    overwrite or clear each other (labels only; results are unaffected)."""
     sc = spark.sparkContext
     sc.setJobDescription(desc)
     try:
@@ -544,13 +548,15 @@ def _write_term_stats_full(spark: SparkSession, out_dir: str, post_all: DataFram
     The stats_folding marker brackets the (term_stats write → ledger
     rewrite) pair: a crash in between leaves the marker, and the next
     build repeats this full path instead of double-folding."""
-    from yaii_spark.storage import term_stats_bucket_col
+    from yaii_spark.storage import TERM_STATS_BUCKETS, term_stats_bucket_col
 
     ts_df = (
         post_all.groupBy("field", "term")
         .agg(F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf"))
         .withColumn("bucket", term_stats_bucket_col())
-        # EXPLICIT task count (spark.sql.shuffle.partitions — several
+        # EXPLICIT task count (spark.sql.shuffle.partitions, capped at
+        # TERM_STATS_BUCKETS like the fold path's touched-bucket bound —
+        # tasks past the bucket count would write nothing; several
         # buckets per task is fine, pruning is by directory): a bare
         # repartition("bucket") lets AQE coalesce this tiny-bytes
         # shuffle to ONE task, which then writes all 256 bucket dirs
@@ -562,7 +568,11 @@ def _write_term_stats_full(spark: SparkSession, out_dir: str, post_all: DataFram
         # partitioned writer's required ordering, so no writer-side
         # re-sort destroys the (field, term) row-group order.
         .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "bucket"
+            min(
+                int(spark.conf.get("spark.sql.shuffle.partitions")),
+                TERM_STATS_BUCKETS,
+            ),
+            "bucket",
         )
         .sortWithinPartitions("bucket", "field", "term")
     )
@@ -1355,11 +1365,11 @@ def merge_segments(
     meta = cat_in.seg_meta()
     post = cat_in.postings()
 
-    # deployment guard (VERDICT r4: measured 2× phrase-eval slowdown at
-    # 4 segments / 8 cores): per-term query stages (phrase position
-    # decode, BM25 block decode) parallelize BY SEGMENT, so merging
-    # below the core count caps their task count. Never binds at scale
-    # (10^6 segments / 1000 executors); warns on over-compaction.
+    # deployment guard (measured 2× phrase-eval slowdown at 4 segments
+    # / 8 cores): every boolean, phrase and BM25 query runs one task per
+    # segment, so merging below the core count caps their task count.
+    # Never binds at scale (10^6 segments / 1000 executors); warns on
+    # over-compaction.
     import warnings
 
     n_before = meta.select("seg_id").distinct().count()
@@ -1370,11 +1380,9 @@ def merge_segments(
     if n_after_est < par:
         warnings.warn(
             f"merge_segments: factor {factor} leaves {n_after_est} segments "
-            f"< defaultParallelism ({par}); BM25 stages parallelize "
-            f"by segment, so this caps their task count — consider factor "
-            f"≤ {max(1, n_before // par)}. Boolean/phrase queries "
-            f"auto-compensate via doc-id-range splitting "
-            f"(executor._range_split_plan)",
+            f"< defaultParallelism ({par}); boolean, phrase and BM25 "
+            f"queries run one task per segment, so this caps their task "
+            f"count — consider factor ≤ {max(1, n_before // par)}",
             RuntimeWarning,
             stacklevel=2,
         )

@@ -26,33 +26,18 @@ term ordering generalize the reference's cost-sorted conjunction
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from yaii_spark.codec import delta_decode_blocked, varint_decode
-from yaii_spark.queries.executor import (
-    _bhi,
-    _blo,
-    _range_sliced_arr,
-    _range_sliced_bin,
-    _range_split_plan,
-    _tomb_with_rid,
-    _with_range_spans,
-)
+from yaii_spark.queries.executor import apply_per_segment
 from yaii_spark.storage import IndexCatalog
 
 
 def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-
-#: minimum estimated postings per range task for the BM25 range split —
-#: below this the vectorized per-segment pass is already fast enough
-#: that the split's replicate+slice overhead loses (measured at 1M docs)
-RANGE_SPLIT_MIN_POSTINGS = 1 << 20
 
 
 _EMPTY = lambda: pd.DataFrame(
@@ -182,7 +167,6 @@ def _score_segment_pruned(
     k: int,
     block: int,
     deleted: np.ndarray | None = None,
-    rng: tuple[int, int] | None = None,
 ) -> pd.DataFrame:
     """MaxScore + block-max pruned top-k (mode='or', rank-safe, LAZY).
 
@@ -209,9 +193,7 @@ def _score_segment_pruned(
         pdf["block_id_offs"], pdf["block_tf_offs"], pdf["block_first_ids"],
         pdf["df_local"],
     ):
-        # a range-sliced row can carry zero blocks (term absent from
-        # this doc-id range): contributes nothing, skip it
-        if t in idfs and fi_ is not None and len(fi_):
+        if t in idfs:
             lp = _LazyPostings(ids_b, tfs_b, io_, to_, fi_, n_, block, base)
             term_rows[t] = (lp, np.asarray(bmax, dtype=np.float64))
     if not term_rows:
@@ -223,14 +205,6 @@ def _score_segment_pruned(
     )  # suffix[i] = Σ ub of order[i:]
     scores = np.zeros(n_docs, dtype=np.float64)
     dead = np.zeros(n_docs, dtype=bool)
-    if rng is not None:
-        # range task: boundary blocks spill past [lo, hi) — kill the
-        # out-of-range docs upfront so every downstream phase (θ,
-        # candidates, winners) is range-local and sibling tasks never
-        # emit the same doc
-        lo, hi = max(0, rng[0]), min(rng[1], n_docs)
-        dead[:lo] = True
-        dead[hi:] = True
     if deleted is not None:
         dead[deleted - base] = True
     touched: list[np.ndarray] = []
@@ -338,7 +312,6 @@ def _score_segment(
     mode: str,
     block: int,
     deleted: np.ndarray | None = None,
-    rng: tuple[int, int] | None = None,
 ) -> pd.DataFrame:
     n_docs = int(pdf["n_docs"].iloc[0])
     base = int(pdf["base_doc_id"].iloc[0])
@@ -347,9 +320,6 @@ def _score_segment(
     hit_count = np.zeros(n_docs, dtype=np.int32)
     rows = {t: (ids_b, tfs_b) for t, ids_b, tfs_b in zip(pdf["term"], pdf["doc_ids_bin"], pdf["tfs_bin"])}
     n_terms = 0
-    lo_hi = None
-    if rng is not None:
-        lo_hi = (max(0, rng[0]), min(rng[1], n_docs))
     for term in sorted(rows):  # fixed order → deterministic float sums
         if term not in idfs:
             continue
@@ -357,11 +327,6 @@ def _score_segment(
         ids_b, tfs_b = rows[term]
         ids = (delta_decode_blocked(ids_b or b"", block).astype(np.int64) - base)
         tfs = varint_decode(tfs_b or b"").astype(np.float64)
-        if lo_hi is not None:
-            # range-sliced streams: boundary blocks spill past the
-            # range — mask so each doc scores in exactly one task
-            s, e = np.searchsorted(ids, lo_hi)
-            ids, tfs = ids[s:e], tfs[s:e]
         norm = tfs / (tfs + k1 * (1.0 - b + b * dls[ids] / avgdl))
         scores[ids] += idfs[term] * norm
         hit_count[ids] += 1
@@ -382,59 +347,6 @@ def _score_segment(
         cand, s = cand[keep], s[keep]
     order = np.lexsort((cand, -s))[:k]
     return pd.DataFrame({"doc_id": (cand[order] + base).astype(np.int64), "score": s[order]})
-
-
-def _apply_range_split_bm25(
-    joined, spark, r: int, w: int, use_prune: bool, block: int
-):
-    """Replicate each segment's posting rows across R doc-id ranges and
-    byte-slice the id/tf streams to each range's block interval (shared
-    primitives with the boolean/phrase splitter). On the pruned path
-    the per-block metadata (block_maxes, first_ids, byte offsets) is
-    sliced/rebased alongside so `_LazyPostings` sees a self-contained
-    stream; df_local becomes the sliced stream's posting count (its
-    only consumer). dl_bin replicates ×R per segment — acceptable in
-    the few-segment regime this path is gated to, and the scorers kill
-    boundary-block spill so each doc scores in exactly one task."""
-    out = _with_range_spans(joined, spark, r, w)
-    out = (
-        out.withColumn(
-            "_ids_sl", _range_sliced_bin(F.col("doc_ids_bin"), F.col("block_id_offs"))
-        ).withColumn(
-            "_tfs_sl", _range_sliced_bin(F.col("tfs_bin"), F.col("block_tf_offs"))
-        )
-    )
-    drop = ["_ids_sl", "_tfs_sl", "_b"]
-    if use_prune:
-        n_sliced = F.greatest(
-            F.lit(0),
-            F.least(F.col("df_local").cast("long"), _bhi().cast("long") * block)
-            - _blo().cast("long") * block,
-        )
-        out = (
-            out.withColumn("_bm_sl", _range_sliced_arr(F.col("block_maxes")))
-            .withColumn("_io_sl", _range_sliced_arr(F.col("block_id_offs"), rebase=True))
-            .withColumn("_to_sl", _range_sliced_arr(F.col("block_tf_offs"), rebase=True))
-            .withColumn("_fi_sl", _range_sliced_arr(F.col("block_first_ids")))
-            .withColumn("_df_sl", F.when(F.col("_b").isNotNull(), n_sliced))
-            .withColumn("block_maxes", F.col("_bm_sl"))
-            .withColumn("block_id_offs", F.col("_io_sl"))
-            .withColumn("block_tf_offs", F.col("_to_sl"))
-            .withColumn("block_first_ids", F.col("_fi_sl"))
-            .withColumn("df_local", F.col("_df_sl"))
-        )
-        drop += ["_bm_sl", "_io_sl", "_to_sl", "_fi_sl", "_df_sl"]
-    else:
-        drop += [
-            c
-            for c in ("block_id_offs", "block_tf_offs", "block_first_ids")
-            if c in joined.columns
-        ]
-    return (
-        out.withColumn("doc_ids_bin", F.col("_ids_sl"))
-        .withColumn("tfs_bin", F.col("_tfs_sl"))
-        .drop(*drop)
-    )
 
 
 def bm25_topk(
@@ -474,88 +386,31 @@ def bm25_topk(
         min_df = min(df for (df, _cf) in tstats.values())
         if min_df / max(stats.n_docs, 1) > 0.3:
             use_prune = False
-    # doc-id-range fan-out for merged / few-segment indexes (same gate
-    # as boolean/phrase eval; None at cluster scale, where segments
-    # already outnumber executors) — plus a work gate: BM25 scoring is
-    # one vectorized pass over the query terms' postings, so a range
-    # task only pays off when its share of postings is large enough to
-    # amortize the replicate+slice overhead (the 1M-doc probe measured
-    # the split 0.1-0.2 s SLOWER on ~70k-posting range tasks while
-    # phrase eval gained 2-3×). Forced YAII_RANGE_SPLIT skips the work
-    # gate so tests can exercise the path on tiny fixtures.
-    range_plan = _range_split_plan(cat)
-    if range_plan is not None and not os.environ.get(
-        "YAII_RANGE_SPLIT", ""
-    ).strip().isdigit():
-        n_segs = max(1, -(-stats.n_docs // stats.seg_size))
-        per_task = sum(df for (df, _cf) in tstats.values()) / n_segs / range_plan[0]
-        if per_task < RANGE_SPLIT_MIN_POSTINGS:
-            range_plan = None
 
     cols = ["seg_id", "term", "doc_ids_bin", "tfs_bin"] + (
         ["block_maxes", "block_id_offs", "block_tf_offs", "block_first_ids", "df_local"]
         if prune
-        else (
-            # the slicer needs the block geometry even on the exact path
-            ["block_id_offs", "block_tf_offs", "block_first_ids"]
-            if range_plan
-            else []
-        )
+        else []
     )
     post = cat.postings([(field, t) for t in sorted(idfs)]).select(*cols)
     meta = cat.seg_meta().select(
         "seg_id", "n_docs", "base_doc_id", "dl_bin", "avgdl_built"
     )
     joined = post.join(meta, "seg_id", "inner")
-    if range_plan is not None:
-        joined = _apply_range_split_bm25(
-            joined, spark, range_plan[0], range_plan[1], use_prune, block
-        )
-    tomb = cat.tombstones()
 
     def score(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
         if pdf.empty:
             return _EMPTY()
-        rng = None
-        if range_plan is not None:
-            rid = int(pdf["_rid"].iloc[0])
-            rng = (rid * range_plan[1], (rid + 1) * range_plan[1])
         # block_maxes are upper bounds ONLY under the avgdl they were
         # computed with (norm grows with avgdl): a segment appended by
         # the streaming sink after the corpus avgdl drifted scores via
         # the exact path — rank-safe always, pruned again once a merge
         # recomputes its bounds with the current corpus avgdl
         if use_prune and float(pdf["avgdl_built"].iloc[0]) == avgdl:
-            return _score_segment_pruned(
-                pdf, idfs, k1, b, avgdl, k, block, deleted, rng
-            )
-        return _score_segment(
-            pdf, idfs, k1, b, avgdl, k, mode, block, deleted, rng
-        )
+            return _score_segment_pruned(pdf, idfs, k1, b, avgdl, k, block, deleted)
+        return _score_segment(pdf, idfs, k1, b, avgdl, k, mode, block, deleted)
 
-    keys = ["seg_id"] + (["_rid"] if range_plan is not None else [])
-    if tomb is None:
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score(pdf, None)
-
-        per_seg = joined.groupBy(*keys).applyInPandas(fn, schema="doc_id long, score double")
-    else:
-        # cogrouped tombstones: shuffle-partitioned per segment, never a
-        # collected array row / driver broadcast (scale: a segment can
-        # hold millions of deletes)
-        def fn2(pdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-            deleted = tpdf["doc_id"].to_numpy(dtype=np.int64) if len(tpdf) else None
-            return score(pdf, deleted)
-
-        tomb_keyed = tomb.select("seg_id", "doc_id")
-        if range_plan is not None:
-            tomb_keyed = _tomb_with_rid(tomb_keyed, stats.seg_size, range_plan[1])
-        per_seg = (
-            joined.groupBy(*keys)
-            .cogroup(tomb_keyed.groupBy(*keys))
-            .applyInPandas(fn2, schema="doc_id long, score double")
-        )
+    per_seg = apply_per_segment(cat, joined, score, "doc_id long, score double")
     return per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -634,13 +489,11 @@ def bm25f_topk(
     doesn't store; the shared-text-dl norm is the index's defined
     semantics, see build_index docstring).
 
-    Disjunctive, exact path (no MaxScore/range-split fan-out — the
-    combined per-(field,term) bounds those optimizations need aren't
-    materialized; at cluster scale segments outnumber executors so the
-    per-segment parallelism is already there). Same per-segment
-    top-k + global TakeOrderedAndProject merge as bm25_topk; combined
-    per-segment top-k is rank-safe because each segment task sees BOTH
-    fields' postings for its segment."""
+    Disjunctive, exact path (no MaxScore — the combined
+    per-(field,term) bounds it needs aren't materialized). Same
+    per-segment top-k + global TakeOrderedAndProject merge as
+    bm25_topk; combined per-segment top-k is rank-safe because each
+    segment task sees BOTH fields' postings for its segment."""
     spark = cat.spark
     stats = cat.corpus_stats()
     uniq = sorted(set(terms))
@@ -660,37 +513,13 @@ def bm25f_topk(
     )
     meta = cat.seg_meta().select("seg_id", "n_docs", "base_doc_id", "dl_bin")
     joined = post.join(meta, "seg_id", "inner")
-    tomb = cat.tombstones()
 
-    if tomb is None:
+    def score(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
+        if pdf.empty:
+            return _EMPTY()
+        return _score_segment_fielded(pdf, idfs, w, k1, b, avgdl, k, block, deleted)
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return _EMPTY()
-            return _score_segment_fielded(
-                pdf, idfs, w, k1, b, avgdl, k, block, None
-            )
-
-        per_seg = joined.groupBy("seg_id").applyInPandas(
-            fn, schema="doc_id long, score double"
-        )
-    else:
-
-        def fn2(pdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return _EMPTY()
-            deleted = (
-                tpdf["doc_id"].to_numpy(dtype=np.int64) if len(tpdf) else None
-            )
-            return _score_segment_fielded(
-                pdf, idfs, w, k1, b, avgdl, k, block, deleted
-            )
-
-        per_seg = (
-            joined.groupBy("seg_id")
-            .cogroup(tomb.select("seg_id", "doc_id").groupBy("seg_id"))
-            .applyInPandas(fn2, schema="doc_id long, score double")
-        )
+    per_seg = apply_per_segment(cat, joined, score, "doc_id long, score double")
     return per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -838,15 +667,7 @@ def bm25_topk_batch(
     contribution arrays across queries, per-(segment, query) top-k in
     the worker, then ONE window-ranked global merge partitioned by
     query_id. Per-query output is rank- AND score-identical to
-    bm25_topk (same sorted-term summation; pinned in pytest).
-
-    Known limitation (shared with bm25f_topk): unlike bm25_topk, this
-    path does not apply the over-compaction doc-id-range fan-out
-    (_apply_range_split_bm25), so on an index merged below
-    defaultParallelism segments it parallelizes only by segment. The
-    batch workload itself usually restores utilization (many queries
-    per task); wire the range split in if a merged index must serve
-    small batches."""
+    bm25_topk (same sorted-term summation; pinned in pytest)."""
     from pyspark.sql import Window
 
     spark = cat.spark
@@ -874,42 +695,20 @@ def bm25_topk_batch(
     )
     meta = cat.seg_meta().select("seg_id", "n_docs", "base_doc_id", "dl_bin")
     joined = post.join(meta, "seg_id", "inner")
-    tomb = cat.tombstones()
-    schema = "query_id string, doc_id long, score double"
 
-    if tomb is None:
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame(
-                    {"query_id": [], "doc_id": [], "score": []}
-                ).astype({"doc_id": "int64", "score": "float64"})
-            qterms_b, idfs_b = qb.value
-            return _score_segment_batch(
-                pdf, qterms_b, idfs_b, k1, b, avgdl, k, mode, block, None
-            )
-
-        per_seg = joined.groupBy("seg_id").applyInPandas(fn, schema=schema)
-    else:
-
-        def fn2(pdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame(
-                    {"query_id": [], "doc_id": [], "score": []}
-                ).astype({"doc_id": "int64", "score": "float64"})
-            deleted = (
-                tpdf["doc_id"].to_numpy(dtype=np.int64) if len(tpdf) else None
-            )
-            qterms_b, idfs_b = qb.value
-            return _score_segment_batch(
-                pdf, qterms_b, idfs_b, k1, b, avgdl, k, mode, block, deleted
-            )
-
-        per_seg = (
-            joined.groupBy("seg_id")
-            .cogroup(tomb.select("seg_id", "doc_id").groupBy("seg_id"))
-            .applyInPandas(fn2, schema=schema)
+    def score(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
+        if pdf.empty:
+            return pd.DataFrame(
+                {"query_id": [], "doc_id": [], "score": []}
+            ).astype({"doc_id": "int64", "score": "float64"})
+        qterms_b, idfs_b = qb.value
+        return _score_segment_batch(
+            pdf, qterms_b, idfs_b, k1, b, avgdl, k, mode, block, deleted
         )
+
+    per_seg = apply_per_segment(
+        cat, joined, score, "query_id string, doc_id long, score double"
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )

@@ -24,8 +24,6 @@ a stage.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -116,55 +114,6 @@ class _LazyPositions:
             sel = np.flatnonzero(bxs == bx)
             k = idxs[sel] - bx * self.block
             pieces.append(_ragged_gather(vals, starts[k], counts[sel]))
-        flat = np.concatenate(pieces) if pieces else np.empty(0, dtype=np.int64)
-        return flat, counts
-
-
-class _SparsePositions:
-    """_LazyPositions over a row whose position stream was SLICED to
-    the candidate blocks JVM-side before the shuffle (the selective-
-    phrase transfer path): only `blocks[i]`'s tf/pos byte slices ever
-    crossed the Arrow boundary. Candidates are guaranteed to fall in
-    shipped blocks (they are a subset of the slicer term's docs, whose
-    blocks defined the slice)."""
-
-    __slots__ = ("ids", "block", "_by_block", "_cache")
-
-    def __init__(self, ids, blocks, tf_slices, pos_slices, block):
-        self.ids = ids  # local doc ids, sorted (full decode — ids ship whole)
-        self.block = int(block)
-        self._by_block = {
-            int(b): (tf, po) for b, tf, po in zip(blocks, tf_slices, pos_slices)
-        }
-        self._cache: dict[int, tuple] = {}
-        for _, po in self._by_block.items():
-            POS_DECODE_STATS["bytes_total"] += len(po)
-        POS_DECODE_STATS["blocks_total"] += len(self._by_block)
-
-    def _decode_block(self, bx: int) -> tuple:
-        got = self._cache.get(bx)
-        if got is None:
-            from yaii_spark.codec import decode_positions_flat, varint_decode
-
-            tf_b, pos_b = self._by_block[bx]
-            tfs = varint_decode(tf_b).astype(np.int64)
-            vals, starts = decode_positions_flat(pos_b, tfs)
-            got = self._cache[bx] = (vals, starts, tfs)
-            POS_DECODE_STATS["bytes_decoded"] += len(pos_b)
-            POS_DECODE_STATS["blocks_decoded"] += 1
-        return got
-
-    def flat_for(self, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        idxs = np.searchsorted(self.ids, cand)
-        bxs = idxs // self.block
-        counts = np.zeros(len(cand), dtype=np.int64)
-        pieces = []
-        for bx in np.unique(bxs):
-            vals, starts, tfs = self._decode_block(int(bx))
-            sel = np.flatnonzero(bxs == bx)
-            k = idxs[sel] - bx * self.block
-            counts[sel] = tfs[k]
-            pieces.append(_ragged_gather(vals, starts[k], tfs[k]))
         flat = np.concatenate(pieces) if pieces else np.empty(0, dtype=np.int64)
         return flat, counts
 
@@ -397,283 +346,42 @@ def _needs_universe(node: A.Node) -> bool:
     return False
 
 
-#: selective-phrase sliced-transfer gates (driver-side, from global
-#: term stats): the slicer term's df bound, and how much denser the
-#: densest phrase term must be for slicing to pay for itself
-SELECTIVE_PHRASE_MAX_DF = 1 << 16
-SELECTIVE_PHRASE_MIN_RATIO = 4
+def apply_per_segment(
+    cat: IndexCatalog, joined: DataFrame, fn, schema: str
+) -> DataFrame:
+    """Run ``fn(pdf, deleted)`` in one ``applyInPandas`` task per
+    segment of `joined` (grouped by seg_id) — the single execution
+    shape of every boolean, phrase and BM25 query. `deleted` is the
+    segment's tombstoned GLOBAL doc ids (int64 array) or None.
 
+    Tombstones arrive COGROUPED per segment — shuffle-partitioned like
+    any other table, never collected into one array row or broadcast
+    (a segment with millions of deletes would blow both).
+    A segment with tombstones but no `joined` rows yields an empty
+    `pdf`; `fn` must handle it."""
+    tomb = cat.tombstones()
+    if tomb is None:
 
-def _phrase_slice_plan(cat: IndexCatalog, node: A.Node):
-    """Decide the sliced-transfer phrase path (driver-side, from the
-    memoized term dictionary): when a phrase contains a RARE term
-    (df ≤ SELECTIVE_PHRASE_MAX_DF) next to much denser ones, phrase
-    candidates are a subset of the rare term's docs — so the dense
-    terms' tf/position bytes only matter inside the blocks holding
-    those docs, and everything else can be dropped BEFORE the shuffle.
-    Returns (sliced_terms, {seg_id: global candidate ids}) or None.
-    The candidate collect is bounded by the df gate (≤ 65k ids — a
-    dictionary-lookup-scale driver job, never corpus-sized)."""
-    phrases = _collect_phrases(node)
-    if not phrases:
-        return None
-    stats = cat.term_stats_for(
-        sorted({(p.field_name, t) for p in phrases for t in p.terms})
-    )
-    slicers: set = set()
-    sliced_phrases = []
-    for p in phrases:
-        fts = [(p.field_name, t) for t in set(p.terms)]
-        if any(ft not in stats for ft in fts):
-            continue  # absent term — upstream pruning empties the phrase
-        dfs = {ft: stats[ft][0] for ft in fts}
-        mn = min(dfs, key=dfs.get)
-        if (
-            dfs[mn] <= SELECTIVE_PHRASE_MAX_DF
-            and max(dfs.values()) >= SELECTIVE_PHRASE_MIN_RATIO * max(dfs[mn], 1)
-        ):
-            slicers.add(mn)
-            sliced_phrases.append(p)
-    if not sliced_phrases:
-        return None
-    sliced_terms = {
-        (p.field_name, t) for p in sliced_phrases for t in p.terms
-    }
-    # a term an UNSLICED phrase also needs must keep its full stream
-    full_needed = {
-        (p.field_name, t)
-        for p in phrases
-        if p not in sliced_phrases
-        for t in p.terms
-    }
-    sliced_terms -= full_needed
-    if not sliced_terms:
-        return None
-    block = cat.corpus_stats().block_size
-    rows = cat.postings(sorted(slicers)).select("seg_id", "doc_ids_bin").collect()
-    per_seg: dict[int, list] = {}
-    for r in rows:
-        ids = delta_decode_blocked(r.doc_ids_bin, block).astype(np.int64)
-        per_seg.setdefault(int(r.seg_id), []).append(ids)
-    cand = {s: np.unique(np.concatenate(v)) for s, v in per_seg.items()}
-    return sliced_terms, cand
+        def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
+            return fn(pdf, None)
 
+        return joined.groupBy("seg_id").applyInPandas(per_segment, schema=schema)
 
-def _apply_phrase_slicing(post: DataFrame, spark, slice_plan) -> DataFrame:
-    """JVM-side per-block byte slicing for the sliced-transfer path:
-    a tiny vectorized UDF maps each row's block_first_ids against the
-    segment's candidate ids (searchsorted — the interpreted HOF form
-    measured ~1 s/row and lost), then Catalyst substr() carves the
-    tf/pos byte ranges of exactly those blocks. Sliced rows null their
-    full streams; everything else is untouched."""
-    sliced_terms, cand_map = slice_plan
-    cand_df = spark.createDataFrame(
-        [(int(s), [int(x) for x in ids]) for s, ids in cand_map.items()]
-        or [(int(-1), [])],
-        "seg_id long, _cand array<long>",
-    )
-    cond = None
-    for f, t in sorted(sliced_terms):
-        c = (F.col("field") == f) & (F.col("term") == t)
-        cond = c if cond is None else (cond | c)
-
-    @F.pandas_udf("array<int>")
-    def nb_udf(fids: pd.Series, cands: pd.Series) -> pd.Series:
-        out = []
-        for fid, c in zip(fids, cands):
-            if fid is None or c is None or len(c) == 0:
-                out.append([])
-                continue
-            fa = np.asarray(fid, dtype=np.int64)
-            ca = np.asarray(c, dtype=np.int64)
-            bx = np.searchsorted(fa, ca, side="right") - 1
-            out.append([int(x) for x in np.unique(bx[bx >= 0])])
-        return pd.Series(out, index=fids.index, dtype=object)
-
-    def _slice(bin_col, offs_col):
-        # try_element_at: the last block's upper bound falls off the
-        # offsets array (→ NULL → stream end); plain element_at throws
-        # under Spark 4's ANSI default
-        return F.transform(
-            F.col("_nb"),
-            lambda b: bin_col.substr(
-                F.element_at(offs_col, b + 1) + 1,
-                F.coalesce(
-                    F.try_element_at(offs_col, b + 2), F.octet_length(bin_col)
-                )
-                - F.element_at(offs_col, b + 1),
-            ),
-        )
+    def per_segment_tomb(pdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
+        deleted = tpdf["doc_id"].to_numpy(dtype=np.int64) if len(tpdf) else None
+        return fn(pdf, deleted)
 
     return (
-        post.join(F.broadcast(cand_df), "seg_id", "left")
-        .withColumn(
-            "_nb",
-            F.when(cond, nb_udf(F.col("block_first_ids"), F.col("_cand"))),
-        )
-        .withColumn(
-            "_tf_sl", F.when(cond, _slice(F.col("tfs_bin"), F.col("block_tf_offs")))
-        )
-        .withColumn(
-            "_pos_sl", F.when(cond, _slice(F.col("pos_bin"), F.col("block_pos_offs")))
-        )
-        .withColumn("tfs_bin", F.when(~cond, F.col("tfs_bin")))
-        .withColumn("pos_bin", F.when(~cond, F.col("pos_bin")))
-        .withColumn("block_pos_offs", F.when(~cond, F.col("block_pos_offs")))
-        .drop("_cand", "block_first_ids", "block_tf_offs")
+        joined.groupBy("seg_id")
+        .cogroup(tomb.select("seg_id", "doc_id").groupBy("seg_id"))
+        .applyInPandas(per_segment_tomb, schema=schema)
     )
-
-
-#: a doc-id range should span at least this many id-blocks, else the
-#: per-range boundary-block decode overhead outweighs the parallelism
-RANGE_SPLIT_MIN_BLOCKS = 4
-
-#: target task waves when the split engages: R is sized for
-#: WAVES × defaultParallelism total (seg, range) tasks, not one task
-#: per core — the 1M merged-index probe measured dense slop=2 at
-#: 11.2 s with exactly-one-wave tasks vs 3.5-4.8 s at 4 waves (finer
-#: tasks pack stragglers; candidate skew between doc-id ranges is
-#: invisible to the planner), while 16 waves regressed to 10.5 s as
-#: per-row replication overhead caught up
-RANGE_SPLIT_WAVES = 4
-
-
-def _range_split_plan(cat: IndexCatalog) -> tuple[int, int] | None:
-    """Doc-id-range fan-out for merged / few-segment indexes. The
-    per-segment evaluation task is the unit of parallelism, so an index
-    merged down to fewer segments than cores leaves cores idle (the
-    round-4 1M probe measured dense phrases 2× slower at 4 segments /
-    8 cores). When ``n_segs < defaultParallelism``, split every segment
-    into R contiguous LOCAL doc-id ranges of width W and evaluate
-    (seg_id, range) groups independently: v5 id-blocks restart their
-    delta encoding absolutely at block boundaries and every stream
-    carries per-block byte offsets, so each range maps to a contiguous
-    block interval whose byte span decodes standalone (boundary blocks
-    overlap two ranges; the worker masks decoded ids to the range).
-
-    Driver-side and job-free — n_segs comes from corpus_stats geometry
-    (an underfull-append underestimate only raises R, which is benign).
-    Returns (R, W), or None for the default per-segment path — which is
-    what a 1000-executor cluster over 10^6 segments always takes (the
-    split never engages once segments outnumber cores). R is sized for
-    RANGE_SPLIT_WAVES waves of tasks, not one task per core — see the
-    constant's note. ``YAII_RANGE_SPLIT=0`` disables; an integer forces R
-    (tests use this to exercise the path on tiny fixtures)."""
-    env = os.environ.get("YAII_RANGE_SPLIT", "").strip().lower()
-    if env in ("0", "off", "false"):
-        return None
-    cs = cat.corpus_stats()
-    n_segs = max(1, -(-cs.n_docs // cs.seg_size))
-    if env.isdigit():
-        r = int(env)
-    else:
-        par = cat.spark.sparkContext.defaultParallelism
-        if n_segs >= par:
-            return None
-        r = -(-RANGE_SPLIT_WAVES * par // n_segs)
-        avg = -(-cs.n_docs // n_segs)
-        r = min(r, -(-avg // (RANGE_SPLIT_MIN_BLOCKS * cs.block_size)))
-    if r < 2:
-        return None
-    return r, -(-cs.seg_size // r)
-
-
-def _with_range_spans(joined: DataFrame, spark, r: int, w: int) -> DataFrame:
-    """crossJoin the R-row range table and compute ``_b = [b_lo, b_hi)``
-    — the contiguous block interval each posting row contributes to its
-    range — via a tiny vectorized searchsorted over block_first_ids.
-    Shared by the boolean/phrase and BM25 range-split paths."""
-    rng = spark.range(r).select(F.col("id").alias("_rid"))
-    out = joined.crossJoin(F.broadcast(rng))
-    lo_g = F.col("base_doc_id") + F.col("_rid") * F.lit(w)
-
-    @F.pandas_udf("array<int>")
-    def span_udf(bfi: pd.Series, los: pd.Series) -> pd.Series:
-        res = []
-        for b, lo in zip(bfi, los):
-            if b is None or len(b) == 0:
-                res.append(None)
-                continue
-            ba = np.asarray(b, dtype=np.int64)
-            b_lo = max(0, int(np.searchsorted(ba, lo, side="right")) - 1)
-            b_hi = int(np.searchsorted(ba, lo + w, side="left"))
-            res.append([b_lo, max(b_lo, b_hi)])
-        return pd.Series(res, index=bfi.index, dtype=object)
-
-    return out.withColumn("_b", span_udf(F.col("block_first_ids"), lo_g))
-
-
-# block-interval bounds read from the `_b` column _with_range_spans
-# added (plain Column factories — built lazily because constructing a
-# Column requires an active SparkContext)
-def _blo():
-    return F.element_at(F.col("_b"), 1)
-
-
-def _bhi():
-    return F.element_at(F.col("_b"), 2)
-
-
-def _range_sliced_bin(bin_col, offs_col):
-    """Byte span of blocks [b_lo, b_hi) — Catalyst substr, same shape
-    as the selective-phrase slicer. try_element_at: the last block's
-    upper bound falls off the offsets array (→ NULL → stream end)."""
-    start = F.element_at(offs_col, _blo() + 1)
-    end = F.coalesce(F.try_element_at(offs_col, _bhi() + 1), F.octet_length(bin_col))
-    return F.when(
-        F.col("_b").isNotNull() & bin_col.isNotNull() & offs_col.isNotNull(),
-        bin_col.substr(start + 1, end - start),
-    )
-
-
-def _range_sliced_arr(arr_col, rebase: bool = False):
-    """Per-block metadata array restricted to blocks [b_lo, b_hi);
-    rebase=True additionally subtracts the first kept entry (byte
-    offsets must be relative to the sliced stream's start)."""
-    sl = F.slice(arr_col, _blo() + 1, _bhi() - _blo())
-    if rebase:
-        sl = F.transform(sl, lambda x: x - F.element_at(arr_col, _blo() + 1))
-    return F.when(F.col("_b").isNotNull() & arr_col.isNotNull(), sl)
-
-
-def _tomb_with_rid(tomb: DataFrame, seg_size: int, w: int) -> DataFrame:
-    """Route each tombstone to its doc's range task (the docID
-    invariant: doc_id = seg_id * seg_size + local)."""
-    return tomb.withColumn(
-        "_rid",
-        F.floor((F.col("doc_id") % F.lit(seg_size)) / F.lit(w)).cast("long"),
-    )
-
-
-def _apply_range_split(
-    joined: DataFrame, spark, r: int, w: int, want_pos: bool
-) -> DataFrame:
-    """Replicate each segment's posting rows across R doc-id ranges and
-    slice every stream to the range's block interval JVM-side, so a
-    range task ships and decodes only its own blocks' bytes (total
-    shuffled bytes stay ≈ the unsplit stream — each block lands in
-    exactly one range, plus one shared boundary block per cut)."""
-    out = _with_range_spans(joined, spark, r, w)
-    _span = _range_sliced_bin
-    out = out.withColumn("_ids_sl", _span(F.col("doc_ids_bin"), F.col("block_id_offs")))
-    drop = ["_ids_sl", "_b", "block_first_ids", "block_id_offs"]
-    if want_pos:
-        out = (
-            out.withColumn("_tfs_sl", _span(F.col("tfs_bin"), F.col("block_tf_offs")))
-            .withColumn("_pos_sl", _span(F.col("pos_bin"), F.col("block_pos_offs")))
-            .withColumn(
-                "_po_sl", _range_sliced_arr(F.col("block_pos_offs"), rebase=True)
-            )
-            .withColumn("tfs_bin", F.col("_tfs_sl"))
-            .withColumn("pos_bin", F.col("_pos_sl"))
-            .withColumn("block_pos_offs", F.col("_po_sl"))
-        )
-        drop += ["_tfs_sl", "_pos_sl", "_po_sl", "block_tf_offs"]
-    return out.withColumn("doc_ids_bin", F.col("_ids_sl")).drop(*drop)
 
 
 def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
-    """Evaluate a token-only subtree → DataFrame[doc_id]."""
+    """Evaluate a token-only subtree → DataFrame[doc_id]: a term-pruned
+    postings scan joined to seg_meta, evaluated by _eval_numpy in one
+    task per segment (apply_per_segment)."""
     spark = cat.spark
     terms = sorted(A.collect_terms(node))
     scans = A.collect_term_scans(node)
@@ -683,48 +391,8 @@ def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
         for n in _collect_phrases(node)
         for t in n.terms
     }
-    slice_plan = (
-        _phrase_slice_plan(cat, node) if (want_pos and phrase_terms) else None
-    )
-    # the selective-phrase slicer already ships a tiny candidate subset
-    # of the streams; range-splitting on top would only re-cut it
-    range_plan = _range_split_plan(cat) if slice_plan is None else None
-    if range_plan is not None and not os.environ.get(
-        "YAII_RANGE_SPLIT", ""
-    ).strip().isdigit():
-        # work gate (the boolean analogue of bm25's
-        # RANGE_SPLIT_MIN_POSTINGS): splitting replicates every posting
-        # row R ways and pays a per-row block-slice pass, which only
-        # amortizes when each range task has real decode work. Estimate
-        # per-task volume from the memoized term dictionary — positions
-        # (cf) for phrase terms, doc postings (df) for plain tokens,
-        # n_docs for universe-building nodes (NOT/ALL) — all driver-side
-        # and job-free. Thresholds from the r4/r5 1M-doc probes: dense
-        # phrases gained 2-3× at ~150k positions/task while sub-65k
-        # tasks lost to the slice overhead; pure set algebra needs ~1M
-        # postings/task before one segment per task is too coarse.
-        cs = cat.corpus_stats()
-        n_segs = max(1, -(-cs.n_docs // cs.seg_size))
-        stats = cat.term_stats_for(sorted(terms)) if terms else {}
-        vol = 0.0
-        for ft, (df_, cf_) in stats.items():
-            vol += float(cf_ if ft in phrase_terms else df_)
-        if scans or _needs_universe(node):
-            vol += float(cs.n_docs)
-        per_task = vol / n_segs / range_plan[0]
-        min_per_task = (1 << 16) if phrase_terms else (1 << 20)
-        if per_task < min_per_task:
-            range_plan = None
-    cols = (
-        ["seg_id", "field", "term", "doc_ids_bin"]
-        + (["tfs_bin", "pos_bin", "block_pos_offs"] if want_pos else [])
-        + (["block_first_ids", "block_tf_offs"] if slice_plan else [])
-        + (
-            ["block_first_ids", "block_id_offs"]
-            + (["block_tf_offs"] if want_pos else [])
-            if range_plan
-            else []
-        )
+    cols = ["seg_id", "field", "term", "doc_ids_bin"] + (
+        ["tfs_bin", "pos_bin", "block_pos_offs"] if want_pos else []
     )
     post = cat.postings(terms, scans=scans).select(*cols)
     if want_pos and phrase_terms:
@@ -738,8 +406,6 @@ def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
             is_phrase = c if is_phrase is None else (is_phrase | c)
         for pc in ("tfs_bin", "pos_bin", "block_pos_offs"):
             post = post.withColumn(pc, F.when(is_phrase, F.col(pc)))
-    if slice_plan is not None:
-        post = _apply_phrase_slicing(post, spark, slice_plan)
     block = cat.corpus_stats().block_size  # delta restarts per block (v4)
     # deleted_bin: local-id holes a purging merge left behind — they
     # must stay out of NOT/ALL universes (doc ids are never renumbered)
@@ -751,10 +417,6 @@ def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
         if not terms and not scans:
             return _empty_ids(spark)
         joined = post.join(meta, "seg_id", "inner")
-    if range_plan is not None:
-        joined = _apply_range_split(
-            joined, spark, range_plan[0], range_plan[1], want_pos
-        )
 
     def _eval(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
         from yaii_spark.codec import delta_decode, varint_decode
@@ -763,53 +425,23 @@ def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
             return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
         n_docs = int(pdf["n_docs"].iloc[0])
         base = int(pdf["base_doc_id"].iloc[0])
-        lo = hi = None
-        if range_plan is not None:
-            w = range_plan[1]
-            rid = int(pdf["_rid"].iloc[0])
-            lo, hi = rid * w, min((rid + 1) * w, n_docs)
-        # full_ids: every doc in the shipped blocks (boundary blocks
-        # spill past the range); postings: masked to [lo, hi) — the
-        # membership sets the boolean algebra runs on. Positions index
-        # by full_ids so tf/posting alignment survives the mask.
-        full_ids = {}
         postings = {}
         for f, t, b in zip(pdf["field"], pdf["term"], pdf["doc_ids_bin"]):
             if t is None or b is None:
                 continue
-            ids_f = delta_decode_blocked(b, block).astype(np.int64) - base
-            full_ids[(f, t)] = ids_f
-            if lo is not None:
-                s, e = np.searchsorted(ids_f, (lo, hi))
-                ids_f = ids_f[s:e]
-            postings[(f, t)] = ids_f
+            postings[(f, t)] = delta_decode_blocked(b, block).astype(np.int64) - base
         pos_map = None
         if want_pos:
             pos_map = {}
-            n_rows = len(pdf)
-            nbs = pdf["_nb"] if "_nb" in pdf.columns else pd.Series([None] * n_rows)
-            tf_sl = pdf["_tf_sl"] if "_tf_sl" in pdf.columns else nbs
-            pos_sl = pdf["_pos_sl"] if "_pos_sl" in pdf.columns else nbs
-            for f, t, ib, tb, pb, po, nb, tsl, psl in zip(
-                pdf["field"], pdf["term"], pdf["doc_ids_bin"], pdf["tfs_bin"],
-                pdf["pos_bin"], pdf["block_pos_offs"], nbs, tf_sl, pos_sl,
+            for f, t, tb, pb, po in zip(
+                pdf["field"], pdf["term"], pdf["tfs_bin"], pdf["pos_bin"],
+                pdf["block_pos_offs"],
             ):
-                if t is None or ib is None or (f, t) not in phrase_terms:
-                    continue
-                if nb is not None:  # sliced-transfer row (selective phrase)
-                    pos_map[(f, t)] = _SparsePositions(
-                        full_ids[(f, t)], nb, tsl, psl, block
-                    )
+                if (f, t) not in phrase_terms or (f, t) not in postings:
                     continue
                 tfs = varint_decode(tb).astype(np.int64)
-                pos_map[(f, t)] = _LazyPositions(
-                    full_ids[(f, t)], tfs, pb, po, block
-                )
+                pos_map[(f, t)] = _LazyPositions(postings[(f, t)], tfs, pb, po, block)
         ids = _eval_numpy(node, postings, n_docs, pos_map)
-        if lo is not None:
-            # NOT/ALL universes span the whole segment; clamp to the
-            # range so sibling range tasks never double-count a doc
-            ids = ids[(ids >= lo) & (ids < hi)]
         db = pdf["deleted_bin"].iloc[0]
         if db is not None:
             purged = delta_decode(db).astype(np.int64)  # local ids
@@ -819,32 +451,7 @@ def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
             ids = np.setdiff1d(ids, np.sort(deleted) - base, assume_unique=False)
         return pd.DataFrame({"doc_id": ids + base})
 
-    keys = ["seg_id"] + (["_rid"] if range_plan is not None else [])
-    tomb = cat.tombstones()
-    if tomb is None:
-
-        def eval_segment(pdf: pd.DataFrame):
-            return _eval(pdf, None)
-
-        return joined.groupBy(*keys).applyInPandas(eval_segment, schema="doc_id long")
-
-    # tombstones arrive COGROUPED per segment — shuffle-partitioned like
-    # any other table, never collected into one array row or broadcast
-    # (a segment with millions of deletes would blow both; VERDICT r1)
-    def eval_segment_tomb(pdf: pd.DataFrame, tpdf: pd.DataFrame):
-        deleted = tpdf["doc_id"].to_numpy(dtype=np.int64) if len(tpdf) else None
-        return _eval(pdf, deleted)
-
-    tomb_keyed = tomb.select("seg_id", "doc_id")
-    if range_plan is not None:
-        tomb_keyed = _tomb_with_rid(
-            tomb_keyed, cat.corpus_stats().seg_size, range_plan[1]
-        )
-    return (
-        joined.groupBy(*keys)
-        .cogroup(tomb_keyed.groupBy(*keys))
-        .applyInPandas(eval_segment_tomb, schema="doc_id long")
-    )
+    return apply_per_segment(cat, joined, _eval, "doc_id long")
 
 
 # ---------------------------------------------------------------------------
