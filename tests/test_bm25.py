@@ -178,8 +178,8 @@ def test_lazy_block_decode_skips_blocks(spark, work_dir):
     assert B.DECODE_STATS["bytes_decoded"] < B.DECODE_STATS["bytes_total"]
 
     exact = B._score_segment(
-        pdf, idfs, stats.k1, stats.b, stats.avgdl, k=3, mode="or",
-        block=stats.block_size,
+        pdf, {"": {("text", t): v for t, v in idfs.items()}},
+        stats.k1, stats.b, stats.avgdl, k=3, mode="or", block=stats.block_size,
     )
     assert list(pruned["doc_id"]) == list(exact["doc_id"])
     assert np.allclose(pruned["score"], exact["score"], rtol=0, atol=0)
@@ -222,7 +222,7 @@ def test_pruned_equals_dense_property():
         avgdl = float(dls.mean())
         n_terms = data.draw(st.integers(1, 5), label="n_terms")
         rows = {
-            "term": [], "doc_ids_bin": [], "tfs_bin": [], "block_maxes": [],
+            "field": [], "term": [], "doc_ids_bin": [], "tfs_bin": [], "block_maxes": [],
             "block_id_offs": [], "block_tf_offs": [], "block_first_ids": [],
             "df_local": [],
         }
@@ -251,6 +251,7 @@ def test_pruned_equals_dense_property():
             ]
             ids_bin, id_offs = delta_encode_blocked(ids, BLOCK)
             tfs_bin, tf_offs = varint_encode_blocked(tfs, BLOCK)
+            rows["field"].append("text")
             rows["term"].append(f"t{t}")
             rows["doc_ids_bin"].append(ids_bin)
             rows["tfs_bin"].append(tfs_bin)
@@ -274,7 +275,8 @@ def test_pruned_equals_dense_property():
             )
         k = data.draw(st.sampled_from([1, 3, 10, 50]), label="k")
         dense = B._score_segment(
-            pdf, idfs, 1.2, 0.75, avgdl, k, "or", BLOCK, deleted
+            pdf, {"q": {("text", t): v for t, v in idfs.items()}},
+            1.2, 0.75, avgdl, k, "or", BLOCK, deleted,
         )
         pruned = B._score_segment_pruned(
             pdf, idfs, 1.2, 0.75, avgdl, k, BLOCK, deleted
@@ -366,6 +368,14 @@ def test_bm25f_fielded_topk(corpus):
         assert_topk_equal(got, want)
     # absent everywhere → empty
     assert bm25f_topk(cat, ["zzzznotaterm"], w, k=5).count() == 0
+    # weight 1.0 on 'text' IS bm25_topk: same ids, == on scores
+    # (1.0·idf == idf, same sorted-key summation)
+    for q in [[common[0]], [common[0], rare[0]], [stop, rare[1]]]:
+        got1 = bm25f_topk(cat, q, {"text": 1.0}, k=10).collect()
+        base = bm25_topk(cat, q, k=10).collect()
+        assert [(r.doc_id, r.score) for r in got1] == [
+            (r.doc_id, r.score) for r in base
+        ], q
     # single-field weights degenerate to w * bm25_topk over that field
     got1 = bm25f_topk(cat, [common[0], rare[0]], {"text": 2.0}, k=10).collect()
     base = bm25_topk(cat, [common[0], rare[0]], k=10).collect()
@@ -439,3 +449,33 @@ def test_bm25_batch_matches_single(corpus):
     assert [(r.doc_id, r.score) for r in gota] == [
         (r.doc_id, r.score) for r in single_and
     ]
+
+
+def test_topk_huge_k_returns_every_match(corpus, spark):
+    """A "return everything" k (10**9) must not plan the 2·k-slot
+    TakeOrderedAndProject buffer that kills the driver JVM: bm25_topk
+    and cosine_topk return every matching row in full rank order,
+    while a small k keeps the bounded top-k plan."""
+    from yaii_spark.ops.similarity import cosine_topk
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    cat, oracle = corpus
+    common, rare = _freq_ordered_terms(oracle)
+    q = [common[0], rare[0]]
+    want = oracle.bm25_topk(q, k=N_DOCS)
+    assert 10 < len(want) < N_DOCS
+    got = bm25_topk(cat, q, k=10**9)
+    assert "TakeOrderedAndProject" not in plan(got)
+    assert_topk_equal(got.collect(), want)
+    assert "TakeOrderedAndProject" in plan(bm25_topk(cat, q, k=10))
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(50)],
+        "vec_id long, embedding array<double>",
+    )
+    rows = cosine_topk(emb, [1.0, 0.5, 0.0], k=10**9).collect()
+    assert sorted(r.vec_id for r in rows) == list(range(50))
+    assert [r.cosine for r in rows] == sorted((r.cosine for r in rows), reverse=True)
+    assert "TakeOrderedAndProject" in plan(cosine_topk(emb, [1.0, 0.5, 0.0], k=10))

@@ -108,11 +108,11 @@ def test_doc_postings_roundtrip(text):
     """Pack → parse == the straightforward per-field inversion, for any
     text (including exotic whitespace/unicode and empty input)."""
     from yaii_spark.analyzer import (
-        STOPWORDS, doc_postings, tokenize, varint_read,
+        STOPWORDS, doc_postings, tokenize, tokenize_all_field, varint_read,
     )
 
-    specs = [(0, "all"), (1, "standard")]
-    dl, bufs = doc_postings(text, 4, specs)
+    specs = [(0, (0,), tokenize_all_field), (1, (0,), tokenize)]
+    dl, bufs = doc_postings((text,), 4, specs)
     toks = tokenize(text)
     assert dl == len(toks)
 
@@ -140,8 +140,8 @@ def test_doc_postings_roundtrip(text):
             got[(fid, term)] = pos
 
     want = {}
-    for fid, kind in specs:
-        stream = toks if kind == "standard" else [t for t in toks if t not in STOPWORDS]
+    for fid, _, fn in specs:
+        stream = toks if fn is tokenize else [t for t in toks if t not in STOPWORDS]
         for i, tk in enumerate(stream):
             want.setdefault((fid, tk), []).append(i)
     assert got == want

@@ -38,6 +38,45 @@ def _postings_snapshot(spark, idx_dir):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _assert_postings_match_inversion(spark, idx, field, rows, fn):
+    """Decode `field`'s postings and assert doc ids, tfs, positions,
+    df_local and cf_local equal a pure-Python inversion of the analyzer
+    `fn` over `rows` ({doc_id: [source values]}): each doc's non-null
+    source values analyze and concatenate in order with sequential
+    positions, and a None token takes a position but is never indexed."""
+    from yaii_spark.codec import decode_positions, delta_decode_blocked, varint_decode
+
+    cs = IndexCatalog(spark, idx).corpus_stats()
+    inv = {}
+    for d, vals in rows.items():
+        stream = [tk for v in vals if v is not None for tk in fn(v)]
+        for i, tk in enumerate(stream):
+            if tk is not None:
+                key = (d // cs.seg_size, tk)
+                inv.setdefault(key, {}).setdefault(d, []).append(i)
+    want = {
+        key: (len(docs), sum(len(p) for p in docs.values()), docs)
+        for key, docs in inv.items()
+    }
+    got = {}
+    for r in (
+        spark.read.parquet(f"{idx}/postings")
+        .filter(F.col("field") == field)
+        .collect()
+    ):
+        ids = delta_decode_blocked(r.doc_ids_bin, cs.block_size)
+        tfs = varint_decode(r.tfs_bin)
+        poss = decode_positions(r.pos_bin, tfs)
+        assert [int(t) for t in tfs] == [len(p) for p in poss]
+        got[(int(r.seg_id), r.term)] = (
+            int(r.df_local),
+            int(r.cf_local),
+            {int(d): [int(x) for x in p] for d, p in zip(ids, poss)},
+        )
+    assert want  # the fixture indexes something in this field
+    assert got == want
+
+
 def test_resume_equals_clean_build(spark, work_dir):
     """Kill after half the segments; resumed build == clean build."""
     pages = gen_pages(spark, 400, include_fixtures=False)
@@ -325,8 +364,9 @@ def test_timestamp_range_predicate(spark, work_dir):
 
 def test_custom_rule_field_indexes_and_queries(spark, work_dir):
     """X1/F4: a make_rule_tokenizer analyzer wired into build_index via
-    the fields map — the slow (explode+groupBy) path unions with the
-    default fields' fast path, and the field is queryable."""
+    the fields map — inverted in the same UDF as the default fields,
+    postings equal a pure-Python inversion, and the field is queryable.
+    A Spark UDF in the analyzer slot is refused."""
     import datetime as dt
 
     from yaii_spark.analyzer import make_rule_tokenizer
@@ -334,7 +374,7 @@ def test_custom_rule_field_indexes_and_queries(spark, work_dir):
     from yaii_spark.queries.executor import execute_boolean
     from yaii_spark.synth import EPOCH, PAGES_SCHEMA, render_html
 
-    _, ref_udf = make_rule_tokenizer([
+    ref_fn, ref_udf = make_rule_tokenizer([
         ("ref", r"[@%&][A-Za-z0-9+/=]+\.[a-z0-9]+", False),
         ("word", r"[^\s\-,;:.]+", True),
     ])
@@ -355,8 +395,11 @@ def test_custom_rule_field_indexes_and_queries(spark, work_dir):
         fields={
             "text": ("text", "standard"),
             "_all": ("text", "all"),
-            "refs": ("text", ref_udf),
+            "refs": ("text", ref_fn),
         },
+    )
+    _assert_postings_match_inversion(
+        spark, idx, "refs", {i: [t] for i, t in texts.items()}, ref_fn
     )
     cat = IndexCatalog(spark, idx)
     # crypto refs kept whole + case-preserved in the rule field
@@ -368,6 +411,11 @@ def test_custom_rule_field_indexes_and_queries(spark, work_dir):
     # default fields unaffected: standard splits '@ab12' at '.'
     got = {r.doc_id for r in execute_boolean(cat, A.token("@ab12", "text")).collect()}
     assert got == {0, 1}
+    with pytest.raises(ValueError, match="pure"):
+        build_index(
+            spark, pages, f"{work_dir}/rule_udf_idx", seg_size=2,
+            fields={"refs": ("text", ref_udf)},
+        )
 
 
 def test_icu_collated_sort_divergent_inputs(spark, work_dir):
@@ -425,16 +473,18 @@ def test_multivalue_field(spark, work_dir):
         (3, "body three", ["red", "fox"]),
     ]
     pages = spark.createDataFrame(rows, schema)
-    _, mv_udf = make_multivalue_analyzer()
+    tag_rows = {d: [tags] for d, _, tags in rows}
+    mv_fn, _ = make_multivalue_analyzer()
     idx = f"{work_dir}/mv_idx"
     build_index(
         spark, pages, idx, seg_size=2,
         fields={
             "text": ("text", "standard"),
             "_all": ("text", "all"),
-            "tags": ("tags", mv_udf),
+            "tags": ("tags", mv_fn),
         },
     )
+    _assert_postings_match_inversion(spark, idx, "tags", tag_rows, mv_fn)
     cat = IndexCatalog(spark, idx)
     got = lambda q: {r.doc_id for r in execute_boolean(cat, q).collect()}
     assert got(A.token("fox", "tags")) == {0, 3}
@@ -448,7 +498,7 @@ def test_multivalue_field(spark, work_dir):
     # can no longer straddle the element boundary — doc 3's cross-
     # element match flips to no-match, doc 0's within-element match
     # stays, and in-element positions are untouched
-    _, mv_gap = make_multivalue_analyzer(position_gap=2)
+    mv_gap, _ = make_multivalue_analyzer(position_gap=2)
     idx2 = f"{work_dir}/mv_gap_idx"
     build_index(
         spark, pages, idx2, seg_size=2,
@@ -458,6 +508,7 @@ def test_multivalue_field(spark, work_dir):
             "tags": ("tags", mv_gap),
         },
     )
+    _assert_postings_match_inversion(spark, idx2, "tags", tag_rows, mv_gap)
     cat2 = IndexCatalog(spark, idx2)
     got2 = lambda q: {r.doc_id for r in execute_boolean(cat2, q).collect()}
     assert got2(A.phrase(["red", "fox"], "tags")) == {0}
@@ -473,6 +524,7 @@ def test_multi_source_all_field(spark, work_dir):
     positions — a token query on _all matches either source."""
     from pyspark.sql import types as T
 
+    from yaii_spark.analyzer import tokenize_all_field
     from yaii_spark.queries import ast as A
     from yaii_spark.queries.executor import execute_boolean
 
@@ -496,6 +548,9 @@ def test_multi_source_all_field(spark, work_dir):
             "text": ("text", "standard"),
             "_all": (["text", "title"], "all"),
         },
+    )
+    _assert_postings_match_inversion(
+        spark, idx, "_all", {d: [t, ti] for d, t, ti in rows}, tokenize_all_field
     )
     cat = IndexCatalog(spark, idx)
     got = lambda q: {r.doc_id for r in execute_boolean(cat, q).collect()}

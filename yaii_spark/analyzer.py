@@ -18,9 +18,10 @@ implementations here are numpy/pandas-vectorized batch code):
 - lowercaseFilter (/root/reference/src/lib/analyzer/lowercase-filter.ts)
   is subsumed: standardTokenizer already lowercases.
 
-The pure-Python functions are the test oracle; the pandas UDFs are the
-engine path. Both share one implementation so parity is structural —
-the pytest suite (tests/test_analyzer.py) still asserts token-for-token
+The pure-Python functions are both the test oracle and what the index
+build runs (inside its one inversion UDF, `doc_postings`); the pandas
+UDFs expose the same functions as column expressions, so parity is
+structural — the pytest suite (tests/test_analyzer.py) still asserts token-for-token
 equality through a real Spark roundtrip, including Unicode edges
 (SURVEY.md §7.4.2).
 """
@@ -109,64 +110,6 @@ tokenize_udf = F.pandas_udf(_tokenize_series, T.ArrayType(T.StringType()))
 tokenize_all_udf = F.pandas_udf(_tokenize_all_series, T.ArrayType(T.StringType()))
 
 
-_ENTRY_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("term", T.StringType()),
-            T.StructField("tf", T.IntegerType()),
-            T.StructField("positions", T.ArrayType(T.IntegerType())),
-        ]
-    )
-)
-
-DOC_STATS_TYPE = T.StructType(
-    [
-        T.StructField("dl", T.IntegerType()),
-        T.StructField("text_entries", _ENTRY_TYPE),
-        T.StructField("all_entries", _ENTRY_TYPE),
-    ]
-)
-
-
-def _entries(tokens: List[str]) -> list:
-    agg: dict[str, list[int]] = {}
-    for i, tk in enumerate(tokens):
-        agg.setdefault(tk, []).append(i)
-    return [
-        {"term": k, "tf": len(v), "positions": v} for k, v in agg.items()
-    ]
-
-
-def doc_stats(text: str) -> dict:
-    """Per-doc term statistics for both default fields in one pass:
-    dl + (term, tf, positions) for 'text' (stopwords kept) and '_all'
-    (stopword-filtered, positions in the filtered stream). Computing
-    tf/positions doc-locally removes the first wide shuffle of the
-    index build (the (seg,field,term,doc) groupBy) — the map side does
-    the combine, like Lucene's per-doc inverter."""
-    toks = tokenize(text)
-    return {
-        "dl": len(toks),
-        "text_entries": _entries(toks),
-        "all_entries": _entries([t for t in toks if t not in STOPWORDS]),
-    }
-
-
-def _doc_stats_series(s: pd.Series) -> pd.DataFrame:
-    rows = [doc_stats(x) if x is not None else None for x in s]
-    return pd.DataFrame(
-        {
-            "dl": [r["dl"] if r else None for r in rows],
-            "text_entries": [r["text_entries"] if r else None for r in rows],
-            "all_entries": [r["all_entries"] if r else None for r in rows],
-        },
-        index=s.index,
-    )
-
-
-doc_stats_udf = F.pandas_udf(_doc_stats_series, DOC_STATS_TYPE)
-
-
 # ---------------------------------------------------------------------------
 # packed per-doc postings (the index build's hot path)
 #
@@ -205,12 +148,22 @@ def varint_read(b, off: int) -> tuple[int, int]:
 
 
 def doc_postings(
-    text: str, n_shards: int, specs: list[tuple[int, str]],
+    values: tuple, n_shards: int, specs: list[tuple[int, tuple[int, ...], object]],
     term_cache: dict | None = None,
 ):
     """Tokenize + invert one document into per-shard packed entries.
 
-    specs: ordered (field_id, kind) with kind in {'standard', 'all'}.
+    `values`: the row's source values; values[0] is the text column,
+    whose standard tokenization gives dl (None text → dl None).
+    `specs`: ordered (field_id, source indexes into `values`, analyzer)
+    with a pure ``str → list[str | None]`` analyzer. A field's stream is
+    the concatenation of the analyzer's output over its non-null
+    sources, in order, with sequential positions. A None token moves
+    the position forward but is never indexed (position_gap
+    sentinels). The default fields over values[0] (`tokenize`,
+    `tokenize_all_field`) reuse the dl tokenization instead of
+    re-tokenizing.
+
     Returns (dl, {shard: bytearray}); shard = crc32(term) % n_shards,
     so a (field, term)'s entries always land in one shard.
 
@@ -222,16 +175,25 @@ def doc_postings(
     (profiled ~10%% of the stage)."""
     import zlib
 
-    toks = tokenize(text)
-    dl = len(toks)
+    text = values[0]
+    toks = tokenize(text) if text is not None else None
     bufs: dict[int, bytearray] = {}
     if term_cache is None:
         term_cache = {}
-    for fid, kind in specs:
-        stream = toks if kind == "standard" else [t for t in toks if t not in STOPWORDS]
+    for fid, srcs, analyzer in specs:
+        if srcs == (0,) and analyzer is tokenize:
+            stream = toks or ()
+        elif srcs == (0,) and analyzer is tokenize_all_field:
+            stream = remove_stopwords(toks) if toks is not None else ()
+        else:
+            stream = []
+            for s in srcs:
+                if values[s] is not None:
+                    stream.extend(analyzer(values[s]) or ())
         agg: dict[str, list[int]] = {}
         for i, tk in enumerate(stream):
             agg.setdefault(tk, []).append(i)
+        agg.pop(None, None)
         for term, pos in agg.items():
             cached = term_cache.get(term)
             if cached is None:
@@ -266,7 +228,7 @@ def doc_postings(
             for v in (len(pos), len(pb)):
                 buf.append(v) if v < 0x80 else _venc_into(buf, v)
             buf += pb
-    return dl, bufs
+    return (len(toks) if toks is not None else None), bufs
 
 
 DOC_POSTINGS_TYPE = T.StructType(
@@ -287,23 +249,22 @@ DOC_POSTINGS_TYPE = T.StructType(
 )
 
 
-def make_doc_postings_udf(n_shards: int, specs: list[tuple[int, str]]):
-    """Arrow UDF over text → (dl, [(shard, packed entries)])."""
+def make_doc_postings_udf(
+    n_shards: int, specs: list[tuple[int, tuple[int, ...], object]]
+):
+    """Arrow UDF over (text, *extra source columns) → (dl, [(shard,
+    packed entries)]); `specs` index the UDF's arguments (doc_postings)."""
 
-    def _series(s: pd.Series) -> pd.DataFrame:
+    def _series(*cols: pd.Series) -> pd.DataFrame:
         dls, blobs = [], []
         term_cache: dict = {}  # batch-scoped: bounded by batch vocab
-        for x in s:
-            if x is None:
-                dls.append(None)
-                blobs.append(None)
-                continue
-            dl, bufs = doc_postings(x, n_shards, specs, term_cache)
+        for values in zip(*cols):
+            dl, bufs = doc_postings(values, n_shards, specs, term_cache)
             dls.append(dl)
             blobs.append(
                 [{"shard": sh, "data": bytes(b)} for sh, b in bufs.items()]
             )
-        return pd.DataFrame({"dl": dls, "blobs": blobs}, index=s.index)
+        return pd.DataFrame({"dl": dls, "blobs": blobs}, index=cols[0].index)
 
     return F.pandas_udf(_series, DOC_POSTINGS_TYPE)
 
@@ -328,7 +289,8 @@ def make_rule_tokenizer(rules: list[tuple[str, str, bool]]):
     are not supported (group numbers shift inside the combined
     alternation).
 
-    Returns (pure_fn, pandas_udf) sharing one implementation.
+    Returns (pure_fn, pandas_udf) sharing one implementation; pure_fn
+    is what build_index's fields map takes as a field's analyzer.
     """
     compiled = re.compile(
         "|".join(f"(?P<r{i}>(?:{pat}))" for i, (_, pat, _) in enumerate(rules))
@@ -369,14 +331,14 @@ def make_multivalue_analyzer(per_value_fn=tokenize, position_gap: int = 0):
     element's first token sits N + 1 positions after the previous
     element's last token, so a phrase (or any proximity window with
     slop < N) can no longer straddle elements. Implemented by emitting
-    N null sentinel tokens at each boundary — the build's posexplode
-    numbers them, then drops null terms before inverting, leaving the
-    position gap behind (cost: N array slots per boundary, never an
-    indexed posting).
+    N None sentinel tokens at each boundary — the build's inverter
+    (doc_postings) advances the position past each one but never
+    indexes it, leaving the position gap behind (cost: N list slots per
+    boundary, never an indexed posting).
 
-    Returns (pure_fn, pandas_udf); plug the udf into build_index's
-    fields map as a callable analyzer over an array<string> column.
-    Scalar strings are accepted too (single-element semantics)."""
+    Returns (pure_fn, pandas_udf); pure_fn is the analyzer to put in
+    build_index's fields map for an array<string> column. Scalar
+    strings are accepted too (single-element semantics)."""
 
     def fn(values) -> List[str] | None:
         if values is None:

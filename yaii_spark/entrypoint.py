@@ -123,11 +123,11 @@ def get_index(
         if variant == "rule":
             from yaii_spark.analyzer import make_rule_tokenizer
 
-            _, ref_udf = make_rule_tokenizer(RULE_FIELD_RULES)
+            ref_fn, _ = make_rule_tokenizer(RULE_FIELD_RULES)
             fields = {
                 "text": ("text", "standard"),
                 "_all": ("text", "all"),
-                "refs": ("text", ref_udf),
+                "refs": ("text", ref_fn),
             }
         elif variant == "multi_all":
             # yaii addToAllField over MULTIPLE fields: _all collects

@@ -1,7 +1,7 @@
 """Distributed inverted-index build (SURVEY.md §7.1 M3).
 
-Dataflow (one DataFrame lineage; ONE wide shuffle for the default
-fields, then the parquet/Iceberg commit):
+Dataflow (one DataFrame lineage; ONE wide shuffle for every field,
+then the parquet/Iceberg commit):
 
     pages ──tokenize+invert (pandas UDF)──► per-doc packed posting
           blobs, one per term-hash shard (analyzer.doc_postings —
@@ -14,8 +14,8 @@ fields, then the parquet/Iceberg commit):
           delta+varint posting rows                           [shuffle]
           ──write postings partitioned by seg_id, sorted by (field, term)
 
-    (custom-analyzer fields take a posexplode → groupBy(doc) →
-    groupBy(seg, shard) side path and union before the write)
+Every field takes this path: custom analyzers and multi-source fields
+are pure functions run inside the same UDF, over extra source columns.
 
 Scale design decisions (the 100 TB story):
 
@@ -61,18 +61,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from yaii_spark.analyzer import (
     make_doc_postings_udf,
-    tokenize_all_udf,
-    tokenize_udf,
+    tokenize,
+    tokenize_all_field,
     varint_read,
 )
-from yaii_spark.codec import (
-    block_offsets_from_lengths,
-    delta_encode_blocked,
-    encode_positions_blocked,
-    varint_encode,
-    varint_encode_blocked,
-    varint_lengths,
-)
+from yaii_spark.codec import varint_encode, varint_lengths
 from yaii_spark.storage import (
     fs_delete,
     fs_exists,
@@ -90,7 +83,7 @@ BLOCK_SIZE = 128  # docs per block for block-max metadata
 # only (stopwords kept, like regular searchable fields), 'all' =
 # tokenizer + stopword filter (the £_ALL catch-all chain,
 # /root/reference/src/yaii-types.ts:42-45)
-ANALYZERS = {"standard": tokenize_udf, "all": tokenize_all_udf}
+ANALYZERS = {"standard": tokenize, "all": tokenize_all_field}
 
 # default field map: field name -> (source column, analyzer).
 # "_all" mirrors yaii's synthetic catch-all field (£_ALL).
@@ -115,63 +108,6 @@ _POSTINGS_SCHEMA = (
     "block_id_offs array<int>, block_tf_offs array<int>, "
     "block_first_ids array<long>, block_pos_offs array<int>"
 )
-
-
-def _encode_blocked(out: dict, ids_a: np.ndarray, tfs_a: np.ndarray) -> None:
-    """Append the blocked id/tf encodings + block metadata columns."""
-    ids_bin, id_offs = delta_encode_blocked(ids_a, BLOCK_SIZE)
-    tfs_bin, tf_offs = varint_encode_blocked(tfs_a, BLOCK_SIZE)
-    out["doc_ids_bin"].append(ids_bin)
-    out["tfs_bin"].append(tfs_bin)
-    out["block_id_offs"].append([int(x) for x in id_offs])
-    out["block_tf_offs"].append([int(x) for x in tf_offs])
-    out["block_first_ids"].append([int(x) for x in ids_a[::BLOCK_SIZE]])
-
-
-def _make_segment_encoder(avgdl: float, k1: float, b: float):
-    """Per-(segment, shard) posting-list builder: receives doc-level
-    (field, term, doc_id, dl, tf, positions) rows and emits one encoded
-    posting row per (field, term). This is the Lucene-writer shape — a
-    whole segment shard built in one task with pandas/numpy group-bys,
-    which benchmarked ~10x faster than collect_list(struct)+scalar-UDF
-    (Arrow nested-struct decode dominated)."""
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["field", "term", "doc_id"], kind="mergesort")
-        seg = int(pdf["seg_id"].iloc[0])
-        out = {
-            "seg_id": [], "field": [], "term": [], "df_local": [], "cf_local": [],
-            "doc_ids_bin": [], "tfs_bin": [], "pos_bin": [],
-            "block_maxes": [], "max_norm": [],
-            "block_id_offs": [], "block_tf_offs": [], "block_first_ids": [],
-            "block_pos_offs": [],
-        }
-        for (field, term), g in pdf.groupby(["field", "term"], sort=False):
-            ids = g["doc_id"].to_numpy(dtype=np.uint64)
-            tfs = g["tf"].to_numpy(dtype=np.uint64)
-            dls = g["dl"].to_numpy(dtype=np.int64)
-            norms = _tf_norm(tfs, dls, avgdl, k1, b)
-            nblocks = math.ceil(ids.size / BLOCK_SIZE)
-            bmax = [
-                float(norms[i * BLOCK_SIZE : (i + 1) * BLOCK_SIZE].max())
-                for i in range(nblocks)
-            ]
-            out["seg_id"].append(seg)
-            out["field"].append(field)
-            out["term"].append(term)
-            out["df_local"].append(int(ids.size))
-            out["cf_local"].append(int(tfs.sum()))
-            _encode_blocked(out, ids, tfs)
-            pos_bin, pos_offs = encode_positions_blocked(
-                list(g["positions"]), BLOCK_SIZE
-            )
-            out["pos_bin"].append(pos_bin)
-            out["block_pos_offs"].append([int(x) for x in pos_offs])
-            out["block_maxes"].append(bmax)
-            out["max_norm"].append(float(norms.max()) if norms.size else 0.0)
-        return pd.DataFrame(out)
-
-    return encode
 
 
 def _encode_group_batched(
@@ -714,10 +650,14 @@ def build_index(
     `pages[id_col]` must be a dense 0-based long (the caller derives it;
     synth tables carry it natively). Returns build metrics.
 
-    `fields` maps indexed field name -> (source column, analyzer name);
-    defaults to {text: standard, _all: stopword-filtered} mirroring
-    yaii's default field config + catch-all. Document length (dl, the
-    BM25 norm) always comes from `text_col`'s standard tokenization.
+    `fields` maps indexed field name -> (source column or list of
+    columns, analyzer); defaults to {text: standard, _all:
+    stopword-filtered} mirroring yaii's default field config +
+    catch-all. The analyzer is an ANALYZERS name or a pure
+    ``str → list[str | None]`` function (e.g. the first element of
+    make_rule_tokenizer / make_multivalue_analyzer). Document length
+    (dl, the BM25 norm) always comes from `text_col`'s standard
+    tokenization.
 
     `max_segments` limits how many pending segments this invocation
     builds — used by the resumability test to simulate a mid-build kill
@@ -739,6 +679,37 @@ def build_index(
     """
     if append and not resume:
         raise ValueError("append=True requires resume=True (checkpoint append)")
+    if fields is None:
+        fields = {"text": (text_col, "standard"), "_all": (text_col, "all")}
+
+    # one inversion path for every field: the analyzer UDF tokenizes and
+    # inverts each doc (map-side combine, Lucene-inverter style) into
+    # per-shard packed blobs. Its arguments are text_col (the dl
+    # source, shared by the default fields) plus any other column a
+    # field reads; a field's source may be a LIST of columns — yaii's
+    # addToAllField collects every field's values into £_ALL
+    # (base-inverted-index.ts:141-161), token streams concatenated in
+    # list order with sequential positions
+    names = sorted(fields)
+    srcs_of = {
+        f: list(src) if isinstance(src, (list, tuple)) else [src]
+        for f, (src, _an) in fields.items()
+    }
+    udf_cols = list(
+        dict.fromkeys([text_col, *(c for f in names for c in srcs_of[f])])
+    )
+    specs = []
+    for i, f in enumerate(names):
+        analyzer = fields[f][1]
+        if hasattr(analyzer, "evalType"):
+            raise ValueError(
+                f"build_index: field {f!r} got a Spark UDF as its analyzer; "
+                "pass the pure str -> list[str | None] function instead "
+                "(the first element of make_rule_tokenizer(...) / "
+                "make_multivalue_analyzer(...))"
+            )
+        fn = analyzer if callable(analyzer) else ANALYZERS[analyzer]
+        specs.append((i, tuple(udf_cols.index(c) for c in srcs_of[f]), fn))
     # _geometry_checked: the streaming committer already validated the
     # geometry before making the segment range durable — re-checking
     # here would re-read corpus_stats and re-probe the commit marker on
@@ -768,41 +739,13 @@ def build_index(
     # use the cheap static path
     overwrite_mode = "dynamic" if fs_exists(spark, os.path.join(out_dir, "postings")) else "static"
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", overwrite_mode)
-    if fields is None:
-        fields = {"text": (text_col, "standard"), "_all": (text_col, "all")}
-
-    # per-field path split: fields sourced from text_col with the
-    # standard/all analyzers take the fast path — per-doc (term, tf,
-    # positions) computed inside the analyzer UDF (map-side combine,
-    # Lucene-inverter style), which removes the (seg, field, term, doc)
-    # groupBy shuffle entirely. Other fields (custom analyzers —
-    # ANALYZERS keys or pandas-UDF callables like make_rule_tokenizer's
-    # — or non-text sources) take the explode+groupBy path; the two
-    # streams union before segment encoding, so adding one exotic field
-    # never de-optimizes the default fields.
-    fast_fields = {
-        f: an
-        for f, (src, an) in fields.items()
-        if src == text_col and an in ("standard", "all")
-    }
-    slow_fields = {f: sa for f, sa in fields.items() if f not in fast_fields}
-    # a field's source may be a LIST of columns — yaii's addToAllField
-    # collects every field's values into £_ALL (base-inverted-index.ts:
-    # 141-161); the token streams concatenate in list order with
-    # sequential positions, exactly the reference's append semantics
-    slow_srcs = sorted({
-        s
-        for (src, _an) in slow_fields.values()
-        for s in (src if isinstance(src, (list, tuple)) else [src])
-    })
     # tokenize input: ONLY the columns the analyzer consumers need —
     # the persisted batch must never hold the wide page row (the html
     # binary in particular): at web scale the cached bytes ARE the
     # build's memory-bandwidth bill, and the stats/meta/postings
     # consumers only touch (id, seg ids, dl, packed blobs). The stored
     # columns reach the docs table straight from source (below).
-    tok_cols = list(dict.fromkeys([id_col, text_col, *slow_srcs]))
-    tok_in = pages.select(*tok_cols)
+    tok_in = pages.select(*dict.fromkeys([id_col, *udf_cols]))
     # keep the tokenize stage wide: small inputs (or few parquet files)
     # would otherwise run the analyzer UDF on 1-2 cores. At 100 TB the
     # input has far more splits than cores and this is a no-op — and
@@ -810,19 +753,15 @@ def build_index(
     par = spark.sparkContext.defaultParallelism
     if tok_in.rdd.getNumPartitions() < par:
         tok_in = tok_in.repartition(par * 2)
-    # dl (the BM25 norm) always comes from text_col's standard
-    # tokenization; the same UDF pass packs the fast fields' inverted
-    # entries into per-shard binary blobs (analyzer.doc_postings — the
-    # Arrow-nested-struct layout this replaces was ~95% of the stage)
-    fast_names = sorted(fast_fields)
-    fast_specs = [(i, fast_fields[f]) for i, f in enumerate(fast_names)]
-    dp_udf = make_doc_postings_udf(postings_shards, fast_specs)
+    # packed blobs, not nested (term, tf, positions) structs: Arrow's
+    # nested-struct conversion measured ~95% of the stage
+    dp_udf = make_doc_postings_udf(postings_shards, specs)
     docs = (
-        tok_in.withColumn("_dp", dp_udf(F.col(text_col)))
+        tok_in.withColumn("_dp", dp_udf(*[F.col(c) for c in udf_cols]))
         # a null text field indexes as a token-free doc (dl 0, no
-        # postings — explode of the null blob array drops the row),
-        # like the reference's termizer on a missing field; without the
-        # coalesce a single null page would crash the dl-blob encoder
+        # postings from text), like the reference's termizer on a
+        # missing field; without the coalesce a single null page would
+        # crash the dl-blob encoder
         .withColumn("dl", F.coalesce(F.col("_dp.dl").cast("long"), F.lit(0)))
         .withColumn("seg_id", (F.col(id_col) / F.lit(seg_size)).cast("long"))
     )
@@ -830,11 +769,7 @@ def build_index(
         "local_id", (F.col(id_col) - F.col("seg_id") * F.lit(seg_size)).cast("long")
     )
     docs = docs.withColumn("base_doc_id", F.col("seg_id") * F.lit(seg_size))
-    docs = docs.select(
-        *dict.fromkeys(
-            [id_col, "seg_id", "local_id", "base_doc_id", "dl", "_dp", *slow_srcs]
-        )
-    )
+    docs = docs.select(id_col, "seg_id", "local_id", "base_doc_id", "dl", "_dp")
     # tokenize exactly once: every downstream pass (stats, seg_meta,
     # postings) reuses the cached narrow tokenized batch
     docs = docs.persist()
@@ -937,77 +872,28 @@ def build_index(
         )
 
         # ---- postings (multi-field: yaii indexes every searchable
-        # field separately + the £_ALL catch-all) ----
-        # fast fields: the analyzer UDF already inverted each doc into
-        # per-shard packed entry blobs — explode to ONE row per
-        # (doc, shard) (≈16 rows/doc instead of ~|unique terms| struct
-        # rows), shuffle by (seg, shard), decode + encode per task.
-        # Sharding by term hash bounds task memory: one task never
-        # holds a whole 2^20-doc segment's postings, and shards stay
-        # term-complete so each (field, term) is built exactly once.
-        enc = None
-        if fast_fields:
-            packed = batch.select(
-                "seg_id",
-                F.col(id_col).alias("doc_id"),
-                "dl",
-                F.explode("_dp.blobs").alias("b"),
-            ).select(
-                "seg_id", "doc_id", "dl",
-                F.col("b.shard").alias("shard"),
-                F.col("b.data").alias("data"),
-            )
-            enc = packed.groupBy("seg_id", "shard").applyInPandas(
-                _make_packed_encoder(fast_names, avgdl, k1, b),
-                schema=_POSTINGS_SCHEMA,
-            )
-        # slow fields: tokenize → posexplode → per-doc groupBy (one
-        # extra shuffle, scoped to these fields only). `analyzer` may be
-        # an ANALYZERS key or any column-fn (e.g. make_rule_tokenizer's
-        # pandas UDF) — the X1 analyzer extension point.
-        slow_parts = []
-        for fname, (src, analyzer) in sorted(slow_fields.items()):
-            an = analyzer if callable(analyzer) else ANALYZERS[analyzer]
-            if isinstance(src, (list, tuple)):
-                # multi-source field: concat per-source token arrays →
-                # ONE posexplode with sequential positions (null
-                # sources contribute nothing, not a null concat)
-                tcol = F.concat(
-                    *[
-                        F.coalesce(an(F.col(s)), F.array().cast("array<string>"))
-                        for s in src
-                    ]
-                )
-            else:
-                tcol = an(F.col(src))
-            slow_parts.append(
-                batch.select(
-                    "seg_id",
-                    F.col(id_col).alias("doc_id"),
-                    "dl",
-                    F.lit(fname).alias("field"),
-                    F.posexplode(tcol).alias("pos", "term"),
-                )
-            )
-        if slow_parts:
-            tok = slow_parts[0]
-            for p in slow_parts[1:]:
-                tok = tok.unionByName(p)
-            # null tokens are position-gap sentinels (multivalue
-            # analyzers with position_gap>0): posexplode numbered them,
-            # dropping them here leaves the gap in the position space
-            # without ever indexing a posting
-            tok = tok.filter(F.col("term").isNotNull())
-            tfpos = tok.groupBy("seg_id", "field", "term", "doc_id", "dl").agg(
-                F.count("*").alias("tf"),
-                F.sort_array(F.collect_list("pos")).alias("positions"),
-            ).withColumn(
-                "shard", F.pmod(F.xxhash64("field", "term"), F.lit(postings_shards))
-            )
-            enc_slow = tfpos.groupBy("seg_id", "shard").applyInPandas(
-                _make_segment_encoder(avgdl, k1, b), schema=_POSTINGS_SCHEMA
-            )
-            enc = enc_slow if enc is None else enc.unionByName(enc_slow)
+        # field separately + the £_ALL catch-all): the analyzer UDF
+        # already inverted each doc into per-shard packed entry blobs —
+        # explode to ONE row per (doc, shard) (≈16 rows/doc instead of
+        # ~|unique terms| struct rows), shuffle by (seg, shard), decode
+        # + encode per task. Sharding by term hash bounds task memory:
+        # one task never holds a whole 2^20-doc segment's postings, and
+        # shards stay term-complete so each (field, term) is built
+        # exactly once. ----
+        packed = batch.select(
+            "seg_id",
+            F.col(id_col).alias("doc_id"),
+            "dl",
+            F.explode("_dp.blobs").alias("b"),
+        ).select(
+            "seg_id", "doc_id", "dl",
+            F.col("b.shard").alias("shard"),
+            F.col("b.data").alias("data"),
+        )
+        enc = packed.groupBy("seg_id", "shard").applyInPandas(
+            _make_packed_encoder(names, avgdl, k1, b),
+            schema=_POSTINGS_SCHEMA,
+        )
         # the three table writes are independent (all read the persisted
         # tokenized batch, whose blocks were materialized by the stats
         # job above) — submit them as CONCURRENT Spark jobs so their

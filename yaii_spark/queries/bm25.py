@@ -7,8 +7,9 @@ base, /root/reference/readme.md:26; yaii itself has no scoring):
     score(d,q) = Σ_t idf(t) · tf / (tf + k1·(1 − b + b·dl/avgdl))
 
 Execution: broadcast term statistics (df, N, avgdl) → one
-``applyInPandas`` task per segment decodes the query terms' postings,
-accumulates scores into a dense per-segment array **in sorted-term
+``applyInPandas`` task per segment runs the one exact scorer
+(`_score_segment`): it decodes the query's (field, term) postings,
+accumulates w·idf·norm into a dense per-segment array **in sorted-key
 order** (float determinism across parallelism levels — SURVEY.md
 §7.4.1), takes a per-segment top-k, then a global
 ``orderBy(score desc, doc_id asc).limit(k)`` merge — Catalyst's
@@ -304,7 +305,7 @@ def _score_segment_pruned(
 
 def _score_segment(
     pdf: pd.DataFrame,
-    idfs: dict[str, float],
+    queries: dict[str, dict[tuple[str, str], float]],
     k1: float,
     b: float,
     avgdl: float,
@@ -313,40 +314,83 @@ def _score_segment(
     block: int,
     deleted: np.ndarray | None = None,
 ) -> pd.DataFrame:
+    """The exact per-segment scorer behind every BM25 call:
+    (query_id, doc_id, score), a tie-safe top-k per query.
+
+    `queries` maps a query id to its weighted (field, term) keys, each
+    carrying the coefficient w·idf. A doc's score is
+    Σ (w·idf)·norm over the query's keys in sorted-key order (fixed
+    order → deterministic float sums), norm = tf / (tf + k1·(1 − b +
+    b·dl/avgdl)) under the index's single text dl. Each key's postings
+    decode once per segment and serve every query that names it.
+
+    mode='or': a doc matches if any key has a posting for it.
+    mode='and': every key of the query must be present in the segment
+    and the doc must appear in every key's postings. A tombstoned doc
+    never matches."""
     n_docs = int(pdf["n_docs"].iloc[0])
     base = int(pdf["base_doc_id"].iloc[0])
     dls = varint_decode(pdf["dl_bin"].iloc[0]).astype(np.float64)
-    scores = np.zeros(n_docs, dtype=np.float64)
-    hit_count = np.zeros(n_docs, dtype=np.int32)
-    rows = {t: (ids_b, tfs_b) for t, ids_b, tfs_b in zip(pdf["term"], pdf["doc_ids_bin"], pdf["tfs_bin"])}
-    n_terms = 0
-    for term in sorted(rows):  # fixed order → deterministic float sums
-        if term not in idfs:
+    rows = {
+        (f, t): (ids_b, tfs_b)
+        for f, t, ids_b, tfs_b in zip(
+            pdf["field"], pdf["term"], pdf["doc_ids_bin"], pdf["tfs_bin"]
+        )
+    }
+    decoded: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
+    out_q, out_d, out_s = [], [], []
+    for qid in sorted(queries):
+        coefs = queries[qid]
+        keys = sorted(key for key in coefs if key in rows)
+        if not keys or (mode == "and" and len(keys) < len(coefs)):
             continue
-        n_terms += 1
-        ids_b, tfs_b = rows[term]
-        ids = (delta_decode_blocked(ids_b or b"", block).astype(np.int64) - base)
-        tfs = varint_decode(tfs_b or b"").astype(np.float64)
-        norm = tfs / (tfs + k1 * (1.0 - b + b * dls[ids] / avgdl))
-        scores[ids] += idfs[term] * norm
-        hit_count[ids] += 1
-    if deleted is not None:
-        hit_count[deleted - base] = 0  # tombstoned docs never match
-    if mode == "and":
-        cand = np.flatnonzero(hit_count == len(idfs)) if n_terms == len(idfs) else np.empty(0, dtype=np.int64)
-    else:
-        cand = np.flatnonzero(hit_count > 0)
-    if cand.size == 0:
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
-    s = scores[cand]
-    if cand.size > k:
-        # keep everything at-or-above the kth score so boundary ties can
-        # still be broken by doc_id in the exact sort below
-        thresh = np.partition(-s, k - 1)[k - 1]
-        keep = np.flatnonzero(-s <= thresh)
-        cand, s = cand[keep], s[keep]
-    order = np.lexsort((cand, -s))[:k]
-    return pd.DataFrame({"doc_id": (cand[order] + base).astype(np.int64), "score": s[order]})
+        scores = np.zeros(n_docs, dtype=np.float64)
+        hits = np.zeros(n_docs, dtype=np.int32)
+        for key in keys:
+            got = decoded.get(key)
+            if got is None:
+                ids_b, tfs_b = rows[key]
+                ids = delta_decode_blocked(ids_b or b"", block).astype(np.int64) - base
+                tfs = varint_decode(tfs_b or b"").astype(np.float64)
+                norm = tfs / (tfs + k1 * (1.0 - b + b * dls[ids] / avgdl))
+                got = decoded[key] = (ids, norm)
+            ids, norm = got
+            scores[ids] += coefs[key] * norm
+            hits[ids] += 1
+        if deleted is not None:
+            hits[deleted - base] = 0  # tombstoned docs never match
+        cand = np.flatnonzero(hits >= (len(keys) if mode == "and" else 1))
+        if cand.size == 0:
+            continue
+        s = scores[cand]
+        if cand.size > k:
+            # keep everything at-or-above the kth score so boundary ties
+            # can still be broken by doc_id in the exact sort below
+            thresh = np.partition(-s, k - 1)[k - 1]
+            keep = np.flatnonzero(-s <= thresh)
+            cand, s = cand[keep], s[keep]
+        order = np.lexsort((cand, -s))[:k]
+        out_q.extend([qid] * order.size)
+        out_d.append(cand[order] + base)
+        out_s.append(s[order])
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series(out_q, dtype="object"),
+            "doc_id": pd.Series(
+                np.concatenate(out_d) if out_d else [], dtype="int64"
+            ),
+            "score": pd.Series(
+                np.concatenate(out_s) if out_s else [], dtype="float64"
+            ),
+        }
+    )
+
+
+def _score_one(pdf, coefs, k1, b, avgdl, k, mode, block, deleted) -> pd.DataFrame:
+    """`_score_segment` for a batch of one: (doc_id, score)."""
+    return _score_segment(
+        pdf, {"": coefs}, k1, b, avgdl, k, mode, block, deleted
+    ).drop(columns="query_id")
 
 
 def bm25_topk(
@@ -387,12 +431,13 @@ def bm25_topk(
         if min_df / max(stats.n_docs, 1) > 0.3:
             use_prune = False
 
-    cols = ["seg_id", "term", "doc_ids_bin", "tfs_bin"] + (
+    cols = ["seg_id", "field", "term", "doc_ids_bin", "tfs_bin"] + (
         ["block_maxes", "block_id_offs", "block_tf_offs", "block_first_ids", "df_local"]
         if prune
         else []
     )
-    post = cat.postings([(field, t) for t in sorted(idfs)]).select(*cols)
+    coefs = {(field, t): v for t, v in idfs.items()}
+    post = cat.postings(sorted(coefs)).select(*cols)
     meta = cat.seg_meta().select(
         "seg_id", "n_docs", "base_doc_id", "dl_bin", "avgdl_built"
     )
@@ -408,63 +453,10 @@ def bm25_topk(
         # recomputes its bounds with the current corpus avgdl
         if use_prune and float(pdf["avgdl_built"].iloc[0]) == avgdl:
             return _score_segment_pruned(pdf, idfs, k1, b, avgdl, k, block, deleted)
-        return _score_segment(pdf, idfs, k1, b, avgdl, k, mode, block, deleted)
+        return _score_one(pdf, coefs, k1, b, avgdl, k, mode, block, deleted)
 
     per_seg = apply_per_segment(cat, joined, score, "doc_id long, score double")
     return per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
-def _score_segment_fielded(
-    pdf: pd.DataFrame,
-    idfs: dict[tuple[str, str], float],
-    weights: dict[str, float],
-    k1: float,
-    b: float,
-    avgdl: float,
-    k: int,
-    block: int,
-    deleted: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Per-segment weighted multi-field accumulation: one vectorized
-    pass per (field, term) posting list in sorted order (deterministic
-    float sums), combined score = Σ_f w_f · idf_f(t) · sat(tf_f).
-    Norms share the index's single dl (defined from text_col at build
-    time) — per-field length norms would need per-field dl blobs,
-    which the format deliberately doesn't store (SURVEY §1.2)."""
-    n_docs = int(pdf["n_docs"].iloc[0])
-    base = int(pdf["base_doc_id"].iloc[0])
-    dls = varint_decode(pdf["dl_bin"].iloc[0]).astype(np.float64)
-    scores = np.zeros(n_docs, dtype=np.float64)
-    hit = np.zeros(n_docs, dtype=bool)
-    rows = {
-        (f, t): (ids_b, tfs_b)
-        for f, t, ids_b, tfs_b in zip(
-            pdf["field"], pdf["term"], pdf["doc_ids_bin"], pdf["tfs_bin"]
-        )
-    }
-    for key in sorted(rows):
-        if key not in idfs:
-            continue
-        ids_b, tfs_b = rows[key]
-        ids = delta_decode_blocked(ids_b or b"", block).astype(np.int64) - base
-        tfs = varint_decode(tfs_b or b"").astype(np.float64)
-        norm = tfs / (tfs + k1 * (1.0 - b + b * dls[ids] / avgdl))
-        scores[ids] += weights[key[0]] * idfs[key] * norm
-        hit[ids] = True
-    if deleted is not None:
-        hit[deleted - base] = False
-    cand = np.flatnonzero(hit)
-    if cand.size == 0:
-        return _EMPTY()
-    s = scores[cand]
-    if cand.size > k:
-        thresh = np.partition(-s, k - 1)[k - 1]
-        keep = np.flatnonzero(-s <= thresh)
-        cand, s = cand[keep], s[keep]
-    order = np.lexsort((cand, -s))[:k]
-    return pd.DataFrame(
-        {"doc_id": (cand[order] + base).astype(np.int64), "score": s[order]}
-    )
 
 
 def bm25f_topk(
@@ -489,26 +481,28 @@ def bm25f_topk(
     doesn't store; the shared-text-dl norm is the index's defined
     semantics, see build_index docstring).
 
-    Disjunctive, exact path (no MaxScore — the combined
-    per-(field,term) bounds it needs aren't materialized). Same
-    per-segment top-k + global TakeOrderedAndProject merge as
-    bm25_topk; combined per-segment top-k is rank-safe because each
-    segment task sees BOTH fields' postings for its segment."""
+    Disjunctive, exact (no MaxScore — the combined per-(field, term)
+    bounds it needs aren't materialized): a batch of one through the
+    same per-segment scorer as bm25_topk, with each key's coefficient
+    w_f·idf_f(t), and the same per-segment top-k + global
+    TakeOrderedAndProject merge. The combined per-segment top-k is
+    rank-safe because each segment task sees every field's postings
+    for its segment."""
     spark = cat.spark
     stats = cat.corpus_stats()
     uniq = sorted(set(terms))
     fields = sorted(weights)
     tstats = cat.term_stats_for([(f, t) for f in fields for t in uniq])
-    idfs = {
-        (f, t): idf(stats.n_docs, df) for (f, t), (df, _) in tstats.items()
+    coefs = {
+        (f, t): float(weights[f]) * idf(stats.n_docs, df)
+        for (f, t), (df, _) in tstats.items()
     }
-    if not idfs:
+    if not coefs:
         return spark.createDataFrame([], "doc_id long, score double")
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     block = stats.block_size
-    w = {f: float(weights[f]) for f in fields}
 
-    post = cat.postings(sorted(idfs)).select(
+    post = cat.postings(sorted(coefs)).select(
         "seg_id", "field", "term", "doc_ids_bin", "tfs_bin"
     )
     meta = cat.seg_meta().select("seg_id", "n_docs", "base_doc_id", "dl_bin")
@@ -517,7 +511,7 @@ def bm25f_topk(
     def score(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
         if pdf.empty:
             return _EMPTY()
-        return _score_segment_fielded(pdf, idfs, w, k1, b, avgdl, k, block, deleted)
+        return _score_one(pdf, coefs, k1, b, avgdl, k, "or", block, deleted)
 
     per_seg = apply_per_segment(cat, joined, score, "doc_id long, score double")
     return per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
@@ -577,77 +571,6 @@ def more_like_this(
     )
 
 
-def _score_segment_batch(
-    pdf: pd.DataFrame,
-    qterms: dict[str, list[str]],
-    idfs: dict[str, float],
-    k1: float,
-    b: float,
-    avgdl: float,
-    k: int,
-    mode: str,
-    block: int,
-    deleted: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """One decode pass shared by every query in the batch: each present
-    term's postings decode ONCE into (local ids, idf·saturation)
-    contribution arrays, then each query sums its own terms' arrays —
-    per-query float summation order is the same sorted-term order as
-    the single-query scorer, so scores are byte-identical to
-    bm25_topk run per query."""
-    n_docs = int(pdf["n_docs"].iloc[0])
-    base = int(pdf["base_doc_id"].iloc[0])
-    dls = varint_decode(pdf["dl_bin"].iloc[0]).astype(np.float64)
-    decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for t, ids_b, tfs_b in zip(pdf["term"], pdf["doc_ids_bin"], pdf["tfs_bin"]):
-        if t not in idfs or t in decoded:
-            continue
-        ids = delta_decode_blocked(ids_b or b"", block).astype(np.int64) - base
-        tfs = varint_decode(tfs_b or b"").astype(np.float64)
-        contrib = idfs[t] * (
-            tfs / (tfs + k1 * (1.0 - b + b * dls[ids] / avgdl))
-        )
-        decoded[t] = (ids, contrib)
-    out_q, out_d, out_s = [], [], []
-    dead = None
-    if deleted is not None:
-        dead = np.zeros(n_docs, dtype=bool)
-        dead[deleted - base] = True
-    for qid in sorted(qterms):
-        uniq = sorted(set(qterms[qid]))
-        present = [t for t in uniq if t in decoded]
-        if not present or (mode == "and" and len(present) < len(uniq)):
-            continue
-        scores = np.zeros(n_docs, dtype=np.float64)
-        hits = np.zeros(n_docs, dtype=np.int32)
-        for t in present:  # sorted order → deterministic float sums
-            ids, contrib = decoded[t]
-            scores[ids] += contrib
-            hits[ids] += 1
-        if dead is not None:
-            hits[dead] = 0
-        need = len(uniq) if mode == "and" else 1
-        cand = np.flatnonzero(hits >= need)
-        if cand.size == 0:
-            continue
-        s = scores[cand]
-        if cand.size > k:
-            thresh = np.partition(-s, k - 1)[k - 1]
-            keep = np.flatnonzero(-s <= thresh)
-            cand, s = cand[keep], s[keep]
-        order = np.lexsort((cand, -s))[:k]
-        out_q.extend([qid] * order.size)
-        out_d.extend((cand[order] + base).tolist())
-        out_s.extend(s[order].tolist())
-    return pd.DataFrame(
-        {
-            "query_id": pd.Series(out_q, dtype="object"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        }
-    )
-
-
 def bm25_topk_batch(
     cat: IndexCatalog,
     queries: dict[str, list[str]],
@@ -663,11 +586,12 @@ def bm25_topk_batch(
 
     Plan: the UNION of every query's (field, term) pairs is pushed
     into one postings read (same row-group-pruned scan as a single
-    query), each segment task decodes every term ONCE and reuses the
-    contribution arrays across queries, per-(segment, query) top-k in
-    the worker, then ONE window-ranked global merge partitioned by
-    query_id. Per-query output is rank- AND score-identical to
-    bm25_topk (same sorted-term summation; pinned in pytest)."""
+    query), each segment task runs the one exact scorer over the whole
+    batch — every key decodes ONCE and serves every query that names
+    it — with a per-(segment, query) top-k, then ONE window-ranked
+    global merge partitioned by query_id. Per-query output is rank- AND
+    score-identical to bm25_topk (same scorer, same sorted-key
+    summation; pinned in pytest)."""
     from pyspark.sql import Window
 
     spark = cat.spark
@@ -681,17 +605,22 @@ def bm25_topk_batch(
         )
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     block = stats.block_size
+    # a term absent from the dictionary contributes nothing to an OR
+    # query and empties an AND query
+    batch = {
+        str(q): {(field, str(t)): idfs[t] for t in ts if t in idfs}
+        for q, ts in queries.items()
+        if mode != "and" or all(t in idfs for t in ts)
+    }
     # explicit broadcast variable, not task-closure capture: at the
     # thousands-of-query workloads this function is for, the query
     # structures are re-serialized into EVERY task closure (once per
     # task, per stage) when captured — a broadcast ships them to each
     # executor once and the closure carries only the handle
-    qb = spark.sparkContext.broadcast(
-        ({str(q): [str(t) for t in ts] for q, ts in queries.items()}, idfs)
-    )
+    qb = spark.sparkContext.broadcast(batch)
 
     post = cat.postings([(field, t) for t in sorted(idfs)]).select(
-        "seg_id", "term", "doc_ids_bin", "tfs_bin"
+        "seg_id", "field", "term", "doc_ids_bin", "tfs_bin"
     )
     meta = cat.seg_meta().select("seg_id", "n_docs", "base_doc_id", "dl_bin")
     joined = post.join(meta, "seg_id", "inner")
@@ -701,9 +630,8 @@ def bm25_topk_batch(
             return pd.DataFrame(
                 {"query_id": [], "doc_id": [], "score": []}
             ).astype({"doc_id": "int64", "score": "float64"})
-        qterms_b, idfs_b = qb.value
-        return _score_segment_batch(
-            pdf, qterms_b, idfs_b, k1, b, avgdl, k, mode, block, deleted
+        return _score_segment(
+            pdf, qb.value, k1, b, avgdl, k, mode, block, deleted
         )
 
     per_seg = apply_per_segment(

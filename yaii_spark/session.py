@@ -57,6 +57,12 @@ def get_spark(
         # (guide §6 "Input split size" / §2.5 input skew).
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # orderBy(...).limit(k) plans TakeOrderedAndProject, whose
+        # top-k selector allocates 2·k slots per task up front: a
+        # "return everything" k (10**9) exhausts the driver heap and
+        # kills the JVM. Above this k, Spark plans Sort + limit
+        # instead; every practical top-k stays on the bounded path.
+        .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
         # this sandbox's host oversubscribes CPU in daily windows
         # (BENCH/BASELINE.md): with the default 120 s network timeout a
         # starved driver JVM drops executor heartbeats and the RPC
