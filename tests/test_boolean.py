@@ -220,3 +220,18 @@ def test_scan_column_pruning_positions(bool_index):
     )
     assert {"doc_ids_bin", "tfs_bin", "pos_bin", "block_pos_offs"} <= ph_cols
     assert "block_maxes" not in ph_cols, ph_cols
+
+
+def test_token_only_queries_never_read_docs(spark, bool_index):
+    """Token-only AND and phrase queries evaluate on postings ⋈ seg_meta
+    alone: on a fresh catalog they never build the docs DataFrame (a
+    footer-inference read plus a tombstone read). A query with an
+    attribute predicate still reads docs."""
+    cat = IndexCatalog(spark, bool_index.root)
+    assert ids(execute_boolean(cat, A.and_(A.token("abc"), A.token("bcd")))) == {14}
+    assert ids(execute_boolean(cat, A.phrase(["demo", "abc"]))) == {14}
+    assert ids(execute_boolean(cat, A.phrase(["lorem", "ipsum"]))) == {12}
+    assert "docs" not in cat._tables
+    mixed = A.and_(A.token("abc"), A.number_range("num_attr", 21, None))
+    assert ids(execute_boolean(cat, mixed)) == {14}
+    assert "docs" in cat._tables

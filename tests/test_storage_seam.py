@@ -1,7 +1,8 @@
-"""The single read/write seam (storage.read_table / write_table): the
-north_rule's 'over Iceberg tables' claim is real code, not a comment —
-parquet path unit-tested here, iceberg path exercised when jars exist
-(skip otherwise), and no module bypasses the seam.
+"""The read/write seam (storage.read_index_table / read_table /
+write_table): the north_rule's 'over Iceberg tables' claim is real
+code, not a comment — parquet path unit-tested here, iceberg path
+exercised when jars exist (skip otherwise), no module bypasses the
+seam, and every index table reads with its declared schema.
 """
 
 import glob
@@ -118,3 +119,72 @@ def test_catalog_prewarm(spark, work_dir):
     assert {r.doc_id for r in execute_boolean(cat, A.token("abc")).collect()} == {12, 14}
     # the query reused the prewarmed DataFrames (same objects, no relist)
     assert all(cat._tables[k] is before[k] for k in before)
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), ids of the Spark jobs fn launched), counted under a
+    fresh job group through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"seam-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "storage seam probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def every_table_index(spark, tmp_path_factory):
+    """A 2-segment build, one streaming append batch and a delete: all
+    eight declared index tables exist on disk."""
+    from yaii_spark.indexer import build_index, delete_docs
+    from yaii_spark.streaming import make_append_committer
+    from yaii_spark.synth import gen_pages
+
+    idx = str(tmp_path_factory.mktemp("seam_tables") / "idx")
+    stored = ["url", "text", "num_attr"]
+    build_index(spark, gen_pages(spark, 32), idx, seg_size=16, stored_cols=stored)
+    commit = make_append_committer(idx, seg_size=16, stored_cols=stored)
+    commit(gen_pages(spark, 48, include_fixtures=False).filter(F.col("doc_id") >= 32), 0)
+    delete_docs(spark, idx, [3, 40])
+    return idx
+
+
+_DECLARED = [
+    "postings", "seg_meta", "term_stats", "corpus_stats", "checkpoints",
+    "stats_ledger", "tombstones", "sink_ledger",
+]
+
+
+@pytest.mark.parametrize("table", _DECLARED)
+def test_declared_schema_reads(spark, every_table_index, table):
+    """Each index table reads through read_index_table with its declared
+    schema: no Spark job (no footer inference), a schema equal to the
+    one inferred from the written files (apart from the seg_id partition
+    column, which inference reads as INT), and seg_id as LONG.
+    term_stats is exempt from the zero-job check only: listing its
+    TERM_STATS_BUCKETS partition directories runs as a parallel job."""
+    from pyspark.sql import types as T
+
+    from yaii_spark.storage import read_index_table
+
+    df, jobs = _jobs_launched(
+        spark, lambda: read_index_table(spark, every_table_index, table)
+    )
+    if table != "term_stats":
+        assert jobs == [], f"{table}: read launched jobs {jobs}"
+    inferred = read_table(spark, os.path.join(every_table_index, table)).schema
+    inferred = T.StructType([
+        T.StructField(f.name, T.LongType(), f.nullable)
+        if f.name == "seg_id" and f.dataType == T.IntegerType()
+        else f
+        for f in inferred
+    ])
+    assert df.schema == inferred
+    if "seg_id" in df.columns:
+        assert df.schema["seg_id"].dataType == T.LongType()
+    assert df.count() > 0

@@ -533,6 +533,49 @@ def test_incremental_term_stats_fold_matches_full(spark, tmp_path, monkeypatch):
     assert _ts_rows(spark, idx) == folded
 
 
+def test_early_r5_stats_ledger_migrates_on_append(spark, tmp_path):
+    """An early-r5 stats_ledger holds seg_id only. Under the declared
+    schema its n_docs reads null, which triggers the one-time
+    (n_docs, sum_dl) migration on the next append: corpus stats and
+    term_stats then equal those of a clean index fed the same batches,
+    and so do the ledger's (seg_id, n_docs, sum_dl) rows."""
+    from yaii_spark.storage import read_index_table, write_table
+    from yaii_spark.streaming import make_append_committer
+
+    b1 = gen_pages(spark, 40, include_fixtures=True)
+    b2 = gen_pages(spark, 70, include_fixtures=False).filter(F.col("doc_id") >= 40)
+
+    def ingest(name, early_ledger):
+        idx = str(tmp_path / name)
+        commit = make_append_committer(idx, seg_size=16, stored_cols=_FOLD_STORED)
+        commit(b1, 0)
+        if early_ledger:
+            segs = read_index_table(spark, idx, "stats_ledger").select("seg_id")
+            rows = [(int(r.seg_id),) for r in segs.collect()]
+            write_table(
+                spark.createDataFrame(rows, "seg_id long"), f"{idx}/stats_ledger"
+            )
+            assert spark.read.parquet(f"{idx}/stats_ledger").columns == ["seg_id"]
+        commit(b2, 1)
+        return idx
+
+    early, clean = ingest("early_led", True), ingest("clean_led", False)
+    assert _ts_rows(spark, early) == _ts_rows(spark, clean)
+
+    def corpus_row(idx):
+        return read_index_table(spark, idx, "corpus_stats").collect()[0].asDict()
+
+    assert corpus_row(early) == corpus_row(clean)
+    assert corpus_row(early)["n_docs"] == 70
+
+    def ledger(idx):
+        return sorted(
+            tuple(r) for r in read_index_table(spark, idx, "stats_ledger").collect()
+        )
+
+    assert ledger(early) == ledger(clean)
+
+
 def test_torn_fold_recovers_with_full_recompute(spark, tmp_path):
     """A crash between the fold's bucket overwrite and its ledger append
     leaves the stats_folding marker; the next append must detect it and

@@ -157,10 +157,11 @@ def varint_encode_blocked(
     return varint_encode(v), value_offs[starts].astype(np.int32)
 
 
-def decode_byte_range(buf: bytes, offs: np.ndarray, b: int, total_len: int) -> bytes:
-    """Byte slice of block b given the per-block offsets array."""
+def decode_byte_range(buf: bytes, offs: np.ndarray, b: int) -> bytes:
+    """Byte slice of block b of a blocked stream, given its per-block
+    start offsets (the last block runs to the end of `buf`)."""
     lo = int(offs[b])
-    hi = int(offs[b + 1]) if b + 1 < len(offs) else total_len
+    hi = int(offs[b + 1]) if b + 1 < len(offs) else len(buf)
     return buf[lo:hi]
 
 

@@ -67,9 +67,12 @@ from yaii_spark.analyzer import (
 )
 from yaii_spark.codec import varint_encode, varint_lengths
 from yaii_spark.storage import (
+    TABLE_SCHEMAS,
+    column_names,
     fs_delete,
     fs_exists,
     fs_touch,
+    read_index_table,
     read_table,
     write_table,
 )
@@ -93,21 +96,6 @@ def _tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) 
     """Lucene-form BM25 tf normalization: tf / (tf + k1*(1-b+b*dl/avgdl))."""
     tf = tf.astype(np.float64)
     return tf / (tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
-
-
-# blocked layout (FORMAT_VERSION 4): delta restarts + per-block byte
-# offsets and first doc ids, so the query side can decode single blocks
-# (codec.delta_encode_blocked; bm25 lazy MaxScore is the consumer).
-# v5 extends the same block structure to the position stream
-# (block_pos_offs): phrase evaluation decodes positions only for blocks
-# holding candidate docs (executor._LazyPositions).
-_POSTINGS_SCHEMA = (
-    "seg_id long, field string, term string, df_local long, cf_local long, "
-    "doc_ids_bin binary, tfs_bin binary, pos_bin binary, "
-    "block_maxes array<double>, max_norm double, "
-    "block_id_offs array<int>, block_tf_offs array<int>, "
-    "block_first_ids array<long>, block_pos_offs array<int>"
-)
 
 
 def _encode_group_batched(
@@ -134,13 +122,7 @@ def _encode_group_batched(
 
     `items`: [((fid, term_bytes), (ids, tfs, dls, pos_blobs)), ...]
     with each row's ids sorted ascending (doc_id processing order)."""
-    out = {
-        "seg_id": [], "field": [], "term": [], "df_local": [], "cf_local": [],
-        "doc_ids_bin": [], "tfs_bin": [], "pos_bin": [],
-        "block_maxes": [], "max_norm": [],
-        "block_id_offs": [], "block_tf_offs": [], "block_first_ids": [],
-        "block_pos_offs": [],
-    }
+    out = {c: [] for c in column_names("postings")}
     nrows = len(items)
     if nrows == 0:
         return pd.DataFrame(out)
@@ -260,18 +242,6 @@ def _make_packed_encoder(field_names: list[str], avgdl: float, k1: float, b: flo
     return encode
 
 
-# v5: avgdl_built records the corpus avgdl the segment's block-max
-# bounds were computed with — bm25 pruning is only rank-safe when it
-# matches the query-time corpus avgdl (streaming appends drift it; the
-# scorer falls back to exact for stale segments). deleted_bin holds the
-# local ids expunged by a purging merge (delta+varint; the NOT/ALL
-# universe subtracts them — doc ids are never renumbered, so purged
-# slots must stay out of the universe without a tombstone table).
-_SEG_META_SCHEMA = (
-    "seg_id long, n_docs long, base_doc_id long, dl_bin binary, "
-    "avgdl_built double, deleted_bin binary"
-)
-
 _META_ENC_SCHEMA = T.StructType(
     [
         T.StructField("n_docs", T.LongType()),
@@ -390,9 +360,7 @@ def _filter_by_seg_ids(df: DataFrame, segs: list[int]) -> DataFrame:
     """Restrict a seg_id-partitioned table to `segs`: an In-list filter
     (static partition pruning — only those segments' directories are
     ever listed/read) when the list is small, a broadcast semi-join for
-    very large lists (a 10^6-element In-list would bloat the plan).
-    Callers must cast seg_id to LONG first (partition inference reads
-    it back as int — the cogroup-key hazard)."""
+    very large lists (a 10^6-element In-list would bloat the plan)."""
     if len(segs) <= 4096:
         return df.filter(F.col("seg_id").isin([int(s) for s in segs]))
     seg_df = df.sparkSession.createDataFrame(
@@ -422,15 +390,11 @@ def _seg_stats_df(spark: SparkSession, out_dir: str, segs: list[int] | None) -> 
     """(seg_id, n_docs, sum_dl) rows for `segs` (None = every durable
     segment) — the stats_ledger payload. Distributed: n_docs comes from
     the seg_meta column, sum_dl from one blob-decode per segment row."""
-    meta = read_table(spark, os.path.join(out_dir, "seg_meta")).withColumn(
-        "seg_id", F.col("seg_id").cast("long")
-    )
+    meta = read_index_table(spark, out_dir, "seg_meta")
     if segs is not None:
         meta = _filter_by_seg_ids(meta, segs)
     return meta.select(
-        "seg_id",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        _dl_sum_udf()(F.col("dl_bin")).alias("sum_dl"),
+        "seg_id", "n_docs", _dl_sum_udf()(F.col("dl_bin")).alias("sum_dl")
     )
 
 
@@ -465,10 +429,7 @@ def _check_append_geometry(spark: SparkSession, out_dir: str, seg_size: int) -> 
 
 def _scoped_postings(spark: SparkSession, out_dir: str, segs: list[int]) -> DataFrame:
     """Postings restricted to `segs` (see _filter_by_seg_ids)."""
-    df = read_table(spark, os.path.join(out_dir, "postings")).withColumn(
-        "seg_id", F.col("seg_id").cast("long")
-    )
-    return _filter_by_seg_ids(df, segs)
+    return _filter_by_seg_ids(read_index_table(spark, out_dir, "postings"), segs)
 
 
 def _write_term_stats_full(spark: SparkSession, out_dir: str, post_all: DataFrame) -> None:
@@ -574,12 +535,13 @@ def _fold_term_stats(spark: SparkSession, out_dir: str, new_segs: list[int]) -> 
 
 def _fold_term_stats_body(spark, out_dir, new_segs, delta) -> None:
     ts_path = os.path.join(out_dir, "term_stats")
-    tmp_path = os.path.join(out_dir, "term_stats_delta_tmp")
+    tmp = "term_stats_delta_tmp"
+    tmp_path = os.path.join(out_dir, tmp)
     marker = os.path.join(out_dir, "stats_folding")
     touched = [int(r.bucket) for r in delta.select("bucket").distinct().collect()]
     if touched:
         merged = (
-            read_table(spark, ts_path)
+            read_index_table(spark, out_dir, "term_stats")
             .filter(F.col("bucket").isin(touched))
             .select("field", "term", "df", "cf", "bucket")
             .unionByName(delta.select("field", "term", "df", "cf", "bucket"))
@@ -595,7 +557,7 @@ def _fold_term_stats_body(spark, out_dir, new_segs, delta) -> None:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             write_table(
-                read_table(spark, tmp_path)
+                read_index_table(spark, out_dir, tmp)
                 # explicit count for the same reason as the full path:
                 # AQE would coalesce the tiny shuffle to one task and
                 # serialize the per-bucket-dir file writes; bounded by
@@ -806,9 +768,9 @@ def build_index(
                 [(int(s),) for s in all_segs], "seg_id long"
             )
             done_df = (
-                read_table(spark, ckpt_path)
+                read_index_table(spark, out_dir, "checkpoints")
                 .filter("status = 'done'")
-                .select(F.col("seg_id").cast("long").alias("seg_id"))
+                .select("seg_id")
             )
             pending = sorted(
                 r.seg_id for r in seg_df.join(done_df, "seg_id", "left_anti").collect()
@@ -892,7 +854,7 @@ def build_index(
         )
         enc = packed.groupBy("seg_id", "shard").applyInPandas(
             _make_packed_encoder(names, avgdl, k1, b),
-            schema=_POSTINGS_SCHEMA,
+            schema=TABLE_SCHEMAS["postings"],
         )
         # the three table writes are independent (all read the persisted
         # tokenized batch, whose blocks were materialized by the stats
@@ -946,7 +908,7 @@ def build_index(
             seg_counts_src = post_scope
         else:
             post_scope = (
-                read_table(spark, os.path.join(out_dir, "postings"))
+                read_index_table(spark, out_dir, "postings")
                 .select(*_STATS_COLS).cache()
             )
             seg_counts_src = post_scope.join(
@@ -991,17 +953,18 @@ def build_index(
     )
     unfolded: list[int] = []
     if use_fold:
-        led = read_table(spark, ledger_path)
-        if "n_docs" not in led.columns:
-            # one-time migration of an early-r5 seg_id-only ledger:
-            # enrich with (n_docs, sum_dl) from seg_meta, marker-guarded
-            # (a torn rewrite falls back to the full recompute)
+        led = read_index_table(spark, out_dir, "stats_ledger")
+        if not led.filter(F.col("n_docs").isNull()).isEmpty():
+            # one-time migration of an early-r5 seg_id-only ledger (its
+            # n_docs reads null): enrich with (n_docs, sum_dl) from
+            # seg_meta, marker-guarded (a torn rewrite falls back to the
+            # full recompute)
             seg_list = [int(r.seg_id) for r in led.select("seg_id").distinct().collect()]
             fs_touch(spark, marker_path)
             write_table(_seg_stats_df(spark, out_dir, seg_list), ledger_path)
             fs_delete(spark, marker_path)
-            led = read_table(spark, ledger_path)
-        folded = led.select(F.col("seg_id").cast("long").alias("seg_id"))
+            led = read_index_table(spark, out_dir, "stats_ledger")
+        folded = led.select("seg_id")
         # durable universe = prior checkpoints ∪ THIS batch's pending
         # (its checkpoint rows land concurrently with the fold, in the
         # next pool). Checkpoints are UNPARTITIONED — one row per built
@@ -1012,9 +975,9 @@ def build_index(
         # crashed batch that died before its checkpoints is re-driven
         # whole by the sink's replay, which re-enters here.
         seg_ids = (
-            read_table(spark, ckpt_path)
+            read_index_table(spark, out_dir, "checkpoints")
             .filter("status = 'done'")
-            .select(F.col("seg_id").cast("long").alias("seg_id"))
+            .select("seg_id")
             .union(
                 spark.createDataFrame(
                     [(int(s),) for s in pending] or [(int(-1),)], "seg_id long"
@@ -1034,7 +997,7 @@ def build_index(
         post_all = (
             post_scope
             if (post_scope is not None and not append)
-            else read_table(spark, os.path.join(out_dir, "postings"))
+            else read_index_table(spark, out_dir, "postings")
         )
         _write_term_stats_full(spark, out_dir, post_all)
 
@@ -1066,7 +1029,7 @@ def build_index(
         # (~1 TB per micro-batch at 10^12 docs) even though it was only
         # 10^6 rows (r5; the last O(corpus) term in the append path)
         srow = (
-            read_table(spark, ledger_path)
+            read_index_table(spark, out_dir, "stats_ledger")
             .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
             .collect()[0]
         )
@@ -1078,8 +1041,7 @@ def build_index(
     cs_df = spark.createDataFrame(
         [(n_total, avgdl, float(k1), float(b), int(seg_size), BLOCK_SIZE,
           FORMAT_VERSION)],
-        "n_docs long, avgdl double, k1 double, b double, seg_size long, "
-        "block_size long, format_version long",
+        TABLE_SCHEMAS["corpus_stats"],
     )
     write_table(cs_df, os.path.join(out_dir, "corpus_stats"))
     if post_scope is not None:
@@ -1185,7 +1147,7 @@ def refresh_block_bounds(spark: SparkSession, index_dir: str) -> dict:
     refreshed = (
         post.groupBy("seg_id")
         .cogroup(meta.select("seg_id", "base_doc_id", "dl_bin").groupBy("seg_id"))
-        .applyInPandas(rewrite, schema=_POSTINGS_SCHEMA)
+        .applyInPandas(rewrite, schema=TABLE_SCHEMAS["postings"])
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     write_table(
@@ -1194,9 +1156,7 @@ def refresh_block_bounds(spark: SparkSession, index_dir: str) -> dict:
         partition_by=["seg_id"],
     )
     # flip avgdl_built strictly AFTER the bounds are durable
-    new_meta = meta.withColumn("avgdl_built", F.lit(float(avgdl))).select(
-        "seg_id", "n_docs", "base_doc_id", "dl_bin", "avgdl_built", "deleted_bin"
-    )
+    new_meta = meta.withColumn("avgdl_built", F.lit(float(avgdl)))
     write_table(
         new_meta, os.path.join(index_dir, "seg_meta"), partition_by=["seg_id"]
     )
@@ -1244,10 +1204,6 @@ def merge_segments(
     block_size = stats.block_size
     new_size = seg_size * factor
 
-    # seg_id returns from the partitioned layout as INT (partition
-    # inference); cast to LONG everywhere a cogroup key derives from it
-    # — int-vs-long key sides hash-partition differently and the
-    # cogroup silently mis-aligns (storage.IndexCatalog._seg_long)
     meta = cat_in.seg_meta()
     post = cat_in.postings()
 
@@ -1339,7 +1295,7 @@ def merge_segments(
     if tomb_new is not None:
         meta_keyed = meta_keyed.join(tomb_new, "new_seg", "left")
     new_meta = meta_keyed.groupBy("new_seg").applyInPandas(
-        merge_meta, schema=_SEG_META_SCHEMA
+        merge_meta, schema=TABLE_SCHEMAS["seg_meta"]
     )
     write_table(new_meta, os.path.join(out_dir, "seg_meta"), partition_by=["seg_id"])
 
@@ -1356,12 +1312,7 @@ def merge_segments(
             varint_lengths,
         )
 
-        cols = [
-            "seg_id", "field", "term", "df_local", "cf_local",
-            "doc_ids_bin", "tfs_bin", "pos_bin", "block_maxes", "max_norm",
-            "block_id_offs", "block_tf_offs", "block_first_ids",
-            "block_pos_offs",
-        ]
+        cols = column_names("postings")
         if post_pdf.empty:
             # a (new_seg, shard) key can arrive meta-only from the
             # cogroup; the empty frame must use OBJECT dtype columns —
@@ -1376,7 +1327,7 @@ def merge_segments(
             # shard); fail with the cause instead of an opaque iloc error
             raise ValueError(
                 f"merge: no seg_meta for (new_seg={new_seg}) — cogroup "
-                "key misalignment (check seg_id key types)"
+                "key misalignment"
             )
         dls = varint_decode(meta_pdf["dl_bin"].iloc[0]).astype(np.float64)
         db = meta_pdf["deleted_bin"].iloc[0]
@@ -1449,26 +1400,22 @@ def merge_segments(
             return pd.DataFrame(columns=cols, dtype=object)
         return pd.DataFrame(out)
 
-    out_schema = _POSTINGS_SCHEMA
     shard = F.pmod(F.xxhash64("field", "term"), F.lit(MERGE_SHARDS))
     posts = (
         post.withColumn("new_seg", (F.col("seg_id") / factor).cast("long"))
         .withColumn("shard", shard)
     )
     # replicate each merged dl blob (and its purge blob) to every shard
-    # of its segment (seg_id cast long: cogroup key alignment — see the
-    # meta/post reads above)
+    # of its segment
     meta_sharded = (
-        read_table(spark, os.path.join(out_dir, "seg_meta"))
-        .select(
-            F.col("seg_id").cast("long").alias("new_seg"), "dl_bin", "deleted_bin"
-        )
+        read_index_table(spark, out_dir, "seg_meta")
+        .select(F.col("seg_id").alias("new_seg"), "dl_bin", "deleted_bin")
         .crossJoin(spark.range(MERGE_SHARDS).select(F.col("id").alias("shard")))
     )
     write_table(
         posts.groupBy("new_seg", "shard")
         .cogroup(meta_sharded.groupBy("new_seg", "shard"))
-        .applyInPandas(merge_shard, schema=out_schema)
+        .applyInPandas(merge_shard, schema=TABLE_SCHEMAS["postings"])
         .repartition("seg_id")
         .sortWithinPartitions("field", "term"),
         os.path.join(out_dir, "postings"),
@@ -1489,7 +1436,7 @@ def merge_segments(
     # when deletes are expunged (see docstring: keeps scores identical;
     # explicit bucket-led sort keeps the writer from re-sorting rows)
     write_table(
-        read_table(spark, os.path.join(index_dir, "term_stats"))
+        read_index_table(spark, index_dir, "term_stats")
         .sortWithinPartitions("bucket", "field", "term"),
         os.path.join(out_dir, "term_stats"),
         partition_by=["bucket"],
@@ -1504,7 +1451,7 @@ def merge_segments(
         _seg_stats_df(spark, out_dir, None),
         os.path.join(out_dir, "stats_ledger"),
     )
-    post_new = read_table(spark, os.path.join(out_dir, "postings"))
+    post_new = read_index_table(spark, out_dir, "postings")
     ck = post_new.groupBy("seg_id").agg(
         F.sum("df_local").alias("n_postings_docs"), F.count("*").alias("n_terms")
     ).select(
@@ -1521,10 +1468,9 @@ def merge_segments(
     write_table(
         spark.createDataFrame(
             [(stats.n_docs, avgdl, k1, b, new_size, block_size, FORMAT_VERSION)],
-            "n_docs long, avgdl double, k1 double, b double, seg_size long, "
-            "block_size long, format_version long",
+            TABLE_SCHEMAS["corpus_stats"],
         ),
         os.path.join(out_dir, "corpus_stats"),
     )
-    n_after = read_table(spark, os.path.join(out_dir, "seg_meta")).count()
+    n_after = read_index_table(spark, out_dir, "seg_meta").count()
     return {"segments_before": n_before, "segments_after": n_after}

@@ -32,7 +32,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from yaii_spark.codec import delta_decode_blocked, varint_decode
+from yaii_spark.codec import decode_byte_range, delta_decode_blocked, varint_decode
 from yaii_spark.queries.executor import apply_per_segment
 from yaii_spark.storage import IndexCatalog
 
@@ -96,19 +96,14 @@ class _LazyPostings:
             DECODE_STATS["blocks_decoded"] += self.nblocks()
         return self._full
 
-    def _block_slice(self, buf: bytes, offs: np.ndarray, bx: int) -> bytes:
-        lo = int(offs[bx])
-        hi = int(offs[bx + 1]) if bx + 1 < len(offs) else len(buf)
-        return buf[lo:hi]
-
     def decode_block(self, bx: int) -> tuple[np.ndarray, np.ndarray]:
         if self._full is not None:
             s = slice(bx * self.block, (bx + 1) * self.block)
             return self._full[0][s], self._full[1][s]
         got = self._blocks.get(bx)
         if got is None:
-            ib = self._block_slice(self.ids_bin, self.id_offs, bx)
-            tb = self._block_slice(self.tfs_bin, self.tf_offs, bx)
+            ib = decode_byte_range(self.ids_bin, self.id_offs, bx)
+            tb = decode_byte_range(self.tfs_bin, self.tf_offs, bx)
             ids = delta_decode_blocked(ib, self.block).astype(np.int64) - self.base
             tfs = varint_decode(tb).astype(np.float64)
             got = self._blocks[bx] = (ids, tfs)

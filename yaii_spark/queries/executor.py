@@ -24,6 +24,9 @@ a stage.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -91,13 +94,12 @@ class _LazyPositions:
         """(values, starts) for block bx — flat per-block decode."""
         got = self._cache.get(bx)
         if got is None:
-            from yaii_spark.codec import decode_positions_flat
+            from yaii_spark.codec import decode_byte_range, decode_positions_flat
 
-            lo = int(self.offs[bx])
-            hi = int(self.offs[bx + 1]) if bx + 1 < len(self.offs) else len(self.pos_bin)
+            pb = decode_byte_range(self.pos_bin, self.offs, bx)
             tfs = self.tfs[bx * self.block : (bx + 1) * self.block]
-            got = self._cache[bx] = decode_positions_flat(self.pos_bin[lo:hi], tfs)
-            POS_DECODE_STATS["bytes_decoded"] += hi - lo
+            got = self._cache[bx] = decode_positions_flat(pb, tfs)
+            POS_DECODE_STATS["bytes_decoded"] += len(pb)
             POS_DECODE_STATS["blocks_decoded"] += 1
         return got
 
@@ -474,7 +476,12 @@ def _attr_filter(node: A.Node):
     return None
 
 
-def _eval_hybrid(cat: IndexCatalog, node: A.Node, docs: DataFrame) -> DataFrame:
+def _eval_hybrid(
+    cat: IndexCatalog, node: A.Node, docs: Callable[[], DataFrame]
+) -> DataFrame:
+    """`docs()` returns the live docs DataFrame; it is called only
+    where a subtree needs docs (All, attribute predicates, DataFrame-
+    level NOT/AND), so token-only queries never read docs."""
     if isinstance(node, A.CachedFilter):
         cached = getattr(cat, "_filter_cache", {}).get(node.name)
         if cached is None:
@@ -488,13 +495,13 @@ def _eval_hybrid(cat: IndexCatalog, node: A.Node, docs: DataFrame) -> DataFrame:
         return cached
     if A.is_token_only(node):
         if isinstance(node, A.All):
-            return docs.select("doc_id")
+            return docs().select("doc_id")
         if isinstance(node, A.NoneNode):
             return _empty_ids(cat.spark)
         return _eval_token_tree(cat, node)
     flt = _attr_filter(node)
     if flt is not None:
-        return docs.filter(flt).select("doc_id")
+        return docs().filter(flt).select("doc_id")
     if isinstance(node, A.And):
         # push all attribute predicates into ONE docs scan (Catalyst
         # conjunctive pushdown), token subtrees into one segment pass
@@ -505,7 +512,7 @@ def _eval_hybrid(cat: IndexCatalog, node: A.Node, docs: DataFrame) -> DataFrame:
             cond = _attr_filter(attr[0])
             for c in attr[1:]:
                 cond = cond & _attr_filter(c)
-            acc = docs.filter(cond).select("doc_id")
+            acc = docs().filter(cond).select("doc_id")
         tok = [c for c in rest if A.is_token_only(c)]
         other = [c for c in rest if not A.is_token_only(c)]
         if tok:
@@ -515,7 +522,7 @@ def _eval_hybrid(cat: IndexCatalog, node: A.Node, docs: DataFrame) -> DataFrame:
         for c in other:
             cdf = _eval_hybrid(cat, c, docs)
             acc = cdf if acc is None else acc.join(cdf, "doc_id", "inner")
-        return acc if acc is not None else docs.select("doc_id")
+        return acc if acc is not None else docs().select("doc_id")
     if isinstance(node, A.Or):
         dfs = [_eval_hybrid(cat, c, docs) for c in node.children]
         out = dfs[0]
@@ -524,7 +531,7 @@ def _eval_hybrid(cat: IndexCatalog, node: A.Node, docs: DataFrame) -> DataFrame:
         return out.distinct()
     if isinstance(node, A.Not):
         child = _eval_hybrid(cat, node.child, docs)
-        return docs.select("doc_id").join(child, "doc_id", "left_anti")
+        return docs().select("doc_id").join(child, "doc_id", "left_anti")
     raise TypeError(f"unsupported node: {node!r}")
 
 
@@ -537,8 +544,7 @@ def execute_boolean(cat: IndexCatalog, query: A.Node) -> DataFrame:
         q = A.prune_absent_terms(q, present)
     if isinstance(q, A.NoneNode):
         return _empty_ids(cat.spark)
-    docs = cat.docs_live()
-    return _eval_hybrid(cat, q, docs)
+    return _eval_hybrid(cat, q, functools.cache(cat.docs_live))
 
 
 def cache_filter(cat: IndexCatalog, name: str, query: A.Node) -> DataFrame:

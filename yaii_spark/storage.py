@@ -1,33 +1,27 @@
 """Index storage layout + catalog.
 
-Layout (SURVEY.md §7.0). An index directory holds five tables:
+Layout (SURVEY.md §7.0), one line per table, each naming its
+declared schema (TABLE_SCHEMAS[...]):
 
-    <root>/docs/         docs partitioned by seg_id (stored fields; doc
-                          lengths live in seg_meta.dl_bin, not here)
-    <root>/postings/     (term, df_local, cf_local, doc_ids_bin, tfs_bin,
-                          pos_bin, block_maxes, max_norm) partitioned by
-                          seg_id, sorted by term within files so parquet
-                          row-group min/max stats prune term lookups
-    <root>/seg_meta/     one row per segment: n_docs, base_doc_id,
-                          dl_bin (varint doc lengths in local-id order)
-    <root>/term_stats/   (term, df, cf) corpus-wide
-    <root>/corpus_stats/ single row: n_docs, avgdl, k1, b, seg_size
-    <root>/checkpoints/  per-segment lineage: seg_id, n_docs, n_postings,
-                          wall_sec, status — resumability (north_rule)
-    <root>/stats_ledger/ (seg_id, n_docs, sum_dl): segments whose
-                          postings are folded into term_stats, with
-                          their corpus-stat contribution — append-mode
-                          maintenance aggregates THIS tiny table, never
-                          the corpus (indexer._fold_term_stats)
-    <root>/stats_folding  torn-fold marker file: present only inside a
-                          fold's overwrite+ledger commit window; seen
-                          at build start → recover via full recompute
+    docs/            stored fields by seg_id — schema inferred
+    postings/        ["postings"]: blocked posting rows by seg_id
+    seg_meta/        ["seg_meta"]: one row per segment (dl_bin, holes)
+    term_stats/      ["term_stats"]: (df, cf) in TERM_STATS_BUCKETS dirs
+    corpus_stats/    ["corpus_stats"]: one row, the build commit marker
+    checkpoints/     ["checkpoints"]: one lineage row per built segment
+    stats_ledger/    ["stats_ledger"]: segments folded into term_stats
+    tombstones/      ["tombstones"]: deleted (seg_id, doc_id) rows
+    sink_ledger/     ["sink_ledger"]: streaming batch → doc-id range
+    term_stats_delta_tmp/  ["term_stats_delta_tmp"]: the fold's stage
+    stats_folding    marker file: a term_stats fold is mid-commit
 
-All storage goes through ONE read/write seam (``read_table`` /
-``write_table``): parquet directories by default, the same paths as
-Iceberg (Hadoop) tables when a catalog is configured — the sandbox
-image has no Iceberg jars, so that branch is covered by a
-skip-if-no-jars test.
+Index tables are read by ``read_index_table`` with the declared schema
+(no footer inference, so no Spark job per read, and seg_id reads back
+as long) and written by ``write_table``; ``read_table`` infers, for
+``docs`` and external inputs. Parquet directories by default, the same
+paths as Iceberg (Hadoop) tables — which carry their schema in metadata
+— when a catalog is configured; that branch is covered by a test that
+skips when no Iceberg jars are on the classpath.
 
 The reference's segment == contiguous docID range ``[from, next)``
 (/root/reference/src/lib/internal/segments/segment.ts:12-57); ours is
@@ -57,6 +51,42 @@ FORMAT_VERSION = 5
 # corpus dictionary (10^8-10^9 terms at web scale) is written by many
 # tasks and read with partition pruning — never one giant sorted file
 TERM_STATS_BUCKETS = 256
+
+# The declared schema of every index table (DDL: the read, write and
+# applyInPandas-output schema alike; a partition column reads back
+# last). Reads never infer, so a new column must be declared here.
+TABLE_SCHEMAS = {
+    "postings": (
+        "seg_id long, field string, term string, df_local long, cf_local long, "
+        "doc_ids_bin binary, tfs_bin binary, pos_bin binary, "
+        "block_maxes array<double>, max_norm double, "
+        "block_id_offs array<int>, block_tf_offs array<int>, "
+        "block_first_ids array<long>, block_pos_offs array<int>"
+    ),
+    "seg_meta": (
+        "seg_id long, n_docs long, base_doc_id long, dl_bin binary, "
+        "avgdl_built double, deleted_bin binary"
+    ),
+    "term_stats": "field string, term string, df long, cf long, bucket int",
+    "corpus_stats": (
+        "n_docs long, avgdl double, k1 double, b double, seg_size long, "
+        "block_size long, format_version long"
+    ),
+    "checkpoints": (
+        "seg_id long, n_postings_docs long, n_terms long, wall_sec double, "
+        "status string"
+    ),
+    "stats_ledger": "seg_id long, n_docs long, sum_dl double",
+    "tombstones": "seg_id long, doc_id long",
+    "sink_ledger": "batch_id long, start_id long, end_id long",
+}
+TABLE_SCHEMAS["term_stats_delta_tmp"] = TABLE_SCHEMAS["term_stats"]
+
+
+def column_names(table: str) -> list[str]:
+    """`table`'s declared column names, in order (no declared type
+    nests a comma)."""
+    return [c.split()[0] for c in TABLE_SCHEMAS[table].split(",")]
 
 
 def term_stats_bucket_col() -> "F.Column":
@@ -137,17 +167,30 @@ def iceberg_format(spark: SparkSession) -> str | None:
 
 
 def read_table(spark: SparkSession, path: str):
-    """Single read seam for every index table (north_rule: 'over
-    Iceberg tables'). With an Iceberg catalog configured the same
-    call reads the path as an Iceberg (Hadoop) table — snapshot
-    isolation, hidden-partition pruning; without one (this sandbox has
-    no Iceberg jars) it is a plain parquet directory with identical
-    layout. Both paths are exercised: parquet everywhere, iceberg by a
+    """Read seam for tables storage declares no schema for (``docs``
+    and external inputs); the parquet branch infers it from footers,
+    one Spark job. With an Iceberg catalog configured the same call
+    reads the path as an Iceberg (Hadoop) table — snapshot isolation,
+    hidden-partition pruning; without one it is a plain parquet
+    directory with identical layout. Both
+    paths are exercised: parquet everywhere, iceberg by a
     skip-if-no-jars test (tests/test_storage_seam.py)."""
     fmt = iceberg_format(spark)
     if fmt:
         return spark.read.format(fmt).load(path)
     return spark.read.parquet(path)
+
+
+def read_index_table(spark: SparkSession, root: str, table: str) -> DataFrame:
+    """Read index table `table` under `root` with its declared schema
+    (TABLE_SCHEMAS) — no footer inference. A declared column missing
+    from older files reads as null, and a declared long reads an INT32
+    file column. The Iceberg branch takes the schema from table
+    metadata (read_table)."""
+    path = os.path.join(root, table)
+    if iceberg_format(spark):
+        return read_table(spark, path)
+    return spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
 
 
 def write_table(
@@ -216,7 +259,7 @@ class IndexCatalog:
         # every query path needs it (one 1-row job per catalog, not per
         # query)
         if self._stats is None:
-            row = read_table(self.spark, self.path("corpus_stats")).collect()[0]
+            row = read_index_table(self.spark, self.root, "corpus_stats").collect()[0]
             d = row.asDict()
             # strict format gate: a v<5 index's postings would decode
             # into silently wrong doc ids under the current blocked
@@ -236,19 +279,16 @@ class IndexCatalog:
             )
         return self._stats
 
-    def _seg_long(self, df: DataFrame) -> DataFrame:
-        """Normalize seg_id to LONG. Parquet partition-column inference
-        reads `seg_id=N` directories back as INT; a cogroup whose other
-        side carries long keys then HASH-PARTITIONS the two sides
-        differently (murmur3 of int32 ≠ int64) and silently mis-aligns
-        groups — joins insert casts, cogroups do not. First seen as
-        empty meta groups in a 1M-doc merge."""
-        return df.withColumn("seg_id", F.col("seg_id").cast("long"))
-
     def _table_df(self, table: str) -> DataFrame:
         df = self._tables.get(table)
         if df is None:
-            df = self._tables[table] = read_table(self.spark, self.path(table))
+            # docs is read with inference: its stored columns are the
+            # build caller's choice, and nothing groups by its seg_id
+            df = self._tables[table] = (
+                read_table(self.spark, self.path(table))
+                if table == "docs"
+                else read_index_table(self.spark, self.root, table)
+            )
         return df
 
     def prewarm(self) -> "IndexCatalog":
@@ -262,7 +302,7 @@ class IndexCatalog:
         return self
 
     def docs(self) -> DataFrame:
-        return self._seg_long(self._table_df("docs"))
+        return self._table_df("docs")
 
     def postings(
         self,
@@ -277,7 +317,7 @@ class IndexCatalog:
         (field, term), so row-group min/max stats prune equality AND
         range lookups (the B-tree-like path); contains() degrades to an
         in-segment dictionary scan by design."""
-        df = self._seg_long(self._table_df("postings"))
+        df = self._table_df("postings")
         if field_terms is None and not scans:
             return df
         cond = None
@@ -304,23 +344,22 @@ class IndexCatalog:
         return df.filter(cond if cond is not None else F.lit(False))
 
     def seg_meta(self) -> DataFrame:
-        return self._seg_long(self._table_df("seg_meta"))
+        return self._table_df("seg_meta")
 
     def term_stats(self) -> DataFrame:
         return self._table_df("term_stats")
 
     def checkpoints(self) -> DataFrame:
-        return read_table(self.spark, self.path("checkpoints"))
+        return read_index_table(self.spark, self.root, "checkpoints")
 
     def tombstones(self) -> DataFrame | None:
         """Deleted doc ids (seg_id, doc_id) or None when nothing was
         ever deleted. The reference keeps per-segment delete bitmaps
         (mutable-segment.ts:27,191-197); at Iceberg scale these become
         positional delete files — same shape."""
-        p = self.path("tombstones")
-        if not fs_exists(self.spark, p):
+        if not fs_exists(self.spark, self.path("tombstones")):
             return None
-        return read_table(self.spark, p)
+        return read_index_table(self.spark, self.root, "tombstones")
 
     def docs_live(self) -> DataFrame:
         """Docs minus tombstones (the reference's

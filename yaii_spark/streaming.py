@@ -276,9 +276,10 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
     the same segment range."""
     from yaii_spark.indexer import assign_dense_ids, build_index
     from yaii_spark.storage import (
+        TABLE_SCHEMAS,
         IndexCatalog,
         fs_exists,
-        read_table,
+        read_index_table,
         write_table,
     )
 
@@ -305,7 +306,11 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
         # be O(#batches) driver work/heap on the hot path, so every
         # per-batch read is a pruned filter or a 1-row aggregate; the
         # only full collect left is the ONE-TIME pre-r5 span backfill
-        led = read_table(sp, ledger) if fs_exists(sp, ledger) else None
+        led = (
+            read_index_table(sp, index_dir, "sink_ledger")
+            if fs_exists(sp, ledger)
+            else None
+        )
         if led is not None:
             mine = (
                 led.filter(F.col("batch_id") == int(batch_id)).collect()
@@ -320,11 +325,11 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
             # commit) and never a full ledger collect (O(#batches)
             # driver heap). Invariant: the sink owns the index's append
             # lifecycle — every appended range is ledgered here. Pre-r5
-            # ledger rows lack end_id → fall back to the seg_meta scan
-            # and backfill spans once.
+            # ledger rows lack end_id (it reads null, so n_span < n) →
+            # fall back to the seg_meta scan and backfill spans once.
             n_rows = batch_df.count()
             complete = False
-            if led is not None and "end_id" in led.columns:
+            if led is not None:
                 agg = led.agg(
                     F.count("*").alias("n"),
                     F.count("end_id").alias("n_span"),
@@ -337,11 +342,8 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
             if not complete:
                 if IndexCatalog(sp, index_dir).exists():
                     mn, mx = (
-                        read_table(sp, f"{index_dir}/seg_meta")
-                        .agg(
-                            F.min(F.col("seg_id").cast("long")),
-                            F.max(F.col("seg_id").cast("long")),
-                        )
+                        read_index_table(sp, index_dir, "seg_meta")
+                        .agg(F.min("seg_id"), F.max("seg_id"))
                         .collect()[0]
                     )
                     min_seg = int(mn)
@@ -352,11 +354,9 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
             end = start + n_segs * seg_size
             # durable BEFORE any index write — the range assignment must
             # survive a crash mid-build so the replay lands on it. A
-            # pre-r5 ledger (missing end_id, wholly or on sampled-schema
-            # stragglers) is rewritten whole — the ONE-TIME full collect;
-            # mixed-schema parquet dirs would otherwise read back
-            # whichever file's schema gets sampled.
-            led_schema = "batch_id long, start_id long, end_id long"
+            # pre-r5 ledger (end_id null on some or all rows) is
+            # rewritten whole — the ONE-TIME full collect.
+            led_schema = TABLE_SCHEMAS["sink_ledger"]
             if led is not None and not complete:
                 # backfill spans so the fast path engages from now on:
                 # each old range ends where the next begins (ranges are
