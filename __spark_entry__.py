@@ -20,7 +20,7 @@ over a computed stored boolean, AND-composed with a posting token),
 q_ann_ivf_pruned (cell-PRUNED IVF that stays EXACT via per-cell
 angular-radius bounds — the same brute-force SQL oracles the pruned
 two-phase probe), and q_vocab_top_terms (the term dictionary ITSELF —
-top-20 terms by df straight from the bucket-partitioned term_stats
+top-20 terms by df straight from the (field, term)-sorted term_stats
 table vs a first-principles SQL recount of (term, df, cf)), and
 q_snippets (highlighting: ±3-token context around the first phrase
 match, index-driven match + stored-field re-analysis, oracle via

@@ -2,9 +2,11 @@
 
 Streams N equal-size micro-batches into one index through
 make_append_committer and records each batch's commit wall. With the
-incremental term_stats fold the per-batch cost must stay FLAT as the
-index grows to many times the batch size; the r4 behavior (full
-postings re-aggregation per batch) grows linearly with index size.
+incremental term_stats fold the per-batch cost grows only with the
+dictionary (the fold rewrites the sorted term_stats run, and a
+vocabulary grows far slower than the corpus), not with the postings;
+the r4 behavior (full postings re-aggregation per batch) grows
+linearly with index size.
 
 Evidence emitted (one JSON line):
 - per-batch walls + early/late means and the late/early ratio

@@ -151,104 +151,120 @@ def test_hot_term_skew_and_partitioning_invariance(spark, work_dir):
     assert qa == qb
 
 
-def test_term_stats_bucketed_pushdown(spark, work_dir):
-    """Dictionary lookups must prune: bucket partition filter + term
-    row-group filter both visible in the physical scan."""
-    import io
-    from contextlib import redirect_stdout
+@pytest.fixture(scope="module")
+def staged_indexes(spark, tmp_path_factory):
+    """One index per write path that lays out postings or term_stats:
+    a bulk build, an append commit onto a copy of it (the term_stats
+    fold), an in-place block-bound refresh of a copy of that, and a
+    merge of the appended index. AQE partition coalescing is off while
+    they are written, so the 4 shuffle partitions yield several
+    term_stats files and the range checks see more than one file."""
+    import shutil
+    import warnings
 
-    from yaii_spark.storage import TERM_STATS_BUCKETS, term_stats_bucket
+    from yaii_spark.indexer import merge_segments, refresh_block_bounds
+    from yaii_spark.streaming import make_append_committer
 
-    idx = f"{work_dir}/ts_idx"
-    build_index(spark, gen_pages(spark, 120, include_fixtures=True), idx, seg_size=60)
-    cat = IndexCatalog(spark, idx)
-    q = cat.term_stats_query([("text", "lorem")])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        q.explain(mode="formatted")
-    plan = buf.getvalue()
-    b = term_stats_bucket("text", "lorem")
-    assert "PartitionFilters" in plan and f"{b}" in plan
-    assert "PushedFilters" in plan and "lorem" in plan
-    # lookup correct + bucket stable
-    stats = cat.term_stats_for([("text", "lorem")])
-    assert stats[("text", "lorem")][0] > 0
-    assert 0 <= b < TERM_STATS_BUCKETS
+    root = tmp_path_factory.mktemp("staged")
+    d = {s: str(root / s) for s in ("build", "append", "refresh", "merge")}
+    stored = ["url", "text", "lang", "num_attr"]
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        build_index(
+            spark, gen_pages(spark, 120, include_fixtures=True), d["build"],
+            seg_size=30, stored_cols=stored,
+        )
+        shutil.copytree(d["build"], d["append"])
+        make_append_committer(d["append"], seg_size=30, stored_cols=stored)(
+            gen_pages(spark, 200, include_fixtures=False, tokens_range=(40, 64))
+            .filter(F.col("doc_id") >= 120),
+            0,
+        )
+        shutil.copytree(d["append"], d["refresh"])
+        assert refresh_block_bounds(spark, d["refresh"])["segments_refreshed"] > 0
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)
+            merge_segments(spark, d["append"], d["merge"], factor=2)
+    finally:
+        spark.conf.set(key, prev)
+    return d
 
 
-def test_term_stats_write_layout_and_values(spark, work_dir, monkeypatch):
-    """Invariants of the cores-wide dictionary write (the explicit
-    repartition count that keeps AQE from collapsing the tiny stats
-    shuffle to one task): each hash bucket must still land WHOLE in one
-    write task — one file per bucket dir — with its rows sorted by
-    (field, term), the row-group order the point-lookup pruning relies
-    on; the task count never exceeds the bucket count, however high
-    spark.sql.shuffle.partitions is set; and the column-pruned postings
-    read-back must produce term_stats identical to a direct aggregate
-    of the postings table."""
-    import glob
-    import os
-    import re
-
+def _file_keys(path):
     import pyarrow.parquet as pq
 
-    import yaii_spark.indexer as ix
-    from yaii_spark.storage import TERM_STATS_BUCKETS
+    t = pq.read_table(path, columns=["field", "term"])
+    return list(zip(t.column("field").to_pylist(), t.column("term").to_pylist()))
 
-    idx = f"{work_dir}/ts_wide"
-    build_index(
-        spark, gen_pages(spark, 500, include_fixtures=True), idx, seg_size=100
-    )
-    bucket_dirs = glob.glob(os.path.join(idx, "term_stats", "bucket=*"))
-    assert bucket_dirs  # partitioned layout present
-    for d in bucket_dirs:
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1, f"bucket split across write tasks: {d}"
-        t = pq.read_table(os.path.join(d, files[0]), columns=["field", "term"])
-        keys = list(zip(t.column("field").to_pylist(), t.column("term").to_pylist()))
-        assert keys == sorted(keys), f"bucket rows not (field, term)-sorted: {d}"
 
-    # full recompute under shuffle.partitions far above the bucket
-    # count: the write's exchange is capped at TERM_STATS_BUCKETS tasks
-    plans = []
-    real_write = ix.write_table
+@pytest.mark.parametrize("stage", ["build", "append", "refresh", "merge"])
+def test_postings_files_term_sorted(staged_indexes, stage):
+    """Every postings file is (field, term)-sorted: the parquet min/max
+    pruning of query-term scans relies on it. A postings write whose
+    sort does not lead with seg_id gets a writer-side seg_id sort that
+    scatters this order."""
+    import glob
 
-    def capturing_write(df, path, **kw):
-        if path.endswith("term_stats"):
-            plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return real_write(df, path, **kw)
+    files = glob.glob(f"{staged_indexes[stage]}/postings/seg_id=*/*.parquet")
+    assert files
+    for f in files:
+        keys = _file_keys(f)
+        assert keys == sorted(keys), f"postings file not (field, term)-sorted: {f}"
 
-    monkeypatch.setattr(ix, "write_table", capturing_write)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(4 * TERM_STATS_BUCKETS))
-    try:
-        ix._write_term_stats_full(
-            spark, idx, spark.read.parquet(os.path.join(idx, "postings"))
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    (plan,) = plans
-    counts = re.findall(r"hashpartitioning\(bucket#\d+, (\d+)\)", plan)
-    assert counts == [str(TERM_STATS_BUCKETS)], plan
-    want = {
-        (r.field, r.term): (r.df, r.cf)
-        for r in spark.read.parquet(os.path.join(idx, "postings"))
+
+@pytest.mark.parametrize("stage", ["build", "append", "merge"])
+def test_term_stats_sorted_run(spark, staged_indexes, stage):
+    """term_stats is one (field, term)-sorted run: no partition
+    directories, every file sorted, the files' key ranges disjoint and
+    ordered (their concatenation in file order is strictly ascending),
+    the rows equal a full recompute from the postings, and a lookup
+    pushes its field and term lists down to the parquet scan."""
+    import glob
+    import io
+    import os
+    from contextlib import redirect_stdout
+
+    from yaii_spark.storage import read_index_table
+
+    idx = staged_indexes[stage]
+    ts_dir = os.path.join(idx, "term_stats")
+    assert not [e for e in os.listdir(ts_dir) if os.path.isdir(os.path.join(ts_dir, e))]
+    per_file = [_file_keys(f) for f in sorted(glob.glob(f"{ts_dir}/*.parquet"))]
+    # several files (the range checks span files), at most one per
+    # shuffle partition
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert 1 < sum(1 for k in per_file if k) <= len(per_file) <= n_parts
+    keys = [k for ks in per_file for k in ks]
+    assert keys == sorted(set(keys))
+
+    want = sorted(
+        tuple(r)
+        for r in read_index_table(spark, idx, "postings")
         .groupBy("field", "term")
-        .agg(F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf"))
+        .agg(F.sum("df_local"), F.sum("cf_local"))
         .collect()
-    }
-    got = {
-        (r.field, r.term): (r.df, r.cf)
-        for r in spark.read.parquet(os.path.join(idx, "term_stats")).collect()
-    }
+    )
+    got = sorted(tuple(r) for r in read_index_table(spark, idx, "term_stats").collect())
     assert got == want
+
+    cat = IndexCatalog(spark, idx)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        cat.term_stats_query([("text", "lorem")]).explain(mode="formatted")
+    (pushed,) = [ln for ln in buf.getvalue().splitlines() if "PushedFilters" in ln]
+    assert "(field,text)" in pushed and "(term,lorem)" in pushed, pushed
+    assert cat.term_stats_for([("text", "lorem")])[("text", "lorem")][0] > 0
 
 
 def test_no_giant_in_list_for_pending_segments(spark, work_dir, monkeypatch):
     """No physical plan the build executes may carry a literal
-    In(seg_id, [...]) / INSET list over the pending segments —
-    selection must be a broadcast semi-join (at 10^6 pending segments
-    an In-list would inline into the plan and evaluate O(n) per row).
+    In(seg_id, [...]) / INSET list over the pending segments (at 10^6
+    pending segments an In-list would inline into the plan and evaluate
+    O(n) per row). A build that covers every input segment filters
+    nothing; a partial one selects through _filter_by_seg_ids, which
+    turns a list too large to inline into a broadcast semi-join.
     Asserted on the CAPTURED PHYSICAL PLANS of every DataFrame the
     build writes, not on source text."""
     import re
@@ -277,9 +293,15 @@ def test_no_giant_in_list_for_pending_segments(spark, work_dir, monkeypatch):
         if m
     ]
     assert offenders == [], offenders
-    # and the semi-join is actually there on the postings-side plan
+    # the build covered every segment: no pending filter at all
     post_plan = next(p for path, p in plans if path.endswith("postings"))
-    assert "LeftSemi" in post_plan or "left_semi" in post_plan.lower()
+    assert "LeftSemi" not in post_plan
+    # a pending list past the In-list bound selects by semi-join
+    segs = spark.range(8).withColumnRenamed("id", "seg_id")
+    big = ix._filter_by_seg_ids(segs, list(range(5000)))
+    plan = big._jdf.queryExecution().executedPlan().toString()
+    assert "LeftSemi" in plan and not seg_in.search(plan), plan
+    assert big.count() == 8
 
 
 def test_null_text_pages_index_as_token_free(spark, work_dir):

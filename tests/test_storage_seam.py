@@ -165,9 +165,7 @@ def test_declared_schema_reads(spark, every_table_index, table):
     """Each index table reads through read_index_table with its declared
     schema: no Spark job (no footer inference), a schema equal to the
     one inferred from the written files (apart from the seg_id partition
-    column, which inference reads as INT), and seg_id as LONG.
-    term_stats is exempt from the zero-job check only: listing its
-    TERM_STATS_BUCKETS partition directories runs as a parallel job."""
+    column, which inference reads as INT), and seg_id as LONG."""
     from pyspark.sql import types as T
 
     from yaii_spark.storage import read_index_table
@@ -175,8 +173,7 @@ def test_declared_schema_reads(spark, every_table_index, table):
     df, jobs = _jobs_launched(
         spark, lambda: read_index_table(spark, every_table_index, table)
     )
-    if table != "term_stats":
-        assert jobs == [], f"{table}: read launched jobs {jobs}"
+    assert jobs == [], f"{table}: read launched jobs {jobs}"
     inferred = read_table(spark, os.path.join(every_table_index, table)).schema
     inferred = T.StructType([
         T.StructField(f.name, T.LongType(), f.nullable)
@@ -188,3 +185,49 @@ def test_declared_schema_reads(spark, every_table_index, table):
     if "seg_id" in df.columns:
         assert df.schema["seg_id"].dataType == T.LongType()
     assert df.count() > 0
+
+
+def test_fresh_catalog_first_lookup_lists_nothing(spark, every_table_index):
+    """Opening a fresh catalog and running its first dictionary lookup
+    and first query launches no job with 64 or more tasks: no table
+    read needs Spark's parallel directory listing."""
+    from yaii_spark.queries import ast as A
+    from yaii_spark.queries.executor import execute_boolean
+    from yaii_spark.storage import IndexCatalog
+
+    def first_use():
+        cat = IndexCatalog(spark, every_table_index)
+        stats = cat.term_stats_for([("text", "lorem"), ("_all", "lorem")])
+        execute_boolean(cat, A.token("lorem")).collect()
+        return stats
+
+    stats, jobs = _jobs_launched(spark, first_use)
+    assert stats[("text", "lorem")][0] > 0
+    tracker = spark.sparkContext.statusTracker()
+    wide = {}
+    for j in jobs:
+        for sid in tracker.getJobInfo(j).stageIds:
+            st = tracker.getStageInfo(sid)
+            if st is not None and st.numTasks >= 64:
+                wide[j] = st.numTasks
+    assert jobs and wide == {}, wide
+
+
+def test_local_frame_is_a_local_relation(spark):
+    """storage.local_frame builds a JVM LocalRelation (no Python RDD, so
+    no Python task per use) with the declared column types, empty
+    lists included."""
+    from yaii_spark.storage import TABLE_SCHEMAS, local_frame
+
+    rows = [(1, 0, 64), (2, 64, 128)]
+    df = local_frame(spark, rows, TABLE_SCHEMAS["sink_ledger"])
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan, plan
+    assert df.schema.simpleString() == (
+        "struct<batch_id:bigint,start_id:bigint,end_id:bigint>"
+    )
+    out, jobs = _jobs_launched(spark, df.collect)
+    assert [tuple(r) for r in out] == rows and jobs == []
+    empty = local_frame(spark, [], "seg_id long")
+    assert empty._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
+    assert empty.collect() == []

@@ -398,67 +398,11 @@ def test_append_committer_replay_idempotent(spark, tmp_path):
     assert index_size(cat) == 50
 
 
-def test_sink_ledger_pre_r5_backfill(spark, tmp_path):
-    """A pre-r5 sink ledger (no end_id spans) must be backfilled ONCE —
-    the next commit derives its start from the seg_meta scan, rewrites
-    the ledger with contiguous spans, and every later commit takes the
-    1-row-aggregate fast path (no full ledger collect, no seg_meta
-    scan). Also covers the mixed case: rows whose end_id reads back
-    NULL (old parquet file sampled under the new schema) trigger the
-    same one-time rewrite."""
-    from yaii_spark.ops.aggregations import index_size
-    from yaii_spark.storage import IndexCatalog, read_table, write_table
-    from yaii_spark.streaming import make_append_committer
-
-    idx = str(tmp_path / "backfill_idx")
-    commit = make_append_committer(
-        idx, seg_size=16, stored_cols=["url", "text", "lang", "num_attr"]
-    )
-    b1 = gen_pages(spark, 30, include_fixtures=True)
-    b2 = gen_pages(spark, 50, include_fixtures=False).filter(F.col("doc_id") >= 30)
-    commit(b1, 0)
-    commit(b2, 1)
-    # simulate a pre-r5 ledger: drop the spans entirely
-    ledger = f"{idx}/sink_ledger"
-    old = read_table(spark, ledger).select("batch_id", "start_id")
-    rows = [(int(r.batch_id), int(r.start_id)) for r in old.collect()]
-    write_table(
-        spark.createDataFrame(rows, "batch_id long, start_id long"), ledger
-    )
-    b3 = (
-        gen_pages(spark, 70, include_fixtures=False)
-        .filter(F.col("doc_id") >= 50)
-        .withColumn("doc_id", F.col("doc_id") - 50)  # committer re-bases
-    )
-    commit(b3, 2)
-    led = sorted(
-        (int(r.batch_id), int(r.start_id), int(r.end_id))
-        for r in read_table(spark, ledger).collect()
-    )
-    # every row (old AND new) now carries a span; spans are contiguous
-    assert [b for b, _, _ in led] == [0, 1, 2]
-    for (_, s0, e0), (_, s1, _) in zip(led, led[1:]):
-        assert e0 == s1 > s0
-    assert index_size(IndexCatalog(spark, idx)) == 70
-    # a fourth commit under the healed ledger extends it by exactly one
-    # spanned row (append fast path, no rewrite of the old rows)
-    b4 = (
-        gen_pages(spark, 90, include_fixtures=False)
-        .filter(F.col("doc_id") >= 70)
-        .withColumn("doc_id", F.col("doc_id") - 70)
-    )
-    commit(b4, 3)
-    led2 = read_table(spark, ledger)
-    assert led2.count() == 4
-    assert led2.filter(F.col("end_id").isNull()).count() == 0
-    assert index_size(IndexCatalog(spark, idx)) == 90
-
-
 def _ts_rows(spark, idx):
     from yaii_spark.storage import read_table
 
     return sorted(
-        (int(r.bucket), r.field, r.term, int(r.df), int(r.cf))
+        (r.field, r.term, int(r.df), int(r.cf))
         for r in read_table(spark, f"{idx}/term_stats").collect()
     )
 
@@ -483,8 +427,8 @@ def _full_rebuild_rows(spark, tmp_path, batches, name):
 
 def test_incremental_term_stats_fold_matches_full(spark, tmp_path, monkeypatch):
     """Appending a micro-batch folds ONLY the new segments' aggregates
-    into the bucketed dictionary (indexer._fold_term_stats) — per-batch
-    cost O(batch), not O(index) (VERDICT r4 #1) — and the folded rows
+    into the sorted dictionary (indexer._fold_term_stats) — per-batch
+    cost never re-reads old postings (VERDICT r4 #1) — and the folded rows
     are value-identical to a full recompute over the union. The full
     path is monkeypatch-poisoned for the second batch, so the test
     FAILS if the fold silently falls back to the O(index) recompute;
@@ -533,51 +477,8 @@ def test_incremental_term_stats_fold_matches_full(spark, tmp_path, monkeypatch):
     assert _ts_rows(spark, idx) == folded
 
 
-def test_early_r5_stats_ledger_migrates_on_append(spark, tmp_path):
-    """An early-r5 stats_ledger holds seg_id only. Under the declared
-    schema its n_docs reads null, which triggers the one-time
-    (n_docs, sum_dl) migration on the next append: corpus stats and
-    term_stats then equal those of a clean index fed the same batches,
-    and so do the ledger's (seg_id, n_docs, sum_dl) rows."""
-    from yaii_spark.storage import read_index_table, write_table
-    from yaii_spark.streaming import make_append_committer
-
-    b1 = gen_pages(spark, 40, include_fixtures=True)
-    b2 = gen_pages(spark, 70, include_fixtures=False).filter(F.col("doc_id") >= 40)
-
-    def ingest(name, early_ledger):
-        idx = str(tmp_path / name)
-        commit = make_append_committer(idx, seg_size=16, stored_cols=_FOLD_STORED)
-        commit(b1, 0)
-        if early_ledger:
-            segs = read_index_table(spark, idx, "stats_ledger").select("seg_id")
-            rows = [(int(r.seg_id),) for r in segs.collect()]
-            write_table(
-                spark.createDataFrame(rows, "seg_id long"), f"{idx}/stats_ledger"
-            )
-            assert spark.read.parquet(f"{idx}/stats_ledger").columns == ["seg_id"]
-        commit(b2, 1)
-        return idx
-
-    early, clean = ingest("early_led", True), ingest("clean_led", False)
-    assert _ts_rows(spark, early) == _ts_rows(spark, clean)
-
-    def corpus_row(idx):
-        return read_index_table(spark, idx, "corpus_stats").collect()[0].asDict()
-
-    assert corpus_row(early) == corpus_row(clean)
-    assert corpus_row(early)["n_docs"] == 70
-
-    def ledger(idx):
-        return sorted(
-            tuple(r) for r in read_index_table(spark, idx, "stats_ledger").collect()
-        )
-
-    assert ledger(early) == ledger(clean)
-
-
 def test_torn_fold_recovers_with_full_recompute(spark, tmp_path):
-    """A crash between the fold's bucket overwrite and its ledger append
+    """A crash between the fold's dictionary overwrite and its ledger append
     leaves the stats_folding marker; the next append must detect it and
     recover via the full recompute (correct counts, marker cleared)."""
     from yaii_spark.storage import fs_exists, fs_touch

@@ -434,7 +434,7 @@ def q_token_bool(spark, sf_dir):
 def q_vocab_top_terms(spark, sf_dir):
     """Dictionary-level value check: top-20 'text'-field terms by
     document frequency, read STRAIGHT from the index's
-    bucket-partitioned term_stats table. Until now the dictionary was
+    (field, term)-sorted term_stats table. Until now the dictionary was
     only indirectly oracle-checked (df through BM25 idf, membership
     through boolean queries); this pins (term, df, cf) themselves
     against a first-principles SQL recount of the corpus — any

@@ -10,8 +10,8 @@ then the parquet/Iceberg commit):
           Arrow nested-struct conversion that measured ~95% of the
           tokenize stage)
           ──explode ~shards rows/doc──► (seg_id, doc_id, dl, shard, data)
-          ──groupBy(seg_id, shard)──► decode frames, concat runs,
-          delta+varint posting rows                           [shuffle]
+          ──hash(seg_id), groupBy(seg_id, shard)──► decode frames,
+          concat runs, delta+varint posting rows              [shuffle]
           ──write postings partitioned by seg_id, sorted by (field, term)
 
 Every field takes this path: custom analyzers and multi-source fields
@@ -39,9 +39,15 @@ Scale design decisions (the 100 TB story):
 - **Resumable:** per-segment checkpoint rows; re-running skips
   completed segments (dynamic partition overwrite keeps re-runs of a
   partial segment idempotent).
-- **Term-sorted files:** postings sorted by term inside each segment
-  partition → parquet row-group min/max prunes term lookups at query
-  time without a term-partitioned layout (which would be 10^7 dirs).
+- **Term-sorted files:** every postings file is (field, term)-sorted
+  inside its segment partition → parquet row-group min/max prunes term
+  lookups at query time without a term-partitioned layout (which would
+  be 10^7 dirs). Each postings write sorts by (seg_id, field, term):
+  the partitioned writer requires seg_id order, and a sort led by
+  anything else gets a writer-side seg_id sort that scatters the term
+  order. The corpus dictionary (term_stats) is one globally
+  (field, term)-sorted run of files with disjoint key ranges, like
+  Lucene's sorted term dictionary (_write_term_stats).
 
 Reference parity: this replaces yaii's single-process mutable→immutable
 segment commit (/root/reference/src/base-inverted-index.ts:511-534,
@@ -72,6 +78,7 @@ from yaii_spark.storage import (
     fs_delete,
     fs_exists,
     fs_touch,
+    local_frame,
     read_index_table,
     read_table,
     write_table,
@@ -312,8 +319,8 @@ def assign_dense_ids(
     for pid in sorted(counts):
         offs.append((pid, acc, int(counts[pid])))
         acc += int(counts[pid])
-    off_df = spark.createDataFrame(
-        offs or [(0, int(start), 0)], "_pid int, _off long, _exp long"
+    off_df = local_frame(
+        spark, offs or [(0, int(start), 0)], "_pid int, _off long, _exp long"
     )
     w = Window.partitionBy("_pid").orderBy(F.monotonically_increasing_id())
     wcnt = Window.partitionBy("_pid")
@@ -363,9 +370,7 @@ def _filter_by_seg_ids(df: DataFrame, segs: list[int]) -> DataFrame:
     very large lists (a 10^6-element In-list would bloat the plan)."""
     if len(segs) <= 4096:
         return df.filter(F.col("seg_id").isin([int(s) for s in segs]))
-    seg_df = df.sparkSession.createDataFrame(
-        [(int(s),) for s in segs], "seg_id long"
-    )
+    seg_df = local_frame(df.sparkSession, [(int(s),) for s in segs], "seg_id long")
     return df.join(F.broadcast(seg_df), "seg_id", "left_semi")
 
 
@@ -432,50 +437,35 @@ def _scoped_postings(spark: SparkSession, out_dir: str, segs: list[int]) -> Data
     return _filter_by_seg_ids(read_index_table(spark, out_dir, "postings"), segs)
 
 
+def _write_term_stats(df: DataFrame, out_dir: str) -> None:
+    """The one term_stats writer: `df`'s (field, term, df, cf) rows as
+    one globally (field, term)-sorted run. The range-partitioned sort
+    writes at most spark.sql.shuffle.partitions files (AQE only merges
+    adjacent ranges), each sorted and covering a key range disjoint
+    from and ordered after the previous file's, so parquet min/max on
+    `field` and `term` prune a lookup to the row groups that can hold
+    its keys. The same sort re-establishes the layout when the input
+    is an existing dictionary: a plain read → write may pack several
+    files into one task and break the order."""
+    write_table(
+        df.select(*column_names("term_stats")).orderBy("field", "term"),
+        os.path.join(out_dir, "term_stats"),
+    )
+
+
 def _write_term_stats_full(spark: SparkSession, out_dir: str, post_all: DataFrame) -> None:
     """Full term_stats recompute from ALL durable postings + stats_ledger
     rewrite — the base-build path and the torn-fold recovery path.
 
-    Hash-bucketed by (field, term): a web-scale dictionary is 10^8-10^9
-    rows — a single sorted file would be one straggler task and an
-    unprunable lookup. 256 bucket dirs + in-bucket term sort give
-    partition-pruned, row-group-pruned point lookups (storage.
-    term_stats_for computes the same md5 bucket driver-side).
-
     The stats_folding marker brackets the (term_stats write → ledger
     rewrite) pair: a crash in between leaves the marker, and the next
     build repeats this full path instead of double-folding."""
-    from yaii_spark.storage import TERM_STATS_BUCKETS, term_stats_bucket_col
-
-    ts_df = (
-        post_all.groupBy("field", "term")
-        .agg(F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf"))
-        .withColumn("bucket", term_stats_bucket_col())
-        # EXPLICIT task count (spark.sql.shuffle.partitions, capped at
-        # TERM_STATS_BUCKETS like the fold path's touched-bucket bound —
-        # tasks past the bucket count would write nothing; several
-        # buckets per task is fine, pruning is by directory): a bare
-        # repartition("bucket") lets AQE coalesce this tiny-bytes
-        # shuffle to ONE task, which then writes all 256 bucket dirs
-        # sequentially (~3 s straggler measured at bench scale — file
-        # open/footer cost, not data). Pinning the count keeps the
-        # partitioned write cores-wide; at dictionary scale (10^8-10^9
-        # rows) the byte sizes would prevent the collapse anyway.
-        # Leading the in-task sort with `bucket` satisfies the
-        # partitioned writer's required ordering, so no writer-side
-        # re-sort destroys the (field, term) row-group order.
-        .repartition(
-            min(
-                int(spark.conf.get("spark.sql.shuffle.partitions")),
-                TERM_STATS_BUCKETS,
-            ),
-            "bucket",
-        )
-        .sortWithinPartitions("bucket", "field", "term")
+    ts_df = post_all.groupBy("field", "term").agg(
+        F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
     )
     marker = os.path.join(out_dir, "stats_folding")
     fs_touch(spark, marker)
-    write_table(ts_df, os.path.join(out_dir, "term_stats"), partition_by=["bucket"])
+    _write_term_stats(ts_df, out_dir)
     # ledger = every durable segment (seg_meta universe — postings-free
     # token-less segments still count docs), carrying its corpus-stat
     # contribution (n_docs, sum_dl) so append-mode corpus stats are a
@@ -490,97 +480,52 @@ def _write_term_stats_full(spark: SparkSession, out_dir: str, post_all: DataFram
 
 
 def _fold_term_stats(spark: SparkSession, out_dir: str, new_segs: list[int]) -> None:
-    """Incrementally fold NEW segments' postings into the
-    bucket-partitioned term_stats dictionary (VERDICT r4 #1: the
-    full-recompute-per-micro-batch was the last superlinear ingest cost
-    — each small append paid a full-postings shuffle, O(whole index)).
+    """Fold NEW segments' postings into the term_stats dictionary
+    without re-reading the old segments' postings.
 
-    Per-batch cost is O(batch postings) + O(touched dictionary buckets):
-    1. aggregate ONLY `new_segs`' postings (partition-pruned read),
-    2. read back just the touched buckets of the existing dictionary,
-       merge (sum is associative, so the result is value-identical to a
-       full recompute), stage to `term_stats_delta_tmp` — Spark cannot
-       overwrite a path that feeds the same job, and the durable stage
-       makes the overwrite restartable,
-    3. dynamic-partition-overwrite the touched bucket dirs only
-       (Iceberg: replacePartitions through the same write seam),
-    4. append `new_segs` to stats_ledger.
-    The stats_folding marker brackets steps 3-4; a crash in between is
-    detected by the next build, which recovers with a full recompute
-    (build_index's `use_fold` gate).
+    The fold is O(dictionary) + O(batch postings): it rewrites the
+    whole sorted run. A partial rewrite would save nothing at this
+    size: one 512-doc ingest batch has 3,982 distinct (field, term)
+    keys, which touched all 256 buckets of the old hash-bucketed
+    layout, so every commit already rewrote the whole dictionary.
+    1. union ONLY `new_segs`' postings (partition-pruned read) with the
+       existing dictionary and aggregate (sum is associative, so the
+       result is value-identical to a full recompute), stage to
+       `term_stats_delta_tmp` — Spark cannot overwrite a path that
+       feeds the same job, and the durable stage makes the overwrite
+       restartable,
+    2. set the stats_folding marker, overwrite term_stats from the
+       stage (_write_term_stats), append `new_segs` to stats_ledger,
+       clear the marker and drop the stage.
+    A crash while the marker is set is detected by the next build,
+    which recovers with a full recompute (build_index's `use_fold`
+    gate).
 
     Stats-lag note: after a purging merge, term_stats deliberately lags
     the expunged postings (merge_segments carries it unchanged so scores
     stay byte-identical). The fold PRESERVES that lag — it only adds the
     new segments' counts — whereas a full recompute would refresh it.
     On a purge-free index the two paths are value-identical."""
-    from yaii_spark.storage import term_stats_bucket_col
-
-    delta = (
-        _scoped_postings(spark, out_dir, new_segs)
-        .groupBy("field", "term")
-        .agg(F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf"))
-        .withColumn("bucket", term_stats_bucket_col())
-        .persist()
-    )
-    # the persist is released in the finally: the sink retries failed
-    # batches, and an unpersist skipped by a transient error mid-fold
-    # would pin one copy of the batch's aggregate per attempt for the
-    # session lifetime (caches are not GC-reclaimed)
-    try:
-        _fold_term_stats_body(spark, out_dir, new_segs, delta)
-    finally:
-        delta.unpersist()
-
-
-def _fold_term_stats_body(spark, out_dir, new_segs, delta) -> None:
-    ts_path = os.path.join(out_dir, "term_stats")
     tmp = "term_stats_delta_tmp"
     tmp_path = os.path.join(out_dir, tmp)
     marker = os.path.join(out_dir, "stats_folding")
-    touched = [int(r.bucket) for r in delta.select("bucket").distinct().collect()]
-    if touched:
-        merged = (
-            read_index_table(spark, out_dir, "term_stats")
-            .filter(F.col("bucket").isin(touched))
-            .select("field", "term", "df", "cf", "bucket")
-            .unionByName(delta.select("field", "term", "df", "cf", "bucket"))
-            .groupBy("bucket", "field", "term")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-            .select("field", "term", "df", "cf", "bucket")
-        )
-        write_table(merged, tmp_path)
-
+    delta = _scoped_postings(spark, out_dir, new_segs).select(
+        "field", "term", F.col("df_local").alias("df"), F.col("cf_local").alias("cf")
+    )
+    merged = (
+        read_index_table(spark, out_dir, "term_stats")
+        .unionByName(delta)
+        .groupBy("field", "term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+    )
+    write_table(merged, tmp_path)
     fs_touch(spark, marker)
-    if touched:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            write_table(
-                read_index_table(spark, out_dir, tmp)
-                # explicit count for the same reason as the full path:
-                # AQE would coalesce the tiny shuffle to one task and
-                # serialize the per-bucket-dir file writes; bounded by
-                # the touched-bucket count so no empty write tasks spin
-                .repartition(
-                    max(1, min(
-                        len(touched),
-                        int(spark.conf.get("spark.sql.shuffle.partitions")),
-                    )),
-                    "bucket",
-                )
-                .sortWithinPartitions("bucket", "field", "term"),
-                ts_path,
-                partition_by=["bucket"],
-            )
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _write_term_stats(read_index_table(spark, out_dir, tmp), out_dir)
     # ledger rows carry the new segments' corpus-stat contribution —
-    # committed in the SAME marker-guarded unit as the bucket overwrite,
-    # so corpus stats and the dictionary can never disagree about which
-    # segments are accounted (postings-free segments fold zero term
-    # rows but still append their doc counts here)
+    # committed in the SAME marker-guarded unit as the dictionary
+    # overwrite, so corpus stats and the dictionary can never disagree
+    # about which segments are accounted (postings-free segments fold
+    # zero term rows but still append their doc counts here)
     write_table(
         _seg_stats_df(spark, out_dir, new_segs),
         os.path.join(out_dir, "stats_ledger"),
@@ -627,9 +572,9 @@ def build_index(
 
     `append=True` is the incremental-ingest mode (streaming.
     index_append_sink): `pages` is a NEW batch occupying fresh segment
-    ids. Per-batch maintenance is O(batch), never O(index): term_stats
-    folds only the new segments' aggregates into the bucketed
-    dictionary (_fold_term_stats + stats_ledger, r5), and the final
+    ids. Per-batch maintenance never re-reads old postings: term_stats
+    folds only the new segments' aggregates into the sorted dictionary
+    (_fold_term_stats + stats_ledger, O(dictionary) per batch), and the final
     corpus_stats (n_docs, avgdl) aggregate the ledger's per-segment
     (n_docs, sum_dl) rows — the durable union of every batch — instead
     of re-decoding every segment's dl blob (idempotent under retries;
@@ -764,9 +709,7 @@ def build_index(
     pending = list(all_segs)
     if resume and fs_exists(spark, ckpt_path):
         try:
-            seg_df = spark.createDataFrame(
-                [(int(s),) for s in all_segs], "seg_id long"
-            )
+            seg_df = local_frame(spark, [(int(s),) for s in all_segs], "seg_id long")
             done_df = (
                 read_index_table(spark, out_dir, "checkpoints")
                 .filter("status = 'done'")
@@ -790,12 +733,15 @@ def build_index(
     }
 
     if pending:
-        # broadcast semi-join, not isin([...]): an In-list over 10^6
-        # pending seg_ids would bloat the plan and evaluate O(n) per row
-        pend_df = spark.createDataFrame(
-            [(int(s),) for s in pending], "seg_id long"
-        )
-        batch = docs.join(F.broadcast(pend_df), "seg_id", "left_semi")
+        pend_df = local_frame(spark, [(int(s),) for s in pending], "seg_id long")
+        # a build that covers every input segment (every fresh build
+        # and every append batch) needs no pending filter at all
+        covers_all = len(pending) == len(all_segs)
+
+        def pending_only(df: DataFrame) -> DataFrame:
+            return df if covers_all else _filter_by_seg_ids(df, pending)
+
+        batch = pending_only(docs)
 
         # ---- docs table (stored fields) — read straight from SOURCE:
         # seg/local ids are pure arithmetic on id_col, so the stored
@@ -805,17 +751,14 @@ def build_index(
         stored = [
             c for c in (stored_cols or [c for c in pages.columns if c != id_col])
         ]
-        docs_df = (
+        docs_df = pending_only(
             pages.withColumn(
                 "seg_id", (F.col(id_col) / F.lit(seg_size)).cast("long")
-            )
-            .withColumn(
+            ).withColumn(
                 "local_id",
                 (F.col(id_col) - F.col("seg_id") * F.lit(seg_size)).cast("long"),
             )
-            .join(F.broadcast(pend_df), "seg_id", "left_semi")
-            .select(*dict.fromkeys([id_col, "seg_id", "local_id", *stored]))
-        )
+        ).select(*dict.fromkeys([id_col, "seg_id", "local_id", *stored]))
 
         # ---- per-segment doc-length blobs (JVM agg + tiny encode UDF:
         # one row per segment reaches Python, not one per doc) ----
@@ -841,7 +784,10 @@ def build_index(
         # + encode per task. Sharding by term hash bounds task memory:
         # one task never holds a whole 2^20-doc segment's postings, and
         # shards stay term-complete so each (field, term) is built
-        # exactly once. ----
+        # exactly once. Hashing the packed rows by seg_id alone satisfies
+        # the (seg_id, shard) grouping, so the encoded rows reach the
+        # partitioned write already clustered by segment: ONE shuffle,
+        # one file per segment. ----
         packed = batch.select(
             "seg_id",
             F.col(id_col).alias("doc_id"),
@@ -852,7 +798,7 @@ def build_index(
             F.col("b.shard").alias("shard"),
             F.col("b.data").alias("data"),
         )
-        enc = packed.groupBy("seg_id", "shard").applyInPandas(
+        enc = packed.repartition("seg_id").groupBy("seg_id", "shard").applyInPandas(
             _make_packed_encoder(names, avgdl, k1, b),
             schema=TABLE_SCHEMAS["postings"],
         )
@@ -879,7 +825,11 @@ def build_index(
                 pool.submit(
                     _labeled, spark, "build:postings-write",
                     write_table,
-                    enc.repartition("seg_id").sortWithinPartitions("field", "term"),
+                    # the partitioned writer needs its rows ordered by
+                    # seg_id: a sort led by anything else gets a
+                    # writer-side seg_id sort that scatters the
+                    # (field, term) order the row-group pruning needs
+                    enc.sortWithinPartitions("seg_id", "field", "term"),
                     os.path.join(out_dir, "postings"),
                     partition_by=["seg_id"],
                 ),
@@ -899,23 +849,15 @@ def build_index(
         # read-back scan prunes the posting/position blob columns (the
         # overwhelming majority of the table's bytes) and the cache
         # holds stats-sized rows, not the whole index
+        # (the left join from pend_df keeps pending segments only)
         _STATS_COLS = ["seg_id", "field", "term", "df_local", "cf_local"]
-        if append:
-            post_scope = (
-                _scoped_postings(spark, out_dir, pending)
-                .select(*_STATS_COLS).cache()
-            )
-            seg_counts_src = post_scope
-        else:
-            post_scope = (
-                read_index_table(spark, out_dir, "postings")
-                .select(*_STATS_COLS).cache()
-            )
-            seg_counts_src = post_scope.join(
-                F.broadcast(pend_df), "seg_id", "left_semi"
-            )
+        post_scope = (
+            _scoped_postings(spark, out_dir, pending)
+            if append
+            else read_index_table(spark, out_dir, "postings")
+        ).select(*_STATS_COLS).cache()
         wall = time.time() - t0
-        seg_counts = seg_counts_src.groupBy("seg_id").agg(
+        seg_counts = post_scope.groupBy("seg_id").agg(
             F.sum("df_local").alias("n_postings_docs"), F.count("*").alias("n_terms")
         )
         ck = (
@@ -933,8 +875,9 @@ def build_index(
         post_scope = None
 
     # ---- corpus-wide term stats. Append mode folds ONLY the new
-    # segments' aggregates into the bucket-partitioned dictionary
-    # (_fold_term_stats — O(batch) per micro-batch, not O(index));
+    # segments' aggregates into the sorted dictionary
+    # (_fold_term_stats — O(batch postings) + O(dictionary) per
+    # micro-batch, never a re-read of the old segments' postings);
     # batch mode (and fold-recovery: torn-fold marker present, or a
     # pre-ledger index) recomputes from ALL durable postings
     # (_write_term_stats_full — correct under resume because postings
@@ -953,18 +896,7 @@ def build_index(
     )
     unfolded: list[int] = []
     if use_fold:
-        led = read_index_table(spark, out_dir, "stats_ledger")
-        if not led.filter(F.col("n_docs").isNull()).isEmpty():
-            # one-time migration of an early-r5 seg_id-only ledger (its
-            # n_docs reads null): enrich with (n_docs, sum_dl) from
-            # seg_meta, marker-guarded (a torn rewrite falls back to the
-            # full recompute)
-            seg_list = [int(r.seg_id) for r in led.select("seg_id").distinct().collect()]
-            fs_touch(spark, marker_path)
-            write_table(_seg_stats_df(spark, out_dir, seg_list), ledger_path)
-            fs_delete(spark, marker_path)
-            led = read_index_table(spark, out_dir, "stats_ledger")
-        folded = led.select("seg_id")
+        folded = read_index_table(spark, out_dir, "stats_ledger").select("seg_id")
         # durable universe = prior checkpoints ∪ THIS batch's pending
         # (its checkpoint rows land concurrently with the fold, in the
         # next pool). Checkpoints are UNPARTITIONED — one row per built
@@ -978,11 +910,7 @@ def build_index(
             read_index_table(spark, out_dir, "checkpoints")
             .filter("status = 'done'")
             .select("seg_id")
-            .union(
-                spark.createDataFrame(
-                    [(int(s),) for s in pending] or [(int(-1),)], "seg_id long"
-                ).filter(F.col("seg_id") >= 0)
-            )
+            .union(local_frame(spark, [(int(s),) for s in pending], "seg_id long"))
             .distinct()
         )
         unfolded = sorted(
@@ -1038,7 +966,8 @@ def build_index(
         avgdl = float(srow["s"]) / n_total
         metrics["n_docs_total"] = n_total
         metrics["avgdl"] = avgdl
-    cs_df = spark.createDataFrame(
+    cs_df = local_frame(
+        spark,
         [(n_total, avgdl, float(k1), float(b), int(seg_size), BLOCK_SIZE,
           FORMAT_VERSION)],
         TABLE_SCHEMAS["corpus_stats"],
@@ -1086,9 +1015,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> int:
 
     List-in convenience form of `delete_docs_df` (which is the scale
     path — nothing corpus-sized should pass through this driver list)."""
-    df = spark.createDataFrame(
-        [(int(d),) for d in sorted(set(doc_ids))], "doc_id long"
-    )
+    df = local_frame(spark, [(int(d),) for d in sorted(set(doc_ids))], "doc_id long")
     return delete_docs_df(spark, index_dir, df)
 
 
@@ -1118,7 +1045,7 @@ def refresh_block_bounds(spark: SparkSession, index_dir: str) -> dict:
     ]
     if not stale:
         return {"segments_refreshed": 0}
-    stale_df = spark.createDataFrame([(s,) for s in stale], "seg_id long")
+    stale_df = local_frame(spark, [(s,) for s in stale], "seg_id long")
     meta = cat.seg_meta().join(F.broadcast(stale_df), "seg_id", "left_semi")
     post = cat.postings().join(F.broadcast(stale_df), "seg_id", "left_semi")
 
@@ -1151,7 +1078,7 @@ def refresh_block_bounds(spark: SparkSession, index_dir: str) -> dict:
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     write_table(
-        refreshed.repartition("seg_id").sortWithinPartitions("field", "term"),
+        refreshed.repartition("seg_id").sortWithinPartitions("seg_id", "field", "term"),
         os.path.join(index_dir, "postings"),
         partition_by=["seg_id"],
     )
@@ -1417,7 +1344,7 @@ def merge_segments(
         .cogroup(meta_sharded.groupBy("new_seg", "shard"))
         .applyInPandas(merge_shard, schema=TABLE_SCHEMAS["postings"])
         .repartition("seg_id")
-        .sortWithinPartitions("field", "term"),
+        .sortWithinPartitions("seg_id", "field", "term"),
         os.path.join(out_dir, "postings"),
         partition_by=["seg_id"],
     )
@@ -1433,14 +1360,8 @@ def merge_segments(
         partition_by=["seg_id"],
     )
     # corpus-wide term stats / n_docs / avgdl carry over UNCHANGED even
-    # when deletes are expunged (see docstring: keeps scores identical;
-    # explicit bucket-led sort keeps the writer from re-sorting rows)
-    write_table(
-        read_index_table(spark, index_dir, "term_stats")
-        .sortWithinPartitions("bucket", "field", "term"),
-        os.path.join(out_dir, "term_stats"),
-        partition_by=["bucket"],
-    )
+    # when deletes are expunged (see docstring: keeps scores identical)
+    _write_term_stats(read_index_table(spark, index_dir, "term_stats"), out_dir)
     # stats_ledger: the carried dictionary covers every merged segment,
     # so the first post-merge append folds incrementally instead of
     # falling back to a full recompute (_fold_term_stats). Rows carry
@@ -1466,7 +1387,8 @@ def merge_segments(
     # leave an index that reports incomplete, not one missing its
     # checkpoints (ADVICE r3: same ordering invariant as build_index).
     write_table(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(stats.n_docs, avgdl, k1, b, new_size, block_size, FORMAT_VERSION)],
             TABLE_SCHEMAS["corpus_stats"],
         ),

@@ -525,7 +525,7 @@ def more_like_this(
     (ties broken by term asc — a total, reproducible order), extracted
     by re-analyzing the doc's STORED text (one 1-row lookup) with idfs
     from the pruned dictionary lookup (bounded by the doc's distinct
-    terms, bucket-partition-pruned); then a standard disjunctive
+    terms, pruned by the sorted dictionary's parquet min/max); then a standard disjunctive
     bm25_topk over those terms with the source doc excluded.
 
     Everything driver-side is bounded by ONE document's size: the text

@@ -6,7 +6,7 @@ declared schema (TABLE_SCHEMAS[...]):
     docs/            stored fields by seg_id — schema inferred
     postings/        ["postings"]: blocked posting rows by seg_id
     seg_meta/        ["seg_meta"]: one row per segment (dl_bin, holes)
-    term_stats/      ["term_stats"]: (df, cf) in TERM_STATS_BUCKETS dirs
+    term_stats/      ["term_stats"]: (df, cf) as one (field, term)-sorted run
     corpus_stats/    ["corpus_stats"]: one row, the build commit marker
     checkpoints/     ["checkpoints"]: one lineage row per built segment
     stats_ledger/    ["stats_ledger"]: segments folded into term_stats
@@ -14,6 +14,16 @@ declared schema (TABLE_SCHEMAS[...]):
     sink_ledger/     ["sink_ledger"]: streaming batch → doc-id range
     term_stats_delta_tmp/  ["term_stats_delta_tmp"]: the fold's stage
     stats_folding    marker file: a term_stats fold is mid-commit
+
+The term dictionary (term_stats) is one globally (field, term)-sorted
+run split into at most ``spark.sql.shuffle.partitions`` files whose key
+ranges are disjoint and ordered, like Lucene's sorted term dictionary:
+no partition directories, so a catalog open lists one directory on the
+driver, and a lookup prunes row groups by the parquet min/max of
+``field`` and ``term``. ``indexer._write_term_stats`` is its only writer.
+Postings files are (field, term)-sorted inside each seg_id partition.
+Frames the driver builds from Python lists (segment lists, the
+corpus_stats row, ledger rows) are JVM LocalRelations (``local_frame``).
 
 Index tables are read by ``read_index_table`` with the declared schema
 (no footer inference, so no Spark job per read, and seg_id reads back
@@ -45,12 +55,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 # decode); seg_meta gains avgdl_built (pruning-safety under streaming
 # appends) and deleted_bin (holes left by purge-at-merge);
 # corpus_stats gains format_version
-FORMAT_VERSION = 5
-
-# term_stats is hash-partitioned into this many bucket dirs so the
-# corpus dictionary (10^8-10^9 terms at web scale) is written by many
-# tasks and read with partition pruning — never one giant sorted file
-TERM_STATS_BUCKETS = 256
+# v6: term_stats is one (field, term)-sorted run of files (no bucket
+# partition directories, no bucket column)
+FORMAT_VERSION = 6
 
 # The declared schema of every index table (DDL: the read, write and
 # applyInPandas-output schema alike; a partition column reads back
@@ -67,7 +74,7 @@ TABLE_SCHEMAS = {
         "seg_id long, n_docs long, base_doc_id long, dl_bin binary, "
         "avgdl_built double, deleted_bin binary"
     ),
-    "term_stats": "field string, term string, df long, cf long, bucket int",
+    "term_stats": "field string, term string, df long, cf long",
     "corpus_stats": (
         "n_docs long, avgdl double, k1 double, b double, seg_size long, "
         "block_size long, format_version long"
@@ -89,23 +96,22 @@ def column_names(table: str) -> list[str]:
     return [c.split()[0] for c in TABLE_SCHEMAS[table].split(",")]
 
 
-def term_stats_bucket_col() -> "F.Column":
-    """Spark-side bucket id for a (field, term) row. md5-derived (not
-    xxhash64) so the driver can compute the identical bucket in pure
-    Python without launching a job (see term_stats_bucket)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("\x00", F.col("field"), F.col("term"))), 1, 8),
-        16, 10,
-    ).cast("long")
-    return F.pmod(h, F.lit(TERM_STATS_BUCKETS)).cast("int")
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A driver-built DataFrame of `rows` (tuples in the column order of
+    `schema`, a DDL string) as a JVM LocalRelation: the rows cross to
+    the JVM once as Arrow, and every job that reads the frame (a
+    broadcast, a join, a write) runs without a Python task.
+    ``spark.createDataFrame(<list>)`` builds a parallelized Python RDD
+    instead, and each use of it launches Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-
-def term_stats_bucket(field: str, term: str) -> int:
-    """Python mirror of term_stats_bucket_col (same md5 prefix)."""
-    import hashlib
-
-    h = int(hashlib.md5(f"{field}\x00{term}".encode("utf-8")).hexdigest()[:8], 16)
-    return h % TERM_STATS_BUCKETS
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -139,7 +145,7 @@ def fs_mtime(spark: SparkSession, path: str) -> int | None:
 def fs_touch(spark: SparkSession, path: str) -> None:
     """Create (or truncate) an empty marker file via the Hadoop
     FileSystem API — the torn-write sentinel the incremental term_stats
-    fold sets around its partition overwrite (indexer._fold_term_stats):
+    fold sets around its dictionary overwrite (indexer._fold_term_stats):
     a crash between the overwrite and the ledger append leaves the
     marker behind, and the next build recovers with a full recompute."""
     fs, p = _hadoop_fs(spark, path)
@@ -233,11 +239,11 @@ class IndexCatalog:
         # base DataFrames per immutable table: re-creating one per query
         # re-lists the partition directories (an InMemoryFileIndex
         # build, a driver JOB above the parallel-discovery threshold) —
-        # at 10^6 segments / 256 term_stats buckets that listing IS the
-        # per-query latency floor. Tombstones are deliberately NOT
-        # cached (delete_docs appends between queries). After an
-        # in-place rebuild or append, use a fresh catalog
-        # (entrypoint._catalog evicts on the commit marker's mtime).
+        # at 10^6 segments that listing IS the per-query latency floor.
+        # Tombstones are deliberately NOT cached (delete_docs appends
+        # between queries). After an in-place rebuild or append, use a
+        # fresh catalog (entrypoint._catalog evicts on the commit
+        # marker's mtime).
         self._tables: dict[str, DataFrame] = {}
 
     def path(self, table: str) -> str:
@@ -396,13 +402,12 @@ class IndexCatalog:
 
     def term_stats_query(self, field_terms: list[tuple[str, str]]) -> DataFrame:
         """The pruned dictionary lookup as a DataFrame (plan-testable):
-        bucket list → partition-dir pruning, term list → row-group
-        min/max pruning inside the bucket's term-sorted files."""
+        field and term lists push down to parquet, whose row-group
+        min/max prune inside the (field, term)-sorted run, and the
+        files' disjoint key ranges leave every other file's row groups
+        skipped."""
         terms = sorted({t for _, t in field_terms})
         fields = sorted({f for f, _ in field_terms})
-        buckets = sorted({term_stats_bucket(f, t) for f, t in field_terms})
         return self.term_stats().filter(
-            F.col("bucket").isin(buckets)
-            & F.col("term").isin(terms)
-            & F.col("field").isin(fields)
+            F.col("field").isin(fields) & F.col("term").isin(terms)
         )

@@ -252,9 +252,10 @@ def index_append_sink(
     NEW range past the failed attempt's partial segments and index the
     same docs twice. Corpus stats are recomputed from durable state
     after each commit (idempotent); term_stats folds ONLY the batch's
-    new segments into the bucketed dictionary
-    (indexer._fold_term_stats — per-batch cost stays O(batch), never
-    O(whole index); the stats_ledger makes replayed batches fold-once).
+    new segments' postings into the sorted dictionary
+    (indexer._fold_term_stats — per-batch cost is O(batch postings) +
+    O(dictionary), never a re-read of the old segments' postings; the
+    stats_ledger makes replayed batches fold-once).
 
     Returns the started StreamingQuery (caller stops it)."""
     src = spark.readStream.schema(schema).parquet(stream_dir)
@@ -279,6 +280,7 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
         TABLE_SCHEMAS,
         IndexCatalog,
         fs_exists,
+        local_frame,
         read_index_table,
         write_table,
     )
@@ -304,8 +306,7 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
         # the ledger grows one row per batch forever — at the design
         # point (~10^6 appended ranges) a full collect per commit would
         # be O(#batches) driver work/heap on the hot path, so every
-        # per-batch read is a pruned filter or a 1-row aggregate; the
-        # only full collect left is the ONE-TIME pre-r5 span backfill
+        # per-batch read is a pruned filter or a 1-row aggregate
         led = (
             read_index_table(sp, index_dir, "sink_ledger")
             if fs_exists(sp, ledger)
@@ -324,79 +325,36 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
             # seg_meta table (r5: that scan was O(#segments) per
             # commit) and never a full ledger collect (O(#batches)
             # driver heap). Invariant: the sink owns the index's append
-            # lifecycle — every appended range is ledgered here. Pre-r5
-            # ledger rows lack end_id (it reads null, so n_span < n) →
-            # fall back to the seg_meta scan and backfill spans once.
+            # lifecycle — every appended range is ledgered here. With
+            # no ledger row yet (the first commit onto a bulk-built
+            # index, or an empty ledger) the range starts past the
+            # index's last segment.
             n_rows = batch_df.count()
-            complete = False
             if led is not None:
-                agg = led.agg(
-                    F.count("*").alias("n"),
-                    F.count("end_id").alias("n_span"),
-                    F.max("end_id").alias("mx"),
-                ).collect()[0]  # 1 row
-                if int(agg.n) > 0 and int(agg.n) == int(agg.n_span):
-                    complete = True
-                    start = int(agg.mx)
-            min_seg = None
-            if not complete:
+                start = led.agg(F.max("end_id")).collect()[0][0]  # 1 row
+            if start is None:
                 if IndexCatalog(sp, index_dir).exists():
-                    mn, mx = (
+                    mx = (
                         read_index_table(sp, index_dir, "seg_meta")
-                        .agg(F.min("seg_id"), F.max("seg_id"))
-                        .collect()[0]
+                        .agg(F.max("seg_id"))
+                        .collect()[0][0]
                     )
-                    min_seg = int(mn)
                     start = (int(mx) + 1) * seg_size
                 else:
                     start = 0
+            start = int(start)
             n_segs = max(1, -(-n_rows // seg_size))  # ceil
-            end = start + n_segs * seg_size
             # durable BEFORE any index write — the range assignment must
-            # survive a crash mid-build so the replay lands on it. A
-            # pre-r5 ledger (end_id null on some or all rows) is
-            # rewritten whole — the ONE-TIME full collect.
-            led_schema = TABLE_SCHEMAS["sink_ledger"]
-            if led is not None and not complete:
-                # backfill spans so the fast path engages from now on:
-                # each old range ends where the next begins (ranges are
-                # allocated contiguously), the last at this batch's
-                # scan-derived start
-                old = sorted(led.collect(), key=lambda r: int(r.start_id))
-                # the span derivation assumes every appended range was
-                # ledgered contiguously; segments that predate the first
-                # ledgered range prove an out-of-band append, and the
-                # backfill would silently fold them into a neighbor's
-                # span — cross-check against the seg_meta min aggregate
-                # (already read above) and fail loudly instead
-                # (ADVICE r5)
-                if (
-                    old
-                    and min_seg is not None
-                    and min_seg * seg_size < int(old[0].start_id)
-                ):
-                    raise RuntimeError(
-                        "sink_ledger backfill: index has segments from "
-                        f"doc id {min_seg * seg_size} but the earliest "
-                        f"ledgered range starts at {int(old[0].start_id)}"
-                        " — the index was appended outside this sink, "
-                        "so ledger spans cannot be derived; rebuild the "
-                        "ledger or the index"
-                    )
-                nexts = [int(r.start_id) for r in old[1:]] + [int(start)]
-                rows = [
-                    (int(r.batch_id), int(r.start_id), e)
-                    for r, e in zip(old, nexts)
-                ] + [(int(batch_id), int(start), int(end))]
-                write_table(sp.createDataFrame(rows, led_schema), ledger)
-            else:
-                write_table(
-                    sp.createDataFrame(
-                        [(int(batch_id), int(start), int(end))], led_schema
-                    ),
-                    ledger,
-                    mode="append" if led is not None else "overwrite",
-                )
+            # survive a crash mid-build so the replay lands on it
+            write_table(
+                local_frame(
+                    sp,
+                    [(int(batch_id), start, start + n_segs * seg_size)],
+                    TABLE_SCHEMAS["sink_ledger"],
+                ),
+                ledger,
+                mode="append" if led is not None else "overwrite",
+            )
         pages = assign_dense_ids(batch_df, start)
         try:
             build_index(
