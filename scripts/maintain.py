@@ -3,16 +3,12 @@
     python scripts/maintain.py info        --index /path/idx
     python scripts/maintain.py delete      --index /path/idx --ids 5,17,90
     python scripts/maintain.py bulk-delete --index /path/idx --ids-table /path/ids.parquet
-    python scripts/maintain.py refresh     --index /path/idx
     python scripts/maintain.py merge       --index /path/idx --output /path/idx2 --factor 8
 
 `info` prints corpus stats + per-segment lineage as one JSON line;
 `delete` tombstones docs (queries exclude them immediately);
 `bulk-delete` tombstones every doc_id in a parquet table without a
 driver-side list (indexer.delete_docs_df — the 100-TB path);
-`refresh` recomputes block-max bounds for segments appended under a
-drifted corpus avgdl, restoring MaxScore pruning without a merge
-(indexer.refresh_block_bounds);
 `merge` compacts `factor` adjacent segments into one (fully
 distributed) and EXPUNGES tombstones in the same pass — postings and
 docs rows of deleted docs are dropped, the tombstone table removed
@@ -32,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("command", choices=["info", "delete", "bulk-delete", "refresh", "merge"])
+    ap.add_argument("command", choices=["info", "delete", "bulk-delete", "merge"])
     ap.add_argument("--index", required=True, help="index root directory")
     ap.add_argument("--output", help="merge: output index directory")
     ap.add_argument("--factor", type=int, default=8, help="merge: segments per merged segment")
@@ -41,12 +37,7 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from yaii_spark.indexer import (
-        delete_docs,
-        delete_docs_df,
-        merge_segments,
-        refresh_block_bounds,
-    )
+    from yaii_spark.indexer import delete_docs, delete_docs_df, merge_segments
     from yaii_spark.session import get_spark
     from yaii_spark.storage import IndexCatalog
 
@@ -79,8 +70,6 @@ def main() -> None:
 
         n = delete_docs_df(spark, args.index, read_table(spark, args.ids_table))
         print(json.dumps({"tombstoned": n}))
-    elif args.command == "refresh":
-        print(json.dumps(refresh_block_bounds(spark, args.index)))
     else:
         if not args.output:
             raise SystemExit("merge: pass --output")

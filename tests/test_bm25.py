@@ -189,10 +189,11 @@ def test_pruned_equals_dense_property():
     """Hypothesis: on random segments (tiny block size 4 → block
     boundaries everywhere), random queries, random k, and random
     tombstones, the lazy MaxScore path returns doc-for-doc,
-    byte-for-byte the dense scorer's answer. Pure driver-side — no
-    Spark session."""
-    import math
-
+    byte-for-byte the dense scorer's answer. The scoring avgdl is
+    drawn apart from the docs' mean length, as on a segment written
+    before the corpus avgdl drifted: the block bounds come from the
+    (tf, dl) impacts, which hold under any avgdl. Pure driver-side —
+    no Spark session."""
     import numpy as np
     import pandas as pd
     from hypothesis import given, settings
@@ -219,10 +220,10 @@ def test_pruned_equals_dense_property():
             ),
             dtype=np.uint64,
         )
-        avgdl = float(dls.mean())
+        avgdl = data.draw(st.floats(1.0, 60.0), label="avgdl")
         n_terms = data.draw(st.integers(1, 5), label="n_terms")
         rows = {
-            "field": [], "term": [], "doc_ids_bin": [], "tfs_bin": [], "block_maxes": [],
+            "field": [], "term": [], "doc_ids_bin": [], "tfs_bin": [], "block_impacts": [],
             "block_id_offs": [], "block_tf_offs": [], "block_first_ids": [],
             "df_local": [],
         }
@@ -242,20 +243,24 @@ def test_pruned_equals_dense_property():
                 dtype=np.uint64,
             )
             ids = (local + base).astype(np.uint64)
-            norms = tfs.astype(np.float64) / (
-                tfs + 1.2 * (1 - 0.75 + 0.75 * dls[local].astype(np.float64) / avgdl)
-            )
-            nblocks = math.ceil(ids.size / BLOCK)
-            bmax = [
-                float(norms[i * BLOCK : (i + 1) * BLOCK].max()) for i in range(nblocks)
-            ]
+            # block impacts by brute force: per block, the (tf, dl)
+            # pairs no other pair matches or beats on both, tf descending
+            impacts = []
+            for i in range(0, ids.size, BLOCK):
+                pairs = set(zip(tfs[i : i + BLOCK].tolist(), dls[local[i : i + BLOCK]].tolist()))
+                front = sorted(
+                    (p for p in pairs
+                     if not any(q != p and q[0] >= p[0] and q[1] <= p[1] for q in pairs)),
+                    reverse=True,
+                )
+                impacts += [len(front)] + [v for p in front for v in p]
             ids_bin, id_offs = delta_encode_blocked(ids, BLOCK)
             tfs_bin, tf_offs = varint_encode_blocked(tfs, BLOCK)
             rows["field"].append("text")
             rows["term"].append(f"t{t}")
             rows["doc_ids_bin"].append(ids_bin)
             rows["tfs_bin"].append(tfs_bin)
-            rows["block_maxes"].append(bmax)
+            rows["block_impacts"].append(varint_encode(np.array(impacts, dtype=np.uint64)))
             rows["block_id_offs"].append([int(x) for x in id_offs])
             rows["block_tf_offs"].append([int(x) for x in tf_offs])
             rows["block_first_ids"].append([int(x) for x in ids[::BLOCK]])

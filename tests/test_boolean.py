@@ -176,7 +176,7 @@ def test_scan_column_pruning_positions(bool_index):
     """Column pruning is part of the format contract: a boolean token
     query's postings scan must NOT read the (large) position stream or
     block metadata; a phrase query must read pos_bin + block_pos_offs
-    (and still not block_maxes, which only BM25 pruning consumes)."""
+    (and still not block_impacts, which only BM25 pruning consumes)."""
     import re
 
     from yaii_spark.queries import ast as A
@@ -213,13 +213,13 @@ def test_scan_column_pruning_positions(bool_index):
 
     tok_cols = postings_read_schema(execute_boolean(bool_index, A.token("abc")))
     assert "doc_ids_bin" in tok_cols
-    assert not {"pos_bin", "tfs_bin", "block_pos_offs", "block_maxes"} & tok_cols, tok_cols
+    assert not {"pos_bin", "tfs_bin", "block_pos_offs", "block_impacts"} & tok_cols, tok_cols
 
     ph_cols = postings_read_schema(
         execute_boolean(bool_index, A.phrase(["abc", "bcd"]))
     )
     assert {"doc_ids_bin", "tfs_bin", "pos_bin", "block_pos_offs"} <= ph_cols
-    assert "block_maxes" not in ph_cols, ph_cols
+    assert "block_impacts" not in ph_cols, ph_cols
 
 
 def test_token_only_queries_never_read_docs(spark, bool_index):

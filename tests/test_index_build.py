@@ -155,18 +155,17 @@ def test_hot_term_skew_and_partitioning_invariance(spark, work_dir):
 def staged_indexes(spark, tmp_path_factory):
     """One index per write path that lays out postings or term_stats:
     a bulk build, an append commit onto a copy of it (the term_stats
-    fold), an in-place block-bound refresh of a copy of that, and a
-    merge of the appended index. AQE partition coalescing is off while
+    fold), and a merge of the appended index. AQE partition coalescing is off while
     they are written, so the 4 shuffle partitions yield several
     term_stats files and the range checks see more than one file."""
     import shutil
     import warnings
 
-    from yaii_spark.indexer import merge_segments, refresh_block_bounds
+    from yaii_spark.indexer import merge_segments
     from yaii_spark.streaming import make_append_committer
 
     root = tmp_path_factory.mktemp("staged")
-    d = {s: str(root / s) for s in ("build", "append", "refresh", "merge")}
+    d = {s: str(root / s) for s in ("build", "append", "merge")}
     stored = ["url", "text", "lang", "num_attr"]
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     prev = spark.conf.get(key)
@@ -182,8 +181,6 @@ def staged_indexes(spark, tmp_path_factory):
             .filter(F.col("doc_id") >= 120),
             0,
         )
-        shutil.copytree(d["append"], d["refresh"])
-        assert refresh_block_bounds(spark, d["refresh"])["segments_refreshed"] > 0
         with warnings.catch_warnings():
             warnings.simplefilter("ignore", RuntimeWarning)
             merge_segments(spark, d["append"], d["merge"], factor=2)
@@ -199,7 +196,7 @@ def _file_keys(path):
     return list(zip(t.column("field").to_pylist(), t.column("term").to_pylist()))
 
 
-@pytest.mark.parametrize("stage", ["build", "append", "refresh", "merge"])
+@pytest.mark.parametrize("stage", ["build", "append", "merge"])
 def test_postings_files_term_sorted(staged_indexes, stage):
     """Every postings file is (field, term)-sorted: the parquet min/max
     pruning of query-term scans relies on it. A postings write whose
@@ -593,11 +590,27 @@ def test_multi_source_all_field(spark, work_dir):
     assert got(A.token("alpha", "text")) == {0}
 
 
+def _frontier(pairs):
+    """Brute-force Pareto frontier of (tf, dl) pairs: drop every pair
+    that another pair matches or beats on both tf (higher) and dl
+    (lower), then order by tf descending."""
+    uniq = set(pairs)
+    front = [
+        (tf, dl)
+        for tf, dl in uniq
+        if not any(t2 >= tf and d2 <= dl and (t2, d2) != (tf, dl) for t2, d2 in uniq)
+    ]
+    return sorted(front, reverse=True)
+
+
 def test_batched_group_encoder_matches_per_row_codec():
     """_encode_group_batched (one codec pass over a whole (seg, shard)
     group) must emit byte-identical posting rows to the straightforward
     per-row codec calls it replaced — randomized posting shapes incl.
-    multi-block rows, multi-byte varints, and empty position lists."""
+    multi-block rows, multi-byte varints, and empty position lists.
+    Each block's impacts equal a brute-force Pareto frontier of its
+    (tf, dl) pairs, and the bound derived from them equals the block's
+    largest BM25 norm under any avgdl."""
     import math
     import random
 
@@ -606,13 +619,15 @@ def test_batched_group_encoder_matches_per_row_codec():
     from yaii_spark.codec import (
         block_offsets_from_lengths,
         delta_encode_blocked,
+        varint_decode,
         varint_encode_blocked,
     )
-    from yaii_spark.indexer import BLOCK_SIZE, _encode_group_batched, _tf_norm
+    from yaii_spark.indexer import BLOCK_SIZE, _encode_group_batched
+    from yaii_spark.queries.bm25 import _block_bounds, _tf_norm
 
     rng = random.Random(7)
     field_names = ["_all", "text"]
-    avgdl, k1, b = 37.5, 1.2, 0.75
+    k1, b = 1.2, 0.75
     items = []
     for r in range(40):
         n = rng.choice([1, 2, 5, BLOCK_SIZE - 1, BLOCK_SIZE, BLOCK_SIZE + 3, 3 * BLOCK_SIZE + 17])
@@ -620,37 +635,75 @@ def test_batched_group_encoder_matches_per_row_codec():
         tfs = [rng.choice([1, 2, 3, 127, 128, 300]) for _ in range(n)]
         dls = [rng.randint(1, 200) for _ in range(n)]
         poss = [bytes(rng.randrange(256) for _ in range(rng.randint(0, 6))) for _ in range(n)]
-        items.append(((r % 2, f"t{r:03d}".encode()), (ids, tfs, dls, poss)))
+        items.append(
+            ((field_names[r % 2], f"t{r:03d}"),
+             (ids, tfs, dls, b"".join(poss), [len(p) for p in poss]))
+        )
 
-    got = _encode_group_batched(11, items, field_names, avgdl, k1, b)
+    got = _encode_group_batched(11, items)
     assert len(got) == len(items)
-    for j, ((fid, term), (ids, tfs, dls, poss)) in enumerate(items):
+    for j, ((field, term), (ids, tfs, dls, pos, plens)) in enumerate(items):
         row = got.iloc[j]
         ids_a = np.array(ids, dtype=np.uint64)
         tfs_a = np.array(tfs, dtype=np.uint64)
-        norms = _tf_norm(tfs_a, np.array(dls, dtype=np.int64), avgdl, k1, b)
         ids_bin, id_offs = delta_encode_blocked(ids_a, BLOCK_SIZE)
         tfs_bin, tf_offs = varint_encode_blocked(tfs_a, BLOCK_SIZE)
         nblocks = math.ceil(len(ids) / BLOCK_SIZE)
         assert row["seg_id"] == 11
-        assert row["field"] == field_names[fid]
-        assert row["term"] == term.decode()
+        assert row["field"] == field
+        assert row["term"] == term
         assert row["df_local"] == len(ids)
         assert row["cf_local"] == sum(tfs)
         assert bytes(row["doc_ids_bin"]) == ids_bin
         assert bytes(row["tfs_bin"]) == tfs_bin
-        assert bytes(row["pos_bin"]) == b"".join(poss)
+        assert bytes(row["pos_bin"]) == pos
         assert row["block_id_offs"] == [int(x) for x in id_offs]
         assert row["block_tf_offs"] == [int(x) for x in tf_offs]
         assert row["block_first_ids"] == [int(x) for x in ids_a[::BLOCK_SIZE]]
         assert row["block_pos_offs"] == [
             int(x)
             for x in block_offsets_from_lengths(
-                np.array([len(p) for p in poss], dtype=np.int64), BLOCK_SIZE
+                np.array(plens, dtype=np.int64), BLOCK_SIZE
             )
         ]
-        assert row["block_maxes"] == [
-            float(norms[i * BLOCK_SIZE : (i + 1) * BLOCK_SIZE].max())
-            for i in range(nblocks)
-        ]
-        assert row["max_norm"] == float(norms.max())
+        blocks = [slice(i * BLOCK_SIZE, (i + 1) * BLOCK_SIZE) for i in range(nblocks)]
+        want = []
+        for s in blocks:
+            front = _frontier(list(zip(tfs[s], dls[s])))
+            want += [len(front)] + [v for pair in front for v in pair]
+        assert varint_decode(bytes(row["block_impacts"])).tolist() == want
+        for avgdl in (3.0, 37.5, 900.0):
+            norms = _tf_norm(tfs_a, np.array(dls, dtype=np.int64), avgdl, k1, b)
+            bounds = _block_bounds(bytes(row["block_impacts"]), nblocks, avgdl, k1, b)
+            assert bounds.tolist() == [float(norms[s].max()) for s in blocks]
+
+
+@pytest.mark.parametrize("mode", ["dynamic", "static"])
+def test_build_keeps_session_partition_overwrite_mode(spark, tmp_path, mode):
+    """build_index picks its partition overwrite mode per write: the
+    session's setting stays the caller's after a fresh (resume=False)
+    build and after an append commit, and the append's dynamic
+    overwrite keeps the earlier segments whatever the session says."""
+    from yaii_spark.streaming import make_append_committer
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, mode)
+    try:
+        idx = str(tmp_path / "idx")
+        build_index(
+            spark, gen_pages(spark, 40, include_fixtures=False), idx,
+            seg_size=16, resume=False,
+        )
+        assert spark.conf.get(key) == mode
+        make_append_committer(idx, seg_size=16)(
+            gen_pages(spark, 70, include_fixtures=False).filter(F.col("doc_id") >= 40),
+            0,
+        )
+        assert spark.conf.get(key) == mode
+    finally:
+        spark.conf.set(key, prev)
+    cat = IndexCatalog(spark, idx)
+    assert cat.corpus_stats().n_docs == 70
+    segs = {r.seg_id for r in cat.postings().select("seg_id").distinct().collect()}
+    assert segs == {r.seg_id for r in cat.seg_meta().collect()} == set(range(5))

@@ -284,18 +284,21 @@ def test_format_version_gate(spark, work_dir):
         IndexCatalog(spark, out).corpus_stats()
 
 
-def test_v5_index_raises_rebuild(spark, work_dir):
-    """A v5 index (hash-bucketed term_stats) is not readable by this
-    build: the catalog, an append commit and a merge all raise the
-    rebuild error before touching it."""
+@pytest.mark.parametrize("version", [5, 6])
+def test_v5_index_raises_rebuild(spark, work_dir, version):
+    """An index of an older format (v5: hash-bucketed term_stats; v6:
+    block bounds stored as norms under the build-time avgdl) is not
+    readable by this build: the catalog, an append commit and a merge
+    all raise the rebuild error before touching it."""
     from yaii_spark.storage import TABLE_SCHEMAS, local_frame, write_table
     from yaii_spark.streaming import make_append_committer
 
-    out = f"{work_dir}/v5_idx"
+    out = f"{work_dir}/v{version}_idx"
     build_index(spark, gen_boolean_pages(spark), out, seg_size=8)
     write_table(
         local_frame(
-            spark, [(4, 10.0, 1.2, 0.75, 8, 128, 5)], TABLE_SCHEMAS["corpus_stats"]
+            spark, [(4, 10.0, 1.2, 0.75, 8, 128, version)],
+            TABLE_SCHEMAS["corpus_stats"],
         ),
         f"{out}/corpus_stats",
     )
@@ -305,7 +308,7 @@ def test_v5_index_raises_rebuild(spark, work_dir):
     with pytest.raises(ValueError, match="rebuild"):
         commit(gen_boolean_pages(spark), 0)
     with pytest.raises(ValueError, match="rebuild"):
-        merge_segments(spark, out, f"{work_dir}/v5_merged", factor=2)
+        merge_segments(spark, out, f"{work_dir}/v{version}_merged", factor=2)
 
 
 def test_mass_delete_cogrouped_tombstones(spark, work_dir):

@@ -282,8 +282,8 @@ def test_index_append_sink_commits_segments(spark, stream_dir, tmp_path):
               A.phrase(["lorem", "ipsum"])]:
         assert urls(cat, q) == urls(ref, q), q
     # BM25 scores identical per url (stats are corpus-wide on both
-    # sides); pruned path falls back to exact under drifted avgdl_built
-    # but must return the same rows
+    # sides); the pruned path, whose block bounds on the first batch's
+    # segments hold under the drifted avgdl, must return the same rows
     def scored(cat_, prune):
         # k covers every match: the two indexes assign different doc
         # ids, so a k that cuts inside a score tie would select
@@ -299,63 +299,68 @@ def test_index_append_sink_commits_segments(spark, stream_dir, tmp_path):
     assert scored(cat, True) == scored(ref, True)
 
 
-def test_refresh_block_bounds_after_append(spark, tmp_path):
-    """Appended segments carry bounds built under their batch-local
-    avgdl (bm25 auto-falls back to exact for them — rank-safe).
-    refresh_block_bounds recomputes the bounds in place under the
-    corpus avgdl: every avgdl_built flips to the corpus value, scores
-    stay byte-identical on both scorer paths, and posting bytes other
-    than the bounds are untouched."""
-    from yaii_spark.indexer import refresh_block_bounds
-    from yaii_spark.queries.bm25 import bm25_topk
+def test_pruned_bm25_on_appended_segment_skips_blocks(spark, tmp_path):
+    """An appended segment written while the corpus avgdl was another
+    value is pruned, not scored exactly: its block bounds are derived
+    from the stored (tf, dl) impacts under the current avgdl. Pruned
+    top-k equals exact, and on a query-term row spanning several
+    blocks the pruned scorer leaves a block undecoded."""
+    from yaii_spark.queries import bm25 as B
     from yaii_spark.storage import IndexCatalog
     from yaii_spark.streaming import make_append_committer
+    from yaii_spark.synth import VOCAB
 
-    idx = str(tmp_path / "refresh_idx")
+    idx = str(tmp_path / "drift_idx")
     commit = make_append_committer(
-        idx, seg_size=16, stored_cols=["url", "text", "lang", "num_attr"]
+        idx, seg_size=256, stored_cols=["url", "text", "lang", "num_attr"]
     )
     # batches with different token-length mixes → avgdl drifts
-    commit(gen_pages(spark, 40, include_fixtures=False, tokens_range=(8, 24)), 0)
+    commit(gen_pages(spark, 256, include_fixtures=False, tokens_range=(8, 24)), 0)
+    avgdl_before = IndexCatalog(spark, idx).corpus_stats().avgdl
+    # one appended doc carries a term no other doc has
+    rare, head = "zzrare", VOCAB[0]
     commit(
-        gen_pages(spark, 80, include_fixtures=False, tokens_range=(40, 64))
-        .filter(F.col("doc_id") >= 40),
+        gen_pages(spark, 512, include_fixtures=False, tokens_range=(40, 64))
+        .filter(F.col("doc_id") >= 256)
+        .withColumn(
+            "text",
+            F.when(F.col("doc_id") == 300, F.concat("text", F.lit(f" {rare}")))
+            .otherwise(F.col("text")),
+        ),
         1,
     )
     cat = IndexCatalog(spark, idx)
     stats = cat.corpus_stats()
-    built = {r.seg_id: r.avgdl_built for r in cat.seg_meta().collect()}
-    assert any(v != stats.avgdl for v in built.values())  # drift exists
-    pre = {}
-    for prune in (False, True):
-        pre[prune] = [
-            (r.doc_id, round(r.score, 9))
-            for r in bm25_topk(cat, ["url", "wcsfc"], k=20, prune=prune).collect()
+    assert stats.avgdl != avgdl_before  # drift exists
+    seg = 1  # the appended segment
+    q = [head, rare]
+
+    for k in (1, 3, 10):
+        exact = [(r.doc_id, r.score) for r in B.bm25_topk(cat, q, k=k).collect()]
+        pruned = [
+            (r.doc_id, r.score) for r in B.bm25_topk(cat, q, k=k, prune=True).collect()
         ]
-    ids_bytes_before = {
-        (r.seg_id, r.field, r.term): bytes(r.doc_ids_bin)
-        for r in cat.postings([("text", "url")]).collect()
-    }
-    m = refresh_block_bounds(spark, idx)
-    assert m["segments_refreshed"] >= 1
-    cat2 = IndexCatalog(spark, idx)
-    assert all(
-        r.avgdl_built == stats.avgdl for r in cat2.seg_meta().collect()
+        assert exact and pruned == exact, k
+
+    post = cat.postings([("text", t) for t in q]).filter(F.col("seg_id") == seg).toPandas()
+    assert len(post.set_index("term").loc[head, "block_id_offs"]) >= 2
+    meta = cat.seg_meta().filter(F.col("seg_id") == seg).collect()[0]
+    pdf = post.assign(
+        n_docs=meta.n_docs, base_doc_id=meta.base_doc_id, dl_bin=[bytes(meta.dl_bin)] * len(post)
     )
-    for prune in (False, True):
-        post = [
-            (r.doc_id, round(r.score, 9))
-            for r in bm25_topk(cat2, ["url", "wcsfc"], k=20, prune=prune).collect()
-        ]
-        assert post == pre[prune], prune
-    # id/tf bytes untouched — only bounds changed
-    ids_bytes_after = {
-        (r.seg_id, r.field, r.term): bytes(r.doc_ids_bin)
-        for r in cat2.postings([("text", "url")]).collect()
-    }
-    assert ids_bytes_after == ids_bytes_before
-    # second refresh is a no-op
-    assert refresh_block_bounds(spark, idx)["segments_refreshed"] == 0
+    dfs = cat.term_stats_for([("text", t) for t in q])
+    idfs = {t: B.idf(stats.n_docs, dfs[("text", t)][0]) for t in q}
+    B.reset_decode_stats()
+    got = B._score_segment_pruned(
+        pdf, idfs, stats.k1, stats.b, stats.avgdl, 1, stats.block_size
+    )
+    assert B.DECODE_STATS["blocks_decoded"] < B.DECODE_STATS["blocks_total"]
+    want = B._score_one(
+        pdf, {("text", t): v for t, v in idfs.items()},
+        stats.k1, stats.b, stats.avgdl, 1, "or", stats.block_size, None,
+    )
+    assert list(got["doc_id"]) == list(want["doc_id"])
+    assert list(got["score"]) == list(want["score"])
 
 
 def test_append_committer_replay_idempotent(spark, tmp_path):

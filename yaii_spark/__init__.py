@@ -27,7 +27,6 @@ from yaii_spark.indexer import (  # noqa: F401
     delete_docs,
     delete_docs_df,
     merge_segments,
-    refresh_block_bounds,
 )
 from yaii_spark.queries import ast  # noqa: F401
 from yaii_spark.queries.bm25 import (  # noqa: F401

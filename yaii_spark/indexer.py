@@ -11,11 +11,16 @@ then the parquet/Iceberg commit):
           tokenize stage)
           ──explode ~shards rows/doc──► (seg_id, doc_id, dl, shard, data)
           ──hash(seg_id), groupBy(seg_id, shard)──► decode frames,
-          concat runs, delta+varint posting rows              [shuffle]
+          concat runs, delta+varint posting rows + (tf, dl) block
+          impacts (_encode_group_batched)                    [shuffle]
           ──write postings partitioned by seg_id, sorted by (field, term)
 
 Every field takes this path: custom analyzers and multi-source fields
 are pure functions run inside the same UDF, over extra source columns.
+`_encode_group_batched` writes every posting row, the merge's too. The
+rows store no BM25 norm: a block's bound is its (tf, dl) impacts, valid
+under any avgdl, so no write depends on the corpus avgdl and appended
+segments need no bound upkeep.
 
 Scale design decisions (the 100 TB story):
 
@@ -57,7 +62,6 @@ immutable-segment.ts:98-309); its planned-but-stubbed segment merge
 
 from __future__ import annotations
 
-import math
 import os
 import time
 
@@ -99,27 +103,16 @@ ANALYZERS = {"standard": tokenize, "all": tokenize_all_field}
 # "_all" mirrors yaii's synthetic catch-all field (£_ALL).
 DEFAULT_FIELDS = {"text": ("text", "standard"), "_all": ("text", "all")}
 
-def _tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
-    """Lucene-form BM25 tf normalization: tf / (tf + k1*(1-b+b*dl/avgdl))."""
-    tf = tf.astype(np.float64)
-    return tf / (tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
-
-
-def _encode_group_batched(
-    seg: int,
-    items: list,
-    field_names: list[str],
-    avgdl: float,
-    k1: float,
-    b: float,
-) -> pd.DataFrame:
-    """Encode every (field, term) posting row of one (segment, shard)
-    group with ONE codec pass over the concatenated arrays.
+def _encode_group_batched(seg: int, items: list) -> pd.DataFrame:
+    """The one writer of posting-row bytes and block metadata: encode
+    every (field, term) posting row of one group with ONE codec pass
+    over the concatenated arrays. The build calls it per (segment,
+    shard), the merge per (merged segment, shard).
 
     The per-row form (delta_encode_blocked + varint_encode_blocked per
     posting list) spends ~100s of µs of fixed numpy overhead per call;
     at 10^5 posting rows per build that overhead IS the encode stage
-    (guide §1.2 step 2 — per-task work). Here ids/tfs/norms of all rows
+    (guide §1.2 step 2 — per-task work). Here ids/tfs of all rows
     concatenate, delta restarts land at every row start and every
     in-row block boundary, and one varint_lengths + varint_encode pass
     serves the whole group; per-row bytes are then slices of the group
@@ -127,12 +120,26 @@ def _encode_group_batched(
     is a per-value code — pinned by tests/test_index_build.py's
     encoder-parity test.
 
-    `items`: [((fid, term_bytes), (ids, tfs, dls, pos_blobs)), ...]
-    with each row's ids sorted ascending (doc_id processing order)."""
-    out = {c: [] for c in column_names("postings")}
+    Each block's BM25 bound is stored as its impacts (Lucene's
+    competitive impacts): the Pareto frontier of its (tf, dl) pairs —
+    no other posting of the block has both a tf as high and a dl as
+    low. The BM25 norm rises with tf and falls with dl, so the
+    frontier's best norm bounds the block under ANY (avgdl, k1, b);
+    the scorer derives it at query time (bm25._block_bounds).
+    `block_impacts` is one LEB128 stream: per block, its frontier size,
+    then its (tf, dl) pairs, tf descending.
+
+    `items`: [((field, term), (ids, tfs, dls, pos_bytes, pos_lens)), ...]
+    with each row's ids sorted ascending, `dls` the docs' lengths,
+    `pos_bytes` the docs' position runs concatenated and `pos_lens`
+    each doc's run length in bytes."""
+    cols = column_names("postings")
     nrows = len(items)
     if nrows == 0:
-        return pd.DataFrame(out)
+        # object dtype: pd.DataFrame({c: []}) makes float64 columns,
+        # which Arrow cannot convert to the list/binary output types
+        return pd.DataFrame(columns=cols, dtype=object)
+    out = {c: [] for c in cols}
     counts = np.fromiter((len(e[0]) for _, e in items), dtype=np.int64, count=nrows)
     total = int(counts.sum())
     row_ends = np.cumsum(counts)
@@ -141,12 +148,12 @@ def _encode_group_batched(
     tfs_all = np.empty(total, dtype=np.uint64)
     dls_all = np.empty(total, dtype=np.int64)
     plen_all = np.empty(total, dtype=np.int64)
-    for j, (_, (ids, tfs, dls, poss)) in enumerate(items):
+    for j, (_, (ids, tfs, dls, _pos, plens)) in enumerate(items):
         s, e = row_starts[j], row_ends[j]
         ids_all[s:e] = ids
         tfs_all[s:e] = tfs
         dls_all[s:e] = dls
-        plen_all[s:e] = [len(p) for p in poss]
+        plen_all[s:e] = plens
     # delta stream with absolute restarts at every (row, block) start
     pos_in_row = np.arange(total, dtype=np.int64) - np.repeat(row_starts, counts)
     restart = (pos_in_row % BLOCK_SIZE) == 0
@@ -165,30 +172,51 @@ def _encode_group_batched(
     tf_voffs = tf_ends - tf_lens
     pl_ends = np.cumsum(plen_all)
     pl_voffs = pl_ends - plen_all
-    norms = _tf_norm(tfs_all, dls_all, avgdl, k1, b)
-    # one reduceat per metric: segments are exactly the (row, block)
-    # chunks (restart_idx) / the rows (row_starts), both strictly
-    # increasing and < total
-    bmax_all = np.maximum.reduceat(norms, restart_idx)
-    max_norm_all = np.maximum.reduceat(norms, row_starts)
     cf_all = np.add.reduceat(tfs_all.astype(np.int64), row_starts)
     nblocks = (counts + BLOCK_SIZE - 1) // BLOCK_SIZE
     bm_ends = np.cumsum(nblocks)
     bm_starts = bm_ends - nblocks
-    for j, ((fid, term), _) in enumerate(items):
+    # every (row, block) frontier in one pass: order each chunk's
+    # postings by tf descending, dl ascending; a posting is on the
+    # frontier iff its dl is below every dl before it in its chunk.
+    # Offsetting dl by -chunk·(max dl + 1) makes one running minimum
+    # restart at each chunk (every earlier chunk's values are larger).
+    chunk = np.cumsum(restart) - 1
+    order = np.lexsort((dls_all, -tfs_all.astype(np.int64), chunk))
+    key = dls_all[order] - chunk[order] * (int(dls_all.max()) + 1)
+    prev_min = np.empty_like(key)
+    prev_min[0] = key[0] + 1
+    np.minimum.accumulate(key[:-1], out=prev_min[1:])
+    front = order[key < prev_min]
+    fchunk = chunk[front]
+    fsize = np.bincount(fchunk, minlength=restart_idx.size)
+    # value stream: chunk c's size at c + 2·(frontier points before c),
+    # the i-th frontier point's (tf, dl) right after at c + 1 + 2·i
+    imp = np.empty(restart_idx.size + 2 * front.size, dtype=np.uint64)
+    head = np.arange(restart_idx.size) + 2 * (np.cumsum(fsize) - fsize)
+    imp[head] = fsize
+    at = fchunk + 1 + 2 * np.arange(front.size)
+    imp[at] = tfs_all[front]
+    imp[at + 1] = dls_all[front]
+    imp_lens = varint_lengths(imp)
+    imp_bytes = varint_encode(imp)
+    imp_ends = np.cumsum(imp_lens)
+    imp_voffs = imp_ends - imp_lens
+    for j, ((field, term), item) in enumerate(items):
         s, e = row_starts[j], row_ends[j]
         rblocks = restart_idx[bm_starts[j] : bm_ends[j]]
         ib0, tb0, pb0 = id_voffs[s], tf_voffs[s], pl_voffs[s]
+        hb0 = imp_voffs[head[bm_starts[j]]]
+        hb1 = imp_voffs[head[bm_ends[j]]] if bm_ends[j] < head.size else len(imp_bytes)
         out["seg_id"].append(seg)
-        out["field"].append(field_names[fid])
-        out["term"].append(term.decode("utf-8"))
+        out["field"].append(field)
+        out["term"].append(term)
         out["df_local"].append(int(counts[j]))
         out["cf_local"].append(int(cf_all[j]))
         out["doc_ids_bin"].append(id_bytes[ib0 : id_ends[e - 1]])
         out["tfs_bin"].append(tf_bytes[tb0 : tf_ends[e - 1]])
-        out["pos_bin"].append(b"".join(items[j][1][3]))
-        out["block_maxes"].append([float(x) for x in bmax_all[bm_starts[j] : bm_ends[j]]])
-        out["max_norm"].append(float(max_norm_all[j]))
+        out["pos_bin"].append(item[3])
+        out["block_impacts"].append(imp_bytes[hb0:hb1])
         out["block_id_offs"].append([int(x) for x in id_voffs[rblocks] - ib0])
         out["block_tf_offs"].append([int(x) for x in tf_voffs[rblocks] - tb0])
         out["block_first_ids"].append([int(x) for x in ids_all[rblocks]])
@@ -196,7 +224,7 @@ def _encode_group_batched(
     return pd.DataFrame(out)
 
 
-def _make_packed_encoder(field_names: list[str], avgdl: float, k1: float, b: float):
+def _make_packed_encoder(field_names: list[str]):
     """Per-(segment, shard) posting builder over packed per-doc blobs
     (analyzer.doc_postings layout). Rows are processed in doc_id order,
     so each (field, term)'s doc ids accumulate already sorted; position
@@ -242,9 +270,14 @@ def _make_packed_encoder(field_names: list[str], avgdl: float, k1: float, b: flo
                 e[1].append(tf)
                 e[2].append(dl)
                 e[3].append(pos)
-        return _encode_group_batched(
-            seg, list(acc.items()), field_names, avgdl, k1, b
-        )
+        items = [
+            (
+                (field_names[fid], term.decode("utf-8")),
+                (ids, tfs, dls, b"".join(poss), [len(p) for p in poss]),
+            )
+            for (fid, term), (ids, tfs, dls, poss) in acc.items()
+        ]
+        return _encode_group_batched(seg, items)
 
     return encode
 
@@ -579,10 +612,9 @@ def build_index(
     (n_docs, sum_dl) rows — the durable union of every batch — instead
     of re-decoding every segment's dl blob (idempotent under retries;
     a crashed batch's segments self-heal into both on the next fold).
-    Appended segments' block-max bounds are computed under the
-    batch-local avgdl (recorded as seg_meta.avgdl_built); BM25 pruning
-    detects the drift and scores those segments exactly until a merge
-    refreshes bounds.
+    Appended segments need no bound upkeep: their block impacts are
+    raw (tf, dl) pairs, so BM25 pruning derives valid block bounds
+    under whatever corpus avgdl is current when a query runs.
     """
     if append and not resume:
         raise ValueError("append=True requires resume=True (checkpoint append)")
@@ -643,9 +675,8 @@ def build_index(
         fs_delete(spark, out_dir)
     # dynamic partition overwrite (stage+move per partition dir) only
     # pays off when overwriting a partially-built index; fresh builds
-    # use the cheap static path
+    # use the cheap static path. Set per write, never on the session.
     overwrite_mode = "dynamic" if fs_exists(spark, os.path.join(out_dir, "postings")) else "static"
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", overwrite_mode)
     # tokenize input: ONLY the columns the analyzer consumers need —
     # the persisted batch must never hold the wide page row (the html
     # binary in particular): at web scale the cached bytes ARE the
@@ -771,7 +802,6 @@ def build_index(
             .select(
                 "seg_id", F.col("m.n_docs").alias("n_docs"), "base_doc_id",
                 F.col("m.dl_bin").alias("dl_bin"),
-                F.lit(float(avgdl)).alias("avgdl_built"),
                 F.lit(None).cast("binary").alias("deleted_bin"),
             )
         )
@@ -799,7 +829,7 @@ def build_index(
             F.col("b.data").alias("data"),
         )
         enc = packed.repartition("seg_id").groupBy("seg_id", "shard").applyInPandas(
-            _make_packed_encoder(names, avgdl, k1, b),
+            _make_packed_encoder(names),
             schema=TABLE_SCHEMAS["postings"],
         )
         # the three table writes are independent (all read the persisted
@@ -816,11 +846,13 @@ def build_index(
                     _labeled, spark, "build:docs-write",
                     write_table, docs_df, os.path.join(out_dir, "docs"),
                     partition_by=["seg_id"],
+                    partition_overwrite=overwrite_mode,
                 ),
                 pool.submit(
                     _labeled, spark, "build:seg-meta-write",
                     write_table, meta_df, os.path.join(out_dir, "seg_meta"),
                     partition_by=["seg_id"],
+                    partition_overwrite=overwrite_mode,
                 ),
                 pool.submit(
                     _labeled, spark, "build:postings-write",
@@ -832,6 +864,7 @@ def build_index(
                     enc.sortWithinPartitions("seg_id", "field", "term"),
                     os.path.join(out_dir, "postings"),
                     partition_by=["seg_id"],
+                    partition_overwrite=overwrite_mode,
                 ),
             ]
             for f in futs:
@@ -1019,77 +1052,6 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> int:
     return delete_docs_df(spark, index_dir, df)
 
 
-def refresh_block_bounds(spark: SparkSession, index_dir: str) -> dict:
-    """Recompute block-max bounds for segments whose bounds were built
-    under a different corpus avgdl (streaming appends drift it; bm25
-    falls back to exact scoring for such segments). A full merge also
-    refreshes bounds — this is the cheap in-place form: only STALE
-    segments' postings partitions are rewritten (ids/tfs re-encoded to
-    identical bytes; only block_maxes/max_norm change), then their
-    seg_meta rows flip avgdl_built to the current corpus avgdl.
-
-    Crash-safe ordering: postings first, seg_meta flip second — a crash
-    in between leaves avgdl_built stale, so the scorer keeps using the
-    (always rank-safe) exact path; nothing ever trusts a bound that
-    wasn't rewritten. Scores themselves never change (bounds only gate
-    pruning). Returns {"segments_refreshed": n}.
-    """
-    from yaii_spark.storage import IndexCatalog
-
-    cat = IndexCatalog(spark, index_dir)
-    stats = cat.corpus_stats()
-    avgdl, k1, b, block = stats.avgdl, stats.k1, stats.b, stats.block_size
-    stale = [
-        int(r.seg_id)
-        for r in cat.seg_meta().filter(F.col("avgdl_built") != avgdl).collect()
-    ]
-    if not stale:
-        return {"segments_refreshed": 0}
-    stale_df = local_frame(spark, [(s,) for s in stale], "seg_id long")
-    meta = cat.seg_meta().join(F.broadcast(stale_df), "seg_id", "left_semi")
-    post = cat.postings().join(F.broadcast(stale_df), "seg_id", "left_semi")
-
-    def rewrite(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        from yaii_spark.codec import delta_decode_blocked, varint_decode
-
-        if post_pdf.empty:  # a postings-free segment (all-null texts)
-            return post_pdf
-        base = int(meta_pdf["base_doc_id"].iloc[0])
-        dls = varint_decode(meta_pdf["dl_bin"].iloc[0]).astype(np.float64)
-        bmaxes, mnorms = [], []
-        for ids_b, tfs_b in zip(post_pdf["doc_ids_bin"], post_pdf["tfs_bin"]):
-            ids = delta_decode_blocked(ids_b, block).astype(np.int64) - base
-            tfs = varint_decode(tfs_b)
-            norms = _tf_norm(tfs, dls[ids].astype(np.int64), avgdl, k1, b)
-            nblocks = math.ceil(ids.size / block)
-            bmaxes.append(
-                [float(norms[i * block : (i + 1) * block].max()) for i in range(nblocks)]
-            )
-            mnorms.append(float(norms.max()) if norms.size else 0.0)
-        out = post_pdf.copy()
-        out["block_maxes"] = bmaxes
-        out["max_norm"] = mnorms
-        return out
-
-    refreshed = (
-        post.groupBy("seg_id")
-        .cogroup(meta.select("seg_id", "base_doc_id", "dl_bin").groupBy("seg_id"))
-        .applyInPandas(rewrite, schema=TABLE_SCHEMAS["postings"])
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    write_table(
-        refreshed.repartition("seg_id").sortWithinPartitions("seg_id", "field", "term"),
-        os.path.join(index_dir, "postings"),
-        partition_by=["seg_id"],
-    )
-    # flip avgdl_built strictly AFTER the bounds are durable
-    new_meta = meta.withColumn("avgdl_built", F.lit(float(avgdl)))
-    write_table(
-        new_meta, os.path.join(index_dir, "seg_meta"), partition_by=["seg_id"]
-    )
-    return {"segments_refreshed": len(stale)}
-
-
 MERGE_SHARDS = 16  # term-hash shards per merged segment (task sizing)
 
 
@@ -1110,7 +1072,9 @@ def merge_segments(
        order — docIDs of adjacent segments are disjoint ascending
        ranges, so concatenation preserves sort order and no renumbering
        happens (the payoff of the seg_id*seg_size+local docID design);
-       block maxes are recomputed against the merged dl array.
+       the rows are re-encoded by the build's encoder
+       (_encode_group_batched), which takes each doc's length from the
+       merged dl array for the block impacts.
     3. Tombstoned docs are EXPUNGED (Lucene expunges deletes at merge —
        the point of compaction): their postings entries, position
        ranges and docs-table rows are dropped, and the tombstone table
@@ -1127,8 +1091,7 @@ def merge_segments(
 
     cat_in = IndexCatalog(spark, index_dir)
     stats = cat_in.corpus_stats()
-    seg_size, avgdl, k1, b = stats.seg_size, stats.avgdl, stats.k1, stats.b
-    block_size = stats.block_size
+    seg_size, block_size = stats.seg_size, stats.block_size
     new_size = seg_size * factor
 
     meta = cat_in.seg_meta()
@@ -1213,7 +1176,6 @@ def merge_segments(
                 "n_docs": [int(dls.size)],
                 "base_doc_id": [new_base],
                 "dl_bin": [varint_encode(dls)],
-                "avgdl_built": [float(avgdl)],
                 "deleted_bin": [dele],
             }
         )
@@ -1228,25 +1190,15 @@ def merge_segments(
 
     def merge_shard(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         from yaii_spark.codec import (
-            block_offsets_from_lengths,
             delta_decode,
             delta_decode_blocked,
-            delta_encode_blocked,
             position_byte_lengths,
             varint_decode,
-            varint_encode,
-            varint_encode_blocked,
-            varint_lengths,
         )
 
-        cols = column_names("postings")
         if post_pdf.empty:
-            # a (new_seg, shard) key can arrive meta-only from the
-            # cogroup; the empty frame must use OBJECT dtype columns —
-            # pd.DataFrame({c: []}) defaults them to float64, which
-            # Arrow cannot convert to the list/binary output types
-            # (ArrowNotImplementedError first seen at a 1M-doc merge)
-            return pd.DataFrame(columns=cols, dtype=object)
+            # a (new_seg, shard) key can arrive meta-only from the cogroup
+            return _encode_group_batched(0, [])
         new_seg = int(post_pdf["new_seg"].iloc[0])
         base = new_seg * new_size
         if meta_pdf.empty:
@@ -1256,14 +1208,14 @@ def merge_segments(
                 f"merge: no seg_meta for (new_seg={new_seg}) — cogroup "
                 "key misalignment"
             )
-        dls = varint_decode(meta_pdf["dl_bin"].iloc[0]).astype(np.float64)
+        dls = varint_decode(meta_pdf["dl_bin"].iloc[0]).astype(np.int64)
         db = meta_pdf["deleted_bin"].iloc[0]
         purged_local = (
             delta_decode(db).astype(np.int64) if db is not None else None
         )
         post_pdf = post_pdf.sort_values(["field", "term", "seg_id"], kind="mergesort")
-        out = {c: [] for c in cols}
-        for (field, term), g in post_pdf.groupby(["field", "term"], sort=False):
+        items = []
+        for key, g in post_pdf.groupby(["field", "term"], sort=False):
             ids = np.concatenate(
                 [delta_decode_blocked(x, block_size) for x in g["doc_ids_bin"]]
             )
@@ -1273,59 +1225,24 @@ def merge_segments(
             # boundaries, and doc order is just the old-segment concat
             # order — so the merged stream is the VERBATIM byte concat
             # (LEB128 here is canonical, so this equals a re-encode);
-            # only per-doc byte lengths are derived (one vectorized
-            # varint_lengths pass) for the block offsets. No per-doc
-            # decode loop — at 1M docs that loop dominated merge time.
-            pos_cat = b"".join(g["pos_bin"])
-            keep = None
+            # only per-doc byte lengths are derived. No per-doc decode
+            # loop — at 1M docs that loop dominated merge time.
+            pos = b"".join(g["pos_bin"])
+            plens = position_byte_lengths(pos, tfs.astype(np.int64))
             if purged_local is not None and purged_local.size:
-                k_ = ~np.isin(local, purged_local, assume_unique=True)
-                if not k_.all():
-                    keep = k_
-            if keep is not None:
-                # expunge deletes: drop purged docs' postings + their
-                # position delta runs (element mask, still vectorized)
-                deltas = varint_decode(pos_cat)
-                keep_elem = np.repeat(keep, tfs.astype(np.int64))
-                kept = deltas[keep_elem]
-                ids, local = ids[keep], local[keep]
-                tfs = tfs[keep]
-                if ids.size == 0:
+                keep = ~np.isin(local, purged_local, assume_unique=True)
+                if not keep.any():
                     continue  # every posting was deleted — drop the term
-                pos_bin_b = varint_encode(kept)
-                cs = np.concatenate(([0], np.cumsum(varint_lengths(kept))))
-                ends_ix = np.cumsum(tfs.astype(np.int64))
-                doc_lens = cs[ends_ix] - cs[ends_ix - tfs.astype(np.int64)]
-            else:
-                pos_bin_b = pos_cat
-                doc_lens = position_byte_lengths(pos_cat, tfs.astype(np.int64))
-            norms = _tf_norm(tfs, dls[local], avgdl, k1, b)
-            nblocks = math.ceil(ids.size / block_size)
-            bmax = [
-                float(norms[i * block_size : (i + 1) * block_size].max())
-                for i in range(nblocks)
-            ]
-            out["seg_id"].append(new_seg)
-            out["field"].append(field)
-            out["term"].append(term)
-            out["df_local"].append(int(ids.size))
-            out["cf_local"].append(int(tfs.sum()))
-            ids_bin, id_offs = delta_encode_blocked(ids, block_size)
-            tfs_bin, tf_offs = varint_encode_blocked(tfs, block_size)
-            out["doc_ids_bin"].append(ids_bin)
-            out["tfs_bin"].append(tfs_bin)
-            out["block_id_offs"].append([int(x) for x in id_offs])
-            out["block_tf_offs"].append([int(x) for x in tf_offs])
-            out["block_first_ids"].append([int(x) for x in ids[::block_size]])
-            out["pos_bin"].append(pos_bin_b)
-            out["block_pos_offs"].append(
-                [int(x) for x in block_offsets_from_lengths(doc_lens, block_size)]
-            )
-            out["block_maxes"].append(bmax)
-            out["max_norm"].append(float(norms.max()) if norms.size else 0.0)
-        if not out["seg_id"]:
-            return pd.DataFrame(columns=cols, dtype=object)
-        return pd.DataFrame(out)
+                if not keep.all():
+                    # expunge deletes: drop purged docs' postings and
+                    # their position byte runs (a byte mask — each
+                    # run decodes on its own, so nothing is re-encoded)
+                    pos = np.frombuffer(pos, dtype=np.uint8)[
+                        np.repeat(keep, plens)
+                    ].tobytes()
+                    ids, local, tfs, plens = ids[keep], local[keep], tfs[keep], plens[keep]
+            items.append((key, (ids, tfs, dls[local], pos, plens)))
+        return _encode_group_batched(new_seg, items)
 
     shard = F.pmod(F.xxhash64("field", "term"), F.lit(MERGE_SHARDS))
     posts = (
@@ -1389,7 +1306,8 @@ def merge_segments(
     write_table(
         local_frame(
             spark,
-            [(stats.n_docs, avgdl, k1, b, new_size, block_size, FORMAT_VERSION)],
+            [(stats.n_docs, stats.avgdl, stats.k1, stats.b, new_size, block_size,
+              FORMAT_VERSION)],
             TABLE_SCHEMAS["corpus_stats"],
         ),
         os.path.join(out_dir, "corpus_stats"),

@@ -16,12 +16,17 @@ order** (float determinism across parallelism levels — SURVEY.md
 TakeOrderedAndProject, the distributed form of the reference's
 per-segment topBy + global topBy (base-inverted-index.ts:437-455).
 
-Pruning: a MaxScore/block-max pass (`prune=True`) skips non-essential
-term lists using the per-block upper bounds stored at build time
-(`block_maxes`, indexer.py). Rank-safe: pytest asserts pruned ==
-exact. The per-term upper bound idf·max_norm and the cost-ascending
-term ordering generalize the reference's cost-sorted conjunction
-(operations.ts:113-114) to scored retrieval.
+Pruning: a MaxScore/block-max pass (`prune=True`, Ding & Suel 2011)
+skips non-essential term lists using per-block upper bounds derived at
+query time from the stored block impacts (`block_impacts`, each
+block's Pareto frontier of (tf, dl) pairs — Lucene's competitive
+impacts; indexer._encode_group_batched): a block's bound is the best
+norm on its frontier under the index's current (avgdl, k1, b), so it
+holds on every segment however far avgdl drifted since the segment was
+written (`_block_bounds`). Rank-safe: pytest asserts pruned == exact.
+The per-term upper bound idf·(its best block bound) and the
+cost-ascending term ordering generalize the reference's cost-sorted
+conjunction (operations.ts:113-114) to scored retrieval.
 """
 
 from __future__ import annotations
@@ -39,6 +44,33 @@ from yaii_spark.storage import IndexCatalog
 
 def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def _tf_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
+    """Lucene-form BM25 tf normalization: tf / (tf + k1*(1-b+b*dl/avgdl))."""
+    tf = tf.astype(np.float64, copy=False)
+    return tf / (tf + k1 * (1.0 - b + b * dl.astype(np.float64, copy=False) / avgdl))
+
+
+def _block_bounds(
+    impacts: bytes, nblocks: int, avgdl: float, k1: float, b: float
+) -> np.ndarray:
+    """Each block's BM25 norm bound from its stored impacts (per block:
+    frontier size, then (tf, dl) pairs): the largest norm on the
+    block's frontier, which is the block's largest norm."""
+    v = varint_decode(impacts)
+    sizes = v.tolist()
+    heads = np.empty(nblocks, dtype=np.int64)
+    p = 0
+    for j in range(nblocks):
+        heads[j] = p
+        p += 1 + 2 * sizes[p]
+    pair = np.ones(v.size, dtype=bool)
+    pair[heads] = False
+    tf_dl = v[pair]
+    counts = v[heads].astype(np.int64)
+    norms = _tf_norm(tf_dl[0::2], tf_dl[1::2], avgdl, k1, b)
+    return np.maximum.reduceat(norms, np.cumsum(counts) - counts)
 
 
 _EMPTY = lambda: pd.DataFrame(
@@ -184,14 +216,14 @@ def _score_segment_pruned(
     base = int(pdf["base_doc_id"].iloc[0])
     dls = varint_decode(pdf["dl_bin"].iloc[0]).astype(np.float64)
     term_rows: dict[str, tuple[_LazyPostings, np.ndarray]] = {}
-    for t, ids_b, tfs_b, bmax, io_, to_, fi_, n_ in zip(
-        pdf["term"], pdf["doc_ids_bin"], pdf["tfs_bin"], pdf["block_maxes"],
+    for t, ids_b, tfs_b, imp, io_, to_, fi_, n_ in zip(
+        pdf["term"], pdf["doc_ids_bin"], pdf["tfs_bin"], pdf["block_impacts"],
         pdf["block_id_offs"], pdf["block_tf_offs"], pdf["block_first_ids"],
         pdf["df_local"],
     ):
         if t in idfs:
             lp = _LazyPostings(ids_b, tfs_b, io_, to_, fi_, n_, block, base)
-            term_rows[t] = (lp, np.asarray(bmax, dtype=np.float64))
+            term_rows[t] = (lp, _block_bounds(imp, lp.nblocks(), avgdl, k1, b))
     if not term_rows:
         return _EMPTY()
     ubs = {t: idfs[t] * float(bm.max()) for t, (_, bm) in term_rows.items()}
@@ -229,8 +261,7 @@ def _score_segment_pruned(
             if hit.any():
                 sids = cand[hit]
                 stfs = tfv[hit]
-                norm = stfs / (stfs + k1 * (1.0 - b + b * dls[sids] / avgdl))
-                scores[sids] += idfs[t] * norm
+                scores[sids] += idfs[t] * _tf_norm(stfs, dls[sids], avgdl, k1, b)
                 if cand.size >= k:
                     theta = np.partition(scores[cand], cand.size - k)[cand.size - k]
             continue
@@ -258,8 +289,7 @@ def _score_segment_pruned(
         if sel.size:
             sids = ids[sel]
             stfs = tfs[sel]
-            norm = stfs / (stfs + k1 * (1.0 - b + b * dls[sids] / avgdl))
-            scores[sids] += idfs[t] * norm
+            scores[sids] += idfs[t] * _tf_norm(stfs, dls[sids], avgdl, k1, b)
             touched.append(sids)
             n_seen += sel.size
             if n_seen >= k:
@@ -291,7 +321,7 @@ def _score_segment_pruned(
         if hit.any():
             tf = tfv[hit]
             w = winners[hit]
-            final[hit] += idfs[t] * (tf / (tf + k1 * (1.0 - b + b * dls[w] / avgdl)))
+            final[hit] += idfs[t] * _tf_norm(tf, dls[w], avgdl, k1, b)
     order2 = np.lexsort((winners, -final))
     return pd.DataFrame(
         {"doc_id": (winners[order2] + base).astype(np.int64), "score": final[order2]}
@@ -347,8 +377,7 @@ def _score_segment(
                 ids_b, tfs_b = rows[key]
                 ids = delta_decode_blocked(ids_b or b"", block).astype(np.int64) - base
                 tfs = varint_decode(tfs_b or b"").astype(np.float64)
-                norm = tfs / (tfs + k1 * (1.0 - b + b * dls[ids] / avgdl))
-                got = decoded[key] = (ids, norm)
+                got = decoded[key] = (ids, _tf_norm(tfs, dls[ids], avgdl, k1, b))
             ids, norm = got
             scores[ids] += coefs[key] * norm
             hits[ids] += 1
@@ -427,26 +456,19 @@ def bm25_topk(
             use_prune = False
 
     cols = ["seg_id", "field", "term", "doc_ids_bin", "tfs_bin"] + (
-        ["block_maxes", "block_id_offs", "block_tf_offs", "block_first_ids", "df_local"]
+        ["block_impacts", "block_id_offs", "block_tf_offs", "block_first_ids", "df_local"]
         if prune
         else []
     )
     coefs = {(field, t): v for t, v in idfs.items()}
     post = cat.postings(sorted(coefs)).select(*cols)
-    meta = cat.seg_meta().select(
-        "seg_id", "n_docs", "base_doc_id", "dl_bin", "avgdl_built"
-    )
+    meta = cat.seg_meta().select("seg_id", "n_docs", "base_doc_id", "dl_bin")
     joined = post.join(meta, "seg_id", "inner")
 
     def score(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
         if pdf.empty:
             return _EMPTY()
-        # block_maxes are upper bounds ONLY under the avgdl they were
-        # computed with (norm grows with avgdl): a segment appended by
-        # the streaming sink after the corpus avgdl drifted scores via
-        # the exact path — rank-safe always, pruned again once a merge
-        # recomputes its bounds with the current corpus avgdl
-        if use_prune and float(pdf["avgdl_built"].iloc[0]) == avgdl:
+        if use_prune:
             return _score_segment_pruned(pdf, idfs, k1, b, avgdl, k, block, deleted)
         return _score_one(pdf, coefs, k1, b, avgdl, k, mode, block, deleted)
 

@@ -4,7 +4,8 @@ Layout (SURVEY.md §7.0), one line per table, each naming its
 declared schema (TABLE_SCHEMAS[...]):
 
     docs/            stored fields by seg_id — schema inferred
-    postings/        ["postings"]: blocked posting rows by seg_id
+    postings/        ["postings"]: blocked posting rows by seg_id, each
+                     block with its (tf, dl) impacts (the BM25 bound)
     seg_meta/        ["seg_meta"]: one row per segment (dl_bin, holes)
     term_stats/      ["term_stats"]: (df, cf) as one (field, term)-sorted run
     corpus_stats/    ["corpus_stats"]: one row, the build commit marker
@@ -52,12 +53,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 # v4: blocked posting layout — delta restarts at block boundaries +
 # per-block byte offsets / first doc ids (lazy MaxScore block decode)
 # v5: blocked POSITION stream (postings.block_pos_offs → lazy phrase
-# decode); seg_meta gains avgdl_built (pruning-safety under streaming
+# decode); seg_meta gains the build-time avgdl (pruning-safety under streaming
 # appends) and deleted_bin (holes left by purge-at-merge);
 # corpus_stats gains format_version
 # v6: term_stats is one (field, term)-sorted run of files (no bucket
 # partition directories, no bucket column)
-FORMAT_VERSION = 6
+# v7: postings.block_impacts (each block's Pareto frontier of (tf, dl)
+# pairs, a BM25 bound under any avgdl) replaces the per-block and
+# per-row norm maxima computed under the build-time avgdl; seg_meta
+# drops that avgdl
+FORMAT_VERSION = 7
 
 # The declared schema of every index table (DDL: the read, write and
 # applyInPandas-output schema alike; a partition column reads back
@@ -66,13 +71,13 @@ TABLE_SCHEMAS = {
     "postings": (
         "seg_id long, field string, term string, df_local long, cf_local long, "
         "doc_ids_bin binary, tfs_bin binary, pos_bin binary, "
-        "block_maxes array<double>, max_norm double, "
+        "block_impacts binary, "
         "block_id_offs array<int>, block_tf_offs array<int>, "
         "block_first_ids array<long>, block_pos_offs array<int>"
     ),
     "seg_meta": (
         "seg_id long, n_docs long, base_doc_id long, dl_bin binary, "
-        "avgdl_built double, deleted_bin binary"
+        "deleted_bin binary"
     ),
     "term_stats": "field string, term string, df long, cf long",
     "corpus_stats": (
@@ -204,12 +209,17 @@ def write_table(
     path: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
+    partition_overwrite: str | None = None,
 ) -> None:
     """Single write seam (see read_table). Partitioning columns map
-    1:1 onto Iceberg identity-partition specs."""
+    1:1 onto Iceberg identity-partition specs. `partition_overwrite`
+    ("static" | "dynamic") sets this write's partitionOverwriteMode as
+    a writer option, leaving the session's setting alone."""
     spark = df.sparkSession
     fmt = iceberg_format(spark) or "parquet"
     w = df.write.mode(mode).format(fmt)
+    if partition_overwrite:
+        w = w.option("partitionOverwriteMode", partition_overwrite)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
