@@ -185,6 +185,52 @@ def test_lazy_block_decode_skips_blocks(spark, work_dir):
     assert np.allclose(pruned["score"], exact["score"], rtol=0, atol=0)
 
 
+def _segment_pdf(postings, dls, base, block):
+    """One segment's postings rows as the BM25 cogroup hands them over:
+    term `t<i>` holds postings[i] = (local doc ids, tfs), every doc's
+    length is in `dls`, and each block's impacts are computed by brute
+    force (per block, the (tf, dl) pairs no other pair matches or beats
+    on both, tf descending)."""
+    import numpy as np
+    import pandas as pd
+
+    from yaii_spark.codec import delta_encode_blocked, varint_encode, varint_encode_blocked
+
+    dls = np.asarray(dls, dtype=np.uint64)
+    rows = {
+        "field": [], "term": [], "doc_ids_bin": [], "tfs_bin": [], "block_impacts": [],
+        "block_id_offs": [], "block_tf_offs": [], "block_first_ids": [],
+        "df_local": [],
+    }
+    for t, (local, tfs) in enumerate(postings):
+        local = np.asarray(local, dtype=np.int64)
+        tfs = np.asarray(tfs, dtype=np.uint64)
+        ids = (local + base).astype(np.uint64)
+        impacts = []
+        for i in range(0, ids.size, block):
+            pairs = set(zip(tfs[i : i + block].tolist(), dls[local[i : i + block]].tolist()))
+            front = sorted(
+                (p for p in pairs
+                 if not any(q != p and q[0] >= p[0] and q[1] <= p[1] for q in pairs)),
+                reverse=True,
+            )
+            impacts += [len(front)] + [v for p in front for v in p]
+        ids_bin, id_offs = delta_encode_blocked(ids, block)
+        tfs_bin, tf_offs = varint_encode_blocked(tfs, block)
+        rows["field"].append("text")
+        rows["term"].append(f"t{t}")
+        rows["doc_ids_bin"].append(ids_bin)
+        rows["tfs_bin"].append(tfs_bin)
+        rows["block_impacts"].append(varint_encode(np.array(impacts, dtype=np.uint64)))
+        rows["block_id_offs"].append([int(x) for x in id_offs])
+        rows["block_tf_offs"].append([int(x) for x in tf_offs])
+        rows["block_first_ids"].append([int(x) for x in ids[::block]])
+        rows["df_local"].append(int(local.size))
+    return pd.DataFrame(rows).assign(
+        n_docs=int(dls.size), base_doc_id=base, dl_bin=varint_encode(dls)
+    )
+
+
 def test_pruned_equals_dense_property():
     """Hypothesis: on random segments (tiny block size 4 → block
     boundaries everywhere), random queries, random k, and random
@@ -195,15 +241,9 @@ def test_pruned_equals_dense_property():
     (tf, dl) impacts, which hold under any avgdl. Pure driver-side —
     no Spark session."""
     import numpy as np
-    import pandas as pd
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from yaii_spark.codec import (
-        delta_encode_blocked,
-        varint_encode,
-        varint_encode_blocked,
-    )
     from yaii_spark.queries import bm25 as B
 
     BLOCK = 4
@@ -222,11 +262,7 @@ def test_pruned_equals_dense_property():
         )
         avgdl = data.draw(st.floats(1.0, 60.0), label="avgdl")
         n_terms = data.draw(st.integers(1, 5), label="n_terms")
-        rows = {
-            "field": [], "term": [], "doc_ids_bin": [], "tfs_bin": [], "block_impacts": [],
-            "block_id_offs": [], "block_tf_offs": [], "block_first_ids": [],
-            "df_local": [],
-        }
+        postings = []
         idfs = {}
         for t in range(n_terms):
             df_t = data.draw(st.integers(1, n_docs), label=f"df{t}")
@@ -242,33 +278,9 @@ def test_pruned_equals_dense_property():
                 ),
                 dtype=np.uint64,
             )
-            ids = (local + base).astype(np.uint64)
-            # block impacts by brute force: per block, the (tf, dl)
-            # pairs no other pair matches or beats on both, tf descending
-            impacts = []
-            for i in range(0, ids.size, BLOCK):
-                pairs = set(zip(tfs[i : i + BLOCK].tolist(), dls[local[i : i + BLOCK]].tolist()))
-                front = sorted(
-                    (p for p in pairs
-                     if not any(q != p and q[0] >= p[0] and q[1] <= p[1] for q in pairs)),
-                    reverse=True,
-                )
-                impacts += [len(front)] + [v for p in front for v in p]
-            ids_bin, id_offs = delta_encode_blocked(ids, BLOCK)
-            tfs_bin, tf_offs = varint_encode_blocked(tfs, BLOCK)
-            rows["field"].append("text")
-            rows["term"].append(f"t{t}")
-            rows["doc_ids_bin"].append(ids_bin)
-            rows["tfs_bin"].append(tfs_bin)
-            rows["block_impacts"].append(varint_encode(np.array(impacts, dtype=np.uint64)))
-            rows["block_id_offs"].append([int(x) for x in id_offs])
-            rows["block_tf_offs"].append([int(x) for x in tf_offs])
-            rows["block_first_ids"].append([int(x) for x in ids[::BLOCK]])
-            rows["df_local"].append(df_t)
+            postings.append((local, tfs))
             idfs[f"t{t}"] = B.idf(n_docs, df_t)
-        pdf = pd.DataFrame(rows).assign(
-            n_docs=n_docs, base_doc_id=base, dl_bin=varint_encode(dls)
-        )
+        pdf = _segment_pdf(postings, dls, base, BLOCK)
         deleted = None
         if data.draw(st.booleans(), label="with_deletes"):
             nd = data.draw(st.integers(1, max(1, n_docs // 3)), label="n_del")
@@ -290,6 +302,37 @@ def test_pruned_equals_dense_property():
         assert list(dense["score"]) == list(pruned["score"])  # byte-identical
 
     run()
+
+
+def test_pruned_block_bound_just_above_threshold():
+    """Rank-safety pinned on one fixed case: a bound below a block's true
+    max norm, even by a few percent, must lose a top-k doc. k=2 over
+    two terms of equal df; t0's two docs score first and set θ to the
+    lower one. Doc 2 holds only t1 and scores just above θ, so t1 stays
+    essential only because its block's bound reaches that score; with a
+    smaller bound t1 turns non-essential and doc 2 is never decoded.
+    Driver-side, no Spark session."""
+    import numpy as np
+
+    from yaii_spark.queries import bm25 as B
+
+    n_docs, avgdl, k1, b, block, k = 8, 10.0, 1.2, 0.75, 4, 2
+    dls = [10, 10, 9, 10, 10, 10, 10, 10]
+    postings = [([0, 1], [5, 1]), ([2, 3], [1, 1])]  # t0, t1 as (local ids, tfs)
+    pdf = _segment_pdf(postings, dls, base=0, block=block)
+    idfs = {"t0": B.idf(n_docs, 2), "t1": B.idf(n_docs, 2)}
+
+    exact = B._score_segment(
+        pdf, {"q": {("text", t): v for t, v in idfs.items()}}, k1, b, avgdl, k, "or", block
+    )
+    assert list(exact["doc_id"]) == [0, 2]
+    # doc 1 (t0, tf 1, dl 10) sets θ; doc 2 (t1, tf 1, dl 9) is t1's block max
+    theta, doc2 = B._tf_norm(np.array([1.0, 1.0]), np.array([10.0, 9.0]), avgdl, k1, b)
+    assert theta < doc2 < 1.05 * theta  # equal idfs: doc 2 scores just above θ
+
+    pruned = B._score_segment_pruned(pdf, idfs, k1, b, avgdl, k, block)
+    assert list(pruned["doc_id"]) == list(exact["doc_id"])
+    assert list(pruned["score"]) == list(exact["score"])
 
 
 def test_bm25_pruned_equals_exact(corpus):

@@ -39,15 +39,12 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # floor for AQE's post-shuffle coalescing: this engine's shuffles
-        # carry compressed binary blobs (posting streams) whose DECODE
-        # work per byte is far above ordinary columnar data, so the
-        # byte-proxy AQE uses would happily coalesce a CPU-heavy pandas
-        # stage to one task. 64k keeps small-but-hot stages wide while
-        # still folding away truly empty partitions; at cluster data
-        # sizes partitions are far above this floor and behavior is
-        # unchanged (guide §2.2 — partition sizing is a *target*, and
-        # the default 1m proxy mis-sizes high-work-per-byte stages).
+        # floor for AQE's post-shuffle coalescing. At the test and
+        # benchmark sizes a query's per-segment stage shuffles ~17-26 KB,
+        # below this floor, so AQE coalesces it into ONE Python task
+        # over every segment: the floor does not keep such stages wide.
+        # At cluster data sizes partitions are far above it and it only
+        # folds away near-empty partitions.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # scan parallelism floor: aim for >= cores splits per scan so a
         # single multi-row-group file (e.g. one 126 MB parquet written
@@ -82,6 +79,14 @@ def get_spark(
         # hundreds of partition dirs dominates small-build wall time
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # PySpark's worker calls importlib.invalidate_caches() before
+        # every task, and on CPython <= 3.12 that eagerly re-reads the
+        # central directory of every zip on the worker's path
+        # (pyspark.zip, py4j, the Spark core jar): ~200 ms per task.
+        # The engine's daemon re-reads an archive only when it changed;
+        # on CPython 3.13+ (lazy invalidation) it is plain pyspark.daemon.
+        # Workers import yaii_spark for every engine UDF already.
+        .config("spark.python.daemon.module", "yaii_spark.worker_daemon")
     )
     # YAII_ICEBERG_JARS=<paths> puts Iceberg runtime jars on the
     # classpath so the storage seam's iceberg branch (and its
