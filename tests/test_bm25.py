@@ -4,6 +4,7 @@ Zipf corpus large enough that df varies across query terms.
 """
 
 import pytest
+from pyspark.sql import functions as F
 
 from yaii_spark.indexer import build_index
 from yaii_spark.oracle import BruteForceIndex
@@ -157,7 +158,9 @@ def test_lazy_block_decode_skips_blocks(spark, work_dir):
     assert hot_df > 1000  # skew is real: ~40% of 4000 docs
 
     # assemble the per-segment pdf exactly as the cogroup hands it over
-    post = cat.postings([("text", rare), ("text", "hotterm")]).toPandas()
+    post = cat.postings().filter(
+        (F.col("field") == "text") & F.col("term").isin(rare, "hotterm")
+    ).toPandas()
     meta = cat.seg_meta().collect()[0]
     pdf = post.assign(
         n_docs=meta.n_docs, base_doc_id=meta.base_doc_id, dl_bin=meta.dl_bin

@@ -172,59 +172,42 @@ def test_numpy_algebra_matches_sets(postings, query):
     assert got == brute(query)
 
 
-def test_scan_column_pruning_positions(bool_index):
+def test_scan_column_pruning_positions(bool_index, monkeypatch):
     """Column pruning is part of the format contract: a boolean token
-    query's postings scan must NOT read the (large) position stream or
-    block metadata; a phrase query must read pos_bin + block_pos_offs
-    (and still not block_impacts, which only BM25 pruning consumes)."""
-    import re
-
+    query's per-segment postings read must NOT request the (large)
+    position stream or block metadata; a phrase query must read
+    pos_bin + block_pos_offs (and still not block_impacts, which only
+    BM25 pruning consumes)."""
     from yaii_spark.queries import ast as A
-    from yaii_spark.queries.executor import execute_boolean
+    from yaii_spark.queries import executor
 
-    def postings_read_schema(df):
-        # schema() of the scan node, not the plan STRING (Spark
-        # truncates long field lists in toString with '...')
-        jplan = df._jdf.queryExecution().executedPlan()
-        out = set()
+    run = executor.run_per_segment
+    reads = []
 
-        def walk(node):
-            s = node.nodeName()
-            if "Scan" in s and "/postings" in node.toString().splitlines()[0]:
-                for f in node.schema().fields():
-                    out.add(f.name())
-            for i in range(node.children().size()):
-                walk(node.children().apply(i))
+    def recording(cat, fn, schema, columns, *args, **kwargs):
+        reads.append(set(columns))
+        return run(cat, fn, schema, columns, *args, **kwargs)
 
-        walk(jplan)
-        if not out:
-            # fall back to string parse for plans where the scan hides
-            # under adaptive wrappers
-            plan = jplan.toString()
-            for ln in plan.splitlines():
-                if "FileScan" in ln and "/postings" in ln:
-                    m = re.search(r"ReadSchema: struct<(.*)$", ln)
-                    if m:
-                        for f in m.group(1).rstrip(">. ").split(","):
-                            if ":" in f:
-                                out.add(f.split(":")[0].strip())
-        assert out, jplan.toString()
-        return out
+    monkeypatch.setattr(executor, "run_per_segment", recording)
 
-    tok_cols = postings_read_schema(execute_boolean(bool_index, A.token("abc")))
+    def postings_read_schema(query):
+        reads.clear()
+        executor.execute_boolean(bool_index, query).collect()
+        (cols,) = reads
+        return cols
+
+    tok_cols = postings_read_schema(A.token("abc"))
     assert "doc_ids_bin" in tok_cols
     assert not {"pos_bin", "tfs_bin", "block_pos_offs", "block_impacts"} & tok_cols, tok_cols
 
-    ph_cols = postings_read_schema(
-        execute_boolean(bool_index, A.phrase(["abc", "bcd"]))
-    )
+    ph_cols = postings_read_schema(A.phrase(["abc", "bcd"]))
     assert {"doc_ids_bin", "tfs_bin", "pos_bin", "block_pos_offs"} <= ph_cols
     assert "block_impacts" not in ph_cols, ph_cols
 
 
 def test_token_only_queries_never_read_docs(spark, bool_index):
-    """Token-only AND and phrase queries evaluate on postings ⋈ seg_meta
-    alone: on a fresh catalog they never build the docs DataFrame (a
+    """Token-only AND and phrase queries evaluate on postings and
+    seg_meta alone: on a fresh catalog they never build the docs DataFrame (a
     footer-inference read plus a tombstone read). A query with an
     attribute predicate still reads docs."""
     cat = IndexCatalog(spark, bool_index.root)

@@ -2,6 +2,7 @@
 cached filters (P9)."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from yaii_spark.indexer import build_index, delete_docs, merge_segments
 from yaii_spark.ops.aggregations import index_size
@@ -198,14 +199,13 @@ def test_merge_expunges_tombstones(spark, work_dir):
     delete_docs(spark, src, dele)
     a = IndexCatalog(spark, src)
     # 'url' = VOCAB[0], the Zipf-densest term in the generated corpus
-    pre_df = sum(
-        r.df_local for r in a.postings([("text", "url")]).collect()
-    )
+    url = (F.col("field") == "text") & (F.col("term") == "url")
+    pre_df = sum(r.df_local for r in a.postings().filter(url).collect())
     m = merge_segments(spark, src, dst, factor=4)
     assert m["segments_after"] == 2
     b = IndexCatalog(spark, dst)
     # postings shrank and the tombstone table is gone
-    post_df = sum(r.df_local for r in b.postings([("text", "url")]).collect())
+    post_df = sum(r.df_local for r in b.postings().filter(url).collect())
     assert post_df < pre_df
     assert not fs_exists(spark, f"{dst}/tombstones")
     assert b.tombstones() is None
@@ -216,8 +216,6 @@ def test_merge_expunges_tombstones(spark, work_dir):
             holes |= {int(x) + r.base_doc_id for x in delta_decode(r.deleted_bin)}
     assert holes == set(dele)
     # docs rows expunged
-    from pyspark.sql import functions as F
-
     assert b.docs().filter(F.col("doc_id").isin(dele[:10])).count() == 0
     assert index_size(b) == 400 - len(dele)
     # query identity pre/post, including universe-based NOT
@@ -243,8 +241,6 @@ def test_merge_expunges_tombstones(spark, work_dir):
 def test_delete_docs_df_distributed(spark, work_dir):
     """DataFrame-in bulk delete (VERDICT r3 #6): tombstone 50% of the
     corpus from a predicate without a corpus-sized driver list."""
-    from pyspark.sql import functions as F
-
     from yaii_spark.indexer import delete_docs_df
 
     out = f"{work_dir}/bulkdel_idx"

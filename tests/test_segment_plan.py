@@ -1,18 +1,26 @@
 """Per-segment query execution: every boolean, phrase and BM25 query
-runs as one ``applyInPandas`` task per segment (executor.
-apply_per_segment), with tombstones cogrouped per segment when there
-are any.
+runs as one ``mapInPandas`` job over the index's segments
+(executor.run_per_segment), each task reading its own segments'
+postings, seg_meta row and tombstones by path.
 
 These tests pin that single plan on a 2-segment fixture:
 - boolean/phrase results equal the exhaustive oracle
   (``BruteForceIndex.evaluate``) on the fresh index and, minus the
-  deleted ids, after ``delete_docs``;
+  deleted ids, after ``delete_docs`` — also when the deletes land
+  between queries on one open catalog;
 - every boolean and BM25 query (exact and MaxScore-pruned) gives
   identical results on the tombstoned index and on its purged
   1-segment merge (holes in ``deleted_bin`` instead of tombstones);
 - on an index with fewer segments than cores, phrase and BM25 queries
   over a rare term next to a dense one compile to exactly one Python
-  stage and no cross/nested-loop join.
+  stage with no Exchange, no broadcast and no cross/nested-loop join,
+  with and without tombstones;
+- a warm boolean, phrase, exact BM25 and pruned BM25 query each runs
+  exactly one Spark job;
+- a table Spark lists no files for, or a path pyarrow cannot open,
+  raises; postings of a segment without seg_meta are left out;
+- tombstone files are seg_id-ranged, so a task's min/max filter skips
+  other segments' files.
 """
 
 import datetime as dt
@@ -173,15 +181,21 @@ def _assert_one_segment_stage(df):
     plan = _plan_of(df)
     assert "CrossJoin" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
     stages = _PY_STAGE.findall(plan)
     assert len(stages) == 1, plan
-    assert stages[0] in ("FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"), plan
+    assert stages[0] in ("MapInPandas", "PythonMapInArrow"), plan
+    # the Python stage reads the segment-file frame directly: nothing
+    # below it is exchanged
+    below = plan[plan.index(stages[0]):]
+    assert "Exchange" not in below, plan
 
 
 def test_plan_one_python_stage_per_query(spark, work_dir):
     """Fewer segments than cores (2) and a rare term next to a dense
     one — the skewed, over-merged case — still compile to the single
-    per-segment shape, with and without tombstones."""
+    by-path shape (one MapInPandas over the segment files, no Exchange
+    or broadcast under it), with and without tombstones."""
     hits = {37, 1200, 1901}
     texts = {
         i: "zzdense aa zzdense bb cc zzdense dd"
@@ -210,3 +224,134 @@ def test_plan_one_python_stage_per_query(spark, work_dir):
     for q in queries:
         _assert_one_segment_stage(q(cat))
     assert {r.doc_id for r in queries[0](cat).collect()} == hits - {1200}
+
+
+def _jobs_of(spark, fn) -> int:
+    """How many Spark jobs fn() launched, counted from the status store
+    under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"seg-plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+WARM_QUERIES = {
+    "boolean": lambda cat: execute_boolean(cat, QUERIES["and"]),
+    "phrase": lambda cat: execute_boolean(cat, QUERIES["phrase"]),
+    "bm25": lambda cat: bm25_topk(cat, ["common", "w3"], k=13),
+    "bm25_pruned": lambda cat: bm25_topk(cat, ["rareterm", "w5"], k=13, prune=True),
+}
+
+
+@pytest.mark.parametrize("index", ["fresh_index", "tombstoned_index"])
+def test_warm_query_is_one_job(spark, request, index):
+    """Once the catalog knows the query's terms, each query class runs
+    exactly one Spark job, tombstones or not: the by-path stage and
+    the merge above it (TakeOrderedAndProject for BM25)."""
+    cat = IndexCatalog(spark, request.getfixturevalue(index))
+    for name, q in WARM_QUERIES.items():
+        first = q(cat).collect()  # fills the term-dictionary cache
+        jobs = _jobs_of(spark, lambda: q(cat).collect())
+        assert jobs == 1, (name, jobs)
+        assert first, name
+
+
+def test_deletes_visible_through_one_catalog(spark, work_dir, brute):
+    """Deletes issued between queries show up in the next query on the
+    SAME catalog: the tombstone file list is never memoized."""
+    out = _build(spark, _texts(), f"{work_dir}/seg_plan_live_deletes", SEG)
+    cat = IndexCatalog(spark, out)
+    queries = {k: QUERIES[k] for k in ("and", "not", "phrase")}
+
+    def check(deleted):
+        for k, q in queries.items():
+            got = sorted(r.doc_id for r in execute_boolean(cat, q).collect())
+            assert got == sorted(brute.evaluate(A.rewrite(q)) - deleted), k
+
+    check(set())
+    deleted = set()
+    for batch in ([10, 11, 400], [3, 22, 799]):  # each hits AND, NOT and phrase
+        delete_docs(spark, out, batch)
+        deleted |= set(batch)
+        check(deleted)
+
+
+def test_unlisted_files_raise(spark, fresh_index, tombstoned_index, monkeypatch):
+    """Tables that Spark lists no files for (an Iceberg table's
+    ``inputFiles()`` is empty) and paths pyarrow cannot open make a
+    query raise, instead of answering from no data."""
+    DataFrame = type(spark.range(1))  # the session's DataFrame class
+
+    q = QUERIES["and"]
+    listed = DataFrame.inputFiles
+    monkeypatch.setattr(DataFrame, "inputFiles", lambda df: [])
+    with pytest.raises(RuntimeError, match="seg_meta: Spark lists no data files"):
+        execute_boolean(IndexCatalog(spark, fresh_index), q)
+
+    cat = IndexCatalog(spark, tombstoned_index)
+    monkeypatch.setattr(DataFrame, "inputFiles", listed)
+    cat.segment_files()  # postings and seg_meta listed; tombstones not
+    monkeypatch.setattr(DataFrame, "inputFiles", lambda df: [])
+    with pytest.raises(RuntimeError, match="tombstones: Spark lists no data files"):
+        execute_boolean(cat, q)
+
+    hadoop_only = [f"s3a://bucket/idx/seg_meta/seg_id={s}/part-0.parquet" for s in (0, 1)]
+    monkeypatch.setattr(DataFrame, "inputFiles", lambda df: hadoop_only)
+    with pytest.raises(ValueError, match="cannot open s3a://"):
+        execute_boolean(IndexCatalog(spark, tombstoned_index), q)
+
+
+def test_segment_without_seg_meta_is_skipped(spark, fresh_index, work_dir, brute):
+    """Postings of a segment whose seg_meta was never written (an append
+    that crashed between the two writes) are left out of every query,
+    as an inner join to seg_meta would leave them out."""
+    import shutil
+
+    out = f"{work_dir}/seg_plan_orphan"
+    shutil.copytree(fresh_index, out)
+    shutil.rmtree(f"{out}/seg_meta/seg_id=1")
+    cat = IndexCatalog(spark, out)
+    for k, q in QUERIES.items():
+        if k == "all":  # a bare ALL reads the docs table, not postings
+            continue
+        got = sorted(r.doc_id for r in execute_boolean(cat, q).collect())
+        assert got == sorted(d for d in brute.evaluate(A.rewrite(q)) if d < SEG), k
+    assert all(r.doc_id < SEG for r in bm25_topk(cat, ["common", "w3"], k=13).collect())
+
+
+def test_tombstone_files_are_seg_id_ranged(spark, fresh_index, work_dir, brute):
+    """delete_docs range-partitions tombstones by seg_id, so a query
+    task's min/max filter on its segments skips other segments' files."""
+    import shutil
+    from urllib.parse import urlparse
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    out = f"{work_dir}/seg_plan_ranged_tombstones"
+    shutil.copytree(fresh_index, out)
+    deleted = set(range(0, N_DOCS, 3))
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    coalesce = spark.conf.get(key)
+    spark.conf.set(key, "false")  # one file per range partition
+    try:
+        delete_docs(spark, out, sorted(deleted))
+    finally:
+        spark.conf.set(key, coalesce)
+    cat = IndexCatalog(spark, out)
+    files = cat.tombstone_files()
+    assert len(files) > 2
+    frags = list(ds.dataset([urlparse(f).path for f in files]).get_fragments())
+    seg = pc.field("seg_id")
+    for s in (0, 1):
+        kept = [f for f in frags if f.split_by_row_group((seg >= s) & (seg <= s))]
+        assert 0 < len(kept) < len(frags), s
+    got = sorted(r.doc_id for r in execute_boolean(cat, QUERIES["not"]).collect())
+    assert got == sorted(brute.evaluate(A.rewrite(QUERIES["not"])) - deleted)

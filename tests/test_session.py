@@ -58,6 +58,35 @@ def test_zip_reread_only_when_archive_changed(tmp_path, monkeypatch):
         sys.path_importer_cache.pop(archive, None)
 
 
+@pytest.mark.skipif(LAZY_INVALIDATION, reason="CPython 3.13+ invalidates zips lazily")
+def test_daemon_stamps_importers_before_forking(tmp_path, monkeypatch):
+    """The daemon stamps every zipimporter once before it forks workers,
+    so a worker's first task re-reads no unchanged archive.
+    Driver-side: main() with the fork loop stubbed out."""
+    from pyspark import daemon
+
+    archive = str(tmp_path / "stamp.zip")
+    _write_zip(archive, ["yaii_zip_stamp"])
+    # restore the stock invalidation after main() replaces it
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+    monkeypatch.setattr(daemon, "manager", lambda: None)
+    monkeypatch.syspath_prepend(archive)
+    try:
+        importlib.import_module("yaii_zip_stamp")
+        assert not hasattr(sys.path_importer_cache[archive], "_read_stamp")
+        worker_daemon.main()
+        zips = [
+            imp for imp in sys.path_importer_cache.values()
+            if isinstance(imp, zipimport.zipimporter)
+        ]
+        assert zips and all(hasattr(imp, "_read_stamp") for imp in zips)
+    finally:
+        sys.modules.pop("yaii_zip_stamp", None)
+        sys.path_importer_cache.pop(archive, None)
+
+
 def test_tasks_run_under_engine_daemon(spark):
     """Python tasks fork from `yaii_spark.worker_daemon`, so they see its
     zipimporter invalidation (CPython 3.13+: the stock one)."""

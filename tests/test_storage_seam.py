@@ -231,3 +231,45 @@ def test_local_frame_is_a_local_relation(spark):
     empty = local_frame(spark, [], "seg_id long")
     assert empty._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
     assert empty.collect() == []
+
+
+def test_postings_filter_prunes_row_groups(tmp_path):
+    """A query task's postings predicate keeps parquet row-group min/max
+    pruning: a short term list prunes per term, a list above the IN
+    threshold by its [min, max] range, a TokenRange by its bounds; and
+    read_files returns exactly the rows a plain filter keeps. No Spark."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from yaii_spark.queries import ast as A
+    from yaii_spark.storage import postings_filter, read_files
+
+    terms = [f"t{i:04d}" for i in range(1000)]
+    path = tmp_path / "postings.parquet"
+    table = pa.table({"field": ["text"] * 500 + ["url"] * 500, "term": terms})
+    pq.write_table(table, path, row_group_size=100)
+    (frag,) = ds.dataset(str(path)).get_fragments()
+
+    rows = list(zip(table["field"].to_pylist(), terms))
+    cases = [
+        # (field_terms, scans, row groups kept, which rows match)
+        ([("text", "t0005"), ("text", "t0305"), ("url", "t0905")], None, 3,
+         lambda f, t: (f, t) in {("text", "t0005"), ("text", "t0305"), ("url", "t0905")}),
+        ([("text", "t0005"), ("url", "t0005")], None, 1,  # url holds no t0005
+         lambda f, t: t == "t0005"),
+        ([("text", t) for t in terms[200:220]], None, 1,  # 20 terms > threshold
+         lambda f, t: "t0200" <= t < "t0220"),
+        ([], [A.token_range("url", "t0550", "t0650")], 2,
+         lambda f, t: "t0550" <= t < "t0650"),
+        ([], [A.text_contains("t00")], 5,  # contains() prunes by field only
+         lambda f, t: f == "text" and "t00" in t),
+        ([], None, 0, lambda f, t: False),
+    ]
+    for field_terms, scans, n_groups, match in cases:
+        flt = postings_filter(field_terms, scans)
+        assert len(frag.split_by_row_group(flt)) == n_groups, (field_terms, scans)
+        got = read_files([path.as_uri()], ["field", "term"], flt)
+        assert list(zip(got["field"].to_pylist(), got["term"].to_pylist())) == [
+            r for r in rows if match(*r)
+        ], (field_terms, scans)

@@ -342,7 +342,9 @@ def test_pruned_bm25_on_appended_segment_skips_blocks(spark, tmp_path):
         ]
         assert exact and pruned == exact, k
 
-    post = cat.postings([("text", t) for t in q]).filter(F.col("seg_id") == seg).toPandas()
+    post = cat.postings().filter(
+        (F.col("seg_id") == seg) & (F.col("field") == "text") & F.col("term").isin(q)
+    ).toPandas()
     assert len(post.set_index("term").loc[head, "block_id_offs"]) >= 2
     meta = cat.seg_meta().filter(F.col("seg_id") == seg).collect()[0]
     pdf = post.assign(

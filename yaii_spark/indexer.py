@@ -79,9 +79,11 @@ from yaii_spark.codec import varint_encode, varint_lengths
 from yaii_spark.storage import (
     TABLE_SCHEMAS,
     column_names,
+    fs_copy,
     fs_delete,
     fs_exists,
     fs_touch,
+    iceberg_format,
     local_frame,
     read_index_table,
     read_table,
@@ -1026,18 +1028,15 @@ def delete_docs_df(spark: SparkSession, index_dir: str, ids: DataFrame,
     from yaii_spark.storage import IndexCatalog
 
     seg_size = IndexCatalog(spark, index_dir).corpus_stats().seg_size
-    df = (
-        ids.select(F.col(id_col).cast("long").alias("doc_id"))
-        .distinct()
-        .select(
-            (F.col("doc_id") / F.lit(seg_size)).cast("long").alias("seg_id"),
-            "doc_id",
-        )
-    )
+    doc_id = F.col(id_col).cast("long")
+    df = ids.select((doc_id / F.lit(seg_size)).cast("long").alias("seg_id"), doc_id.alias("doc_id"))
     path = os.path.join(index_dir, "tombstones")
     mode = "append" if fs_exists(spark, path) else "overwrite"
-    write_table(df, path, mode=mode)
-    return df.count()
+    # range-partitioned by seg_id: each file covers a narrow seg_id
+    # range, so a query task's min/max filter skips the other files
+    ranged = df.repartitionByRange("seg_id", "doc_id").distinct()
+    write_table(ranged.sortWithinPartitions("seg_id", "doc_id"), path, mode=mode)
+    return df.distinct().count()  # no second range-bounds sample
 
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> int:
@@ -1098,23 +1097,22 @@ def merge_segments(
     post = cat_in.postings()
 
     # deployment guard (measured 2× phrase-eval slowdown at 4 segments
-    # / 8 cores): every boolean, phrase and BM25 query runs one task per
-    # segment, so merging below the core count caps their task count.
+    # / 8 cores): every boolean, phrase and BM25 query runs at most one
+    # task per segment, so merging below the core count caps their task
+    # count.
     # Never binds at scale (10^6 segments / 1000 executors); warns on
     # over-compaction.
     import warnings
 
-    n_before = meta.select("seg_id").distinct().count()
-    n_after_est = (
-        meta.select((F.col("seg_id") / factor).cast("long")).distinct().count()
-    )
+    segs = [r.seg_id for r in meta.select("seg_id").collect()]
+    n_before, n_after_est = len(segs), len({s // factor for s in segs})
     par = spark.sparkContext.defaultParallelism
     if n_after_est < par:
         warnings.warn(
             f"merge_segments: factor {factor} leaves {n_after_est} segments "
             f"< defaultParallelism ({par}); boolean, phrase and BM25 "
-            f"queries run one task per segment, so this caps their task "
-            f"count — consider factor ≤ {max(1, n_before // par)}",
+            f"queries run at most one task per segment, so this caps their "
+            f"task count — consider factor ≤ {max(1, n_before // par)}",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -1277,8 +1275,14 @@ def merge_segments(
         partition_by=["seg_id"],
     )
     # corpus-wide term stats / n_docs / avgdl carry over UNCHANGED even
-    # when deletes are expunged (see docstring: keeps scores identical)
-    _write_term_stats(read_index_table(spark, index_dir, "term_stats"), out_dir)
+    # when deletes are expunged (see docstring: keeps scores identical).
+    # The parquet run is already sorted into disjoint files: copy them.
+    # Iceberg metadata names its data files by absolute path, so that
+    # branch rewrites the run instead.
+    if iceberg_format(spark):
+        _write_term_stats(read_index_table(spark, index_dir, "term_stats"), out_dir)
+    else:
+        fs_copy(spark, os.path.join(index_dir, "term_stats"), os.path.join(out_dir, "term_stats"))
     # stats_ledger: the carried dictionary covers every merged segment,
     # so the first post-merge append folds incrementally instead of
     # falling back to a full recompute (_fold_term_stats). Rows carry

@@ -6,9 +6,11 @@ base, /root/reference/readme.md:26; yaii itself has no scoring):
     idf(t)     = ln(1 + (N - df + 0.5) / (df + 0.5))
     score(d,q) = Σ_t idf(t) · tf / (tf + k1·(1 − b + b·dl/avgdl))
 
-Execution: broadcast term statistics (df, N, avgdl) → one
-``applyInPandas`` task per segment runs the one exact scorer
-(`_score_segment`): it decodes the query's (field, term) postings,
+Execution: the driver resolves term statistics (df, N, avgdl), then
+one ``mapInPandas`` job (executor.run_per_segment) runs the one exact
+scorer (`_score_segment`) per segment, each task reading its segments'
+postings rows, seg_meta row (``dl_bin``) and tombstones by path: the
+scorer decodes the query's (field, term) postings,
 accumulates w·idf·norm into a dense per-segment array **in sorted-key
 order** (float determinism across parallelism levels — SURVEY.md
 §7.4.1), takes a per-segment top-k, then a global
@@ -38,8 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from yaii_spark.codec import decode_byte_range, delta_decode_blocked, varint_decode
-from yaii_spark.queries.executor import apply_per_segment
-from yaii_spark.storage import IndexCatalog
+from yaii_spark.queries.executor import run_per_segment
+from yaii_spark.storage import IndexCatalog, local_frame
 
 
 def idf(n_docs: int, df: int) -> float:
@@ -72,6 +74,10 @@ def _block_bounds(
     norms = _tf_norm(tf_dl[0::2], tf_dl[1::2], avgdl, k1, b)
     return np.maximum.reduceat(norms, np.cumsum(counts) - counts)
 
+
+#: the postings and seg_meta columns every exact scorer reads
+_COLS = ["field", "term", "doc_ids_bin", "tfs_bin"]
+_META = ["n_docs", "base_doc_id", "dl_bin"]
 
 _EMPTY = lambda: pd.DataFrame(
     {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
@@ -142,12 +148,6 @@ class _LazyPostings:
             DECODE_STATS["bytes_decoded"] += len(ib) + len(tb)
             DECODE_STATS["blocks_decoded"] += 1
         return got
-
-    def blocks_for(self, sorted_local_ids: np.ndarray) -> np.ndarray:
-        """Which blocks could contain any of these (sorted local) ids."""
-        bx = np.searchsorted(self.first_ids, sorted_local_ids, side="right") - 1
-        bx = bx[bx >= 0]
-        return np.unique(bx)
 
     def lookup(self, sorted_local_ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(hit_mask, tfs_of_hits) for the given sorted local ids —
@@ -437,7 +437,7 @@ def bm25_topk(
     tstats = cat.term_stats_for([(field, t) for t in uniq])
     idfs = {t: idf(stats.n_docs, df) for (_, t), (df, _) in tstats.items()}
     if not idfs or (mode == "and" and len(idfs) < len(uniq)):
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
 
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     # block size travels with the index (corpus_stats.block_size): the
@@ -455,24 +455,22 @@ def bm25_topk(
         if min_df / max(stats.n_docs, 1) > 0.3:
             use_prune = False
 
-    cols = ["seg_id", "field", "term", "doc_ids_bin", "tfs_bin"] + (
+    cols = _COLS + (
         ["block_impacts", "block_id_offs", "block_tf_offs", "block_first_ids", "df_local"]
-        if prune
+        if use_prune
         else []
     )
     coefs = {(field, t): v for t, v in idfs.items()}
-    post = cat.postings(sorted(coefs)).select(*cols)
-    meta = cat.seg_meta().select("seg_id", "n_docs", "base_doc_id", "dl_bin")
-    joined = post.join(meta, "seg_id", "inner")
 
-    def score(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
-        if pdf.empty:
-            return _EMPTY()
+    def score(post: pd.DataFrame, meta: dict, deleted: np.ndarray | None) -> pd.DataFrame:
+        pdf = post.assign(**meta)
         if use_prune:
             return _score_segment_pruned(pdf, idfs, k1, b, avgdl, k, block, deleted)
         return _score_one(pdf, coefs, k1, b, avgdl, k, mode, block, deleted)
 
-    per_seg = apply_per_segment(cat, joined, score, "doc_id long, score double")
+    per_seg = run_per_segment(
+        cat, score, "doc_id long, score double", cols, _META, sorted(coefs)
+    )
     return per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -515,22 +513,16 @@ def bm25f_topk(
         for (f, t), (df, _) in tstats.items()
     }
     if not coefs:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], "doc_id long, score double")
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     block = stats.block_size
 
-    post = cat.postings(sorted(coefs)).select(
-        "seg_id", "field", "term", "doc_ids_bin", "tfs_bin"
+    def score(post: pd.DataFrame, meta: dict, deleted: np.ndarray | None) -> pd.DataFrame:
+        return _score_one(post.assign(**meta), coefs, k1, b, avgdl, k, "or", block, deleted)
+
+    per_seg = run_per_segment(
+        cat, score, "doc_id long, score double", _COLS, _META, sorted(coefs)
     )
-    meta = cat.seg_meta().select("seg_id", "n_docs", "base_doc_id", "dl_bin")
-    joined = post.join(meta, "seg_id", "inner")
-
-    def score(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
-        if pdf.empty:
-            return _EMPTY()
-        return _score_one(pdf, coefs, k1, b, avgdl, k, "or", block, deleted)
-
-    per_seg = apply_per_segment(cat, joined, score, "doc_id long, score double")
     return per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -579,7 +571,7 @@ def more_like_this(
     )
     terms = [t for t, _ in ranked[: max(1, top_terms)]]
     if not terms:
-        return cat.spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(cat.spark, [], "doc_id long, score double")
     out = bm25_topk(cat, terms, k=k + 1, mode="or")
     return (
         out.filter(F.col("doc_id") != int(doc_id))
@@ -597,13 +589,13 @@ def bm25_topk_batch(
 ) -> DataFrame:
     """Score a BATCH of queries in ONE pass over the postings —
     the 100-TB workload pattern: a query log of thousands amortizes
-    the postings scan, the seg_meta broadcast, and the scheduler
-    overhead across the batch instead of paying one Spark job per
-    query. Returns (query_id, doc_id, score), per-query top-k.
+    the postings reads, each segment's seg_meta read, and the
+    scheduler overhead across the batch instead of paying one Spark
+    job per query. Returns (query_id, doc_id, score), per-query top-k.
 
     Plan: the UNION of every query's (field, term) pairs is pushed
-    into one postings read (same row-group-pruned scan as a single
-    query), each segment task runs the one exact scorer over the whole
+    into one by-path postings read per segment (same row-group-pruned
+    read as a single query), the segment runs the one exact scorer over the whole
     batch — every key decodes ONCE and serves every query that names
     it — with a per-(segment, query) top-k, then ONE window-ranked
     global merge partitioned by query_id. Per-query output is rank- AND
@@ -617,9 +609,7 @@ def bm25_topk_batch(
     tstats = cat.term_stats_for([(field, t) for t in all_terms])
     idfs = {t: idf(stats.n_docs, df) for (_, t), (df, _) in tstats.items()}
     if not idfs:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double"
-        )
+        return local_frame(spark, [], "query_id string, doc_id long, score double")
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     block = stats.block_size
     # a term absent from the dictionary contributes nothing to an OR
@@ -636,23 +626,14 @@ def bm25_topk_batch(
     # executor once and the closure carries only the handle
     qb = spark.sparkContext.broadcast(batch)
 
-    post = cat.postings([(field, t) for t in sorted(idfs)]).select(
-        "seg_id", "field", "term", "doc_ids_bin", "tfs_bin"
-    )
-    meta = cat.seg_meta().select("seg_id", "n_docs", "base_doc_id", "dl_bin")
-    joined = post.join(meta, "seg_id", "inner")
-
-    def score(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype({"doc_id": "int64", "score": "float64"})
+    def score(post: pd.DataFrame, meta: dict, deleted: np.ndarray | None) -> pd.DataFrame:
         return _score_segment(
-            pdf, qb.value, k1, b, avgdl, k, mode, block, deleted
+            post.assign(**meta), qb.value, k1, b, avgdl, k, mode, block, deleted
         )
 
-    per_seg = apply_per_segment(
-        cat, joined, score, "query_id string, doc_id long, score double"
+    per_seg = run_per_segment(
+        cat, score, "query_id string, doc_id long, score double", _COLS, _META,
+        [(field, t) for t in sorted(idfs)],
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()

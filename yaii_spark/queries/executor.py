@@ -2,8 +2,10 @@
 
 Two evaluation paths, chosen per subtree (SURVEY.md §7.1 M4):
 
-1. **Token-only subtrees** → per-segment numpy set algebra inside one
-   ``applyInPandas`` task per segment: decoded posting arrays are
+1. **Token-only subtrees** → per-segment numpy set algebra in one
+   ``mapInPandas`` job whose tasks read their own segments' postings,
+   seg_meta row and tombstones by path (run_per_segment; no join, no
+   shuffle): decoded posting arrays are
    intersected/unioned/differenced exactly like the reference's
    DocIdIterable algebra (conjunction leads with the smallest-cost
    list — /root/reference/src/lib/internal/datastructs/
@@ -33,11 +35,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from yaii_spark.codec import delta_decode_blocked
 from yaii_spark.queries import ast as A
-from yaii_spark.storage import IndexCatalog
+from yaii_spark.storage import IndexCatalog, local_frame, postings_filter
 
 
 def _empty_ids(spark) -> DataFrame:
-    return spark.createDataFrame([], "doc_id long")
+    return local_frame(spark, [], "doc_id long")
 
 
 #: position-decode accounting (meaningful for driver-side direct calls,
@@ -348,112 +350,109 @@ def _needs_universe(node: A.Node) -> bool:
     return False
 
 
-def apply_per_segment(
-    cat: IndexCatalog, joined: DataFrame, fn, schema: str
+def run_per_segment(
+    cat: IndexCatalog,
+    fn: Callable[[pd.DataFrame, dict, np.ndarray | None], pd.DataFrame],
+    schema: str,
+    columns: list[str],
+    meta_columns: list[str],
+    field_terms: list[tuple[str, str]],
+    scans: list | None = None,
+    every_segment: bool = False,
 ) -> DataFrame:
-    """Run ``fn(pdf, deleted)`` in one ``applyInPandas`` task per
-    segment of `joined` (grouped by seg_id) — the single execution
-    shape of every boolean, phrase and BM25 query. `deleted` is the
-    segment's tombstoned GLOBAL doc ids (int64 array) or None.
+    """Run ``fn(post, meta, deleted)`` per segment in one ``mapInPandas``
+    over ``cat.segment_files()`` — the single execution shape of every
+    boolean, phrase and BM25 query: one job, no shuffle, at most one
+    task per core over a contiguous run of segments. Each task reads
+    by path, per segment, `post`: its postings rows for `field_terms`
+    / `scans` (`columns` only, row-group pruned); `meta`: its seg_meta
+    row (`meta_columns`) as a dict; `deleted`: its tombstoned GLOBAL
+    doc ids (int64) or None. A segment without matching postings rows
+    is skipped unless `every_segment` (NOT/ALL universes)."""
+    flt = postings_filter(field_terms, scans)
+    tomb_files = cat.tombstone_files()  # never memoized: delete_docs appends
 
-    Tombstones arrive COGROUPED per segment — shuffle-partitioned like
-    any other table, never collected into one array row or broadcast
-    (a segment with millions of deletes would blow both).
-    A segment with tombstones but no `joined` rows yields an empty
-    `pdf`; `fn` must handle it."""
-    tomb = cat.tombstones()
-    if tomb is None:
+    def task(batches):
+        import pyarrow.compute as pc
 
-        def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            return fn(pdf, None)
+        from yaii_spark.storage import read_files
 
-        return joined.groupBy("seg_id").applyInPandas(per_segment, schema=schema)
+        for b in batches:
+            deleted = {}
+            if tomb_files:
+                # tombstone files are seg_id-ranged: min/max prune them
+                key, segs = pc.field("seg_id"), b["seg_id"].tolist()
+                mine = (key >= min(segs)) & (key <= max(segs)) & key.isin(segs)
+                tomb = read_files(tomb_files, ["seg_id", "doc_id"], mine).to_pandas()
+                for seg, ids in tomb.groupby("seg_id")["doc_id"]:
+                    deleted[seg] = ids.to_numpy(dtype=np.int64)
+            for seg, post_files, meta_files in zip(b["seg_id"], b["postings"], b["seg_meta"]):
+                post = (
+                    read_files(list(post_files), columns, flt).to_pandas()
+                    if len(post_files)
+                    else pd.DataFrame(columns=columns)
+                )
+                if post.empty and not every_segment:
+                    continue
+                (meta,) = read_files(list(meta_files), meta_columns).to_pylist()
+                yield fn(post, meta, deleted.get(seg))
 
-    def per_segment_tomb(pdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-        deleted = tpdf["doc_id"].to_numpy(dtype=np.int64) if len(tpdf) else None
-        return fn(pdf, deleted)
-
-    return (
-        joined.groupBy("seg_id")
-        .cogroup(tomb.select("seg_id", "doc_id").groupBy("seg_id"))
-        .applyInPandas(per_segment_tomb, schema=schema)
-    )
+    return cat.segment_files().mapInPandas(task, schema)
 
 
 def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
-    """Evaluate a token-only subtree → DataFrame[doc_id]: a term-pruned
-    postings scan joined to seg_meta, evaluated by _eval_numpy in one
-    task per segment (apply_per_segment)."""
-    spark = cat.spark
+    """Evaluate a token-only subtree → DataFrame[doc_id]: each segment's
+    term-pruned postings rows evaluated by _eval_numpy
+    (run_per_segment)."""
     terms = sorted(A.collect_terms(node))
     scans = A.collect_term_scans(node)
+    universe = _needs_universe(node)  # NOT/ALL need every segment
+    if not universe and not terms and not scans:
+        return _empty_ids(cat.spark)
     want_pos = A.needs_positions(node)
     phrase_terms = {
         (n.field_name, t)
         for n in _collect_phrases(node)
         for t in n.terms
     }
-    cols = ["seg_id", "field", "term", "doc_ids_bin"] + (
+    cols = ["field", "term", "doc_ids_bin"] + (
         ["tfs_bin", "pos_bin", "block_pos_offs"] if want_pos else []
     )
-    post = cat.postings(terms, scans=scans).select(*cols)
-    if want_pos and phrase_terms:
-        # a mixed query (phrase AND plain tokens) needs positions ONLY
-        # for the phrase's terms — null the position columns for every
-        # other term JVM-side so a dense boolean term's corpus-scale
-        # position stream never crosses the shuffle/Arrow boundary
-        is_phrase = None
-        for f, t in sorted(phrase_terms):
-            c = (F.col("field") == f) & (F.col("term") == t)
-            is_phrase = c if is_phrase is None else (is_phrase | c)
-        for pc in ("tfs_bin", "pos_bin", "block_pos_offs"):
-            post = post.withColumn(pc, F.when(is_phrase, F.col(pc)))
     block = cat.corpus_stats().block_size  # delta restarts per block (v4)
-    # deleted_bin: local-id holes a purging merge left behind — they
-    # must stay out of NOT/ALL universes (doc ids are never renumbered)
-    meta = cat.seg_meta().select("seg_id", "n_docs", "base_doc_id", "deleted_bin")
-    if _needs_universe(node):
-        # NOT/ALL need every segment, even term-free ones
-        joined = meta.join(post, "seg_id", "left")
-    else:
-        if not terms and not scans:
-            return _empty_ids(spark)
-        joined = post.join(meta, "seg_id", "inner")
 
-    def _eval(pdf: pd.DataFrame, deleted: np.ndarray | None) -> pd.DataFrame:
+    def _eval(post: pd.DataFrame, meta: dict, deleted: np.ndarray | None) -> pd.DataFrame:
         from yaii_spark.codec import delta_decode, varint_decode
 
-        if pdf.empty:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-        n_docs = int(pdf["n_docs"].iloc[0])
-        base = int(pdf["base_doc_id"].iloc[0])
-        postings = {}
-        for f, t, b in zip(pdf["field"], pdf["term"], pdf["doc_ids_bin"]):
-            if t is None or b is None:
-                continue
-            postings[(f, t)] = delta_decode_blocked(b, block).astype(np.int64) - base
+        base = meta["base_doc_id"]
+        postings = {
+            (f, t): delta_decode_blocked(b, block).astype(np.int64) - base
+            for f, t, b in zip(post["field"], post["term"], post["doc_ids_bin"])
+        }
         pos_map = None
         if want_pos:
             pos_map = {}
             for f, t, tb, pb, po in zip(
-                pdf["field"], pdf["term"], pdf["tfs_bin"], pdf["pos_bin"],
-                pdf["block_pos_offs"],
+                post["field"], post["term"], post["tfs_bin"], post["pos_bin"],
+                post["block_pos_offs"],
             ):
-                if (f, t) not in phrase_terms or (f, t) not in postings:
-                    continue
-                tfs = varint_decode(tb).astype(np.int64)
-                pos_map[(f, t)] = _LazyPositions(postings[(f, t)], tfs, pb, po, block)
-        ids = _eval_numpy(node, postings, n_docs, pos_map)
-        db = pdf["deleted_bin"].iloc[0]
-        if db is not None:
-            purged = delta_decode(db).astype(np.int64)  # local ids
+                if (f, t) in phrase_terms:
+                    tfs = varint_decode(tb).astype(np.int64)
+                    pos_map[(f, t)] = _LazyPositions(postings[(f, t)], tfs, pb, po, block)
+        ids = _eval_numpy(node, postings, meta["n_docs"], pos_map)
+        # deleted_bin: local-id holes a purging merge left behind — they
+        # must stay out of NOT/ALL universes (doc ids are never renumbered)
+        if meta["deleted_bin"] is not None:
+            purged = delta_decode(meta["deleted_bin"]).astype(np.int64)  # local ids
             if purged.size:
                 ids = np.setdiff1d(ids, purged, assume_unique=False)
         if deleted is not None and deleted.size:
             ids = np.setdiff1d(ids, np.sort(deleted) - base, assume_unique=False)
         return pd.DataFrame({"doc_id": ids + base})
 
-    return apply_per_segment(cat, joined, _eval, "doc_id long")
+    return run_per_segment(
+        cat, _eval, "doc_id long", cols, ["n_docs", "base_doc_id", "deleted_bin"],
+        terms, scans, every_segment=universe,
+    )
 
 
 # ---------------------------------------------------------------------------

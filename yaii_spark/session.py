@@ -39,12 +39,12 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # floor for AQE's post-shuffle coalescing. At the test and
-        # benchmark sizes a query's per-segment stage shuffles ~17-26 KB,
-        # below this floor, so AQE coalesces it into ONE Python task
-        # over every segment: the floor does not keep such stages wide.
-        # At cluster data sizes partitions are far above it and it only
-        # folds away near-empty partitions.
+        # floor for AQE's post-shuffle coalescing. Queries shuffle
+        # nothing (each task reads its segments by path); the floor
+        # governs the build's and the merge's shuffles, where AQE folds
+        # partitions below 64 KB into their neighbours. At cluster data
+        # sizes partitions are far above it and it only folds away
+        # near-empty ones.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # scan parallelism floor: aim for >= cores splits per scan so a
         # single multi-row-group file (e.g. one 126 MB parquet written

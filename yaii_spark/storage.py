@@ -21,10 +21,14 @@ run split into at most ``spark.sql.shuffle.partitions`` files whose key
 ranges are disjoint and ordered, like Lucene's sorted term dictionary:
 no partition directories, so a catalog open lists one directory on the
 driver, and a lookup prunes row groups by the parquet min/max of
-``field`` and ``term``. ``indexer._write_term_stats`` is its only writer.
+``field`` and ``term``. ``indexer._write_term_stats`` is its only writer
+(a merge copies the run's files).
 Postings files are (field, term)-sorted inside each seg_id partition.
 Frames the driver builds from Python lists (segment lists, the
 corpus_stats row, ledger rows) are JVM LocalRelations (``local_frame``).
+
+Query tasks read their segments' files by path (``segment_files``,
+``read_files``, ``postings_filter``).
 
 Index tables are read by ``read_index_table`` with the declared schema
 (no footer inference, so no Spark job per read, and seg_id reads back
@@ -42,8 +46,12 @@ delta-friendly and merges never renumber (SURVEY.md §7.4.4).
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
+import re
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -119,6 +127,86 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     return spark.createDataFrame(table, struct)
 
 
+def read_files(paths: list[str], columns: list[str], filter=None):
+    """The rows of parquet files `paths` (URIs as ``inputFiles()`` gives
+    them) as a pyarrow Table of `columns`: the task-side read of a
+    query. `filter` is a pyarrow expression; row groups whose min/max
+    cannot match it are skipped. pyarrow opens the files, not Hadoop:
+    local files and pyarrow's own schemes only (``_listed_files``), with
+    pyarrow's credentials, not the Hadoop configuration."""
+    import pyarrow.dataset as ds
+    from pyarrow import fs
+
+    filesystem, _ = fs.FileSystem.from_uri(paths[0])
+    local = [fs.FileSystem.from_uri(p)[1] for p in paths]
+    return ds.dataset(local, filesystem=filesystem, format="parquet").to_table(
+        columns=columns, filter=filter
+    )
+
+
+#: a term list this long or shorter is an OR of equalities; pyarrow
+#: evaluates a long OR slowly (1,000 terms over a 400,000-row file on a
+#: 4-core host: 4.3 s, against 0.1 s in the range form)
+_OR_TERMS_MAX = 10
+
+
+def postings_filter(field_terms: list[tuple[str, str]], scans: list | None):
+    """The pyarrow predicate over postings rows for a query's keys:
+    `field_terms` as per-field term lists, and a term range or a
+    ``contains`` per TokenRange/TextContains leaf in `scans`. Files are
+    sorted by (field, term), so row-group min/max prune lookups. A list
+    of at most ``_OR_TERMS_MAX`` terms is an OR of equalities, which
+    prunes per term (pyarrow does not prune on ``is_in``); a longer one
+    prunes by its [min, max] range. contains() scans the segment's
+    dictionary."""
+    import pyarrow.compute as pc
+
+    field, term = pc.field("field"), pc.field("term")
+    conds = []
+    by_field: dict[str, set[str]] = {}
+    for f, t in field_terms:
+        by_field.setdefault(f, set()).add(t)
+    for f, ts in sorted(by_field.items()):
+        ts = sorted(ts)
+        if len(ts) <= _OR_TERMS_MAX:
+            c = functools.reduce(operator.or_, [term == t for t in ts])
+        else:
+            c = (term >= ts[0]) & (term <= ts[-1]) & term.isin(ts)
+        conds.append((field == f) & c)
+    for s in scans or []:
+        c = field == s.field_name
+        if hasattr(s, "needle"):  # TextContains
+            c &= pc.match_substring(term, s.needle)
+        else:  # TokenRange
+            if s.lo is not None:
+                c &= term >= s.lo if s.lo_inclusive else term > s.lo
+            if s.hi is not None:
+                c &= term <= s.hi if s.hi_inclusive else term < s.hi
+        conds.append(c)
+    return functools.reduce(operator.or_, conds) if conds else pc.scalar(False)
+
+
+def _listed_files(df: DataFrame, table: str, must_list: bool) -> list[str]:
+    """`df`'s data files for query tasks to read by path. Spark lists
+    files for file-based tables only (an Iceberg table lists none), so
+    an empty list where `must_list` raises instead of answering from no
+    data; so does a scheme read_files cannot open."""
+    files = sorted(df.inputFiles())
+    schemes = ("file", "hdfs", "viewfs", "s3", "gs", "gcs")  # pyarrow's
+    if not files and must_list:
+        raise RuntimeError(
+            f"{table}: Spark lists no data files for this table, and queries "
+            "read index files by path (Iceberg tables are not supported)"
+        )
+    if files and urlparse(files[0]).scheme not in schemes:
+        raise ValueError(
+            f"{table}: queries read index files with pyarrow, which cannot "
+            f"open {urlparse(files[0]).scheme}:// paths (supported: "
+            f"{', '.join(schemes)})"
+        )
+    return files
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -165,6 +253,17 @@ def fs_delete(spark: SparkSession, path: str) -> bool:
     exists to prevent)."""
     fs, p = _hadoop_fs(spark, path)
     return bool(fs.delete(p, True))
+
+
+def fs_copy(spark: SparkSession, src: str, dst: str) -> None:
+    """Replace `dst` with a copy of the file or directory tree `src`,
+    through the Hadoop FileSystem API."""
+    src_fs, src_p = _hadoop_fs(spark, src)
+    dst_fs, dst_p = _hadoop_fs(spark, dst)
+    dst_fs.delete(dst_p, True)
+    spark._jvm.org.apache.hadoop.fs.FileUtil.copy(
+        src_fs, src_p, dst_fs, dst_p, False, True, spark._jsc.hadoopConfiguration()
+    )
 
 
 def iceberg_format(spark: SparkSession) -> str | None:
@@ -255,6 +354,7 @@ class IndexCatalog:
         # fresh catalog (entrypoint._catalog evicts on the commit
         # marker's mtime).
         self._tables: dict[str, DataFrame] = {}
+        self._seg_files: DataFrame | None = None
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -315,49 +415,14 @@ class IndexCatalog:
         self.corpus_stats()
         for t in ("docs", "postings", "seg_meta", "term_stats"):
             self._table_df(t)
+        self.segment_files()
         return self
 
     def docs(self) -> DataFrame:
         return self._table_df("docs")
 
-    def postings(
-        self,
-        field_terms: list[tuple[str, str]] | None = None,
-        scans: list | None = None,
-    ) -> DataFrame:
-        """Postings rows, restricted to the query's terms.
-
-        `field_terms` → per-field equality-list predicates; `scans` →
-        TokenRange/TextContains AST leaves compiled to term-range /
-        contains predicates. All push to parquet: files are sorted by
-        (field, term), so row-group min/max stats prune equality AND
-        range lookups (the B-tree-like path); contains() degrades to an
-        in-segment dictionary scan by design."""
-        df = self._table_df("postings")
-        if field_terms is None and not scans:
-            return df
-        cond = None
-        by_field: dict[str, list[str]] = {}
-        for f, t in field_terms or []:
-            by_field.setdefault(f, []).append(t)
-        for f, ts in sorted(by_field.items()):
-            c = (F.col("field") == f) & F.col("term").isin(sorted(set(ts)))
-            cond = c if cond is None else (cond | c)
-        for s in scans or []:
-            c = F.col("field") == s.field_name
-            if hasattr(s, "needle"):  # TextContains
-                c = c & F.col("term").contains(s.needle)
-            else:  # TokenRange
-                if s.lo is not None:
-                    c = c & (
-                        F.col("term") >= s.lo if s.lo_inclusive else F.col("term") > s.lo
-                    )
-                if s.hi is not None:
-                    c = c & (
-                        F.col("term") <= s.hi if s.hi_inclusive else F.col("term") < s.hi
-                    )
-            cond = c if cond is None else (cond | c)
-        return df.filter(cond if cond is not None else F.lit(False))
+    def postings(self) -> DataFrame:
+        return self._table_df("postings")
 
     def seg_meta(self) -> DataFrame:
         return self._table_df("seg_meta")
@@ -368,6 +433,26 @@ class IndexCatalog:
     def checkpoints(self) -> DataFrame:
         return read_index_table(self.spark, self.root, "checkpoints")
 
+    def segment_files(self) -> DataFrame:
+        """(seg_id, postings files, seg_meta files) per segment, a
+        ``local_frame`` from ``inputFiles()`` of the cached frames (no
+        job, no new listing) keyed by each file's ``seg_id=<n>``
+        directory; memoized like the frames. A segment without seg_meta
+        files (postings of a crashed append) is left out."""
+        if self._seg_files is None:
+            by_seg: dict[int, tuple[list, list]] = {}
+            for i, table in enumerate(("postings", "seg_meta")):
+                must_list = table == "seg_meta" and self.corpus_stats().n_docs > 0
+                for f in _listed_files(self._table_df(table), table, must_list):
+                    seg = int(re.search(r"/seg_id=(-?\d+)/", f).group(1))
+                    by_seg.setdefault(seg, ([], []))[i].append(f)
+            self._seg_files = local_frame(
+                self.spark,
+                [(s, *by_seg[s]) for s in sorted(by_seg) if by_seg[s][1]],
+                "seg_id long, postings array<string>, seg_meta array<string>",
+            )
+        return self._seg_files
+
     def tombstones(self) -> DataFrame | None:
         """Deleted doc ids (seg_id, doc_id) or None when nothing was
         ever deleted. The reference keeps per-segment delete bitmaps
@@ -376,6 +461,13 @@ class IndexCatalog:
         if not fs_exists(self.spark, self.path("tombstones")):
             return None
         return read_index_table(self.spark, self.root, "tombstones")
+
+    def tombstone_files(self) -> list[str]:
+        """The tombstones table's files, listed afresh on every call
+        (delete_docs appends between queries); [] when nothing was ever
+        deleted. Every write of the table leaves a file, empty or not."""
+        tomb = self.tombstones()
+        return [] if tomb is None else _listed_files(tomb, "tombstones", True)
 
     def docs_live(self) -> DataFrame:
         """Docs minus tombstones (the reference's

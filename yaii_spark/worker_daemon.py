@@ -11,6 +11,7 @@ when the stat fails. Forked workers inherit the replacement. CPython
 `pyspark.daemon`.
 """
 
+import importlib
 import os
 import sys
 import zipimport
@@ -35,6 +36,9 @@ def main():
 
     if sys.version_info < (3, 13):
         zipimport.zipimporter.invalidate_caches = invalidate_if_changed
+    # stamp every importer once: forked workers inherit the stamps, so
+    # no worker's first task re-reads an unchanged archive
+    importlib.invalidate_caches()
     daemon.manager()
 
 
