@@ -11,12 +11,9 @@ linearly with index size.
 Evidence emitted (one JSON line):
 - per-batch walls + early/late means and the late/early ratio
   (index is ~5x batch at the early window, ~Nx at the late window)
-- a CONTRAST batch: stats_ledger is deleted before the final batch,
-  forcing the old full-recompute path — its wall shows what every
-  batch used to pay
-- term_stats identity: the folded on-disk dictionary is compared
-  row-for-row against a fresh full aggregation over ALL durable
-  postings (the exact formula _write_term_stats_full uses)
+- term_stats identity: the folded dictionary the manifest names is
+  compared row-for-row against a fresh full aggregation over every
+  live segment's postings (the formula _write_term_stats_full uses)
 
 Usage: python scripts/probe_append_flat.py [n_batches] [batch_docs] [seg_size]
 Runs on tmpfs (/dev/shm) to keep the IO floor out of the signal.
@@ -46,7 +43,7 @@ def main():
     from pyspark.sql import functions as F
 
     from yaii_spark.session import get_spark
-    from yaii_spark.storage import fs_delete, read_table
+    from yaii_spark.storage import IndexCatalog
     from yaii_spark.streaming import make_append_committer
 
     spark = get_spark("append-flat-probe")
@@ -69,21 +66,12 @@ def main():
         walls.append(round(time.time() - t0, 3))
         print(f"batch {b}: {walls[-1]:.2f}s", flush=True)
 
-    # contrast: force the pre-r5 full-recompute path for one batch
-    fs_delete(spark, os.path.join(idx, "stats_ledger"))
-    pages = gen_pages(spark, batch_docs, include_fixtures=False)
-    t0 = time.time()
-    commit(pages, n_batches)
-    full_wall = round(time.time() - t0, 3)
-
     # identity: folded dictionary == full aggregation over ALL postings
-    post = read_table(spark, os.path.join(idx, "postings"))
-    full = post.groupBy("field", "term").agg(
+    cat = IndexCatalog(spark, idx)
+    full = cat.postings().groupBy("field", "term").agg(
         F.sum("df_local").alias("df_f"), F.sum("cf_local").alias("cf_f")
     )
-    ts = read_table(spark, os.path.join(idx, "term_stats")).select(
-        "field", "term", "df", "cf"
-    )
+    ts = cat.term_stats()
     joined = ts.join(full, ["field", "term"], "full_outer")
     n_mismatch = joined.filter(
         (F.col("df").isNull())
@@ -110,7 +98,6 @@ def main():
         "early_mean_s": round(early, 3),
         "late_mean_s": round(late, 3),
         "late_over_early": round(late / early, 3),
-        "full_recompute_contrast_s": full_wall,
         "term_stats_rows": n_terms,
         "term_stats_mismatches": n_mismatch,
     }

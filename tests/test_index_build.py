@@ -29,7 +29,7 @@ def test_extraction_invariant_roundtrip(spark):
 
 
 def _postings_snapshot(spark, idx_dir):
-    df = spark.read.parquet(f"{idx_dir}/postings").select(
+    df = IndexCatalog(spark, idx_dir).postings().select(
         "seg_id", "term", "df_local", "cf_local",
         F.md5(F.hex("doc_ids_bin")).alias("ids_h"),
         F.md5(F.hex("tfs_bin")).alias("tfs_h"),
@@ -92,10 +92,11 @@ def test_resume_equals_clean_build(spark, work_dir):
 
     assert _postings_snapshot(spark, clean) == _postings_snapshot(spark, resumed)
     # stats identical too
-    for t in ["term_stats", "corpus_stats", "seg_meta"]:
-        a = sorted(map(str, spark.read.parquet(f"{clean}/{t}").drop("dl_bin").collect()))
-        b = sorted(map(str, spark.read.parquet(f"{resumed}/{t}").drop("dl_bin").collect()))
-        assert a == b, t
+    a, b = IndexCatalog(spark, clean), IndexCatalog(spark, resumed)
+    assert a.corpus_stats() == b.corpus_stats()
+    for t in ["term_stats", "seg_meta"]:
+        rows = [sorted(map(str, getattr(c, t)().drop("dl_bin").collect())) for c in (a, b)]
+        assert rows[0] == rows[1], t
 
 
 def test_rerun_is_idempotent(spark, work_dir):
@@ -125,7 +126,7 @@ def test_checkpoint_lineage_rows(spark, work_dir):
     pages = gen_pages(spark, 120, include_fixtures=False)
     idx = f"{work_dir}/lineage_idx"
     build_index(spark, pages, idx, seg_size=60)
-    ck = spark.read.parquet(f"{idx}/checkpoints")
+    ck = IndexCatalog(spark, idx).checkpoints()
     rows = {r.seg_id: r for r in ck.collect()}
     assert set(rows) == {0, 1}
     for r in rows.values():
@@ -213,22 +214,28 @@ def test_postings_files_term_sorted(staged_indexes, stage):
 
 @pytest.mark.parametrize("stage", ["build", "append", "merge"])
 def test_term_stats_sorted_run(spark, staged_indexes, stage):
-    """term_stats is one (field, term)-sorted run: no partition
+    """term_stats is one (field, term)-sorted run in the version
+    directory the manifest names (the only one left): no partition
     directories, every file sorted, the files' key ranges disjoint and
     ordered (their concatenation in file order is strictly ascending),
     the rows equal a full recompute from the postings, and a lookup
-    pushes its field and term lists down to the parquet scan."""
+    skips the row groups whose min/max cannot hold its key and returns
+    its one row."""
     import glob
-    import io
     import os
-    from contextlib import redirect_stdout
 
-    from yaii_spark.storage import read_index_table
+    import pyarrow.dataset as ds
+
+    from yaii_spark.storage import postings_filter
 
     idx = staged_indexes[stage]
-    ts_dir = os.path.join(idx, "term_stats")
+    cat = IndexCatalog(spark, idx)
+    m = cat.manifest()
+    assert os.listdir(os.path.join(idx, "term_stats")) == [str(m.version)]
+    ts_dir = os.path.join(idx, m.term_stats_table)
     assert not [e for e in os.listdir(ts_dir) if os.path.isdir(os.path.join(ts_dir, e))]
-    per_file = [_file_keys(f) for f in sorted(glob.glob(f"{ts_dir}/*.parquet"))]
+    files = sorted(glob.glob(f"{ts_dir}/*.parquet"))
+    per_file = [_file_keys(f) for f in files]
     # several files (the range checks span files), at most one per
     # shuffle partition
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -238,21 +245,21 @@ def test_term_stats_sorted_run(spark, staged_indexes, stage):
 
     want = sorted(
         tuple(r)
-        for r in read_index_table(spark, idx, "postings")
+        for r in cat.postings()
         .groupBy("field", "term")
         .agg(F.sum("df_local"), F.sum("cf_local"))
         .collect()
     )
-    got = sorted(tuple(r) for r in read_index_table(spark, idx, "term_stats").collect())
+    got = sorted(tuple(r) for r in cat.term_stats().collect())
     assert got == want
 
-    cat = IndexCatalog(spark, idx)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        cat.term_stats_query([("text", "lorem")]).explain(mode="formatted")
-    (pushed,) = [ln for ln in buf.getvalue().splitlines() if "PushedFilters" in ln]
-    assert "(field,text)" in pushed and "(term,lorem)" in pushed, pushed
-    assert cat.term_stats_for([("text", "lorem")])[("text", "lorem")][0] > 0
+    key = ("text", "lorem")
+    frags = list(ds.dataset(files).get_fragments())
+    kept = [g for f in frags for g in f.split_by_row_group(postings_filter([key], None))]
+    assert 0 < len(kept) < sum(f.metadata.num_row_groups for f in frags)
+    found = cat.term_stats_query([key, ("text", "zzznope")])
+    assert list(found) == [key] and found[key] == dict(((r[0], r[1]), r[2:]) for r in got)[key]
+    assert cat.term_stats_for([key])[key][0] > 0
 
 
 def test_no_giant_in_list_for_pending_segments(spark, work_dir, monkeypatch):
@@ -260,13 +267,14 @@ def test_no_giant_in_list_for_pending_segments(spark, work_dir, monkeypatch):
     In(seg_id, [...]) / INSET list over the pending segments (at 10^6
     pending segments an In-list would inline into the plan and evaluate
     O(n) per row). A build that covers every input segment filters
-    nothing; a partial one selects through _filter_by_seg_ids, which
+    nothing; a partial one selects through filter_segments, which
     turns a list too large to inline into a broadcast semi-join.
     Asserted on the CAPTURED PHYSICAL PLANS of every DataFrame the
     build writes, not on source text."""
     import re
 
     import yaii_spark.indexer as ix
+    from yaii_spark.storage import filter_segments
 
     plans = []
     real_write = ix.write_table
@@ -281,7 +289,7 @@ def test_no_giant_in_list_for_pending_segments(spark, work_dir, monkeypatch):
     idx = f"{work_dir}/inlist_idx"
     pages = gen_pages(spark, 300, include_fixtures=False)
     build_index(spark, pages, idx, seg_size=10)  # 30 segments
-    assert len(plans) >= 5  # docs, seg_meta, postings, term_stats, ck, stats
+    assert len(plans) >= 5  # docs, seg_meta, postings, term_stats, ck
     seg_in = re.compile(r"(?:In|INSET)\s*\(?\s*seg_id", re.IGNORECASE)
     offenders = [
         (path, m.group(0))
@@ -295,7 +303,7 @@ def test_no_giant_in_list_for_pending_segments(spark, work_dir, monkeypatch):
     assert "LeftSemi" not in post_plan
     # a pending list past the In-list bound selects by semi-join
     segs = spark.range(8).withColumnRenamed("id", "seg_id")
-    big = ix._filter_by_seg_ids(segs, list(range(5000)))
+    big = filter_segments(segs, list(range(5000)))
     plan = big._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan and not seg_in.search(plan), plan
     assert big.count() == 8

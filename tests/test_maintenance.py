@@ -255,46 +255,42 @@ def test_delete_docs_df_distributed(spark, work_dir):
 
 
 def test_format_version_gate(spark, work_dir):
-    """A mismatched on-disk format must raise 'rebuild required'
-    instead of silently misdecoding postings (ADVICE r3)."""
-    from yaii_spark.storage import write_table
+    """A manifest of another on-disk format must raise 'rebuild
+    required' instead of silently misdecoding postings (ADVICE r3)."""
+    import json
+    import os
 
     out = f"{work_dir}/oldfmt_idx"
     build_index(spark, gen_boolean_pages(spark), out, seg_size=8)
-    # forge an old-format commit marker
-    cs = spark.createDataFrame(
-        [(4, 10.0, 1.2, 0.75, 8, 128, 4)],
-        "n_docs long, avgdl double, k1 double, b double, seg_size long, "
-        "block_size long, format_version long",
-    )
-    write_table(cs, f"{out}/corpus_stats")
-    with pytest.raises(ValueError, match="rebuild"):
-        IndexCatalog(spark, out).corpus_stats()
-    # unversioned (pre-v3) corpus_stats also raises
-    cs2 = spark.createDataFrame(
-        [(4, 10.0, 1.2, 0.75, 8)],
-        "n_docs long, avgdl double, k1 double, b double, seg_size long",
-    )
-    write_table(cs2, f"{out}/corpus_stats")
-    with pytest.raises(ValueError, match="rebuild"):
-        IndexCatalog(spark, out).corpus_stats()
+    m = IndexCatalog(spark, out).manifest()
+    body = {"version": m.version + 1, "n_docs": 4, "sum_dl": 40, "k1": 1.2,
+            "b": 0.75, "seg_size": 8, "block_size": 128, "segments": [1]}
+    # forge a newer manifest of an older format, then an unversioned one
+    for forged in ({**body, "format_version": 4}, body):
+        with open(os.path.join(out, "_manifest", str(m.version + 1)), "w") as f:
+            json.dump(forged, f)
+        with pytest.raises(ValueError, match="rebuild"):
+            IndexCatalog(spark, out).corpus_stats()
 
 
-@pytest.mark.parametrize("version", [5, 6])
+@pytest.mark.parametrize("version", [5, 6, 7])
 def test_v5_index_raises_rebuild(spark, work_dir, version):
     """An index of an older format (v5: hash-bucketed term_stats; v6:
-    block bounds stored as norms under the build-time avgdl) is not
-    readable by this build: the catalog, an append commit and a merge
-    all raise the rebuild error before touching it."""
-    from yaii_spark.storage import TABLE_SCHEMAS, local_frame, write_table
+    block bounds stored as norms under the build-time avgdl; v7: the
+    corpus_stats commit marker, no manifest) is not readable by this
+    build: the catalog, an append commit and a merge all raise the
+    rebuild error before touching it."""
+    from yaii_spark.storage import fs_delete, local_frame, write_table
     from yaii_spark.streaming import make_append_committer
 
     out = f"{work_dir}/v{version}_idx"
     build_index(spark, gen_boolean_pages(spark), out, seg_size=8)
+    fs_delete(spark, f"{out}/_manifest")
     write_table(
         local_frame(
             spark, [(4, 10.0, 1.2, 0.75, 8, 128, version)],
-            TABLE_SCHEMAS["corpus_stats"],
+            "n_docs long, avgdl double, k1 double, b double, seg_size long, "
+            "block_size long, format_version long",
         ),
         f"{out}/corpus_stats",
     )

@@ -18,7 +18,7 @@ These tests pin that single plan on a 2-segment fixture:
 - a warm boolean, phrase, exact BM25 and pruned BM25 query each runs
   exactly one Spark job;
 - a table Spark lists no files for, or a path pyarrow cannot open,
-  raises; postings of a segment without seg_meta are left out;
+  raises; segment directories outside the manifest are left out;
 - tombstone files are seg_id-ranged, so a task's min/max filter skips
   other segments' files.
 """
@@ -292,12 +292,20 @@ def test_unlisted_files_raise(spark, fresh_index, tombstoned_index, monkeypatch)
     q = QUERIES["and"]
     listed = DataFrame.inputFiles
     monkeypatch.setattr(DataFrame, "inputFiles", lambda df: [])
-    with pytest.raises(RuntimeError, match="seg_meta: Spark lists no data files"):
+    with pytest.raises(RuntimeError, match="term_stats: Spark lists no data files"):
         execute_boolean(IndexCatalog(spark, fresh_index), q)
+
+    cat = IndexCatalog(spark, fresh_index)
+    monkeypatch.setattr(DataFrame, "inputFiles", listed)
+    cat.term_stats_for(sorted(A.collect_terms(q)))  # the dictionary read
+    monkeypatch.setattr(DataFrame, "inputFiles", lambda df: [])
+    with pytest.raises(RuntimeError, match="seg_meta: Spark lists no data files"):
+        execute_boolean(cat, q)
 
     cat = IndexCatalog(spark, tombstoned_index)
     monkeypatch.setattr(DataFrame, "inputFiles", listed)
     cat.segment_files()  # postings and seg_meta listed; tombstones not
+    cat.term_stats_for(sorted(A.collect_terms(q)))
     monkeypatch.setattr(DataFrame, "inputFiles", lambda df: [])
     with pytest.raises(RuntimeError, match="tombstones: Spark lists no data files"):
         execute_boolean(cat, q)
@@ -308,22 +316,24 @@ def test_unlisted_files_raise(spark, fresh_index, tombstoned_index, monkeypatch)
         execute_boolean(IndexCatalog(spark, tombstoned_index), q)
 
 
-def test_segment_without_seg_meta_is_skipped(spark, fresh_index, work_dir, brute):
-    """Postings of a segment whose seg_meta was never written (an append
-    that crashed between the two writes) are left out of every query,
-    as an inner join to seg_meta would leave them out."""
+def test_orphan_segment_outside_manifest_is_ignored(spark, fresh_index, work_dir, brute):
+    """Segment directories the manifest does not name (the files of a
+    commit that crashed before its publish) are left out of every query
+    and every table the catalog reads."""
     import shutil
 
     out = f"{work_dir}/seg_plan_orphan"
     shutil.copytree(fresh_index, out)
-    shutil.rmtree(f"{out}/seg_meta/seg_id=1")
+    for table in ("docs", "postings", "seg_meta"):
+        shutil.copytree(f"{out}/{table}/seg_id=1", f"{out}/{table}/seg_id=2")
     cat = IndexCatalog(spark, out)
+    assert cat.manifest().segments == (0, 1)
     for k, q in QUERIES.items():
-        if k == "all":  # a bare ALL reads the docs table, not postings
-            continue
         got = sorted(r.doc_id for r in execute_boolean(cat, q).collect())
-        assert got == sorted(d for d in brute.evaluate(A.rewrite(q)) if d < SEG), k
-    assert all(r.doc_id < SEG for r in bm25_topk(cat, ["common", "w3"], k=13).collect())
+        assert got == sorted(brute.evaluate(A.rewrite(q))), k
+    assert _bm25_all(cat) == _bm25_all(IndexCatalog(spark, fresh_index))
+    for table in (cat.docs(), cat.postings(), cat.seg_meta()):
+        assert {r.seg_id for r in table.select("seg_id").distinct().collect()} == {0, 1}
 
 
 def test_tombstone_files_are_seg_id_ranged(spark, fresh_index, work_dir, brute):

@@ -114,7 +114,7 @@ def test_catalog_prewarm(spark, work_dir):
     build_index(spark, gen_boolean_pages(spark), out, seg_size=8)
     cat = IndexCatalog(spark, out).prewarm()
     assert set(cat._tables) == {"docs", "postings", "seg_meta", "term_stats"}
-    assert cat._stats is not None
+    assert cat._manifest is not None
     before = dict(cat._tables)
     assert {r.doc_id for r in execute_boolean(cat, A.token("abc")).collect()} == {12, 14}
     # the query reused the prewarmed DataFrames (same objects, no relist)
@@ -140,7 +140,7 @@ def _jobs_launched(spark, fn):
 @pytest.fixture(scope="module")
 def every_table_index(spark, tmp_path_factory):
     """A 2-segment build, one streaming append batch and a delete: all
-    eight declared index tables exist on disk."""
+    five declared index tables exist on disk."""
     from yaii_spark.indexer import build_index, delete_docs
     from yaii_spark.streaming import make_append_committer
     from yaii_spark.synth import gen_pages
@@ -154,10 +154,7 @@ def every_table_index(spark, tmp_path_factory):
     return idx
 
 
-_DECLARED = [
-    "postings", "seg_meta", "term_stats", "corpus_stats", "checkpoints",
-    "stats_ledger", "tombstones", "sink_ledger",
-]
+_DECLARED = ["postings", "seg_meta", "term_stats", "checkpoints", "tombstones"]
 
 
 @pytest.mark.parametrize("table", _DECLARED)
@@ -165,11 +162,14 @@ def test_declared_schema_reads(spark, every_table_index, table):
     """Each index table reads through read_index_table with its declared
     schema: no Spark job (no footer inference), a schema equal to the
     one inferred from the written files (apart from the seg_id partition
-    column, which inference reads as INT), and seg_id as LONG."""
+    column, which inference reads as INT), and seg_id as LONG. The
+    dictionary is read at the version the manifest names."""
     from pyspark.sql import types as T
 
-    from yaii_spark.storage import read_index_table
+    from yaii_spark.storage import IndexCatalog, read_index_table
 
+    if table == "term_stats":
+        table = IndexCatalog(spark, every_table_index).manifest().term_stats_table
     df, jobs = _jobs_launched(
         spark, lambda: read_index_table(spark, every_table_index, table)
     )
@@ -217,10 +217,10 @@ def test_local_frame_is_a_local_relation(spark):
     """storage.local_frame builds a JVM LocalRelation (no Python RDD, so
     no Python task per use) with the declared column types, empty
     lists included."""
-    from yaii_spark.storage import TABLE_SCHEMAS, local_frame
+    from yaii_spark.storage import local_frame
 
     rows = [(1, 0, 64), (2, 64, 128)]
-    df = local_frame(spark, rows, TABLE_SCHEMAS["sink_ledger"])
+    df = local_frame(spark, rows, "batch_id long, start_id long, end_id long")
     plan = df._jdf.queryExecution().analyzed().toString()
     assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan, plan
     assert df.schema.simpleString() == (

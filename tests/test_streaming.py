@@ -368,8 +368,8 @@ def test_pruned_bm25_on_appended_segment_skips_blocks(spark, tmp_path):
 def test_append_committer_replay_idempotent(spark, tmp_path):
     """A replayed micro-batch (same batch_id — Spark re-runs a batch
     whose foreachBatch died before the stream checkpoint advanced)
-    must re-land on its ORIGINAL segment range via the durable sink
-    ledger, not derive a new one and index the docs twice."""
+    that was already published is skipped, not indexed twice; each
+    batch starts at the next free segment boundary."""
     from yaii_spark.ops.aggregations import index_size
     from yaii_spark.queries import ast as A
     from yaii_spark.queries.executor import execute_boolean
@@ -390,27 +390,27 @@ def test_append_committer_replay_idempotent(spark, tmp_path):
     commit(b2, 1)
     cat = IndexCatalog(spark, idx)
     assert index_size(cat) == 50
-    # ledger has exactly one range per batch, ranges disjoint
-    from yaii_spark.storage import read_table
-
-    led = {r.batch_id: r.start_id for r in read_table(spark, f"{idx}/sink_ledger").collect()}
-    assert len(led) == 2 and led[0] == 0 and led[1] >= 32
+    # one range per batch, disjoint: batch 0 on segments 0-1, batch 1
+    # from the next free boundary (doc id 32)
+    m = cat.manifest()
+    assert m.sink_batch == 1 and m.segments == (0, 1, 2, 3)
+    assert cat.docs().filter(F.col("doc_id").between(30, 31)).count() == 0
     # content still correct after the replay
     got = execute_boolean(cat, A.token("lorem"))
     assert got.count() == 1
     # replay of an already-complete batch AFTER later batches landed is
-    # also safe (resume skips its completed segments)
+    # also skipped
     commit(b1, 0)
     cat = IndexCatalog(spark, idx)
     assert index_size(cat) == 50
 
 
 def _ts_rows(spark, idx):
-    from yaii_spark.storage import read_table
+    from yaii_spark.storage import IndexCatalog
 
     return sorted(
         (r.field, r.term, int(r.df), int(r.cf))
-        for r in read_table(spark, f"{idx}/term_stats").collect()
+        for r in IndexCatalog(spark, idx).term_stats().collect()
     )
 
 
@@ -434,22 +434,21 @@ def _full_rebuild_rows(spark, tmp_path, batches, name):
 
 def test_incremental_term_stats_fold_matches_full(spark, tmp_path, monkeypatch):
     """Appending a micro-batch folds ONLY the new segments' aggregates
-    into the sorted dictionary (indexer._fold_term_stats) — per-batch
-    cost never re-reads old postings (VERDICT r4 #1) — and the folded rows
-    are value-identical to a full recompute over the union. The full
-    path is monkeypatch-poisoned for the second batch, so the test
+    into a new dictionary version (indexer._fold_term_stats) — per-batch
+    cost never re-reads old postings (VERDICT r4 #1) — and the folded
+    rows are value-identical to a full recompute over the union. The
+    full path is monkeypatch-poisoned for the second batch, so the test
     FAILS if the fold silently falls back to the O(index) recompute;
-    a replayed batch folds nothing (ledger already covers its range)."""
+    a replayed batch folds nothing (it was published)."""
     import yaii_spark.indexer as IX
-    from yaii_spark.storage import fs_exists, read_table
+    from yaii_spark.storage import IndexCatalog
     from yaii_spark.streaming import make_append_committer
 
     idx = str(tmp_path / "fold_idx")
     commit = make_append_committer(idx, seg_size=16, stored_cols=_FOLD_STORED)
     b1 = gen_pages(spark, 60, include_fixtures=True)
     b2 = gen_pages(spark, 100, include_fixtures=False).filter(F.col("doc_id") >= 60)
-    commit(b1, 0)  # base build: full recompute + ledger bootstrap
-    assert fs_exists(spark, f"{idx}/stats_ledger")
+    commit(b1, 0)  # first publish: the batch's own postings aggregated
 
     def _boom(*a, **k):
         raise AssertionError("append must fold, not full-recompute")
@@ -458,73 +457,30 @@ def test_incremental_term_stats_fold_matches_full(spark, tmp_path, monkeypatch):
     commit(b2, 1)  # incremental fold
     monkeypatch.undo()
 
-    # ledger covers every durable segment exactly once
-    n_segs = read_table(spark, f"{idx}/seg_meta").select("seg_id").distinct().count()
-    led = read_table(spark, f"{idx}/stats_ledger")
-    assert led.count() == led.distinct().count() == n_segs
-    # no torn-fold marker, no leftover staging dir
-    assert not fs_exists(spark, f"{idx}/stats_folding")
-    assert not fs_exists(spark, f"{idx}/term_stats_delta_tmp")
+    # the manifest names every segment on disk exactly once, and the
+    # previous dictionary version is gone
+    cat = IndexCatalog(spark, idx)
+    m = cat.manifest()
+    segs = sorted(r.seg_id for r in cat.seg_meta().select("seg_id").collect())
+    assert list(m.segments) == segs
+    assert os.listdir(os.path.join(idx, "term_stats")) == [str(m.version)]
 
     folded = _ts_rows(spark, idx)
     assert folded == _full_rebuild_rows(spark, tmp_path, [b1, b2], "fold_full")
 
-    # corpus stats (n_docs, avgdl) now aggregate from the ledger's
-    # (n_docs, sum_dl) rows — must equal the one-shot build's (dl are
-    # integer token counts, so float sums are order-independent exact)
-    cs = read_table(spark, f"{idx}/corpus_stats").collect()[0]
-    cs_full = read_table(spark, str(tmp_path / "fold_full") + "/corpus_stats").collect()[0]
+    # corpus stats (n_docs, avgdl) add each batch's doc counts and dl
+    # sums — must equal the one-shot build's (integer dl sums, so the
+    # division is exact)
+    cs = cat.corpus_stats()
+    cs_full = IndexCatalog(spark, str(tmp_path / "fold_full")).corpus_stats()
     assert cs.n_docs == cs_full.n_docs == 100
-    assert abs(cs.avgdl - cs_full.avgdl) < 1e-9
+    assert cs.avgdl == cs_full.avgdl
 
-    # replay of batch 1: everything already folded → dictionary unchanged
+    # replay of batch 1: already published → dictionary unchanged
     monkeypatch.setattr(IX, "_write_term_stats_full", _boom)
     commit(b2, 1)
     monkeypatch.undo()
     assert _ts_rows(spark, idx) == folded
-
-
-def test_torn_fold_recovers_with_full_recompute(spark, tmp_path):
-    """A crash between the fold's dictionary overwrite and its ledger append
-    leaves the stats_folding marker; the next append must detect it and
-    recover via the full recompute (correct counts, marker cleared)."""
-    from yaii_spark.storage import fs_exists, fs_touch
-    from yaii_spark.streaming import make_append_committer
-
-    idx = str(tmp_path / "torn_idx")
-    commit = make_append_committer(idx, seg_size=16, stored_cols=_FOLD_STORED)
-    b1 = gen_pages(spark, 40, include_fixtures=True)
-    b2 = gen_pages(spark, 70, include_fixtures=False).filter(F.col("doc_id") >= 40)
-    commit(b1, 0)
-    fs_touch(spark, f"{idx}/stats_folding")  # simulate the torn fold
-    commit(b2, 1)
-    assert not fs_exists(spark, f"{idx}/stats_folding")
-    assert _ts_rows(spark, idx) == _full_rebuild_rows(
-        spark, tmp_path, [b1, b2], "torn_full"
-    )
-
-
-def test_fold_self_heals_unfolded_segments(spark, tmp_path, monkeypatch):
-    """Segments whose postings committed but whose stats fold never ran
-    (crash after the postings write) are picked up by the NEXT batch's
-    fold — `unfolded` is ledger-complement, not batch-scoped."""
-    import yaii_spark.indexer as IX
-    from yaii_spark.streaming import make_append_committer
-
-    idx = str(tmp_path / "heal_idx")
-    commit = make_append_committer(idx, seg_size=16, stored_cols=_FOLD_STORED)
-    b1 = gen_pages(spark, 40, include_fixtures=True)
-    b2 = gen_pages(spark, 70, include_fixtures=False).filter(F.col("doc_id") >= 40)
-    b3 = gen_pages(spark, 100, include_fixtures=False).filter(F.col("doc_id") >= 70)
-    commit(b1, 0)
-    # batch 1's fold "crashes" before running: postings durable, stats not
-    monkeypatch.setattr(IX, "_fold_term_stats", lambda *a, **k: None)
-    commit(b2, 1)
-    monkeypatch.undo()
-    commit(b3, 2)  # must fold batch 1's AND batch 2's segments
-    assert _ts_rows(spark, idx) == _full_rebuild_rows(
-        spark, tmp_path, [b1, b2, b3], "heal_full"
-    )
 
 
 def test_append_after_merge_geometry_and_fold(spark, tmp_path):
@@ -532,12 +488,12 @@ def test_append_after_merge_geometry_and_fold(spark, tmp_path):
     REFUSED before any durable write — segment geometry is global
     (doc_id = seg_id*seg_size + local) and a mismatched range would
     collide with existing segments; (2) with the merged seg_size the
-    batch folds incrementally onto the merge-seeded stats_ledger and
+    batch folds incrementally onto the merge's dictionary version and
     every query over old∪new docs stays correct."""
     from yaii_spark.indexer import merge_segments
     from yaii_spark.ops.aggregations import index_size
     from yaii_spark.queries.executor import execute_boolean
-    from yaii_spark.storage import IndexCatalog, read_table
+    from yaii_spark.storage import IndexCatalog
     from yaii_spark.streaming import make_append_committer
 
     idx = str(tmp_path / "pm_idx")
@@ -547,19 +503,22 @@ def test_append_after_merge_geometry_and_fold(spark, tmp_path):
     commit16(b1, 0)
     with pytest.warns(RuntimeWarning):  # 2 segments < local parallelism
         merge_segments(spark, idx, merged, factor=2)
-    assert IndexCatalog(spark, merged).corpus_stats().seg_size == 32
+    m0 = IndexCatalog(spark, merged).manifest()
+    assert m0.seg_size == 32 and m0.sink_batch is None
 
-    # (1) stale geometry refused, nothing ledgered
+    # (1) stale geometry refused, nothing written or published
     commit_stale = make_append_committer(
         merged, seg_size=16, stored_cols=_FOLD_STORED
     )
     with pytest.raises(ValueError, match="seg_size"):
         commit_stale(gen_pages(spark, 10, include_fixtures=False), 0)
-    from yaii_spark.storage import fs_exists
+    assert IndexCatalog(spark, merged).manifest() == m0
+    segs_on_disk = sorted(
+        e for e in os.listdir(os.path.join(merged, "postings")) if e.startswith("seg_id=")
+    )
+    assert segs_on_disk == ["seg_id=0", "seg_id=1"]
 
-    assert not fs_exists(spark, f"{merged}/sink_ledger")
-
-    # (2) merged-geometry append folds onto the merged ledger
+    # (2) merged-geometry append folds onto the merged dictionary
     commit32 = make_append_committer(merged, seg_size=32, stored_cols=_FOLD_STORED)
     b2 = gen_pages(spark, 100, include_fixtures=False).filter(F.col("doc_id") >= 64)
     commit32(b2, 0)
@@ -568,19 +527,14 @@ def test_append_after_merge_geometry_and_fold(spark, tmp_path):
     assert cat.corpus_stats().n_docs == 100
     # a fixture token from batch 1 and content from batch 2 both match
     assert execute_boolean(cat, A.token("lorem")).count() == 1
-    n_led = read_table(spark, f"{merged}/stats_ledger").count()
-    n_segs = read_table(spark, f"{merged}/seg_meta").select("seg_id").distinct().count()
-    assert n_led == n_segs
+    segs = sorted(r.seg_id for r in cat.seg_meta().select("seg_id").collect())
+    assert list(cat.manifest().segments) == segs
     # dictionary covers old ∪ new exactly once: spot-check a term that
     # occurs in both halves against a direct postings aggregate
-    ts = {
-        (r.field, r.term): (r.df, r.cf)
-        for r in read_table(spark, f"{merged}/term_stats").collect()
-    }
-    post = read_table(spark, f"{merged}/postings")
+    ts = {(r.field, r.term): (r.df, r.cf) for r in cat.term_stats().collect()}
     agg = {
         (r.field, r.term): (r.df, r.cf)
-        for r in post.groupBy("field", "term")
+        for r in cat.postings().groupBy("field", "term")
         .agg(F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf"))
         .collect()
     }

@@ -58,36 +58,24 @@ RULE_FIELD_RULES = [
 ]
 
 
-# one IndexCatalog per index dir: the catalog memoizes corpus_stats
-# (block size etc.) and term-dictionary lookups, so reusing it keeps
-# query paths at zero extra driver jobs instead of one 1-row collect
-# per query. The memo is keyed on the commit marker's mtime: a rebuild
-# into the same path (same params, changed source data) bumps the
-# marker and evicts the stale catalog — its cached term ABSENCES would
-# otherwise silently prune live terms (ADVICE r3).
-_CATALOGS: dict[str, tuple[IndexCatalog, int | None]] = {}
-
-
-def _marker_mtime(spark: SparkSession, out: str) -> int | None:
-    from yaii_spark.storage import fs_mtime, iceberg_format
-
-    if iceberg_format(spark):
-        # an Iceberg commit adds files under metadata/ WITHOUT touching
-        # the table root dir's mtime (ADVICE r4: the eviction would
-        # silently never fire) — probe the per-commit version hint
-        # file, falling back to the root for non-HadoopTable layouts
-        cs = os.path.join(out, "corpus_stats")
-        hint = fs_mtime(spark, os.path.join(cs, "metadata", "version-hint.text"))
-        return hint if hint is not None else fs_mtime(spark, cs)
-    return fs_mtime(spark, os.path.join(out, "corpus_stats", "_SUCCESS"))
+# one IndexCatalog per index dir: the catalog memoizes its manifest
+# and term-dictionary lookups, so reusing it keeps query paths at zero
+# extra reads. The memo is keyed on the newest manifest's (version,
+# mtime): a rebuild into the same path (same params, changed source
+# data) publishes a new manifest and evicts the stale catalog — its
+# cached term ABSENCES would otherwise silently prune live terms
+# (ADVICE r3).
+_CATALOGS: dict[str, tuple[IndexCatalog, tuple[int, int] | None]] = {}
 
 
 def _catalog(spark: SparkSession, out: str) -> IndexCatalog:
-    mt = _marker_mtime(spark, out)
+    from yaii_spark.storage import manifest_stamp
+
+    stamp = manifest_stamp(spark, out)
     ent = _CATALOGS.get(out)
     if ent is not None:
         cat, seen = ent
-        if cat.spark is spark and seen == mt:
+        if cat.spark is spark and seen == stamp:
             return cat
         # evicting a stale catalog must release its persisted filter
         # DataFrames too — uncache_filter can no longer reach them once
@@ -100,7 +88,7 @@ def _catalog(spark: SparkSession, out: str) -> IndexCatalog:
         except Exception:
             pass  # the old catalog's session may already be stopped
     cat = IndexCatalog(spark, out)
-    _CATALOGS[out] = (cat, mt)
+    _CATALOGS[out] = (cat, stamp)
     return cat
 
 
@@ -152,7 +140,7 @@ def get_index(
             stored_cols=stored,
             fields=fields,
         )
-        cat = _catalog(spark, out)  # fresh marker mtime → fresh caches
+        cat = _catalog(spark, out)  # new manifest → fresh caches
     return cat
 
 

@@ -14,6 +14,8 @@ then the parquet/Iceberg commit):
           concat runs, delta+varint posting rows + (tf, dl) block
           impacts (_encode_group_batched)                    [shuffle]
           ──write postings partitioned by seg_id, sorted by (field, term)
+          ──term_stats/<n>: the previous version + the new postings
+          ──publish _manifest/<n> (storage.publish_manifest): the commit
 
 Every field takes this path: custom analyzers and multi-source fields
 are pure functions run inside the same UDF, over extra source columns.
@@ -41,9 +43,14 @@ Scale design decisions (the 100 TB story):
   writes) — driver-side planning/commit latencies overlap.
 - **docID = seg_id * seg_size + local** (dense). Delta+varint then
   compresses to ~1-2 bytes/doc. At 10^12 docs: 10^6 segments × 2^20.
-- **Resumable:** per-segment checkpoint rows; re-running skips
-  completed segments (dynamic partition overwrite keeps re-runs of a
-  partial segment idempotent).
+- **One commit point:** a build, an append commit and a merge each
+  write new immutable files, then publish one manifest naming the live
+  segments and the corpus stats (its dictionary is term_stats/<n>).
+  Re-running skips the segments the manifest names; files a crashed
+  run wrote outside it are ignored by readers and overwritten by the
+  re-run (dynamic partition overwrite). The checkpoints table keeps one
+  lineage row per built segment for operators; nothing reads it to
+  decide.
 - **Term-sorted files:** every postings file is (field, term)-sorted
   inside its segment partition → parquet row-group min/max prunes term
   lookups at query time without a term-partitioned layout (which would
@@ -62,8 +69,10 @@ immutable-segment.ts:98-309); its planned-but-stubbed segment merge
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -78,15 +87,18 @@ from yaii_spark.analyzer import (
 from yaii_spark.codec import varint_encode, varint_lengths
 from yaii_spark.storage import (
     TABLE_SCHEMAS,
+    IndexCatalog,
+    Manifest,
     column_names,
+    filter_segments,
     fs_copy,
     fs_delete,
     fs_exists,
-    fs_touch,
     iceberg_format,
     local_frame,
+    publish_manifest,
     read_index_table,
-    read_table,
+    read_manifest,
     write_table,
 )
 
@@ -382,33 +394,6 @@ def assign_dense_ids(
     return out
 
 
-def _dl_sum_udf():
-    """Sum of a segment's varint dl blob — one value per segment row
-    (the stats_ledger's sum_dl source; never one row per doc). Built
-    lazily: decorating at import time needs an active SparkSession."""
-
-    @F.pandas_udf("double")
-    def dl_sum(blobs: pd.Series) -> pd.Series:
-        from yaii_spark.codec import varint_decode
-
-        return blobs.map(
-            lambda b: float(varint_decode(b).sum()) if b is not None else 0.0
-        )
-
-    return dl_sum
-
-
-def _filter_by_seg_ids(df: DataFrame, segs: list[int]) -> DataFrame:
-    """Restrict a seg_id-partitioned table to `segs`: an In-list filter
-    (static partition pruning — only those segments' directories are
-    ever listed/read) when the list is small, a broadcast semi-join for
-    very large lists (a 10^6-element In-list would bloat the plan)."""
-    if len(segs) <= 4096:
-        return df.filter(F.col("seg_id").isin([int(s) for s in segs]))
-    seg_df = local_frame(df.sparkSession, [(int(s),) for s in segs], "seg_id long")
-    return df.join(F.broadcast(seg_df), "seg_id", "left_semi")
-
-
 def _labeled(spark: SparkSession, desc: str, fn, *args, **kwargs):
     """Run fn under a thread-local Spark job description (guide §1.3:
     label your jobs). The build fans its independent writes out over a
@@ -426,148 +411,78 @@ def _labeled(spark: SparkSession, desc: str, fn, *args, **kwargs):
         sc.setJobDescription(None)
 
 
-def _seg_stats_df(spark: SparkSession, out_dir: str, segs: list[int] | None) -> DataFrame:
-    """(seg_id, n_docs, sum_dl) rows for `segs` (None = every durable
-    segment) — the stats_ledger payload. Distributed: n_docs comes from
-    the seg_meta column, sum_dl from one blob-decode per segment row."""
-    meta = read_index_table(spark, out_dir, "seg_meta")
-    if segs is not None:
-        meta = _filter_by_seg_ids(meta, segs)
-    return meta.select(
-        "seg_id", "n_docs", _dl_sum_udf()(F.col("dl_bin")).alias("sum_dl")
-    )
-
-
-def _check_append_geometry(spark: SparkSession, out_dir: str, seg_size: int) -> None:
+def _check_append_geometry(m: Manifest | None, seg_size: int) -> None:
     """Refuse to append with a seg_size different from the index's:
     segment geometry is GLOBAL (doc_id = seg_id*seg_size + local — the
     invariant every query path decodes against), so a mismatched append
     would derive doc ids that collide with or straddle existing
     segments. Bites after a merge, which multiplies seg_size by the
-    merge factor; callers must pass the merged size.
-
-    Fail-open ONLY when the commit marker says the index is incomplete
-    (a crashed build mid-corpus_stats-write — the replay legitimately
-    proceeds and rewrites it); on a COMPLETE index any read/format
-    error PROPAGATES — a guard that silently disarms on a transient FS
-    error would wave through the exact corruption it exists to stop.
-    One 1-row read per append; no-op on a not-yet-created index."""
-    from yaii_spark.storage import IndexCatalog
-
-    cat = IndexCatalog(spark, out_dir)
-    if not cat.exists():  # absent or incomplete (no commit marker)
-        return
-    existing = int(cat.corpus_stats().seg_size)  # format gate included
-    if existing != int(seg_size):
+    merge factor; callers must pass the merged size. No-op before the
+    first publish (`m` None)."""
+    if m is not None and m.seg_size != int(seg_size):
         raise ValueError(
             f"append with seg_size={int(seg_size)} onto an index built with "
-            f"seg_size={existing} — segment geometry is global "
+            f"seg_size={m.seg_size} — segment geometry is global "
             "(doc_id = seg_id*seg_size + local); pass the index's current "
             "seg_size (a merge multiplies it by the merge factor)"
         )
 
 
-def _scoped_postings(spark: SparkSession, out_dir: str, segs: list[int]) -> DataFrame:
-    """Postings restricted to `segs` (see _filter_by_seg_ids)."""
-    return _filter_by_seg_ids(read_index_table(spark, out_dir, "postings"), segs)
-
-
-def _write_term_stats(df: DataFrame, out_dir: str) -> None:
+def _write_term_stats(df: DataFrame, path: str) -> None:
     """The one term_stats writer: `df`'s (field, term, df, cf) rows as
-    one globally (field, term)-sorted run. The range-partitioned sort
-    writes at most spark.sql.shuffle.partitions files (AQE only merges
-    adjacent ranges), each sorted and covering a key range disjoint
-    from and ordered after the previous file's, so parquet min/max on
-    `field` and `term` prune a lookup to the row groups that can hold
-    its keys. The same sort re-establishes the layout when the input
-    is an existing dictionary: a plain read → write may pack several
-    files into one task and break the order."""
-    write_table(
-        df.select(*column_names("term_stats")).orderBy("field", "term"),
-        os.path.join(out_dir, "term_stats"),
+    one globally (field, term)-sorted run at `path` (a fresh
+    ``term_stats/<n>`` directory). The range-partitioned sort writes at
+    most spark.sql.shuffle.partitions files (AQE only merges adjacent
+    ranges), each sorted and covering a key range disjoint from and
+    ordered after the previous file's, so parquet min/max on `field`
+    and `term` prune a lookup to the row groups that can hold its keys.
+    The same sort re-establishes the layout when the input is an
+    existing dictionary: a plain read → write may pack several files
+    into one task and break the order."""
+    write_table(df.select(*column_names("term_stats")).orderBy("field", "term"), path)
+
+
+def _write_term_stats_full(post: DataFrame, path: str) -> None:
+    """term_stats recomputed from the postings rows `post` — the first
+    publish of an index, where no earlier dictionary exists."""
+    _write_term_stats(
+        post.groupBy("field", "term").agg(
+            F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
+        ),
+        path,
     )
 
 
-def _write_term_stats_full(spark: SparkSession, out_dir: str, post_all: DataFrame) -> None:
-    """Full term_stats recompute from ALL durable postings + stats_ledger
-    rewrite — the base-build path and the torn-fold recovery path.
-
-    The stats_folding marker brackets the (term_stats write → ledger
-    rewrite) pair: a crash in between leaves the marker, and the next
-    build repeats this full path instead of double-folding."""
-    ts_df = post_all.groupBy("field", "term").agg(
-        F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
-    )
-    marker = os.path.join(out_dir, "stats_folding")
-    fs_touch(spark, marker)
-    _write_term_stats(ts_df, out_dir)
-    # ledger = every durable segment (seg_meta universe — postings-free
-    # token-less segments still count docs), carrying its corpus-stat
-    # contribution (n_docs, sum_dl) so append-mode corpus stats are a
-    # tiny-ledger aggregate instead of a per-batch decode of EVERY
-    # segment's dl blob (~1 byte/doc → corpus-scale bytes per
-    # micro-batch at 10^12 docs)
-    write_table(
-        _seg_stats_df(spark, out_dir, None),
-        os.path.join(out_dir, "stats_ledger"),
-    )
-    fs_delete(spark, marker)
-
-
-def _fold_term_stats(spark: SparkSession, out_dir: str, new_segs: list[int]) -> None:
-    """Fold NEW segments' postings into the term_stats dictionary
-    without re-reading the old segments' postings.
+def _fold_term_stats(spark: SparkSession, out_dir: str, prev: Manifest,
+                     post: DataFrame, path: str) -> None:
+    """Fold the new segments' postings rows `post` into `prev`'s
+    dictionary, written as the fresh version directory `path`, without
+    re-reading the old segments' postings: the union of the previous
+    version's rows and `post`'s (df_local, cf_local) rows, summed per
+    (field, term) — sum is associative, so the result is value-identical
+    to a full recompute. The previous version is never written, so a
+    crash before the manifest publish leaves it intact.
 
     The fold is O(dictionary) + O(batch postings): it rewrites the
     whole sorted run. A partial rewrite would save nothing at this
     size: one 512-doc ingest batch has 3,982 distinct (field, term)
     keys, which touched all 256 buckets of the old hash-bucketed
     layout, so every commit already rewrote the whole dictionary.
-    1. union ONLY `new_segs`' postings (partition-pruned read) with the
-       existing dictionary and aggregate (sum is associative, so the
-       result is value-identical to a full recompute), stage to
-       `term_stats_delta_tmp` — Spark cannot overwrite a path that
-       feeds the same job, and the durable stage makes the overwrite
-       restartable,
-    2. set the stats_folding marker, overwrite term_stats from the
-       stage (_write_term_stats), append `new_segs` to stats_ledger,
-       clear the marker and drop the stage.
-    A crash while the marker is set is detected by the next build,
-    which recovers with a full recompute (build_index's `use_fold`
-    gate).
 
     Stats-lag note: after a purging merge, term_stats deliberately lags
     the expunged postings (merge_segments carries it unchanged so scores
     stay byte-identical). The fold PRESERVES that lag — it only adds the
-    new segments' counts — whereas a full recompute would refresh it.
-    On a purge-free index the two paths are value-identical."""
-    tmp = "term_stats_delta_tmp"
-    tmp_path = os.path.join(out_dir, tmp)
-    marker = os.path.join(out_dir, "stats_folding")
-    delta = _scoped_postings(spark, out_dir, new_segs).select(
+    new segments' counts."""
+    delta = post.select(
         "field", "term", F.col("df_local").alias("df"), F.col("cf_local").alias("cf")
     )
     merged = (
-        read_index_table(spark, out_dir, "term_stats")
+        read_index_table(spark, out_dir, prev.term_stats_table)
         .unionByName(delta)
         .groupBy("field", "term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
     )
-    write_table(merged, tmp_path)
-    fs_touch(spark, marker)
-    _write_term_stats(read_index_table(spark, out_dir, tmp), out_dir)
-    # ledger rows carry the new segments' corpus-stat contribution —
-    # committed in the SAME marker-guarded unit as the dictionary
-    # overwrite, so corpus stats and the dictionary can never disagree
-    # about which segments are accounted (postings-free segments fold
-    # zero term rows but still append their doc counts here)
-    write_table(
-        _seg_stats_df(spark, out_dir, new_segs),
-        os.path.join(out_dir, "stats_ledger"),
-        mode="append",
-    )
-    fs_delete(spark, marker)
-    fs_delete(spark, tmp_path)
+    _write_term_stats(merged, path)
 
 
 def build_index(
@@ -585,7 +500,7 @@ def build_index(
     max_segments: int | None = None,
     postings_shards: int | None = None,
     append: bool = False,
-    _geometry_checked: bool = False,
+    _sink_batch: int | None = None,
 ) -> dict:
     """Build (or resume) the inverted index for `pages` under `out_dir`.
 
@@ -601,22 +516,28 @@ def build_index(
     (dl, the BM25 norm) always comes from `text_col`'s standard
     tokenization.
 
-    `max_segments` limits how many pending segments this invocation
-    builds — used by the resumability test to simulate a mid-build kill
-    (FIXTURES.md §6).
+    The build writes the pending segments' docs, seg_meta and postings
+    partitions and a new term_stats version, then publishes the next
+    manifest (storage.publish_manifest), which adds those segments and
+    their doc counts and dl sums to the previous version's. Resuming
+    skips the segments the newest manifest already names; a crash
+    before the publish leaves the previous version whole, and the rerun
+    overwrites what the crashed run wrote (dynamic partition overwrite).
+    A run with nothing pending publishes nothing. `max_segments` limits
+    how many pending segments this invocation builds — used by the
+    resumability test to simulate a mid-build kill (FIXTURES.md §6).
 
     `append=True` is the incremental-ingest mode (streaming.
     index_append_sink): `pages` is a NEW batch occupying fresh segment
-    ids. Per-batch maintenance never re-reads old postings: term_stats
-    folds only the new segments' aggregates into the sorted dictionary
-    (_fold_term_stats + stats_ledger, O(dictionary) per batch), and the final
-    corpus_stats (n_docs, avgdl) aggregate the ledger's per-segment
-    (n_docs, sum_dl) rows — the durable union of every batch — instead
-    of re-decoding every segment's dl blob (idempotent under retries;
-    a crashed batch's segments self-heal into both on the next fold).
-    Appended segments need no bound upkeep: their block impacts are
-    raw (tf, dl) pairs, so BM25 pruning derives valid block bounds
-    under whatever corpus avgdl is current when a query runs.
+    ids, checked against the index's seg_size. Every build after the
+    first publish folds only the new segments' postings into the
+    previous dictionary (_fold_term_stats, O(dictionary) per batch),
+    never re-reading old postings; the first one aggregates its own
+    postings (_write_term_stats_full). `_sink_batch` is the streaming
+    sink's micro-batch id, recorded in the manifest with the batch.
+    Appended segments need no bound upkeep: their block impacts are raw
+    (tf, dl) pairs, so BM25 pruning derives valid block bounds under
+    whatever corpus avgdl is current when a query runs.
     """
     if append and not resume:
         raise ValueError("append=True requires resume=True (checkpoint append)")
@@ -651,12 +572,6 @@ def build_index(
             )
         fn = analyzer if callable(analyzer) else ANALYZERS[analyzer]
         specs.append((i, tuple(udf_cols.index(c) for c in srcs_of[f]), fn))
-    # _geometry_checked: the streaming committer already validated the
-    # geometry before making the segment range durable — re-checking
-    # here would re-read corpus_stats and re-probe the commit marker on
-    # every micro-batch for the same invariant
-    if append and not _geometry_checked:
-        _check_append_geometry(spark, out_dir, seg_size)
     if postings_shards is None:
         # shards exist to bound one encode task's memory to ~64k docs'
         # postings; small segments don't need the split, and each extra
@@ -666,15 +581,17 @@ def build_index(
         # collapse to one group per segment.
         postings_shards = max(1, min(16, seg_size // 65536))
     t0 = time.time()
-    # a non-resuming build over an existing index dir must not inherit
-    # stale partitions: dynamic overwrite only replaces seg_ids present
-    # in the NEW input, and term_stats is then recomputed from ALL
-    # on-disk postings (old ∪ new) — silent stats corruption. Drop the
-    # directory first, through the storage seam's Hadoop FileSystem API
-    # so the delete is real on cluster/object-store paths too (the same
-    # recursive drop an Iceberg REPLACE TABLE performs).
+    # a non-resuming build over an existing index dir starts a new
+    # index: its manifest would make this build skip the segments it
+    # names, and the old files would linger. Drop the directory first,
+    # through the storage seam's Hadoop FileSystem API so the delete is
+    # real on cluster/object-store paths too (the same recursive drop an
+    # Iceberg REPLACE TABLE performs).
     if not resume and fs_exists(spark, out_dir):
         fs_delete(spark, out_dir)
+    prev = read_manifest(spark, out_dir)  # format gate included
+    if append:
+        _check_append_geometry(prev, seg_size)
     # dynamic partition overwrite (stage+move per partition dir) only
     # pays off when overwriting a partially-built index; fresh builds
     # use the cheap static path. Set per write, never on the session.
@@ -714,307 +631,225 @@ def build_index(
     # postings) reuses the cached narrow tokenized batch
     docs = docs.persist()
 
-    # ---- corpus stats + segment list in ONE job (stable across resumes) ----
-    stats_row = _labeled(
+    # ---- per-segment doc counts and dl sums in ONE job ----
+    seg_rows = _labeled(
         spark, "build:tokenize+stats",
-        lambda: docs.agg(
-            F.count("*").alias("n"),
-            F.avg("dl").alias("avgdl"),
-            F.collect_set("seg_id").alias("segs"),
-        ).collect(),
-    )[0]
-    n_total = int(stats_row["n"])
-    if n_total == 0:
+        lambda: docs.groupBy("seg_id")
+        .agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl"))
+        .collect(),
+    )
+    if not seg_rows:
         # an upstream filter that matched nothing: fail loudly instead
-        # of writing a half-formed index (avgdl undefined, no postings
-        # dir) that exists() would later misreport
+        # of publishing an index with no docs (avgdl undefined)
+        docs.unpersist()
         raise ValueError("build_index: input has 0 rows — nothing to index")
-    avgdl = float(stats_row["avgdl"])
-    all_segs = sorted(stats_row["segs"])
+    seg_stats = {int(r.seg_id): (int(r.n), int(r.sum_dl)) for r in seg_rows}
+    all_segs = sorted(seg_stats)
 
-    # ---- resume: skip segments already checkpointed. pending is
-    # computed as an ANTI-JOIN against the done checkpoints and only the
-    # (bounded: ⊆ this batch's segments) pending list is collected — the
-    # done set accumulates over every batch ever appended (~10^6 rows at
-    # the design point) and must never be driver-materialized
-    # (VERDICT r4 #3) ----
-    ckpt_path = os.path.join(out_dir, "checkpoints")
-    pending = list(all_segs)
-    if resume and fs_exists(spark, ckpt_path):
-        try:
-            seg_df = local_frame(spark, [(int(s),) for s in all_segs], "seg_id long")
-            done_df = (
-                read_index_table(spark, out_dir, "checkpoints")
-                .filter("status = 'done'")
-                .select("seg_id")
-            )
-            pending = sorted(
-                r.seg_id for r in seg_df.join(done_df, "seg_id", "left_anti").collect()
-            )
-        except Exception:
-            pending = list(all_segs)
+    # ---- resume: skip the segments the newest manifest names ----
+    live = set(prev.segments) if prev is not None else set()
+    pending = [s for s in all_segs if s not in live]
     n_skipped = len(all_segs) - len(pending)
     if max_segments is not None:
         pending = pending[:max_segments]
 
     metrics = {
-        "n_docs_total": n_total,
-        "avgdl": avgdl,
         "segments_total": len(all_segs),
         "segments_skipped": n_skipped,
         "segments_built": len(pending),
     }
 
-    if pending:
-        pend_df = local_frame(spark, [(int(s),) for s in pending], "seg_id long")
-        # a build that covers every input segment (every fresh build
-        # and every append batch) needs no pending filter at all
-        covers_all = len(pending) == len(all_segs)
+    if not pending:
+        # every input segment is live already: nothing to write or publish
+        docs.unpersist()
+        if prev is not None:
+            metrics.update(n_docs_total=prev.n_docs, avgdl=prev.stats.avgdl)
+        metrics.update(wall_sec=time.time() - t0, docs_per_sec=0.0)
+        return metrics
 
-        def pending_only(df: DataFrame) -> DataFrame:
-            return df if covers_all else _filter_by_seg_ids(df, pending)
+    pend_df = local_frame(spark, [(int(s),) for s in pending], "seg_id long")
+    # a build that covers every input segment (every fresh build
+    # and every append batch) needs no pending filter at all
+    covers_all = len(pending) == len(all_segs)
 
-        batch = pending_only(docs)
+    def pending_only(df: DataFrame) -> DataFrame:
+        return df if covers_all else filter_segments(df, pending)
 
-        # ---- docs table (stored fields) — read straight from SOURCE:
-        # seg/local ids are pure arithmetic on id_col, so the stored
-        # columns (html binaries included) never pass through the
-        # cached tokenized batch; this write is a column-pruned
-        # source-to-sink copy ----
-        stored = [
-            c for c in (stored_cols or [c for c in pages.columns if c != id_col])
-        ]
-        docs_df = pending_only(
-            pages.withColumn(
-                "seg_id", (F.col(id_col) / F.lit(seg_size)).cast("long")
-            ).withColumn(
-                "local_id",
-                (F.col(id_col) - F.col("seg_id") * F.lit(seg_size)).cast("long"),
-            )
-        ).select(*dict.fromkeys([id_col, "seg_id", "local_id", *stored]))
+    batch = pending_only(docs)
 
-        # ---- per-segment doc-length blobs (JVM agg + tiny encode UDF:
-        # one row per segment reaches Python, not one per doc) ----
-        meta_df = (
-            batch.groupBy("seg_id", "base_doc_id")
-            .agg(
-                F.sort_array(F.collect_list(F.struct("local_id", "dl"))).alias("ld")
-            )
-            .select("seg_id", "base_doc_id", _encode_dl_udf(F.col("ld")).alias("m"))
-            .select(
-                "seg_id", F.col("m.n_docs").alias("n_docs"), "base_doc_id",
-                F.col("m.dl_bin").alias("dl_bin"),
-                F.lit(None).cast("binary").alias("deleted_bin"),
-            )
+    # ---- docs table (stored fields) — read straight from SOURCE:
+    # seg/local ids are pure arithmetic on id_col, so the stored
+    # columns (html binaries included) never pass through the
+    # cached tokenized batch; this write is a column-pruned
+    # source-to-sink copy ----
+    stored = [
+        c for c in (stored_cols or [c for c in pages.columns if c != id_col])
+    ]
+    docs_df = pending_only(
+        pages.withColumn(
+            "seg_id", (F.col(id_col) / F.lit(seg_size)).cast("long")
+        ).withColumn(
+            "local_id",
+            (F.col(id_col) - F.col("seg_id") * F.lit(seg_size)).cast("long"),
         )
+    ).select(*dict.fromkeys([id_col, "seg_id", "local_id", *stored]))
 
-        # ---- postings (multi-field: yaii indexes every searchable
-        # field separately + the £_ALL catch-all): the analyzer UDF
-        # already inverted each doc into per-shard packed entry blobs —
-        # explode to ONE row per (doc, shard) (≈16 rows/doc instead of
-        # ~|unique terms| struct rows), shuffle by (seg, shard), decode
-        # + encode per task. Sharding by term hash bounds task memory:
-        # one task never holds a whole 2^20-doc segment's postings, and
-        # shards stay term-complete so each (field, term) is built
-        # exactly once. Hashing the packed rows by seg_id alone satisfies
-        # the (seg_id, shard) grouping, so the encoded rows reach the
-        # partitioned write already clustered by segment: ONE shuffle,
-        # one file per segment. ----
-        packed = batch.select(
-            "seg_id",
-            F.col(id_col).alias("doc_id"),
-            "dl",
-            F.explode("_dp.blobs").alias("b"),
-        ).select(
-            "seg_id", "doc_id", "dl",
-            F.col("b.shard").alias("shard"),
-            F.col("b.data").alias("data"),
+    # ---- per-segment doc-length blobs (JVM agg + tiny encode UDF:
+    # one row per segment reaches Python, not one per doc) ----
+    meta_df = (
+        batch.groupBy("seg_id", "base_doc_id")
+        .agg(
+            F.sort_array(F.collect_list(F.struct("local_id", "dl"))).alias("ld")
         )
-        enc = packed.repartition("seg_id").groupBy("seg_id", "shard").applyInPandas(
-            _make_packed_encoder(names),
-            schema=TABLE_SCHEMAS["postings"],
+        .select("seg_id", "base_doc_id", _encode_dl_udf(F.col("ld")).alias("m"))
+        .select(
+            "seg_id", F.col("m.n_docs").alias("n_docs"), "base_doc_id",
+            F.col("m.dl_bin").alias("dl_bin"),
+            F.lit(None).cast("binary").alias("deleted_bin"),
         )
-        # the three table writes are independent (all read the persisted
-        # tokenized batch, whose blocks were materialized by the stats
-        # job above) — submit them as CONCURRENT Spark jobs so their
-        # driver-side latencies (planning, file listing, commit) overlap
-        # and idle cores of the shorter jobs feed the longest one.
-        # Checkpoints stay strictly AFTER all three (resume correctness).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(
-                    _labeled, spark, "build:docs-write",
-                    write_table, docs_df, os.path.join(out_dir, "docs"),
-                    partition_by=["seg_id"],
-                    partition_overwrite=overwrite_mode,
-                ),
-                pool.submit(
-                    _labeled, spark, "build:seg-meta-write",
-                    write_table, meta_df, os.path.join(out_dir, "seg_meta"),
-                    partition_by=["seg_id"],
-                    partition_overwrite=overwrite_mode,
-                ),
-                pool.submit(
-                    _labeled, spark, "build:postings-write",
-                    write_table,
-                    # the partitioned writer needs its rows ordered by
-                    # seg_id: a sort led by anything else gets a
-                    # writer-side seg_id sort that scatters the
-                    # (field, term) order the row-group pruning needs
-                    enc.sortWithinPartitions("seg_id", "field", "term"),
-                    os.path.join(out_dir, "postings"),
-                    partition_by=["seg_id"],
-                    partition_overwrite=overwrite_mode,
-                ),
-            ]
-            for f in futs:
-                f.result()
-
-        # ---- checkpoints / lineage (after postings are durable) ----
-        # the lineage counts read ONLY the batch's segments' postings:
-        # partition-pruned in append mode (the sink's per-batch hot
-        # path must never rescan the whole index), the full cached read
-        # in batch mode where the term-stats recompute needs it anyway.
-        # Lineage rows are written distributed (no per-segment collect —
-        # at 10^6 segments the driver never materializes the counts).
-        # Both consumers (seg_counts, _write_term_stats_full) aggregate
-        # only these five narrow columns — project BEFORE caching so the
-        # read-back scan prunes the posting/position blob columns (the
-        # overwhelming majority of the table's bytes) and the cache
-        # holds stats-sized rows, not the whole index
-        # (the left join from pend_df keeps pending segments only)
-        _STATS_COLS = ["seg_id", "field", "term", "df_local", "cf_local"]
-        post_scope = (
-            _scoped_postings(spark, out_dir, pending)
-            if append
-            else read_index_table(spark, out_dir, "postings")
-        ).select(*_STATS_COLS).cache()
-        wall = time.time() - t0
-        seg_counts = post_scope.groupBy("seg_id").agg(
-            F.sum("df_local").alias("n_postings_docs"), F.count("*").alias("n_terms")
-        )
-        ck = (
-            pend_df.join(seg_counts, "seg_id", "left")
-            .na.fill(0, ["n_postings_docs", "n_terms"])
-            .select(
-                "seg_id", "n_postings_docs", "n_terms",
-                F.lit(float(wall)).alias("wall_sec"),
-                F.lit("done").alias("status"),
-            )
-        )
-        ck_mode = "append" if (resume and fs_exists(spark, ckpt_path)) else "overwrite"
-    else:
-        ck = None
-        post_scope = None
-
-    # ---- corpus-wide term stats. Append mode folds ONLY the new
-    # segments' aggregates into the sorted dictionary
-    # (_fold_term_stats — O(batch postings) + O(dictionary) per
-    # micro-batch, never a re-read of the old segments' postings);
-    # batch mode (and fold-recovery: torn-fold marker present, or a
-    # pre-ledger index) recomputes from ALL durable postings
-    # (_write_term_stats_full — correct under resume because postings
-    # are the source of truth). `unfolded` is every durable segment the
-    # ledger doesn't cover yet — normally exactly this batch's pending
-    # list, but a crash between a previous batch's postings commit and
-    # its fold self-heals here. ----
-    from yaii_spark.storage import FORMAT_VERSION
-
-    marker_path = os.path.join(out_dir, "stats_folding")
-    ledger_path = os.path.join(out_dir, "stats_ledger")
-    use_fold = (
-        append
-        and not fs_exists(spark, marker_path)
-        and fs_exists(spark, ledger_path)
     )
-    unfolded: list[int] = []
-    if use_fold:
-        folded = read_index_table(spark, out_dir, "stats_ledger").select("seg_id")
-        # durable universe = prior checkpoints ∪ THIS batch's pending
-        # (its checkpoint rows land concurrently with the fold, in the
-        # next pool). Checkpoints are UNPARTITIONED — one row per built
-        # segment, the same source resume trusts — unlike seg_meta,
-        # whose per-segment partition dirs make the listing itself
-        # O(#segments) FS calls per batch. A checkpointed segment's
-        # postings/meta are durable (written before the ck pool); a
-        # crashed batch that died before its checkpoints is re-driven
-        # whole by the sink's replay, which re-enters here.
-        seg_ids = (
-            read_index_table(spark, out_dir, "checkpoints")
-            .filter("status = 'done'")
-            .select("seg_id")
-            .union(local_frame(spark, [(int(s),) for s in pending], "seg_id long"))
-            .distinct()
-        )
-        unfolded = sorted(
-            r.seg_id for r in seg_ids.join(folded, "seg_id", "left_anti").collect()
-        )
 
-    def _ts_task():
-        if use_fold:
-            if unfolded:
-                _fold_term_stats(spark, out_dir, unfolded)
-            return
-        post_all = (
-            post_scope
-            if (post_scope is not None and not append)
-            else read_index_table(spark, out_dir, "postings")
-        )
-        _write_term_stats_full(spark, out_dir, post_all)
-
-    # lineage (ck) and term_stats are independent (in batch mode they
-    # share the cached post_scope; concurrent computes of the same
-    # cached blocks are block-manager-serialized) — overlap them.
-    # corpus_stats is the index-completeness COMMIT MARKER
-    # (IndexCatalog.exists checks it), so it is written strictly AFTER
-    # both futures resolve: a failed term_stats/lineage write must never
-    # leave an index that reports complete (readers would silently prune
-    # every term to empty).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_labeled, spark, "build:term-stats", _ts_task)]
-        if ck is not None:
-            futs.append(pool.submit(
-                _labeled, spark, "build:lineage",
-                write_table, ck, ckpt_path, mode=ck_mode,
-            ))
+    # ---- postings (multi-field: yaii indexes every searchable
+    # field separately + the £_ALL catch-all): the analyzer UDF
+    # already inverted each doc into per-shard packed entry blobs —
+    # explode to ONE row per (doc, shard) (≈16 rows/doc instead of
+    # ~|unique terms| struct rows), shuffle by (seg, shard), decode
+    # + encode per task. Sharding by term hash bounds task memory:
+    # one task never holds a whole 2^20-doc segment's postings, and
+    # shards stay term-complete so each (field, term) is built
+    # exactly once. Hashing the packed rows by seg_id alone satisfies
+    # the (seg_id, shard) grouping, so the encoded rows reach the
+    # partitioned write already clustered by segment: ONE shuffle,
+    # one file per segment. ----
+    packed = batch.select(
+        "seg_id",
+        F.col(id_col).alias("doc_id"),
+        "dl",
+        F.explode("_dp.blobs").alias("b"),
+    ).select(
+        "seg_id", "doc_id", "dl",
+        F.col("b.shard").alias("shard"),
+        F.col("b.data").alias("data"),
+    )
+    enc = packed.repartition("seg_id").groupBy("seg_id", "shard").applyInPandas(
+        _make_packed_encoder(names),
+        schema=TABLE_SCHEMAS["postings"],
+    )
+    # the three table writes are independent (all read the persisted
+    # tokenized batch, whose blocks were materialized by the stats
+    # job above) — submit them as CONCURRENT Spark jobs so their
+    # driver-side latencies (planning, file listing, commit) overlap
+    # and idle cores of the shorter jobs feed the longest one.
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futs = [
+            pool.submit(
+                _labeled, spark, "build:docs-write",
+                write_table, docs_df, os.path.join(out_dir, "docs"),
+                partition_by=["seg_id"],
+                partition_overwrite=overwrite_mode,
+            ),
+            pool.submit(
+                _labeled, spark, "build:seg-meta-write",
+                write_table, meta_df, os.path.join(out_dir, "seg_meta"),
+                partition_by=["seg_id"],
+                partition_overwrite=overwrite_mode,
+            ),
+            pool.submit(
+                _labeled, spark, "build:postings-write",
+                write_table,
+                # the partitioned writer needs its rows ordered by
+                # seg_id: a sort led by anything else gets a
+                # writer-side seg_id sort that scatters the
+                # (field, term) order the row-group pruning needs
+                enc.sortWithinPartitions("seg_id", "field", "term"),
+                os.path.join(out_dir, "postings"),
+                partition_by=["seg_id"],
+                partition_overwrite=overwrite_mode,
+            ),
+        ]
         for f in futs:
             f.result()
-    if append:
-        # corpus stats over the durable UNION of every appended batch —
-        # aggregated from the stats_ledger (one tiny row per segment,
-        # complete after _ts_task folded/recomputed), NOT by re-decoding
-        # every segment's dl blob: those blobs are ~1 byte/doc, so the
-        # per-batch blob scan this replaces read corpus-scale BYTES
-        # (~1 TB per micro-batch at 10^12 docs) even though it was only
-        # 10^6 rows (r5; the last O(corpus) term in the append path)
-        srow = (
-            read_index_table(spark, out_dir, "stats_ledger")
-            .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
-            .collect()[0]
-        )
-        metrics["n_docs_batch"] = n_total
-        n_total = int(srow["n"])
-        avgdl = float(srow["s"]) / n_total
-        metrics["n_docs_total"] = n_total
-        metrics["avgdl"] = avgdl
-    cs_df = local_frame(
-        spark,
-        [(n_total, avgdl, float(k1), float(b), int(seg_size), BLOCK_SIZE,
-          FORMAT_VERSION)],
-        TABLE_SCHEMAS["corpus_stats"],
-    )
-    write_table(cs_df, os.path.join(out_dir, "corpus_stats"))
-    if post_scope is not None:
-        post_scope.unpersist()
 
+    # ---- lineage and term stats from the new segments' postings ----
+    # Both consumers aggregate only these five narrow columns — project
+    # BEFORE caching so the read-back scan prunes the posting/position
+    # blob columns (the overwhelming majority of the table's bytes).
+    # An append (and a partial build) reads only its segments'
+    # partitions: the sink's per-batch hot path never rescans the index.
+    # Lineage rows are written distributed (no per-segment collect — at
+    # 10^6 segments the driver never materializes the counts); the left
+    # join from pend_df keeps token-free segments.
+    post = read_index_table(spark, out_dir, "postings")
+    post_scope = (
+        filter_segments(post, pending) if append or not covers_all else post
+    ).select("seg_id", "field", "term", "df_local", "cf_local").cache()
+    wall = time.time() - t0
+    seg_counts = post_scope.groupBy("seg_id").agg(
+        F.sum("df_local").alias("n_postings_docs"), F.count("*").alias("n_terms")
+    )
+    ck = (
+        pend_df.join(seg_counts, "seg_id", "left")
+        .na.fill(0, ["n_postings_docs", "n_terms"])
+        .select(
+            "seg_id", "n_postings_docs", "n_terms",
+            F.lit(float(wall)).alias("wall_sec"),
+            F.lit("done").alias("status"),
+        )
+    )
+    ckpt_path = os.path.join(out_dir, "checkpoints")
+    ck_mode = "append" if fs_exists(spark, ckpt_path) else "overwrite"
+
+    # ---- the new term_stats version: the previous version plus the new
+    # segments' postings (_fold_term_stats — O(batch postings) +
+    # O(dictionary), never a re-read of the old segments' postings), or
+    # the new postings alone on the first publish ----
+    version = prev.version + 1 if prev is not None else 1
+    ts_path = os.path.join(out_dir, "term_stats", str(version))
+
+    def _ts_task():
+        if prev is not None:
+            _fold_term_stats(spark, out_dir, prev, post_scope, ts_path)
+        else:
+            _write_term_stats_full(post_scope, ts_path)
+
+    # lineage (ck) and term_stats are independent (they share the cached
+    # post_scope; concurrent computes of the same cached blocks are
+    # block-manager-serialized) — overlap them
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [
+            pool.submit(_labeled, spark, "build:term-stats", _ts_task),
+            pool.submit(
+                _labeled, spark, "build:lineage",
+                write_table, ck, ckpt_path, mode=ck_mode,
+            ),
+        ]
+        for f in futs:
+            f.result()
+    post_scope.unpersist()
     docs.unpersist()
+
+    # ---- publish: the commit point. Everything above is invisible to
+    # readers until the manifest names it ----
+    n_new = sum(seg_stats[s][0] for s in pending)
+    m = Manifest(
+        version=version,
+        n_docs=(prev.n_docs if prev is not None else 0) + n_new,
+        sum_dl=(prev.sum_dl if prev is not None else 0)
+        + sum(seg_stats[s][1] for s in pending),
+        k1=float(k1),
+        b=float(b),
+        seg_size=int(seg_size),
+        block_size=BLOCK_SIZE,
+        segments=tuple(sorted(live.union(pending))),
+        sink_batch=_sink_batch if _sink_batch is not None
+        else (prev.sink_batch if prev is not None else None),
+    )
+    publish_manifest(spark, out_dir, m)
+    metrics.update(n_docs_total=m.n_docs, avgdl=m.stats.avgdl)
+    if append:
+        metrics["n_docs_batch"] = n_new
     metrics["wall_sec"] = time.time() - t0
-    built = metrics.get("n_docs_batch", n_total)  # batch size in append mode
-    metrics["docs_per_sec"] = built / metrics["wall_sec"] if metrics["wall_sec"] else 0.0
+    metrics["docs_per_sec"] = n_new / metrics["wall_sec"] if metrics["wall_sec"] else 0.0
     return metrics
 
 
@@ -1024,8 +859,10 @@ def delete_docs_df(spark: SparkSession, index_dir: str, ids: DataFrame,
     (e.g. the output of a dedup cluster assignment filtered to
     non-survivors) — tombstone rows are derived and written without the
     ids ever touching the driver (VERDICT r3 #6: a 100-TB bulk delete
-    can tombstone billions of docs). Returns the count added."""
-    from yaii_spark.storage import IndexCatalog
+    can tombstone billions of docs). Returns the count added: the
+    distinct ids, observed in the pass that writes them (no second
+    read of `ids`)."""
+    from pyspark.sql import Observation
 
     seg_size = IndexCatalog(spark, index_dir).corpus_stats().seg_size
     doc_id = F.col(id_col).cast("long")
@@ -1035,8 +872,13 @@ def delete_docs_df(spark: SparkSession, index_dir: str, ids: DataFrame,
     # range-partitioned by seg_id: each file covers a narrow seg_id
     # range, so a query task's min/max filter skips the other files
     ranged = df.repartitionByRange("seg_id", "doc_id").distinct()
-    write_table(ranged.sortWithinPartitions("seg_id", "doc_id"), path, mode=mode)
-    return df.distinct().count()  # no second range-bounds sample
+    added = Observation()
+    write_table(
+        ranged.observe(added, F.count(F.lit(1)).alias("n"))
+        .sortWithinPartitions("seg_id", "doc_id"),
+        path, mode=mode,
+    )
+    return int(added.get["n"])
 
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> int:
@@ -1083,14 +925,17 @@ def merge_segments(
        term_stats / n_docs / avgdl carry over UNCHANGED, keeping every
        query (BM25 scores included) byte-identical pre/post merge —
        the same stats-lag Lucene accepts until a stats refresh.
+    4. The merged index is published like a build: its tables and a
+       copy of the term_stats version first, then the next manifest of
+       `out_dir`, naming the merged segments. The streaming sink's
+       committed batch id is not carried: a stream appending to
+       `out_dir` is a new stream.
     """
-    # IndexCatalog.corpus_stats enforces the format_version check —
-    # merging a pre-v5 index must fail loudly, not emit garbage
-    from yaii_spark.storage import FORMAT_VERSION, IndexCatalog
-
+    # reading the manifest enforces the format gate — merging an index
+    # of another format must fail loudly, not emit garbage
     cat_in = IndexCatalog(spark, index_dir)
-    stats = cat_in.corpus_stats()
-    seg_size, block_size = stats.seg_size, stats.block_size
+    m_in = cat_in.manifest()
+    seg_size, block_size = m_in.seg_size, m_in.block_size
     new_size = seg_size * factor
 
     meta = cat_in.seg_meta()
@@ -1104,12 +949,12 @@ def merge_segments(
     # over-compaction.
     import warnings
 
-    segs = [r.seg_id for r in meta.select("seg_id").collect()]
-    n_before, n_after_est = len(segs), len({s // factor for s in segs})
+    new_segs = sorted({s // factor for s in m_in.segments})
+    n_before, n_after = len(m_in.segments), len(new_segs)
     par = spark.sparkContext.defaultParallelism
-    if n_after_est < par:
+    if n_after < par:
         warnings.warn(
-            f"merge_segments: factor {factor} leaves {n_after_est} segments "
+            f"merge_segments: factor {factor} leaves {n_after} segments "
             f"< defaultParallelism ({par}); boolean, phrase and BM25 "
             f"queries run at most one task per segment, so this caps their "
             f"task count — consider factor ≤ {max(1, n_before // par)}",
@@ -1265,7 +1110,7 @@ def merge_segments(
     )
 
     # docs table carries over re-keyed — minus expunged docs
-    docs = read_table(spark, os.path.join(index_dir, "docs"))
+    docs = cat_in.docs()
     if tomb is not None:
         docs = docs.join(tomb.select("doc_id"), "doc_id", "left_anti")
     write_table(
@@ -1273,25 +1118,6 @@ def merge_segments(
         .withColumn("local_id", F.col("doc_id") - F.col("seg_id") * F.lit(new_size)),
         os.path.join(out_dir, "docs"),
         partition_by=["seg_id"],
-    )
-    # corpus-wide term stats / n_docs / avgdl carry over UNCHANGED even
-    # when deletes are expunged (see docstring: keeps scores identical).
-    # The parquet run is already sorted into disjoint files: copy them.
-    # Iceberg metadata names its data files by absolute path, so that
-    # branch rewrites the run instead.
-    if iceberg_format(spark):
-        _write_term_stats(read_index_table(spark, index_dir, "term_stats"), out_dir)
-    else:
-        fs_copy(spark, os.path.join(index_dir, "term_stats"), os.path.join(out_dir, "term_stats"))
-    # stats_ledger: the carried dictionary covers every merged segment,
-    # so the first post-merge append folds incrementally instead of
-    # falling back to a full recompute (_fold_term_stats). Rows carry
-    # (n_docs, sum_dl) from the MERGED seg_meta — purged docs keep
-    # their dl values in dl_bin, so the ledger totals equal the
-    # carried-over corpus stats (the same stats lag, by construction).
-    write_table(
-        _seg_stats_df(spark, out_dir, None),
-        os.path.join(out_dir, "stats_ledger"),
     )
     post_new = read_index_table(spark, out_dir, "postings")
     ck = post_new.groupBy("seg_id").agg(
@@ -1301,20 +1127,22 @@ def merge_segments(
         F.lit(0.0).alias("wall_sec"), F.lit("done").alias("status"),
     )
     write_table(ck, os.path.join(out_dir, "checkpoints"))
-    # NO tombstone carry-over: deletes were expunged above (holes are
-    # recorded in seg_meta.deleted_bin for the NOT/ALL universe).
-    # corpus_stats is written STRICTLY LAST — it is the commit marker
-    # IndexCatalog.exists() trusts, and a crash before this point must
-    # leave an index that reports incomplete, not one missing its
-    # checkpoints (ADVICE r3: same ordering invariant as build_index).
-    write_table(
-        local_frame(
-            spark,
-            [(stats.n_docs, stats.avgdl, stats.k1, stats.b, new_size, block_size,
-              FORMAT_VERSION)],
-            TABLE_SCHEMAS["corpus_stats"],
-        ),
-        os.path.join(out_dir, "corpus_stats"),
-    )
-    n_after = read_index_table(spark, out_dir, "seg_meta").count()
+    # corpus-wide term stats / n_docs / avgdl carry over UNCHANGED even
+    # when deletes are expunged (see docstring: keeps scores identical).
+    # The parquet run is already sorted into disjoint files: copy them.
+    # Iceberg metadata names its data files by absolute path, so that
+    # branch rewrites the run instead. NO tombstone carry-over: deletes
+    # were expunged above (holes are recorded in seg_meta.deleted_bin
+    # for the NOT/ALL universe).
+    out_prev = read_manifest(spark, out_dir)
+    version = out_prev.version + 1 if out_prev is not None else 1
+    ts_path = os.path.join(out_dir, "term_stats", str(version))
+    if iceberg_format(spark):
+        _write_term_stats(read_index_table(spark, index_dir, m_in.term_stats_table), ts_path)
+    else:
+        fs_copy(spark, os.path.join(index_dir, m_in.term_stats_table), ts_path)
+    publish_manifest(spark, out_dir, dataclasses.replace(
+        m_in, version=version, seg_size=new_size, segments=tuple(new_segs),
+        sink_batch=None,
+    ))
     return {"segments_before": n_before, "segments_after": n_after}

@@ -440,7 +440,7 @@ def bm25_topk(
         return local_frame(spark, [], "doc_id long, score double")
 
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
-    # block size travels with the index (corpus_stats.block_size): the
+    # block size travels with the index (the manifest's block_size): the
     # bound is only rank-safe when it matches what the writer used
     block = stats.block_size
     use_prune = prune and mode == "or"
@@ -559,11 +559,8 @@ def more_like_this(
         raise ValueError(f"more_like_this: doc_id {doc_id} not found")
     tf = Counter(tokenize(rows[0][0] or ""))
     stats = cat.corpus_stats()
-    ts = {
-        r.term: int(r.df)
-        for r in cat.term_stats_query(
-            [(field, t) for t in tf]
-        ).collect()  # ≤ |doc| distinct terms
+    ts = {  # ≤ |doc| distinct terms
+        t: df for (_, t), (df, _) in cat.term_stats_for([(field, t) for t in tf]).items()
     }
     ranked = sorted(
         ((t, tf[t] * idf(stats.n_docs, ts[t])) for t in tf if t in ts),

@@ -3,29 +3,41 @@
 Layout (SURVEY.md §7.0), one line per table, each naming its
 declared schema (TABLE_SCHEMAS[...]):
 
+    _manifest/<n>    the index's only commit point (``Manifest``)
     docs/            stored fields by seg_id — schema inferred
     postings/        ["postings"]: blocked posting rows by seg_id, each
                      block with its (tf, dl) impacts (the BM25 bound)
     seg_meta/        ["seg_meta"]: one row per segment (dl_bin, holes)
-    term_stats/      ["term_stats"]: (df, cf) as one (field, term)-sorted run
-    corpus_stats/    ["corpus_stats"]: one row, the build commit marker
+    term_stats/<v>/  ["term_stats"]: (df, cf) as one (field, term)-sorted
+                     run, one directory per dictionary version
     checkpoints/     ["checkpoints"]: one lineage row per built segment
-    stats_ledger/    ["stats_ledger"]: segments folded into term_stats
+                     (written for operators, never read to decide)
     tombstones/      ["tombstones"]: deleted (seg_id, doc_id) rows
-    sink_ledger/     ["sink_ledger"]: streaming batch → doc-id range
-    term_stats_delta_tmp/  ["term_stats_delta_tmp"]: the fold's stage
-    stats_folding    marker file: a term_stats fold is mid-commit
+
+Every mutation (build, append commit, merge) first writes its new
+immutable files (segment partitions, a new term_stats version), then
+publishes ``_manifest/<n+1>``: a small JSON file holding the format
+version, the corpus stats, the live segment ids, the term_stats version
+in use and the streaming sink's last committed batch. The file is
+created only if absent, through the Hadoop FileSystem, by one writer at
+a time — Lucene's ``segments_N``, Iceberg's snapshot metadata. Readers
+read the newest manifest on the driver (no Spark job) and see only the
+segments and the term_stats version it names, so a crash anywhere
+before the publish leaves the previous version whole; the files such a
+crash wrote are ignored, then overwritten by the replay. Each publish
+deletes the manifests and term_stats versions it supersedes. Deletes
+append to ``tombstones`` and publish nothing.
 
 The term dictionary (term_stats) is one globally (field, term)-sorted
 run split into at most ``spark.sql.shuffle.partitions`` files whose key
 ranges are disjoint and ordered, like Lucene's sorted term dictionary:
-no partition directories, so a catalog open lists one directory on the
-driver, and a lookup prunes row groups by the parquet min/max of
-``field`` and ``term``. ``indexer._write_term_stats`` is its only writer
-(a merge copies the run's files).
+a lookup reads the run with pyarrow on the driver and prunes row groups
+by the parquet min/max of ``field`` and ``term``.
+``indexer._write_term_stats`` is its only writer (a merge copies the
+run's files).
 Postings files are (field, term)-sorted inside each seg_id partition.
-Frames the driver builds from Python lists (segment lists, the
-corpus_stats row, ledger rows) are JVM LocalRelations (``local_frame``).
+Frames the driver builds from Python lists (segment lists) are JVM
+LocalRelations (``local_frame``).
 
 Query tasks read their segments' files by path (``segment_files``,
 ``read_files``, ``postings_filter``).
@@ -46,7 +58,9 @@ delta-friendly and merges never renumber (SURVEY.md §7.4.4).
 
 from __future__ import annotations
 
+import dataclasses
 import functools
+import json
 import operator
 import os
 import re
@@ -56,8 +70,8 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # bump when the on-disk layout changes (cache invalidation; persisted
-# in corpus_stats.format_version and CHECKED on read — a mismatched
-# index raises instead of silently misdecoding, ADVICE r3)
+# in the manifest and CHECKED on read — a mismatched index raises
+# instead of silently misdecoding, ADVICE r3)
 # v4: blocked posting layout — delta restarts at block boundaries +
 # per-block byte offsets / first doc ids (lazy MaxScore block decode)
 # v5: blocked POSITION stream (postings.block_pos_offs → lazy phrase
@@ -70,7 +84,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 # pairs, a BM25 bound under any avgdl) replaces the per-block and
 # per-row norm maxima computed under the build-time avgdl; seg_meta
 # drops that avgdl
-FORMAT_VERSION = 7
+# v8: one manifest (_manifest/<n>) is the commit point; term_stats is
+# versioned (term_stats/<v>); corpus_stats, stats_ledger, sink_ledger,
+# the stats_folding marker and the fold's stage are gone
+FORMAT_VERSION = 8
 
 # The declared schema of every index table (DDL: the read, write and
 # applyInPandas-output schema alike; a partition column reads back
@@ -88,19 +105,12 @@ TABLE_SCHEMAS = {
         "deleted_bin binary"
     ),
     "term_stats": "field string, term string, df long, cf long",
-    "corpus_stats": (
-        "n_docs long, avgdl double, k1 double, b double, seg_size long, "
-        "block_size long, format_version long"
-    ),
     "checkpoints": (
         "seg_id long, n_postings_docs long, n_terms long, wall_sec double, "
         "status string"
     ),
-    "stats_ledger": "seg_id long, n_docs long, sum_dl double",
     "tombstones": "seg_id long, doc_id long",
-    "sink_ledger": "batch_id long, start_id long, end_id long",
 }
-TABLE_SCHEMAS["term_stats_delta_tmp"] = TABLE_SCHEMAS["term_stats"]
 
 
 def column_names(table: str) -> list[str]:
@@ -222,29 +232,6 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def fs_mtime(spark: SparkSession, path: str) -> int | None:
-    """Modification time (epoch millis) of a path via the Hadoop
-    FileSystem API, or None when it doesn't exist — the cheap staleness
-    probe entrypoint._catalog uses to drop memoized IndexCatalogs after
-    an in-place rebuild (ADVICE r3: a rebuilt index at the same hashed
-    path must not serve the old catalog's cached term stats)."""
-    fs, p = _hadoop_fs(spark, path)
-    try:
-        return int(fs.getFileStatus(p).getModificationTime())
-    except Exception:
-        return None
-
-
-def fs_touch(spark: SparkSession, path: str) -> None:
-    """Create (or truncate) an empty marker file via the Hadoop
-    FileSystem API — the torn-write sentinel the incremental term_stats
-    fold sets around its dictionary overwrite (indexer._fold_term_stats):
-    a crash between the overwrite and the ledger append leaves the
-    marker behind, and the next build recovers with a full recompute."""
-    fs, p = _hadoop_fs(spark, path)
-    fs.create(p, True).close()
-
-
 def fs_delete(spark: SparkSession, path: str) -> bool:
     """Recursive delete through the Hadoop FileSystem API (the
     direct-path analogue of an Iceberg REPLACE TABLE drop; shutil.rmtree
@@ -293,14 +280,15 @@ def read_table(spark: SparkSession, path: str):
 
 def read_index_table(spark: SparkSession, root: str, table: str) -> DataFrame:
     """Read index table `table` under `root` with its declared schema
-    (TABLE_SCHEMAS) — no footer inference. A declared column missing
-    from older files reads as null, and a declared long reads an INT32
-    file column. The Iceberg branch takes the schema from table
-    metadata (read_table)."""
+    (TABLE_SCHEMAS) — no footer inference. `table` may name a version
+    directory (``term_stats/<v>``). A declared column missing from older
+    files reads as null, and a declared long reads an INT32 file column.
+    The Iceberg branch takes the schema from table metadata
+    (read_table)."""
     path = os.path.join(root, table)
     if iceberg_format(spark):
         return read_table(spark, path)
-    return spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
+    return spark.read.schema(TABLE_SCHEMAS[table.split("/")[0]]).parquet(path)
 
 
 def write_table(
@@ -324,6 +312,18 @@ def write_table(
     w.save(path)
 
 
+def filter_segments(df: DataFrame, segs) -> DataFrame:
+    """Restrict a seg_id-partitioned table to `segs`: an In-list filter
+    (static partition pruning — only those segments' directories are
+    ever read) when the list is small, a broadcast semi-join for very
+    large lists (a 10^6-element In-list would bloat the plan)."""
+    segs = [int(s) for s in segs]
+    if len(segs) <= 4096:
+        return df.filter(F.col("seg_id").isin(segs))
+    seg_df = local_frame(df.sparkSession, [(s,) for s in segs], "seg_id long")
+    return df.join(F.broadcast(seg_df), "seg_id", "left_semi")
+
+
 @dataclass(frozen=True)
 class CorpusStats:
     n_docs: int
@@ -334,85 +334,176 @@ class CorpusStats:
     block_size: int = 128
 
 
+_MANIFESTS = "_manifest"
+
+
+@dataclass(frozen=True)
+class Manifest:
+    """One published version of an index (``_manifest/<version>``).
+    `sum_dl` is the exact integer total of every live doc's length, so
+    avgdl = sum_dl / n_docs is the same double whichever commits built
+    it. Every publish writes its dictionary as ``term_stats/<version>``
+    (``term_stats_table``). `sink_batch` is the streaming sink's last
+    committed micro-batch id (None before the first one)."""
+
+    version: int
+    n_docs: int
+    sum_dl: int
+    k1: float
+    b: float
+    seg_size: int
+    block_size: int
+    segments: tuple[int, ...]
+    sink_batch: int | None = None
+
+    @property
+    def stats(self) -> CorpusStats:
+        return CorpusStats(
+            n_docs=self.n_docs, avgdl=self.sum_dl / self.n_docs, k1=self.k1,
+            b=self.b, seg_size=self.seg_size, block_size=self.block_size,
+        )
+
+    @property
+    def term_stats_table(self) -> str:
+        return f"term_stats/{self.version}"
+
+
+def _manifest_files(spark: SparkSession, root: str) -> list:
+    """Hadoop FileStatus of every published manifest, oldest first."""
+    fs, d = _hadoop_fs(spark, os.path.join(root, _MANIFESTS))
+    if not fs.exists(d):
+        return []
+    files = [st for st in fs.listStatus(d) if st.getPath().getName().isdigit()]
+    return sorted(files, key=lambda st: int(st.getPath().getName()))
+
+
+def manifest_stamp(spark: SparkSession, root: str) -> tuple[int, int] | None:
+    """(version, modification time) of the newest manifest, or None: a
+    staleness key that changes with every publish, an in-place rebuild
+    (which restarts at version 1) included. One directory listing."""
+    files = _manifest_files(spark, root)
+    if not files:
+        return None
+    st = files[-1]
+    return int(st.getPath().getName()), int(st.getModificationTime())
+
+
+def read_manifest(spark: SparkSession, root: str) -> Manifest | None:
+    """The newest manifest under `root` (driver-side, no Spark job), or
+    None when no index was ever published there. Format gate: an index
+    of another format raises instead of being misread — a manifest of
+    another version, or the commit marker of a pre-v8 index
+    (``corpus_stats/``)."""
+    files = _manifest_files(spark, root)
+    if not files:
+        if fs_exists(spark, os.path.join(root, "corpus_stats")):
+            raise ValueError(
+                f"index at {root} has a pre-v8 on-disk format (no manifest); "
+                f"this build reads format {FORMAT_VERSION} — rebuild the "
+                "index (build_index with resume=False)"
+            )
+        return None
+    fs, _ = _hadoop_fs(spark, root)
+    stream = fs.open(files[-1].getPath())
+    try:
+        d = json.loads(bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)))
+    finally:
+        stream.close()
+    ver = d.pop("format_version", None)
+    if ver != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {root} has on-disk format "
+            f"{ver if ver is not None else '<unversioned>'}; this build reads "
+            f"format {FORMAT_VERSION} — rebuild the index (build_index with "
+            "resume=False)"
+        )
+    return Manifest(**{**d, "segments": tuple(d["segments"])})
+
+
+def publish_manifest(spark: SparkSession, root: str, m: Manifest) -> None:
+    """Publish `m` as ``_manifest/<m.version>`` — created only if absent,
+    so a second writer racing for the same version fails instead of
+    overwriting — then delete the manifests and term_stats versions it
+    supersedes (older manifests, and every term_stats directory but
+    its own, crashed writers' included)."""
+    body = dict(dataclasses.asdict(m), format_version=FORMAT_VERSION)
+    fs, p = _hadoop_fs(spark, os.path.join(root, _MANIFESTS, str(m.version)))
+    out = fs.create(p, False)
+    try:
+        out.write(bytearray(json.dumps(body).encode()))
+    finally:
+        out.close()
+    for st in _manifest_files(spark, root)[:-1]:
+        fs.delete(st.getPath(), False)
+    _, ts = _hadoop_fs(spark, os.path.join(root, "term_stats"))
+    for st in fs.listStatus(ts):
+        if st.getPath().getName() != str(m.version):
+            fs.delete(st.getPath(), True)
+
+
 class IndexCatalog:
-    """Read-side handle on an index directory."""
+    """Read-side handle on one published version of an index: the
+    newest manifest when the catalog first needs it. A commit after
+    that is not seen (open a fresh catalog), and the term_stats version
+    this catalog reads is deleted by the next publish."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._stats: CorpusStats | None = None
-        # (field, term) -> (df, cf) | None(=absent); an index generation
-        # is immutable (rebuilds land in a new dir), so dictionary
-        # lookups memoize like any engine's term-dictionary cache
+        self._manifest: Manifest | None = None
+        # (field, term) -> (df, cf) | None(=absent); a published version
+        # is immutable, so dictionary lookups memoize like any engine's
+        # term-dictionary cache
         self._ts_cache: dict[tuple[str, str], tuple[int, int] | None] = {}
         # base DataFrames per immutable table: re-creating one per query
         # re-lists the partition directories (an InMemoryFileIndex
         # build, a driver JOB above the parallel-discovery threshold) —
         # at 10^6 segments that listing IS the per-query latency floor.
         # Tombstones are deliberately NOT cached (delete_docs appends
-        # between queries). After an in-place rebuild or append, use a
-        # fresh catalog (entrypoint._catalog evicts on the commit
-        # marker's mtime).
+        # between queries).
         self._tables: dict[str, DataFrame] = {}
         self._seg_files: DataFrame | None = None
+
+    def manifest(self) -> Manifest:
+        if not self.exists():
+            raise FileNotFoundError(f"no index at {self.root} (no manifest)")
+        return self._manifest
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
     def exists(self) -> bool:
-        # corpus_stats is the build's commit marker: build_index writes
-        # it strictly after every other table is durable, so its
-        # _SUCCESS (parquet) / table metadata (Iceberg) implies a
-        # complete index
-        if iceberg_format(self.spark):
-            return fs_exists(self.spark, self.path("corpus_stats"))
-        return fs_exists(
-            self.spark, os.path.join(self.path("corpus_stats"), "_SUCCESS")
-        )
+        if self._manifest is None:
+            self._manifest = read_manifest(self.spark, self.root)
+        return self._manifest is not None
 
     def corpus_stats(self) -> CorpusStats:
-        # memoized: corpus_stats is immutable per index generation, and
-        # every query path needs it (one 1-row job per catalog, not per
-        # query)
-        if self._stats is None:
-            row = read_index_table(self.spark, self.root, "corpus_stats").collect()[0]
-            d = row.asDict()
-            # strict format gate: a v<5 index's postings would decode
-            # into silently wrong doc ids under the current blocked
-            # reader (each block's first delta read as absolute) —
-            # fail loudly instead (ADVICE r3)
-            ver = d.get("format_version")
-            if ver != FORMAT_VERSION:
-                raise ValueError(
-                    f"index at {self.root} has on-disk format "
-                    f"{ver if ver is not None else '<3 (unversioned)'}; "
-                    f"this build reads format {FORMAT_VERSION} — rebuild "
-                    "the index (build_index with resume=False)"
-                )
-            self._stats = CorpusStats(
-                n_docs=row.n_docs, avgdl=row.avgdl, k1=row.k1, b=row.b,
-                seg_size=row.seg_size, block_size=int(row.block_size),
-            )
-        return self._stats
+        return self.manifest().stats
 
     def _table_df(self, table: str) -> DataFrame:
         df = self._tables.get(table)
         if df is None:
-            # docs is read with inference: its stored columns are the
-            # build caller's choice, and nothing groups by its seg_id
-            df = self._tables[table] = (
-                read_table(self.spark, self.path(table))
-                if table == "docs"
-                else read_index_table(self.spark, self.root, table)
-            )
+            m = self.manifest()
+            if table == "term_stats":
+                df = read_index_table(self.spark, self.root, m.term_stats_table)
+            else:
+                # docs is read with inference: its stored columns are
+                # the build caller's choice. Segment directories outside
+                # the manifest (a crashed commit's) are filtered out.
+                df = filter_segments(
+                    read_table(self.spark, self.path(table))
+                    if table == "docs"
+                    else read_index_table(self.spark, self.root, table),
+                    m.segments,
+                )
+            self._tables[table] = df
         return df
 
     def prewarm(self) -> "IndexCatalog":
         """Eagerly build the base DataFrames (partition-directory
-        listings — driver jobs at 10^6 segments) and load corpus stats,
+        listings — driver jobs at 10^6 segments) and read the manifest,
         pulling the cold-start cost out of the first query's latency
         path. Returns self for chaining."""
-        self.corpus_stats()
         for t in ("docs", "postings", "seg_meta", "term_stats"):
             self._table_df(t)
         self.segment_files()
@@ -434,21 +525,22 @@ class IndexCatalog:
         return read_index_table(self.spark, self.root, "checkpoints")
 
     def segment_files(self) -> DataFrame:
-        """(seg_id, postings files, seg_meta files) per segment, a
+        """(seg_id, postings files, seg_meta files) per live segment, a
         ``local_frame`` from ``inputFiles()`` of the cached frames (no
         job, no new listing) keyed by each file's ``seg_id=<n>``
-        directory; memoized like the frames. A segment without seg_meta
-        files (postings of a crashed append) is left out."""
+        directory; memoized like the frames. Files of segments the
+        manifest does not name are left out."""
         if self._seg_files is None:
-            by_seg: dict[int, tuple[list, list]] = {}
+            live = set(self.manifest().segments)
+            by_seg: dict[int, tuple[list, list]] = {s: ([], []) for s in live}
             for i, table in enumerate(("postings", "seg_meta")):
-                must_list = table == "seg_meta" and self.corpus_stats().n_docs > 0
-                for f in _listed_files(self._table_df(table), table, must_list):
+                for f in _listed_files(self._table_df(table), table, table == "seg_meta"):
                     seg = int(re.search(r"/seg_id=(-?\d+)/", f).group(1))
-                    by_seg.setdefault(seg, ([], []))[i].append(f)
+                    if seg in live:
+                        by_seg[seg][i].append(f)
             self._seg_files = local_frame(
                 self.spark,
-                [(s, *by_seg[s]) for s in sorted(by_seg) if by_seg[s][1]],
+                [(s, *by_seg[s]) for s in sorted(by_seg)],
                 "seg_id long, postings array<string>, seg_meta array<string>",
             )
         return self._seg_files
@@ -484,15 +576,14 @@ class IndexCatalog:
         """Driver-side (df, cf) lookup for a query's (field, term)
         pairs — the `mayMatch` plan-time pruning analogue (SURVEY.md
         §2.2 P10): absent terms never reach an executor. Results are
-        memoized per catalog (absences included), so repeated query
-        terms cost zero extra jobs — the term-dictionary cache every
-        engine keeps."""
+        memoized per catalog (absences included), so a repeated query
+        term costs no read; the keys not seen yet go to
+        term_stats_query in one call."""
         if not field_terms:
             return {}
         missing = [ft for ft in set(field_terms) if ft not in self._ts_cache]
         if missing:
-            rows = self.term_stats_query(missing).collect()
-            found = {(r.field, r.term): (r.df, r.cf) for r in rows}
+            found = self.term_stats_query(missing)
             for ft in missing:
                 self._ts_cache[ft] = found.get(ft)
         out = {}
@@ -502,14 +593,20 @@ class IndexCatalog:
                 out[ft] = v
         return out
 
-    def term_stats_query(self, field_terms: list[tuple[str, str]]) -> DataFrame:
-        """The pruned dictionary lookup as a DataFrame (plan-testable):
-        field and term lists push down to parquet, whose row-group
-        min/max prune inside the (field, term)-sorted run, and the
-        files' disjoint key ranges leave every other file's row groups
-        skipped."""
-        terms = sorted({t for _, t in field_terms})
-        fields = sorted({f for f, _ in field_terms})
-        return self.term_stats().filter(
-            F.col("field").isin(fields) & F.col("term").isin(terms)
-        )
+    def term_stats_query(
+        self, field_terms: list[tuple[str, str]]
+    ) -> dict[tuple[str, str], tuple[int, int]]:
+        """The dictionary read behind every lookup miss: the manifest's
+        term_stats files read with pyarrow on the driver (no Spark job)
+        under the ``postings_filter`` predicate of `field_terms`, whose
+        row-group min/max prune inside the (field, term)-sorted run —
+        the files' disjoint key ranges leave every other file's row
+        groups unread. Returns (df, cf) for the keys present."""
+        files = _listed_files(self.term_stats(), "term_stats", True)
+        t = read_files(
+            files, column_names("term_stats"), postings_filter(field_terms, None)
+        ).to_pydict()
+        return {
+            (f, term): (df, cf)
+            for f, term, df, cf in zip(t["field"], t["term"], t["df"], t["cf"])
+        }

@@ -241,21 +241,19 @@ def index_append_sink(
     makes those batches durable and searchable by every later batch
     query (SURVEY §3.4).
 
-    Each batch takes a fresh segment range (next free seg_id), so
-    batches never share a segment. The batch_id → segment-range
-    assignment is made DURABLE first (a one-row append to
-    `<index>/sink_ledger` before any index write): a replayed batch —
-    Spark re-runs a micro-batch whose foreachBatch crashed before the
-    stream checkpoint advanced — reuses its original range, where the
-    per-segment build checkpoints + dynamic partition overwrite make
-    the re-run idempotent. Without the ledger a replay would derive a
-    NEW range past the failed attempt's partial segments and index the
-    same docs twice. Corpus stats are recomputed from durable state
-    after each commit (idempotent); term_stats folds ONLY the batch's
-    new segments' postings into the sorted dictionary
-    (indexer._fold_term_stats — per-batch cost is O(batch postings) +
-    O(dictionary), never a re-read of the old segments' postings; the
-    stats_ledger makes replayed batches fold-once).
+    Each batch takes a fresh segment range starting at the next free
+    segment boundary (past the newest manifest's last segment), so
+    batches never share a segment, and its commit publishes the next
+    manifest with the batch id. A replayed batch — Spark re-runs a
+    micro-batch whose foreachBatch crashed before the stream checkpoint
+    advanced — either was never published, and then lands on the same
+    next free range, overwriting what the crashed attempt wrote
+    (dynamic partition overwrite), or was, and is skipped. term_stats
+    folds ONLY the batch's new segments' postings into a new dictionary
+    version (indexer._fold_term_stats — per-batch cost is O(batch
+    postings) + O(dictionary), never a re-read of the old segments'
+    postings), and the manifest's corpus stats add the batch's doc
+    counts and lengths.
 
     Returns the started StreamingQuery (caller stops it)."""
     src = spark.readStream.schema(schema).parquet(stream_dir)
@@ -272,98 +270,33 @@ def index_append_sink(
 
 def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwargs):
     """The foreachBatch body of index_append_sink, exposed so replay
-    semantics are directly testable: call it twice with the same
-    batch_id and the second call must be a no-op-equivalent re-run of
-    the same segment range."""
+    semantics are directly testable: a second call with a published
+    batch_id is skipped, and a call whose first attempt crashed before
+    its publish re-runs on the same segment range."""
     from yaii_spark.indexer import assign_dense_ids, build_index
-    from yaii_spark.storage import (
-        TABLE_SCHEMAS,
-        IndexCatalog,
-        fs_exists,
-        local_frame,
-        read_index_table,
-        write_table,
-    )
+    from yaii_spark.storage import read_manifest
 
     def commit(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         sp = batch_df.sparkSession
-        # geometry guard BEFORE the range assignment becomes durable: a
-        # seg_size mismatched with the index (e.g. the pre-merge size
-        # after a merge multiplied it) would ledger a range that
-        # collides with existing segments (indexer._check_append_geometry)
-        from yaii_spark.indexer import _check_append_geometry
-
-        _check_append_geometry(sp, index_dir, seg_size)
-        # ONE cache of the batch serves the span count, the dense-id
-        # partition counts, and the build's tokenize pass — released in
-        # the finally (caches pin block-manager memory until unpersisted;
-        # a sink runs thousands of batches)
+        m = read_manifest(sp, index_dir)
+        # Spark's micro-batch ids increase, and only the last batch is
+        # ever replayed: a batch id at or below the published one is
+        # already in the index
+        if m is not None and m.sink_batch is not None and batch_id <= m.sink_batch:
+            return
+        start = (max(m.segments) + 1) * seg_size if m is not None else 0
+        # ONE cache of the batch serves the dense-id partition counts and
+        # the build's tokenize pass — released in the finally (caches pin
+        # block-manager memory until unpersisted; a sink runs thousands
+        # of batches)
         batch_df = batch_df.persist()
-        ledger = f"{index_dir}/sink_ledger"
-        start = None
-        # the ledger grows one row per batch forever — at the design
-        # point (~10^6 appended ranges) a full collect per commit would
-        # be O(#batches) driver work/heap on the hot path, so every
-        # per-batch read is a pruned filter or a 1-row aggregate
-        led = (
-            read_index_table(sp, index_dir, "sink_ledger")
-            if fs_exists(sp, ledger)
-            else None
-        )
-        if led is not None:
-            mine = (
-                led.filter(F.col("batch_id") == int(batch_id)).collect()
-            )  # ≤1 row
-            if mine:  # replay: reuse the original range
-                start = int(mine[0].start_id)
-        if start is None:
-            # the batch's row count pins its segment span (end_id), so
-            # the NEXT free range is ONE 1-row aggregate off the ledger
-            # — never a per-batch max-scan over the ever-growing
-            # seg_meta table (r5: that scan was O(#segments) per
-            # commit) and never a full ledger collect (O(#batches)
-            # driver heap). Invariant: the sink owns the index's append
-            # lifecycle — every appended range is ledgered here. With
-            # no ledger row yet (the first commit onto a bulk-built
-            # index, or an empty ledger) the range starts past the
-            # index's last segment.
-            n_rows = batch_df.count()
-            if led is not None:
-                start = led.agg(F.max("end_id")).collect()[0][0]  # 1 row
-            if start is None:
-                if IndexCatalog(sp, index_dir).exists():
-                    mx = (
-                        read_index_table(sp, index_dir, "seg_meta")
-                        .agg(F.max("seg_id"))
-                        .collect()[0][0]
-                    )
-                    start = (int(mx) + 1) * seg_size
-                else:
-                    start = 0
-            start = int(start)
-            n_segs = max(1, -(-n_rows // seg_size))  # ceil
-            # durable BEFORE any index write — the range assignment must
-            # survive a crash mid-build so the replay lands on it
-            write_table(
-                local_frame(
-                    sp,
-                    [(int(batch_id), start, start + n_segs * seg_size)],
-                    TABLE_SCHEMAS["sink_ledger"],
-                ),
-                ledger,
-                mode="append" if led is not None else "overwrite",
-            )
         pages = assign_dense_ids(batch_df, start)
         try:
             build_index(
                 sp, pages, index_dir, seg_size=seg_size, append=True,
-                # the committer validated geometry above, before the
-                # range became durable — skip the duplicate per-batch
-                # corpus_stats read inside build_index
-                _geometry_checked=True,
-                **build_kwargs,
+                _sink_batch=int(batch_id), **build_kwargs,
             )
         finally:
             batch_df.unpersist()
