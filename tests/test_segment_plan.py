@@ -20,7 +20,7 @@ These tests pin that single plan on a 2-segment fixture:
 - a table Spark lists no files for, or a path pyarrow cannot open,
   raises; segment directories outside the manifest are left out;
 - tombstone files are seg_id-ranged, so a task's min/max filter skips
-  other segments' files.
+  other segments' files, and a doc deleted twice has one tombstone row.
 """
 
 import datetime as dt
@@ -30,6 +30,7 @@ from contextlib import redirect_stdout
 
 import pytest
 
+from yaii_spark import storage
 from yaii_spark.indexer import build_index, delete_docs, merge_segments
 from yaii_spark.oracle import BruteForceIndex
 from yaii_spark.queries import ast as A
@@ -302,13 +303,16 @@ def test_unlisted_files_raise(spark, fresh_index, tombstoned_index, monkeypatch)
     with pytest.raises(RuntimeError, match="seg_meta: Spark lists no data files"):
         execute_boolean(cat, q)
 
-    cat = IndexCatalog(spark, tombstoned_index)
+    # tombstones are listed through the Hadoop FileSystem, not Spark
     monkeypatch.setattr(DataFrame, "inputFiles", listed)
-    cat.segment_files()  # postings and seg_meta listed; tombstones not
-    cat.term_stats_for(sorted(A.collect_terms(q)))
-    monkeypatch.setattr(DataFrame, "inputFiles", lambda df: [])
-    with pytest.raises(RuntimeError, match="tombstones: Spark lists no data files"):
-        execute_boolean(cat, q)
+    with monkeypatch.context() as m:
+        m.setattr(storage, "list_data_files", lambda fs, path: [])
+        with pytest.raises(RuntimeError, match="tombstones: Spark lists no data files"):
+            execute_boolean(IndexCatalog(spark, tombstoned_index), q)
+        s3a = ["s3a://bucket/idx/tombstones/part-0.parquet"]
+        m.setattr(storage, "list_data_files", lambda fs, path: s3a)
+        with pytest.raises(ValueError, match="tombstones: .* cannot open s3a://"):
+            execute_boolean(IndexCatalog(spark, tombstoned_index), q)
 
     hadoop_only = [f"s3a://bucket/idx/seg_meta/seg_id={s}/part-0.parquet" for s in (0, 1)]
     monkeypatch.setattr(DataFrame, "inputFiles", lambda df: hadoop_only)
@@ -365,3 +369,32 @@ def test_tombstone_files_are_seg_id_ranged(spark, fresh_index, work_dir, brute):
         assert 0 < len(kept) < len(frags), s
     got = sorted(r.doc_id for r in execute_boolean(cat, QUERIES["not"]).collect())
     assert got == sorted(brute.evaluate(A.rewrite(QUERIES["not"])) - deleted)
+
+
+def test_delete_skips_tombstoned_ids(spark, fresh_index, work_dir):
+    """An id deleted twice is written and counted once: the table reads
+    back one row per (seg_id, doc_id), each file sorted, and a 3-id
+    delete onto existing tombstones runs at most 4 Spark jobs."""
+    import shutil
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
+    out = f"{work_dir}/seg_plan_redelete"
+    shutil.copytree(fresh_index, out)
+    assert delete_docs(spark, out, [12, 12, 13]) == 2
+    assert delete_docs(spark, out, [13]) == 0
+    added = []
+    jobs = _jobs_of(spark, lambda: added.append(delete_docs(spark, out, [13, 400, 401])))
+    assert added == [2] and jobs <= 4, (added, jobs)
+
+    cat = IndexCatalog(spark, out)
+    rows = []
+    for f in cat.tombstone_files():
+        t = pq.read_table(urlparse(f).path, columns=["seg_id", "doc_id"])
+        part = list(zip(t["seg_id"].to_pylist(), t["doc_id"].to_pylist()))
+        assert part == sorted(part), f
+        rows += part
+    assert sorted(rows) == [(0, 12), (0, 13), (1, 400), (1, 401)]
+    got = sorted(r.doc_id for r in execute_boolean(cat, QUERIES["all"]).collect())
+    assert got == sorted(set(range(N_DOCS)) - {12, 13, 400, 401})

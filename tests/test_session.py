@@ -1,7 +1,11 @@
-"""The engine's PySpark worker daemon (`yaii_spark.worker_daemon`)."""
+"""The engine's PySpark worker daemon (`yaii_spark.worker_daemon`) and
+the Unix domain sockets its workers talk to the JVM over."""
 
 import importlib
+import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 
@@ -100,3 +104,65 @@ def test_tasks_run_under_engine_daemon(spark):
     got = spark.range(1, numPartitions=1).mapInPandas(probe, "m string").collect()
     want = "zipimport" if LAZY_INVALIDATION else "yaii_spark.worker_daemon"
     assert [r.m for r in got] == [want]
+
+
+def test_tasks_use_unix_domain_sockets(spark):
+    """Python tasks reach the JVM over Unix domain sockets (no loopback
+    TCP delayed-ACK stall per task)."""
+
+    def probe(batches):
+        import os
+
+        for _ in batches:
+            yield pd.DataFrame({"m": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")]})
+
+    got = spark.range(1, numPartitions=1).mapInPandas(probe, "m string").collect()
+    assert [r.m.lower() for r in got] == ["true"]
+
+
+def test_socket_dir_is_private_and_short(spark):
+    """The daemon skips its auth handshake on a Unix socket, so only
+    the directory's 0700 mode keeps other users off the workers; its
+    path leaves room for the 43-byte socket name under Linux's cap."""
+    d = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+    assert os.path.isdir(d)
+    assert os.stat(d).st_mode & 0o777 == 0o700
+    assert len(os.fsencode(d)) <= 60
+
+
+def test_long_temp_dirs_start_and_clean_up(tmp_path):
+    """A session whose TMPDIR and java.io.tmpdir are both too long for
+    a socket path still runs a Python task, and its socket directory is
+    gone once the interpreter exits."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    long_tmp = tmp_path / ("t" * 60) / ("u" * 60)
+    long_tmp.mkdir(parents=True)
+    assert len(str(long_tmp)) > 110
+    script = textwrap.dedent(f"""
+        import pandas as pd
+
+        from yaii_spark.session import get_spark
+
+        def probe(batches):
+            import os
+
+            for _ in batches:
+                yield pd.DataFrame({{"m": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")]}})
+
+        spark = get_spark("uds-long-tmp", master="local[1]", extra_conf={{
+            "spark.driver.memory": "1g",
+            "spark.driver.extraJavaOptions": "-Djava.io.tmpdir={long_tmp}",
+        }})
+        print(spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir"))
+        print(spark.range(1, numPartitions=1).mapInPandas(probe, "m string").first().m)
+    """)
+    env = dict(os.environ, TMPDIR=str(long_tmp), PYTHONPATH=repo)
+    done = subprocess.run(
+        [sys.executable, "-c", script], env=env, cwd=repo,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    sock_dir, uds = done.stdout.split()[-2:]
+    assert uds.lower() == "true"
+    assert os.path.isabs(sock_dir) and len(os.fsencode(sock_dir)) <= 60
+    assert not os.path.exists(sock_dir)

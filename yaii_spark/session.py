@@ -7,9 +7,32 @@ cores). Scale knobs documented inline.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# PySpark names each Unix domain socket `<dir>/.<uuid4>.sock` (43 bytes),
+# and Linux caps a socket path at 107 bytes
+_SOCKET_DIR_MAX = 60
+
+
+@functools.cache
+def socket_dir() -> str:
+    """This process's directory for Spark's Unix domain sockets, made
+    on first use and removed at interpreter exit: mode 0700, at most
+    ``_SOCKET_DIR_MAX`` bytes long. It sits under ``/tmp`` when the
+    temp dir (``TMPDIR``) is too long for the cap."""
+    base = tempfile.gettempdir()
+    # mkdtemp appends "/" + prefix + 8 random characters
+    if len(os.fsencode(base)) + 14 > _SOCKET_DIR_MAX:
+        base = "/tmp"
+    path = tempfile.mkdtemp(prefix="yaii-", dir=base)
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def get_spark(
@@ -87,7 +110,19 @@ def get_spark(
         # on CPython 3.13+ (lazy invalidation) it is plain pyspark.daemon.
         # Workers import yaii_spark for every engine UDF already.
         .config("spark.python.daemon.module", "yaii_spark.worker_daemon")
+        # Python workers, the worker daemon, the accumulator server and
+        # local data transfers talk to the JVM over Unix domain sockets.
+        # Over loopback TCP, Nagle's algorithm meets Linux's 40 ms
+        # delayed ACK: each task's first Arrow message waits ~40 ms
+        # (4-core host: PythonRunner's `finish` per no-op task 39-54 ms
+        # over TCP, 1-14 ms here). The daemon skips its auth handshake
+        # on a Unix socket, so the socket directory's mode 0700 is what
+        # keeps other local users off the workers.
+        .config("spark.python.unix.domain.socket.enabled", "true")
     )
+    if "spark.python.unix.domain.socket.dir" not in (extra_conf or {}):
+        # the default, java.io.tmpdir, may be too long for a socket path
+        builder = builder.config("spark.python.unix.domain.socket.dir", socket_dir())
     # YAII_ICEBERG_JARS=<paths> puts Iceberg runtime jars on the
     # classpath so the storage seam's iceberg branch (and its
     # otherwise-skipped test) runs end-to-end in any jar-equipped

@@ -196,12 +196,12 @@ def postings_filter(field_terms: list[tuple[str, str]], scans: list | None):
     return functools.reduce(operator.or_, conds) if conds else pc.scalar(False)
 
 
-def _listed_files(df: DataFrame, table: str, must_list: bool) -> list[str]:
-    """`df`'s data files for query tasks to read by path. Spark lists
+def _listed_files(files: list[str], table: str, must_list: bool) -> list[str]:
+    """`files` (``inputFiles()`` of `table`'s frame, or a listing of its
+    directory), checked for query tasks to read by path. Spark lists
     files for file-based tables only (an Iceberg table lists none), so
     an empty list where `must_list` raises instead of answering from no
     data; so does a scheme read_files cannot open."""
-    files = sorted(df.inputFiles())
     schemes = ("file", "hdfs", "viewfs", "s3", "gs", "gcs")  # pyarrow's
     if not files and must_list:
         raise RuntimeError(
@@ -215,6 +215,20 @@ def _listed_files(df: DataFrame, table: str, must_list: bool) -> list[str]:
             f"{', '.join(schemes)})"
         )
     return files
+
+
+def list_data_files(fs, path) -> list[str] | None:
+    """The parquet data files directly under the Hadoop Path `path` of
+    FileSystem `fs`, sorted, as URIs (hidden files, ``_SUCCESS`` and
+    subdirectories left out: an Iceberg table's files sit in ``data/``);
+    None when `path` does not exist. One listing, no Spark job."""
+    if not fs.exists(path):
+        return None
+    files = (str(st.getPath()) for st in fs.listStatus(path))
+    return sorted(
+        f for f in files
+        if f.endswith(".parquet") and not f.rsplit("/", 1)[-1].startswith(("_", "."))
+    )
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -463,6 +477,7 @@ class IndexCatalog:
         # between queries).
         self._tables: dict[str, DataFrame] = {}
         self._seg_files: DataFrame | None = None
+        self._tomb_dir = None  # (Hadoop FileSystem, Path) of tombstones/
 
     def manifest(self) -> Manifest:
         if not self.exists():
@@ -534,7 +549,8 @@ class IndexCatalog:
             live = set(self.manifest().segments)
             by_seg: dict[int, tuple[list, list]] = {s: ([], []) for s in live}
             for i, table in enumerate(("postings", "seg_meta")):
-                for f in _listed_files(self._table_df(table), table, table == "seg_meta"):
+                files = sorted(self._table_df(table).inputFiles())
+                for f in _listed_files(files, table, table == "seg_meta"):
                     seg = int(re.search(r"/seg_id=(-?\d+)/", f).group(1))
                     if seg in live:
                         by_seg[seg][i].append(f)
@@ -555,11 +571,15 @@ class IndexCatalog:
         return read_index_table(self.spark, self.root, "tombstones")
 
     def tombstone_files(self) -> list[str]:
-        """The tombstones table's files, listed afresh on every call
-        (delete_docs appends between queries); [] when nothing was ever
-        deleted. Every write of the table leaves a file, empty or not."""
-        tomb = self.tombstones()
-        return [] if tomb is None else _listed_files(tomb, "tombstones", True)
+        """The tombstones table's data files, listed afresh on every
+        call (delete_docs appends between queries) through a FileSystem
+        handle memoized per catalog: one Hadoop listing, no Spark job.
+        [] when nothing was ever deleted. Every write of the table
+        leaves a file, empty or not."""
+        if self._tomb_dir is None:
+            self._tomb_dir = _hadoop_fs(self.spark, self.path("tombstones"))
+        files = list_data_files(*self._tomb_dir)
+        return [] if files is None else _listed_files(files, "tombstones", True)
 
     def docs_live(self) -> DataFrame:
         """Docs minus tombstones (the reference's
@@ -602,7 +622,7 @@ class IndexCatalog:
         row-group min/max prune inside the (field, term)-sorted run —
         the files' disjoint key ranges leave every other file's row
         groups unread. Returns (df, cf) for the keys present."""
-        files = _listed_files(self.term_stats(), "term_stats", True)
+        files = _listed_files(sorted(self.term_stats().inputFiles()), "term_stats", True)
         t = read_files(
             files, column_names("term_stats"), postings_filter(field_terms, None)
         ).to_pydict()
