@@ -16,7 +16,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = ["documents", "events"]
 
 
 def value_hash(rows, cols):
@@ -71,7 +71,8 @@ def main():
             print(f"FAIL {name}: spark error {type(e).__name__}: {str(e)[:300]}")
             continue
         if name not in oracles:
-            print(f"OK?  {name}: rows={len(s_rows)} (no oracle — rows-only) [{time.time()-t0:.1f}s]")
+            failures.append(name)
+            print(f"FAIL {name}: no oracle_sql() entry")
             continue
         try:
             ddf = con.sql(oracles[name])

@@ -502,12 +502,12 @@ def test_bm25_batch_matches_single(corpus):
     ]
 
 
-def test_topk_huge_k_returns_every_match(corpus, spark):
+def test_topk_huge_k_returns_every_match(corpus):
     """A "return everything" k (10**9) must not plan the 2·k-slot
     TakeOrderedAndProject buffer that kills the driver JVM: bm25_topk
-    and cosine_topk return every matching row in full rank order,
+    and bm25f_topk return every matching row in full rank order,
     while a small k keeps the bounded top-k plan."""
-    from yaii_spark.ops.similarity import cosine_topk
+    from yaii_spark.queries.bm25 import bm25f_topk
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -522,11 +522,11 @@ def test_topk_huge_k_returns_every_match(corpus, spark):
     assert_topk_equal(got.collect(), want)
     assert "TakeOrderedAndProject" in plan(bm25_topk(cat, q, k=10))
 
-    emb = spark.createDataFrame(
-        [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(50)],
-        "vec_id long, embedding array<double>",
-    )
-    rows = cosine_topk(emb, [1.0, 0.5, 0.0], k=10**9).collect()
-    assert sorted(r.vec_id for r in rows) == list(range(50))
-    assert [r.cosine for r in rows] == sorted((r.cosine for r in rows), reverse=True)
-    assert "TakeOrderedAndProject" in plan(cosine_topk(emb, [1.0, 0.5, 0.0], k=10))
+    weights = {"text": 1.0, "_all": 0.5}
+    fielded = bm25f_topk(cat, q, weights, k=10**9)
+    assert "TakeOrderedAndProject" not in plan(fielded)
+    rows = [(r.doc_id, r.score) for r in fielded.collect()]
+    # _all holds a subset of each doc's text tokens: the same docs match
+    assert {d for d, _ in rows} == {d for d, _ in want}
+    assert rows == sorted(rows, key=lambda r: (-r[1], r[0]))
+    assert "TakeOrderedAndProject" in plan(bm25f_topk(cat, q, weights, k=10))

@@ -1,14 +1,16 @@
 """Driver-contract queries: engine queries + DuckDB oracle SQL.
 
-Every operator from SURVEY.md §2 that is claimable gets BOTH a
-`queries()` entry (PySpark engine path) and an `oracle_sql()` entry
-(independent ANSI-SQL re-statement DuckDB runs on the same parquet) —
-the driver compares row counts, schemas and value hashes at sf=0.01.
+Each of the 40 queries runs on the inverted index (boolean, phrase,
+dictionary-scan, attribute, BM25 and aggregation queries) and has
+BOTH a `queries()` entry (the PySpark engine path) and an
+`oracle_sql()` entry (an independent SQL restatement DuckDB runs on
+the same parquet) — the driver compares row counts, schemas and value
+hashes at sf=0.01.
 
-Engine queries over `documents` first build the inverted index into a
-per-(sf_dir) cache under /tmp (once per process, a few seconds at
-sf0.01) and then run the real posting-list machinery — the oracle SQL
-recomputes the same answers relationally from raw text, so the whole
+Each query first builds its index into a per-(sf_dir, variant) cache
+under the temp dir (once per process, a few seconds at sf0.01) and
+then runs the real posting-list machinery — the oracle SQL recomputes
+the same answers relationally from raw text, so the whole
 build→compress→query path is exercised, not just the final predicate.
 
 Column names are aliased identically on both sides (driver hashes
@@ -24,9 +26,6 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from yaii_spark.indexer import build_index
-from yaii_spark.ops import dedup as D
-from yaii_spark.ops import similarity as S
-from yaii_spark.ops import text as TX
 from yaii_spark.ops.aggregations import (
     agg_count,
     agg_first,
@@ -156,7 +155,7 @@ def get_events_index(spark, sf_dir: str, seg_size: int = 2048) -> IndexCatalog:
     out = os.path.join(_CACHE_ROOT, tag)
     cat = _catalog(spark, out)
     if not cat.exists():
-        ev = _tbl(spark, sf_dir, "events").select(
+        ev = read_table(spark, os.path.join(sf_dir, "events.parquet")).select(
             F.col("event_id").alias("doc_id"),
             "ts", "event_type", "value",
             F.col("props").alias("text"),
@@ -180,64 +179,6 @@ def q_ts_range(spark, sf_dir):
         cat,
         A.number_range("ts", dt.datetime(2024, 1, 10), dt.datetime(2024, 1, 12)),
     )
-
-
-#: per-path memo of the _spread decision (scan split count is a pure
-#: function of the immutable input files + session split config)
-_SPREAD_MEMO: dict[str, bool] = {}
-
-#: per-(session, path) memo of the sf tables' scan relations: building
-#: one fresh re-lists the input files and re-reads the parquet footer
-#: schema on EVERY query invocation — a fixed ~0.1-0.2 s of driver
-#: latency per call at bench scale (measured on q_tpch_q1: 0.83 s
-#: fresh-relation vs 0.65 s memoized, same physical plan). The sf
-#: tables are read-only driver fixtures, so the file index never goes
-#: stale; invalidation follows _ann_table's rule (new session -> new
-#: relation). Only scan METADATA is reused — every query still computes
-#: from the parquet files.
-_TBL_MEMO: dict[str, DataFrame] = {}
-
-
-def _read_memo(spark, path: str) -> DataFrame:
-    df = _TBL_MEMO.get(path)
-    if df is None or df.sparkSession is not spark:
-        df = _TBL_MEMO[path] = read_table(spark, path)
-    return df
-
-
-def _spread(df: DataFrame, path: str) -> DataFrame:
-    """Round-robin repartition a scan that cannot parallelize itself.
-
-    The sf document/embedding tables arrive as ONE single-row-group
-    parquet file — an unsplittable scan that would run every downstream
-    tokenizer/hash/vector expression on one core (guide §2.5 'input
-    skew: one huge unsplittable file … repartition immediately after
-    the read'). Scale-adaptive by construction: any input that already
-    yields at least `defaultParallelism` splits is returned untouched,
-    so at cluster scale (thousands of splits) this is a no-op and no
-    extra exchange ever appears. The shuffled bytes are bounded by the
-    single unsplittable file's size — by definition small enough for
-    one task to read."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    need = _SPREAD_MEMO.get(path)
-    if need is None:
-        need = _SPREAD_MEMO[path] = df.rdd.getNumPartitions() < par
-    return df.repartition(par) if need else df
-
-
-def _docs(spark, sf_dir) -> DataFrame:
-    p = os.path.join(sf_dir, "documents.parquet")
-    return _spread(_read_memo(spark, p), p)
-
-
-def _emb(spark, sf_dir) -> DataFrame:
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    return _spread(_read_memo(spark, p), p)
-
-
-def _tbl(spark, sf_dir, name) -> DataFrame:
-    return _read_memo(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # SQL fragments -------------------------------------------------------------
@@ -277,32 +218,6 @@ ORDER BY s DESC, doc_id ASC LIMIT {k}
 
 def _contains_sql(term: str) -> str:
     return f"list_contains(toks, '{term}')"
-
-
-def _simhash_sql() -> str:
-    """DuckDB restatement of the md5-family simhash: per-token 64-bit
-    md5-prefix hash, tf-weighted sign aggregation per bit, sign-bit
-    assembly with the same two's-complement wrap as the engine."""
-    norm = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
-    bit_sums = ", ".join(
-        f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN tf ELSE -tf END) AS b{i}"
-        for i in range(64)
-    )
-    assemble = " + ".join(
-        f"CASE WHEN b{i} > 0 THEN {1 << i}::HUGEINT ELSE 0::HUGEINT END"
-        for i in range(64)
-    )
-    return f"""
-WITH tok AS (SELECT doc_id, regexp_split_to_array(trim({norm}), '\\s+') AS toks FROM documents),
-tf AS (SELECT doc_id, t AS tok, count(*)::BIGINT AS tf
-       FROM (SELECT doc_id, unnest(toks) AS t FROM tok) GROUP BY doc_id, t),
-h AS (SELECT doc_id, tf, ('0x'||substr(md5(tok),1,16))::UBIGINT AS h FROM tf),
-bits AS (SELECT doc_id, {bit_sums} FROM h GROUP BY doc_id),
-v AS (SELECT doc_id, ({assemble}) AS u FROM bits)
-SELECT doc_id,
-       (CASE WHEN u >= 9223372036854775808::HUGEINT
-             THEN u - 18446744073709551616::HUGEINT ELSE u END)::BIGINT AS simhash
-FROM v"""
 
 
 _STOPLIST_SQL = None
@@ -478,392 +393,16 @@ def q_buckets(spark, sf_dir):
     return agg_numeric_buckets(get_index(spark, sf_dir), "n_chars", 100)
 
 
-def q_dedup_exact(spark, sf_dir):
-    return D.exact_dedup(_docs(spark, sf_dir))
-
-
-def q_minhash_sig(spark, sf_dir):
-    sig = D.minhash_signatures(_docs(spark, sf_dir), num_hashes=4)
-    return sig.select(
-        "doc_id",
-        *[F.element_at("sig", j + 1).alias(f"mh{j}") for j in range(4)],
-    )
-
-
-def q_ngram_jaccard_adjacent(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    pairs = docs.select(F.col("doc_id").alias("id_a")).withColumn(
-        "id_b", F.col("id_a") + 1
-    ).join(
-        docs.select(F.col("doc_id").alias("id_b")), "id_b", "inner"
-    )
-    return D.ngram_jaccard(docs, pairs.select("id_a", "id_b"))
-
-
-def q_minhash_lsh_pairs(spark, sf_dir):
-    """Banded MinHash-LSH candidate pairs at the driver gate: 4 hashes
-    in 2 bands of 2; the oracle recomputes the identical md5-family
-    signatures and joins on exact band-value equality (the engine's
-    md5 band-hash equality is the same relation up to md5 collisions)."""
-    return D.minhash_lsh_pairs(_docs(spark, sf_dir), num_hashes=4, bands=2)
-
-
-def q_stream_dedup(spark, sf_dir):
-    """Stateful cross-batch streaming dedup (applyInPandasWithState —
-    ST-class custom stateful operator) run to completion over the
-    documents table as ONE availableNow micro-batch (single input
-    file), so the emitted survivors are exactly min(doc_id) per content
-    hash — fully relationally restatable, giving this streaming
-    operator a value-checked oracle instead of a rows-only check."""
-    import tempfile
-    import uuid
-
-    from yaii_spark.storage import write_table
-    from yaii_spark.streaming import streaming_dedup
-
-    d = tempfile.mkdtemp(prefix="yaii_stream_dedup_")
-    docs = _docs(spark, sf_dir)
-    write_table(docs.coalesce(1), f"{d}/in")
-    src = spark.readStream.schema(docs.schema).parquet(f"{d}/in")
-    name = f"sdedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_dedup(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{d}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name)
-
-
-def q_dedup_clusters(spark, sf_dir):
-    """Near-dup CLUSTERING: adjacent-doc unigram-Jaccard edges (≥0.8)
-    → distributed connected components (min-label + pointer jumping) →
-    (doc_id, cluster_id) for every doc, cluster id = min doc id of the
-    component. The oracle recomputes the same edges and closes them
-    with a recursive CTE."""
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.split(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), " ")
-        ).alias("t"),
-    )
-    a = toks.select(F.col("doc_id").alias("id_a"), F.col("t").alias("ta"))
-    b = toks.select(F.col("doc_id").alias("id_b"), F.col("t").alias("tb"))
-    jac = F.size(F.array_intersect("ta", "tb")) / F.greatest(
-        F.size(F.array_union("ta", "tb")), F.lit(1)
-    )
-    edges = (
-        a.join(b, F.col("id_b") == F.col("id_a") + 1)
-        .filter(jac >= 0.8)
-        .select("id_a", "id_b")
-    )
-    return D.assign_clusters(docs.select("doc_id"), edges)
-
-
-def q_simhash(spark, sf_dir):
-    # simhash() also emits n_tokens (the default length-band key for
-    # simhash_candidates); the oracle restates the fingerprint only
-    return D.simhash(_docs(spark, sf_dir)).select("doc_id", "simhash")
-
-
-def _query_vec(spark, sf_dir) -> list[float]:
-    """The query vector (vec_id = 0), fetched with column pruning and
-    WITHOUT the `_spread` repartition — a 1-row lookup has nothing to
-    parallelize, so the raw pushed-filter scan is the cheapest path."""
-    row = (
-        read_table(spark, os.path.join(sf_dir, "embeddings.parquet"))
-        .filter("vec_id = 0")
-        .select("embedding")
-        .collect()[0]
-    )
-    return [float(x) for x in row.embedding]
-
-
-def q_cosine_topk(spark, sf_dir):
-    qv = _query_vec(spark, sf_dir)
-    return S.cosine_topk(_emb(spark, sf_dir).filter("vec_id > 0"), qv, k=5)
-
-
-# materialized ANN tables are immutable per path (rebuilds land behind
-# a new tag) — memoize their base DataFrames so repeated queries don't
-# re-list the bucket/cell partition directories (an InMemoryFileIndex
-# build per call: at 256+ partition dirs that listing IS the query's
-# latency floor, same rationale as IndexCatalog._tables)
-_ANN_TABLES: dict[str, DataFrame] = {}
-
-
-def _ann_table(spark, out: str) -> DataFrame:
-    df = _ANN_TABLES.get(out)
-    if df is None or df.sparkSession is not spark:
-        df = _ANN_TABLES[out] = S.read_ann_index(spark, out)
-    return df
-
-
-def get_ann_index(spark, sf_dir: str, dim: int, n_planes: int = 8) -> DataFrame:
-    """Materialized LSH ANN table for an sf_dir (cached like get_index):
-    written once partitioned by lsh_bucket through the storage seam, so
-    every query's probe filter is partition pruning, never an on-the-fly
-    signature recompute over the corpus (VERDICT r2 #3)."""
-    from yaii_spark.storage import fs_exists, iceberg_format
-
-    tag = hashlib.md5(
-        f"{sf_dir}|ann_lsh|{dim}|{n_planes}|v{FORMAT_VERSION}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(_CACHE_ROOT, tag)
-    # parquet writes a _SUCCESS marker; an Iceberg table's existence is
-    # its metadata dir (same split as IndexCatalog.exists)
-    marker = out if iceberg_format(spark) else os.path.join(out, "_SUCCESS")
-    if not fs_exists(spark, marker):
-        S.write_ann_index(
-            _emb(spark, sf_dir).filter("vec_id > 0"), out, dim=dim,
-            n_planes=n_planes,
-        )
-        _ANN_TABLES.pop(out, None)  # a rebuild must not serve a stale df
-    return _ann_table(spark, out)
-
-
-def q_ann_lsh(spark, sf_dir):
-    """LSH-bucketed ANN (multiprobe hamming≤1) over the MATERIALIZED
-    bucket-partitioned table — the scale path for similarity search;
-    the oracle recomputes the identical hyperplane signatures (seeded
-    constants embedded as SQL literals) + exact rerank, so bucketing
-    AND scoring are value-checked."""
-    qv = _query_vec(spark, sf_dir)
-    return S.lsh_ann_topk(
-        get_ann_index(spark, sf_dir, dim=len(qv)), qv, dim=len(qv), k=5,
-        multiprobe_hamming=1,
-    )
-
-
-def _ann_lsh_sql(dim: int = 64, n_planes: int = 8) -> str:
-    planes = S._hyperplanes(dim, n_planes, seed=42)
-    plane_lit = lambda j: "[" + ",".join(repr(float(x)) for x in planes[j]) + "]::DOUBLE[]"
-    bucket = lambda v: " + ".join(
-        f"(CASE WHEN list_dot_product({v}, {plane_lit(j)}) > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(n_planes)
-    )
-    cos = ("list_dot_product(v, qv) / (sqrt(list_dot_product(v, v)) * "
-           "sqrt(list_dot_product(qv, qv)))")
-    return f"""
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-qb AS (SELECT qv, ({bucket('qv')}) AS qbucket FROM q),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id > 0),
-b AS (SELECT vec_id, v, ({bucket('v')}) AS bucket FROM e),
-c AS (SELECT vec_id, v, qv FROM b, qb WHERE bit_count(xor(bucket::BIGINT, qbucket::BIGINT)) <= 1)
-SELECT vec_id, round({cos}, 6) AS cosine
-FROM c ORDER BY {cos} DESC, vec_id ASC LIMIT 5"""
-
-
-def get_ivf_index(spark, sf_dir: str, dim: int, n_cells: int = 8):
-    """Materialized IVF ANN table (cell-partitioned, cached like the
-    LSH one) + its centroids. Training is the deterministic bounded
-    driver sample (orderBy.limit), so repeated calls derive identical
-    centroids and the cached table stays consistent."""
-    from yaii_spark.storage import fs_exists, iceberg_format
-
-    emb = _emb(spark, sf_dir).filter("vec_id > 0")
-    cents = S.ivf_train(emb, n_cells=n_cells)
-    tag = hashlib.md5(
-        # |cs: layout gained the _ivf_cell_stats side table (r5)
-        f"{sf_dir}|ann_ivf|{dim}|{n_cells}|v{FORMAT_VERSION}|cs".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(_CACHE_ROOT, tag)
-    # the IVF layout is TWO tables (main + _ivf_cell_stats side table,
-    # written in that order) — gate on BOTH markers, so a crash between
-    # the writes leaves a dir that fails the check and rebuilds
-    # (write_table overwrites, so the retry is idempotent) instead of
-    # one that passes it and breaks q_ann_ivf_pruned forever
-    stats_dir = os.path.join(out, "_ivf_cell_stats")
-    if iceberg_format(spark):
-        markers = [out, stats_dir]
-    else:
-        markers = [
-            os.path.join(out, "_SUCCESS"), os.path.join(stats_dir, "_SUCCESS")
-        ]
-    if not all(fs_exists(spark, m) for m in markers):
-        S.write_ann_index(emb, out, dim=dim, method="ivf", centroids=cents)
-        _ANN_TABLES.pop(out, None)
-    return _ann_table(spark, out), cents, S.read_ivf_cell_stats(spark, out)
-
-
-def q_ann_ivf_full(spark, sf_dir):
-    """IVF ANN through the FULL machinery — kmeans training, cell
-    assignment, cell-partitioned materialized table, probe ordering,
-    in-cell exact rerank — probed at n_probe == n_cells, which makes
-    the result provably equal to exact cosine top-k: the brute-force
-    SQL is therefore a value-exact oracle for the whole pipeline
-    (partial-probe recall behavior is pinned in pytest, where the
-    data-derived centroids don't need an SQL restatement)."""
-    qv = _query_vec(spark, sf_dir)
-    tbl, cents, _stats = get_ivf_index(spark, sf_dir, dim=len(qv))
-    return S.ivf_ann_topk(tbl, qv, cents, k=5, n_probe=8)
-
-
-def q_ann_ivf_pruned(spark, sf_dir):
-    """EXACT top-k through the cell-PRUNED IVF path
-    (`ivf_ann_topk_exact`): probe the best cells, bound the rest by
-    per-cell angular radius (triangle inequality on the sphere), score
-    only survivors. Rank-identical to brute force BY CONSTRUCTION —
-    the same brute-force SQL oracle as q_ann_ivf_full therefore
-    hash-checks the whole pruned machinery (bounds, two-phase probe,
-    materialized radius table). On this near-orthogonal synthetic
-    corpus the bound rarely cuts (cell radii ~83°), so the value being
-    pinned is exactness-under-pruning, not the cut ratio; pruning
-    power on clustered data is pinned in pytest
-    (test_ivf_exact_pruned)."""
-    qv = _query_vec(spark, sf_dir)
-    tbl, cents, stats = get_ivf_index(spark, sf_dir, dim=len(qv))
-    return S.ivf_ann_topk_exact(tbl, qv, cents, k=5, n_probe=3, cell_stats=stats)
-
-
-def q_embedding_neardup(spark, sf_dir):
-    emb = _emb(spark, sf_dir).filter("vec_id < 100")
-    return D.embedding_near_dups(emb, block_col="label", threshold=0.3)
-
-
-def q_token_counts(spark, sf_dir):
-    return TX.with_token_counts(_docs(spark, sf_dir)).select(
-        "doc_id", "n_ws_tokens", "n_bpe_tokens"
-    )
-
-
-def q_quality(spark, sf_dir):
-    return TX.with_quality_score(_docs(spark, sf_dir)).select(
-        "doc_id", "n_tokens", "stopword_ratio", "punct_ratio", "avg_word_len", "quality_score"
-    )
-
-
-def q_lang_id(spark, sf_dir):
-    return TX.with_lang_id(_docs(spark, sf_dir)).select("doc_id", "lang_pred")
-
-
-def q_fingerprint(spark, sf_dir):
-    return TX.with_fingerprint(_docs(spark, sf_dir)).select("doc_id", "fingerprint")
-
-
-def q_tpch_q1(spark, sf_dir):
-    # _spread: lineitem yields only as many splits as it has row groups
-    # (3 at sf0.1) — fewer than cores — and Q1's four decimal(28,4)
-    # sums are the dominant per-row cost (measured 0.83 s on the 3-task
-    # scan vs 0.57 s spread to 8, the shuffle included). Result-safe by
-    # construction: decimal aggregation is exact integer arithmetic, so
-    # partitioning cannot change any sum (oracle hash re-checked). At
-    # cluster scale the scan out-splits the cores and _spread is a
-    # no-op, like the document/embedding scans (guide §2.5).
-    li = _spread(
-        _tbl(spark, sf_dir, "lineitem"),
-        os.path.join(sf_dir, "lineitem.parquet"),
-    )
-    dec = lambda c: F.col(c).cast("decimal(18,4)")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(rev).cast("double").alias("sum_revenue"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_revenue_by_nation(spark, sf_dir):
-    c = _tbl(spark, sf_dir, "customer")
-    o = _tbl(spark, sf_dir, "orders")
-    n = _tbl(spark, sf_dir, "nation")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double").alias("total_revenue"),
-        )
-    )
-
-
-def q_window_top2_orders(spark, sf_dir):
-    from pyspark.sql import Window as W
-
-    o = _tbl(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-    return (
-        o.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 2)
-        .select("o_custkey", "o_orderkey", "rnk")
-    )
-
-
-def q_events_windowed(spark, sf_dir):
-    """Event-time tumbling-window aggregation (§2.6 — the batch form of
-    the streaming windowed-ingest operator): Spark `F.window` buckets
-    align to the epoch exactly like DuckDB's time_bucket."""
-    e = _tbl(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 day").alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("win_start"), "n_events", "sum_value")
-    )
-
-
-def q_events_by_type(spark, sf_dir):
-    e = _tbl(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        F.count_distinct("user_id").alias("n_users"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # the contract
 # ---------------------------------------------------------------------------
 
 def queries():
-    """Driver contract: one entry per implemented operator/query.
-
-    ORDER MATTERS for the driver's recorded-correctness artifact: the
-    recorder caps at 50 queries per round while this registry holds 61,
-    so the head rotates each round until every registered query has a
-    driver-recorded green entry (VERDICT r4 #2). This round the 11
-    entries past r5's cap (q_cosine_topk, q_ann_lsh, q_ann_ivf_full,
-    q_embedding_neardup, q_token_counts, q_quality, q_lang_id,
-    q_fingerprint, q_tpch_q1, q_revenue_by_nation,
-    q_window_top2_orders — all judge-rerun green on final r5 code) lead
-    the dict; the 11 entries they push past the cap were all recorded
-    green in CORRECTNESS_r05. Every entry still runs in
-    scripts/check_oracles.py regardless of order."""
+    """Driver contract: one entry per query over the inverted index,
+    each with a matching `oracle_sql()` statement. All 40 entries fit
+    under the driver recorder's 50-query cap, so order carries no
+    meaning; scripts/check_oracles.py runs every entry."""
     return {
-        # rotated to the head this round — see docstring (the 11 tail
-        # entries of the r5 recording window)
-        "q_cosine_topk": q_cosine_topk,
-        "q_ann_lsh": q_ann_lsh,
-        "q_ann_ivf_full": q_ann_ivf_full,
-        "q_embedding_neardup": q_embedding_neardup,
-        "q_token_counts": q_token_counts,
-        "q_quality": q_quality,
-        "q_lang_id": q_lang_id,
-        "q_fingerprint": q_fingerprint,
-        "q_tpch_q1": q_tpch_q1,
-        "q_revenue_by_nation": q_revenue_by_nation,
-        "q_window_top2_orders": q_window_top2_orders,
-        # recorded green in r5, still inside this round's first-50 head
-        "q_events_by_type": q_events_by_type,
-        "q_events_windowed": q_events_windowed,
-        "q_token_bool": q_token_bool,
-        "q_ann_ivf_pruned": q_ann_ivf_pruned,
-        "q_vocab_top_terms": q_vocab_top_terms,
-        "q_snippets": q_snippets,
         # boolean retrieval over the inverted index (P2-P7, U1-U3, J1)
         "q_token": _bool_q(lambda: A.token("dup")),
         "q_or": _bool_q(lambda: A.or_(A.token("dup"), A.token("key"))),
@@ -898,6 +437,7 @@ def queries():
         "q_mixed_and": _bool_q(
             lambda: A.and_(A.token("dup"), A.number_range("n_chars", None, 300))
         ),
+        "q_token_bool": q_token_bool,
         # sort/limit/projection (T1-T4, P1)
         "q_sort_limit": q_sort_limit,
         # BM25 scored retrieval (M5)
@@ -911,6 +451,9 @@ def queries():
         "q_bm25f": q_bm25f,
         "q_mlt": q_mlt,
         "q_bm25_batch": q_bm25_batch,
+        # the term dictionary itself, and highlighting
+        "q_vocab_top_terms": q_vocab_top_terms,
+        "q_snippets": q_snippets,
         # aggregations (A1-A5)
         "q_count_filtered": q_count_filtered,
         "q_first": q_first,
@@ -919,47 +462,13 @@ def queries():
         "q_group_by_lang": q_group_by_lang,
         "q_facets": q_facets,
         "q_buckets": q_buckets,
-        # dedup family
-        "q_dedup_exact": q_dedup_exact,
-        "q_dedup_clusters": q_dedup_clusters,
-        "q_minhash_sig": q_minhash_sig,
-        "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
-        # streaming (ST): stateful operator with a full value oracle
-        "q_stream_dedup": q_stream_dedup,
-        "q_ngram_jaccard_adjacent": q_ngram_jaccard_adjacent,
-        "q_simhash": q_simhash,
     }
-
-
-_IVF_EXACT_SQL = """
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
-SELECT vec_id,
-       round(list_dot_product(embedding::DOUBLE[], q.qv)
-             / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cosine
-FROM embeddings, q WHERE vec_id > 0
-ORDER BY list_dot_product(embedding::DOUBLE[], q.qv)
-         / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-            * sqrt(list_dot_product(q.qv, q.qv))) DESC, vec_id ASC
-LIMIT 5"""
 
 
 def oracle_sql():
     ids_where = lambda cond: (
         f"WITH {_TOK_CTE} SELECT doc_id FROM tok WHERE {cond}"
     )
-    mh = D._minhash_params(4)
-    p = D.MINHASH_PRIME
-    shingle = (
-        "list_distinct(list_transform(range(1, greatest(len(toks)-3, 0) + 2), "
-        "i -> array_to_string(toks[i:i+2], ' ')))"
-    )
-    mh_cols = ", ".join(
-        f"list_min(list_transform(sh, s -> (('0x'||substr(md5(s),1,8))::BIGINT * {a} + {b}) % {p})) AS mh{j}"
-        for j, (a, b) in enumerate(mh)
-    )
-    probes = {k: "[" + ", ".join(f"'{w}'" for w in v) + "]" for k, v in TX.LANG_PROBES.items()}
-    norm = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
     return {
         "q_token": ids_where(_contains_sql("dup")),
         "q_or": ids_where(f"{_contains_sql('dup')} OR {_contains_sql('key')}"),
@@ -1131,149 +640,6 @@ WHERE list_contains(
         "min(doc_id) AS min_doc FROM documents GROUP BY lang",
         "q_buckets": "SELECT (floor(n_chars / 100) * 100)::BIGINT AS bucket, count(*) AS n_docs "
         "FROM documents GROUP BY 1",
-        "q_dedup_exact": f"SELECT md5({norm}) AS content_hash, min(doc_id) AS keep_id, "
-        "count(*) AS n_docs FROM documents GROUP BY 1",
-        "q_dedup_clusters": f"""
-WITH tok AS (SELECT doc_id, list_distinct(regexp_split_to_array(trim({norm}), '\\s+')) AS t FROM documents),
-e AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM tok a JOIN tok b ON b.doc_id = a.doc_id + 1
-  WHERE len(list_intersect(a.t, b.t))::DOUBLE / greatest(len(list_distinct(a.t || b.t)), 1) >= 0.8),
-sym AS (SELECT id_a AS a, id_b AS b FROM e UNION SELECT id_b, id_a FROM e),
-rec AS (
-  WITH RECURSIVE reach(a, b) AS (
-    SELECT a, b FROM sym
-    UNION
-    SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-  ) SELECT * FROM reach)
-SELECT d.doc_id, least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS cluster_id
-FROM documents d LEFT JOIN rec r ON r.a = d.doc_id
-GROUP BY d.doc_id""",
-        "q_minhash_sig": f"""
-WITH tok AS (SELECT doc_id, regexp_split_to_array(trim({norm}), '\\s+') AS toks FROM documents),
-sh AS (SELECT doc_id, {shingle} AS sh FROM tok)
-SELECT doc_id, {mh_cols} FROM sh""",
-        # band 0 = (mh0, mh1), band 1 = (mh2, mh3) — the engine's
-        # 2-bands-of-2 slicing over the same 4 md5-family hashes
-        "q_minhash_lsh_pairs": f"""
-WITH tok AS (SELECT doc_id, regexp_split_to_array(trim({norm}), '\\s+') AS toks FROM documents),
-sh AS (SELECT doc_id, {shingle} AS sh FROM tok),
-sig AS (SELECT doc_id, {mh_cols} FROM sh)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE (a.mh0 = b.mh0 AND a.mh1 = b.mh1) OR (a.mh2 = b.mh2 AND a.mh3 = b.mh3)""",
-        "q_stream_dedup": f"SELECT md5({norm}) AS content_hash, "
-        "min(doc_id) AS keep_id FROM documents GROUP BY 1",
-        "q_simhash": _simhash_sql(),
-        "q_ngram_jaccard_adjacent": f"""
-WITH tok AS (SELECT doc_id, regexp_split_to_array(trim({norm}), '\\s+') AS toks FROM documents),
-sh AS (SELECT doc_id, {shingle} AS sh FROM tok)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       round(len(list_intersect(a.sh, b.sh))::DOUBLE
-             / greatest(len(list_distinct(a.sh || b.sh)), 1), 6) AS jaccard
-FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1""",
-        "q_cosine_topk": """
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
-SELECT vec_id,
-       round(list_dot_product(embedding::DOUBLE[], q.qv)
-             / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cosine
-FROM embeddings, q WHERE vec_id > 0
-ORDER BY list_dot_product(embedding::DOUBLE[], q.qv)
-         / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-            * sqrt(list_dot_product(q.qv, q.qv))) DESC, vec_id ASC
-LIMIT 5""",
-        "q_ann_lsh": _ann_lsh_sql(),
-        # brute-force exact top-5 — a value oracle for q_ann_ivf_full
-        # (full probe == exact) AND q_ann_ivf_pruned (bound-pruned
-        # partial probe is exact by construction)
-        "q_ann_ivf_full": _IVF_EXACT_SQL,
-        "q_ann_ivf_pruned": _IVF_EXACT_SQL,
-        "q_embedding_neardup": """
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 100)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE list_dot_product(a.v, b.v)
-      / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.3""",
-        "q_token_counts": r"""
-SELECT doc_id,
-       len(regexp_split_to_array(trim(text), '\s+')) AS n_ws_tokens,
-       len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS n_bpe_tokens
-FROM documents""",
-        "q_quality": f"""
-WITH base AS (
-  SELECT doc_id, text,
-         regexp_split_to_array(trim(text), '\\s+') AS toks,
-         length(text) AS nchars
-  FROM documents
-), feat AS (
-  SELECT doc_id,
-         len(toks) AS n_tokens,
-         round(len(list_intersect(list_distinct(toks), {_stoplist_sql()}))::DOUBLE
-               / greatest(len(toks), 1), 6) AS stopword_ratio,
-         round((nchars - length(regexp_replace(text, '[^\\w\\s]', '', 'g')))::DOUBLE
-               / greatest(nchars, 1), 6) AS punct_ratio,
-         round(length(regexp_replace(text, '\\s+', '', 'g'))::DOUBLE / len(toks), 6) AS avg_word_len
-  FROM base
-)
-SELECT doc_id, n_tokens, stopword_ratio, punct_ratio, avg_word_len,
-       round( least(n_tokens / 64.0, 1.0) * 0.4
-            + least(stopword_ratio * 4.0, 1.0) * 0.3
-            + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.3, 6) AS quality_score
-FROM feat""",
-        "q_lang_id": f"""
-WITH t AS (
-  SELECT doc_id, list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+')) AS toks
-  FROM documents
-), hits AS (
-  SELECT doc_id,
-         len(list_intersect(toks, {probes['de']})) AS h_de,
-         len(list_intersect(toks, {probes['en']})) AS h_en,
-         len(list_intersect(toks, {probes['es']})) AS h_es,
-         len(list_intersect(toks, {probes['fr']})) AS h_fr
-  FROM t
-)
-SELECT doc_id,
-       CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
-            WHEN h_de = greatest(h_de, h_en, h_es, h_fr) THEN 'de'
-            WHEN h_en = greatest(h_de, h_en, h_es, h_fr) THEN 'en'
-            WHEN h_es = greatest(h_de, h_en, h_es, h_fr) THEN 'es'
-            ELSE 'fr' END AS lang_pred
-FROM hits""",
-        "q_fingerprint": f"SELECT doc_id, md5({norm}) AS fingerprint FROM documents",
-        "q_tpch_q1": """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity::DECIMAL(18,4))::DOUBLE AS sum_qty,
-       sum(l_extendedprice::DECIMAL(18,4))::DOUBLE AS sum_base_price,
-       sum((l_extendedprice * (1 - l_discount))::DECIMAL(18,4))::DOUBLE AS sum_revenue,
-       count(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus""",
-        "q_revenue_by_nation": """
-SELECT n_name AS nation, count(*) AS n_orders,
-       sum(o_totalprice::DECIMAL(18,4))::DOUBLE AS total_revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name""",
-        "q_window_top2_orders": """
-SELECT o_custkey, o_orderkey, rnk FROM (
-  SELECT o_custkey, o_orderkey,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rnk
-  FROM orders
-) WHERE rnk <= 2""",
-        "q_events_by_type": """
-SELECT event_type, count(*) AS n_events,
-       sum(value::DECIMAL(18,4))::DOUBLE AS sum_value,
-       count(DISTINCT user_id) AS n_users
-FROM events GROUP BY event_type""",
-        "q_events_windowed": """
-SELECT time_bucket(INTERVAL '1 day', ts) AS win_start,
-       count(*) AS n_events,
-       sum(value::DECIMAL(18,4))::DOUBLE AS sum_value
-FROM events GROUP BY 1""",
     }
 
 

@@ -856,9 +856,9 @@ def build_index(
 def delete_docs_df(spark: SparkSession, index_dir: str, ids: DataFrame,
                    id_col: str = "doc_id") -> int:
     """Distributed bulk tombstoning: `ids` is any DataFrame of doc ids
-    (e.g. the output of a dedup cluster assignment filtered to
-    non-survivors) — tombstone rows are derived and written without the
-    ids ever touching the driver (VERDICT r3 #6: a 100-TB bulk delete
+    (e.g. a boolean query's result, or a table of ids to expire) —
+    tombstone rows are derived and written without the ids ever
+    touching the driver (VERDICT r3 #6: a 100-TB bulk delete
     can tombstone billions of docs). Ids already tombstoned are left
     out, so the table holds one row per deleted doc. Returns the count
     added: the distinct new ids, observed in the pass that writes them
@@ -892,7 +892,9 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> int:
     """Tombstone docs (the reference's removeDocument,
     mutable-segment.ts:191-197 — immutable segments there throw
     NotImplemented; ours works uniformly). Appends (seg_id, doc_id)
-    rows; queries anti-join / subtract them. Returns count added.
+    rows; each query task reads the tombstone files covering its own
+    segments (`executor.run_per_segment`) and drops those docs, and a
+    merge expunges them. Returns count added.
 
     List-in convenience form of `delete_docs_df` (which is the scale
     path — nothing corpus-sized should pass through this driver list)."""

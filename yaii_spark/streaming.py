@@ -307,88 +307,6 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
     return commit
 
 
-def streaming_dedup(
-    src: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """Stateful cross-batch exact dedup over an unbounded ingest stream
-    — a custom stateful operator via ``applyInPandasWithState`` (the
-    brief's scale path for stateful stream transforms; the reference
-    has no streaming state at all).
-
-    Keyed by md5(normalized text): the first-ever occurrence of each
-    content hash is emitted (min id within the batch wins, matching
-    batch ``exact_dedup``'s deterministic survivor), every later
-    occurrence — same batch or any later micro-batch — is suppressed
-    by per-key GroupState.
-
-    State sizing (VERDICT r4 #5): exact mode (``ttl_ms=None``, the
-    default) keeps one entry per distinct content hash FOREVER — that
-    is the semantics of exact dedup (any hash may recur arbitrarily
-    late). Budget ~(32-byte key + ~50 bytes store overhead) per
-    distinct hash in the state store: 10^9 distinct docs ≈ 80 GB spread
-    across executors (RocksDB state store recommended at that scale).
-    When late duplicates beyond some horizon are acceptable, pass
-    ``ttl_ms`` to evict idle keys after that much processing-time
-    inactivity: an expired key's next occurrence RE-EMITS (bounded
-    state, windowed-dedup semantics — each key's state lives
-    last-seen + ttl). Exact mode is byte-for-byte the r4 behavior."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    hashed = src.withColumn(
-        "content_hash",
-        F.md5(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")),
-    ).select("content_hash", F.col(id_col).alias("keep_id"))
-
-    return hashed.groupBy("content_hash").applyInPandasWithState(
-        make_dedup_state_fn(ttl_ms),
-        outputStructType="content_hash string, keep_id long",
-        stateStructType="seen boolean",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-def make_dedup_state_fn(ttl_ms: int | None = None):
-    """The applyInPandasWithState body of `streaming_dedup`, exposed so
-    the TTL state machine is unit-testable against a fake GroupState
-    (processing-time timeouts are wall-clock-driven — an end-to-end
-    expiry test is inherently racy, the state transitions are not):
-    timed-out invocation → remove (next sighting re-emits); data +
-    no state → emit min id, arm TTL; data + state → suppress, re-arm."""
-    import pandas as pd
-
-    def emit_first(key, pdfs, state):
-        if ttl_ms is not None and state.hasTimedOut:
-            # idle past the TTL: drop the entry so a later recurrence
-            # re-emits (the state-store compaction story)
-            state.remove()
-            return
-        if not state.exists:
-            best = None
-            for pdf in pdfs:
-                m = int(pdf["keep_id"].min())
-                best = m if best is None else min(best, m)
-            state.update((True,))
-            if ttl_ms is not None:
-                state.setTimeoutDuration(int(ttl_ms))
-            yield pd.DataFrame({"content_hash": [key[0]], "keep_id": [best]})
-        else:
-            for _ in pdfs:  # drain the iterator; nothing to emit
-                pass
-            if ttl_ms is not None:
-                # sliding TTL: each sighting re-arms the idle clock
-                state.setTimeoutDuration(int(ttl_ms))
-
-    return emit_first
-
-
 def windowed_ingest_stats(
     spark: SparkSession, stream_dir: str, schema,
     ts_col: str = "warc_ts", window: str = "1 minute", watermark: str = "5 minutes",
