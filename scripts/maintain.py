@@ -5,14 +5,17 @@
     python scripts/maintain.py bulk-delete --index /path/idx --ids-table /path/ids.parquet
     python scripts/maintain.py merge       --index /path/idx --output /path/idx2 --factor 8
 
-`info` prints corpus stats + per-segment lineage as one JSON line;
+`info` prints corpus stats and one row per live segment (the
+manifest's segments with seg_meta's doc count, and their posting rows
+and postings counted from the postings table at call time) as one JSON
+line;
 `delete` tombstones docs (queries exclude them immediately);
 `bulk-delete` tombstones every doc_id in a parquet table without a
 driver-side list (indexer.delete_docs_df — the 100-TB path);
 `merge` compacts `factor` adjacent segments into one (fully
 distributed) and EXPUNGES tombstones in the same pass — postings and
-docs rows of deleted docs are dropped, the tombstone table removed
-(see indexer.merge_segments). All paths go through the
+docs rows of deleted docs are dropped, and the output's tombstones
+record them (see indexer.merge_segments). All paths go through the
 storage seam, so the same commands work on Iceberg-backed indexes.
 """
 
@@ -47,16 +50,25 @@ def main() -> None:
         raise SystemExit(f"no complete index at {args.index}")
 
     if args.command == "info":
+        from pyspark.sql import functions as F
+
         s = cat.corpus_stats()
-        ck = [r.asDict() for r in cat.checkpoints().orderBy("seg_id").collect()]
+        counts = cat.postings().groupBy("seg_id").agg(
+            F.count("*").alias("n_terms"), F.sum("df_local").alias("n_postings_docs")
+        )
+        segs = [
+            r.asDict()
+            for r in cat.seg_meta().select("seg_id", "n_docs")
+            .join(counts, "seg_id", "left").na.fill(0).orderBy("seg_id").collect()
+        ]
         tomb = cat.tombstones()
         print(json.dumps({
             "n_docs": s.n_docs, "avgdl": s.avgdl, "seg_size": s.seg_size,
             "block_size": s.block_size, "k1": s.k1, "b": s.b,
-            "n_segments": len(ck),
+            "n_segments": len(cat.manifest().segments),
             "n_tombstones": tomb.count() if tomb is not None else 0,
-            "segments": ck,
-        }, default=str))
+            "segments": segs,
+        }))
     elif args.command == "delete":
         ids = [int(x) for x in args.ids.split(",") if x]
         if not ids:

@@ -13,7 +13,8 @@ Evidence emitted (one JSON line):
   (index is ~5x batch at the early window, ~Nx at the late window)
 - term_stats identity: the folded dictionary the manifest names is
   compared row-for-row against a fresh full aggregation over every
-  live segment's postings (the formula _write_term_stats_full uses)
+  live segment's postings (what _fold_term_stats computes on a first
+  publish)
 
 Usage: python scripts/probe_append_flat.py [n_batches] [batch_docs] [seg_size]
 Runs on tmpfs (/dev/shm) to keep the IO floor out of the signal.

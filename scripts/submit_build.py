@@ -6,14 +6,15 @@ Cluster usage:
     zip -r yaii_spark.zip yaii_spark
     spark-submit --py-files yaii_spark.zip scripts/submit_build.py \\
         --input s3://bucket/pages_iceberg --output s3://bucket/index \\
-        --seg-size 1048576 --postings-shards 64
+        --seg-size 1048576
 
 Local sandbox smoke:
 
     python scripts/submit_build.py --input /root/testdata/sf0.01 \\
         --table documents.parquet --output /tmp/idx --seg-size 1024
 
-The same job re-run with --resume skips checkpointed segments.
+Re-running the same job skips the segments the index's manifest
+already names (--no-resume rebuilds from scratch).
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ def main() -> None:
     ap.add_argument("--table", default="", help="optional file name under --input")
     ap.add_argument("--output", required=True, help="index output dir")
     ap.add_argument("--seg-size", type=int, default=1 << 20)
-    ap.add_argument("--postings-shards", type=int, default=64)
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--stored-cols", default="", help="comma-separated")
@@ -75,7 +75,6 @@ def main() -> None:
         id_col=args.id_col,
         stored_cols=[c for c in args.stored_cols.split(",") if c] or None,
         resume=not args.no_resume,
-        postings_shards=args.postings_shards,
     )
     print(json.dumps(metrics))
 

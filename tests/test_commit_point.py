@@ -6,7 +6,8 @@ write) and in a merge — leaves the previous version answering every
 query with its own corpus stats; re-running or replaying the operation
 then gives term_stats rows, corpus stats and query results identical to
 an uninterrupted run, and leaves one manifest and one term_stats
-version behind.
+version behind. A smaller first build over a crashed one's files
+equals a clean build of its own docs.
 """
 
 import os
@@ -78,6 +79,23 @@ def test_build_crash_before_publish(spark, tmp_path, monkeypatch):
     assert m["segments_built"] == 4
     assert _answers(spark, idx) == _answers(spark, ref)
     _one_version_left(idx)
+
+
+def test_rebuild_over_crashed_larger_build(spark, tmp_path, monkeypatch):
+    """A first build that dies before its publish leaves segment files
+    no manifest names; a first build of fewer docs over them must keep
+    those segments out of its dictionary, and equal a clean build."""
+    pages = gen_pages(spark, 64, include_fixtures=True)
+    half = pages.filter(F.col("doc_id") < 32)
+    ref, idx = str(tmp_path / "ref"), str(tmp_path / "idx")
+    build_index(spark, half, ref, seg_size=16, stored_cols=STORED)
+    monkeypatch.setattr(IX, "publish_manifest", _crash)
+    with pytest.raises(Crash):
+        build_index(spark, pages, idx, seg_size=16, stored_cols=STORED)
+    monkeypatch.undo()
+    m = build_index(spark, half, idx, seg_size=16, stored_cols=STORED)
+    assert m["segments_built"] == 2
+    assert _answers(spark, idx) == _answers(spark, ref)
 
 
 @pytest.mark.parametrize("point", ["_fold_term_stats", "publish_manifest"])

@@ -92,12 +92,15 @@ def test_catalog_evicted_on_in_place_rebuild(spark, work_dir):
     assert ("text", "hotterm") in cat2.term_stats_for([("text", "hotterm")])
 
 
-def test_merge_with_sparse_term_shards(spark, work_dir):
-    """A single-distinct-term corpus leaves most of the 16 merge shards
-    META-ONLY (the posting side of the cogroup is empty) — regression
-    for the float64-dtyped empty frame that Arrow could not convert to
-    the list/binary output columns (first seen at a 1M-doc merge)."""
+def test_merge_with_sparse_term_shards(spark, work_dir, monkeypatch):
+    """A single-distinct-term corpus leaves most of 16 merge shards (the
+    count a 2^20-doc merged segment gets) without postings rows, only
+    their segment's blobs — regression for the float64-dtyped empty
+    frame that Arrow could not convert to the list/binary output columns
+    (first seen at a 1M-doc merge)."""
     import datetime as dt
+
+    import yaii_spark.indexer as IX
 
     from yaii_spark.synth import EPOCH, PAGES_SCHEMA, render_html
 
@@ -108,6 +111,7 @@ def test_merge_with_sparse_term_shards(spark, work_dir):
     ]
     src, dst = f"{work_dir}/sparse_idx", f"{work_dir}/sparse_idx2"
     build_index(spark, spark.createDataFrame(rows, PAGES_SCHEMA), src, seg_size=10)
+    monkeypatch.setattr(IX, "_term_shards", lambda seg_size: 16)
     m = merge_segments(spark, src, dst, factor=4)
     assert m["segments_after"] == 1
     got = ids(execute_boolean(IndexCatalog(spark, dst), A.token("solo")))
@@ -185,13 +189,10 @@ def test_rebuild_resume_false_removes_stale(spark, work_dir):
 
 def test_merge_expunges_tombstones(spark, work_dir):
     """Purge-at-merge (VERDICT r3 #5): a merge over a tombstoned index
-    drops the deleted docs' postings (df_local shrinks), removes their
-    docs rows, carries NO tombstone table, and records the holes in
-    seg_meta.deleted_bin — while every query (NOT/ALL universes and
-    both BM25 paths included) stays identical pre/post."""
-    from yaii_spark.codec import delta_decode
-    from yaii_spark.storage import fs_exists
-
+    drops the deleted docs' postings (df_local shrinks) and docs rows,
+    and its tombstones table records exactly the deleted ids under the
+    merged seg_ids — while every query (NOT/ALL universes and both BM25
+    paths included) stays identical pre/post."""
     src, dst = f"{work_dir}/purge_src", f"{work_dir}/purge_dst"
     pages = gen_pages(spark, 400, include_fixtures=True)
     build_index(spark, pages, src, seg_size=50)  # 8 segments
@@ -204,17 +205,12 @@ def test_merge_expunges_tombstones(spark, work_dir):
     m = merge_segments(spark, src, dst, factor=4)
     assert m["segments_after"] == 2
     b = IndexCatalog(spark, dst)
-    # postings shrank and the tombstone table is gone
+    # postings shrank; the tombstones record the deleted ids, one row
+    # each, keyed by merged segment (seg_size 200)
     post_df = sum(r.df_local for r in b.postings().filter(url).collect())
     assert post_df < pre_df
-    assert not fs_exists(spark, f"{dst}/tombstones")
-    assert b.tombstones() is None
-    # holes recorded in seg_meta.deleted_bin
-    holes = set()
-    for r in b.seg_meta().collect():
-        if r.deleted_bin is not None:
-            holes |= {int(x) + r.base_doc_id for x in delta_decode(r.deleted_bin)}
-    assert holes == set(dele)
+    tomb = sorted((r.seg_id, r.doc_id) for r in b.tombstones().collect())
+    assert tomb == sorted((d // 200, d) for d in dele)
     # docs rows expunged
     assert b.docs().filter(F.col("doc_id").isin(dele[:10])).count() == 0
     assert index_size(b) == 400 - len(dele)
@@ -228,14 +224,29 @@ def test_merge_expunges_tombstones(spark, work_dir):
         rb = [(r.doc_id, r.score)
               for r in bm25_topk(b, ["url", "wcsfc"], k=10, prune=prune).collect()]
         assert ra == rb
-    # a second merge over the purged index folds deleted_bin holes
-    # forward (no tombstones this time — holes come from seg_meta)
+    # a second merge over the purged index carries the tombstones forward
     dst2 = f"{work_dir}/purge_dst2"
     merge_segments(spark, dst, dst2, factor=2)
     c = IndexCatalog(spark, dst2)
+    assert sorted(r.doc_id for r in c.tombstones().collect()) == sorted(dele)
     assert ids(execute_boolean(c, A.not_(A.token("url")))) == ids(
         execute_boolean(a, A.not_(A.token("url")))
     )
+
+
+def test_delete_after_purging_merge_adds_nothing(spark, work_dir):
+    """A doc a merge purged stays deleted on the merged index: deleting
+    it again adds no tombstone, and a fresh delete still adds one."""
+    src, dst = f"{work_dir}/redel_src", f"{work_dir}/redel_dst"
+    build_index(spark, gen_pages(spark, 64, include_fixtures=False), src, seg_size=16)
+    delete_docs(spark, src, [5, 40])
+    with pytest.warns(RuntimeWarning):  # 2 segments < local parallelism
+        merge_segments(spark, src, dst, factor=2)
+    assert delete_docs(spark, dst, [40]) == 0
+    assert delete_docs(spark, dst, [40, 41]) == 1
+    cat = IndexCatalog(spark, dst)
+    assert sorted(r.doc_id for r in cat.tombstones().collect()) == [5, 40, 41]
+    assert index_size(cat) == 61
 
 
 def test_delete_docs_df_distributed(spark, work_dir):
@@ -273,27 +284,39 @@ def test_format_version_gate(spark, work_dir):
             IndexCatalog(spark, out).corpus_stats()
 
 
-@pytest.mark.parametrize("version", [5, 6, 7])
+@pytest.mark.parametrize("version", [5, 6, 7, 8])
 def test_v5_index_raises_rebuild(spark, work_dir, version):
     """An index of an older format (v5: hash-bucketed term_stats; v6:
     block bounds stored as norms under the build-time avgdl; v7: the
-    corpus_stats commit marker, no manifest) is not readable by this
-    build: the catalog, an append commit and a merge all raise the
-    rebuild error before touching it."""
+    corpus_stats commit marker, no manifest; v8: a manifest stamped 8,
+    with a holes blob per seg_meta row) is not readable by this build:
+    the catalog, an append commit and a merge all raise the rebuild
+    error before touching it."""
+    import json
+    import os
+
     from yaii_spark.storage import fs_delete, local_frame, write_table
     from yaii_spark.streaming import make_append_committer
 
     out = f"{work_dir}/v{version}_idx"
     build_index(spark, gen_boolean_pages(spark), out, seg_size=8)
-    fs_delete(spark, f"{out}/_manifest")
-    write_table(
-        local_frame(
-            spark, [(4, 10.0, 1.2, 0.75, 8, 128, version)],
-            "n_docs long, avgdl double, k1 double, b double, seg_size long, "
-            "block_size long, format_version long",
-        ),
-        f"{out}/corpus_stats",
-    )
+    if version == 8:
+        m = IndexCatalog(spark, out).manifest()
+        body = {"version": m.version + 1, "n_docs": 4, "sum_dl": 40, "k1": 1.2,
+                "b": 0.75, "seg_size": 8, "block_size": 128, "segments": [1],
+                "format_version": 8}
+        with open(os.path.join(out, "_manifest", str(m.version + 1)), "w") as f:
+            json.dump(body, f)
+    else:
+        fs_delete(spark, f"{out}/_manifest")
+        write_table(
+            local_frame(
+                spark, [(4, 10.0, 1.2, 0.75, 8, 128, version)],
+                "n_docs long, avgdl double, k1 double, b double, seg_size long, "
+                "block_size long, format_version long",
+            ),
+            f"{out}/corpus_stats",
+        )
     with pytest.raises(ValueError, match="rebuild"):
         IndexCatalog(spark, out).corpus_stats()
     commit = make_append_committer(out, seg_size=8)

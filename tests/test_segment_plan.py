@@ -10,7 +10,7 @@ These tests pin that single plan on a 2-segment fixture:
   between queries on one open catalog;
 - every boolean and BM25 query (exact and MaxScore-pruned) gives
   identical results on the tombstoned index and on its purged
-  1-segment merge (holes in ``deleted_bin`` instead of tombstones);
+  1-segment merge, whose tombstones hold the same deleted ids;
 - on an index with fewer segments than cores, phrase and BM25 queries
   over a rare term next to a dense one compile to exactly one Python
   stage with no Exchange, no broadcast and no cross/nested-loop join,
@@ -148,9 +148,9 @@ def test_boolean_matches_oracle_after_delete(spark, tombstoned_index, brute):
 
 
 def test_tombstoned_equals_purged_merge(spark, tombstoned_index, work_dir):
-    """A purging merge turns the tombstones into deleted_bin holes in
-    one segment; boolean results and BM25 (exact AND pruned) doc ids
-    and scores must not change."""
+    """A purging merge expunges the tombstoned docs into one segment and
+    keeps their ids as its tombstones; boolean results and BM25 (exact
+    AND pruned) doc ids and scores must not change."""
     cat = IndexCatalog(spark, tombstoned_index)
     base, base_bm25 = _run_all(cat), _bm25_all(cat)
     assert any(len(r) == 13 for r in base_bm25)  # k actually binds somewhere
@@ -159,7 +159,7 @@ def test_tombstoned_equals_purged_merge(spark, tombstoned_index, work_dir):
     with pytest.warns(RuntimeWarning):  # 1 seg < defaultParallelism
         merge_segments(spark, tombstoned_index, merged, factor=2)
     mcat = IndexCatalog(spark, merged)
-    assert mcat.tombstones() is None  # purged, not carried
+    assert sorted(r.doc_id for r in mcat.tombstones().collect()) == sorted(DELETED)
     assert _run_all(mcat) == base
     assert _bm25_all(mcat) == base_bm25
 

@@ -140,7 +140,7 @@ def _jobs_launched(spark, fn):
 @pytest.fixture(scope="module")
 def every_table_index(spark, tmp_path_factory):
     """A 2-segment build, one streaming append batch and a delete: all
-    five declared index tables exist on disk."""
+    four declared index tables exist on disk."""
     from yaii_spark.indexer import build_index, delete_docs
     from yaii_spark.streaming import make_append_committer
     from yaii_spark.synth import gen_pages
@@ -154,7 +154,7 @@ def every_table_index(spark, tmp_path_factory):
     return idx
 
 
-_DECLARED = ["postings", "seg_meta", "term_stats", "checkpoints", "tombstones"]
+_DECLARED = ["postings", "seg_meta", "term_stats", "tombstones"]
 
 
 @pytest.mark.parametrize("table", _DECLARED)

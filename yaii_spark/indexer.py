@@ -39,8 +39,8 @@ Scale design decisions (the 100 TB story):
   pattern, /root/reference/src/base-inverted-index.ts:297-394).
 - **Concurrent commits.** The docs / seg_meta / postings writes are
   independent consumers of the persisted tokenized batch and are
-  submitted as concurrent Spark jobs (as are the lineage/stats tail
-  writes) — driver-side planning/commit latencies overlap.
+  submitted as concurrent Spark jobs — driver-side planning/commit
+  latencies overlap.
 - **docID = seg_id * seg_size + local** (dense). Delta+varint then
   compresses to ~1-2 bytes/doc. At 10^12 docs: 10^6 segments × 2^20.
 - **One commit point:** a build, an append commit and a merge each
@@ -48,9 +48,9 @@ Scale design decisions (the 100 TB story):
   segments and the corpus stats (its dictionary is term_stats/<n>).
   Re-running skips the segments the manifest names; files a crashed
   run wrote outside it are ignored by readers and overwritten by the
-  re-run (dynamic partition overwrite). The checkpoints table keeps one
-  lineage row per built segment for operators; nothing reads it to
-  decide.
+  re-run (dynamic partition overwrite). Every index fact has one
+  record: live segments and corpus stats in the manifest, doc lengths
+  in seg_meta, deleted docs in tombstones.
 - **Term-sorted files:** every postings file is (field, term)-sorted
   inside its segment partition → parquet row-group min/max prunes term
   lookups at query time without a term-partitioned layout (which would
@@ -411,17 +411,27 @@ def _labeled(spark: SparkSession, desc: str, fn, *args, **kwargs):
         sc.setJobDescription(None)
 
 
-def _check_append_geometry(m: Manifest | None, seg_size: int) -> None:
-    """Refuse to append with a seg_size different from the index's:
-    segment geometry is GLOBAL (doc_id = seg_id*seg_size + local — the
-    invariant every query path decodes against), so a mismatched append
-    would derive doc ids that collide with or straddle existing
-    segments. Bites after a merge, which multiplies seg_size by the
-    merge factor; callers must pass the merged size. No-op before the
-    first publish (`m` None)."""
+def _term_shards(seg_size: int) -> int:
+    """Term-hash shards per segment, for the build and the merge
+    alike: shards bound one encode task's memory to ~64k docs'
+    postings. Small segments need no split, and each extra shard
+    multiplies the pandas group count (and, in the build, the
+    explode+shuffle rows: one packed row per (doc, shard); in the
+    merge, the copies of each dl blob). 2^20-doc segments get 16."""
+    return max(1, min(16, seg_size // 65536))
+
+
+def _check_geometry(m: Manifest | None, seg_size: int) -> None:
+    """Refuse to build onto a published index with a seg_size
+    different from its own: segment geometry is GLOBAL (doc_id =
+    seg_id*seg_size + local — the invariant every query path decodes
+    against), so a mismatched build would derive doc ids that collide
+    with or straddle existing segments. Bites after a merge, which
+    multiplies seg_size by the merge factor; callers must pass the
+    merged size. No-op before the first publish (`m` None)."""
     if m is not None and m.seg_size != int(seg_size):
         raise ValueError(
-            f"append with seg_size={int(seg_size)} onto an index built with "
+            f"build with seg_size={int(seg_size)} onto an index built with "
             f"seg_size={m.seg_size} — segment geometry is global "
             "(doc_id = seg_id*seg_size + local); pass the index's current "
             "seg_size (a merge multiplies it by the merge factor)"
@@ -442,25 +452,15 @@ def _write_term_stats(df: DataFrame, path: str) -> None:
     write_table(df.select(*column_names("term_stats")).orderBy("field", "term"), path)
 
 
-def _write_term_stats_full(post: DataFrame, path: str) -> None:
-    """term_stats recomputed from the postings rows `post` — the first
-    publish of an index, where no earlier dictionary exists."""
-    _write_term_stats(
-        post.groupBy("field", "term").agg(
-            F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf")
-        ),
-        path,
-    )
-
-
-def _fold_term_stats(spark: SparkSession, out_dir: str, prev: Manifest,
+def _fold_term_stats(spark: SparkSession, out_dir: str, prev: Manifest | None,
                      post: DataFrame, path: str) -> None:
     """Fold the new segments' postings rows `post` into `prev`'s
     dictionary, written as the fresh version directory `path`, without
     re-reading the old segments' postings: the union of the previous
     version's rows and `post`'s (df_local, cf_local) rows, summed per
     (field, term) — sum is associative, so the result is value-identical
-    to a full recompute. The previous version is never written, so a
+    to a full recompute. On the first publish (`prev` None) the sum
+    runs over `post` alone. The previous version is never written, so a
     crash before the manifest publish leaves it intact.
 
     The fold is O(dictionary) + O(batch postings): it rewrites the
@@ -473,16 +473,15 @@ def _fold_term_stats(spark: SparkSession, out_dir: str, prev: Manifest,
     the expunged postings (merge_segments carries it unchanged so scores
     stay byte-identical). The fold PRESERVES that lag — it only adds the
     new segments' counts."""
-    delta = post.select(
+    rows = post.select(
         "field", "term", F.col("df_local").alias("df"), F.col("cf_local").alias("cf")
     )
-    merged = (
-        read_index_table(spark, out_dir, prev.term_stats_table)
-        .unionByName(delta)
-        .groupBy("field", "term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+    if prev is not None:
+        rows = read_index_table(spark, out_dir, prev.term_stats_table).unionByName(rows)
+    _write_term_stats(
+        rows.groupBy("field", "term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
+        path,
     )
-    _write_term_stats(merged, path)
 
 
 def build_index(
@@ -497,9 +496,6 @@ def build_index(
     k1: float = DEFAULT_K1,
     b: float = DEFAULT_B,
     resume: bool = True,
-    max_segments: int | None = None,
-    postings_shards: int | None = None,
-    append: bool = False,
     _sink_batch: int | None = None,
 ) -> dict:
     """Build (or resume) the inverted index for `pages` under `out_dir`.
@@ -523,24 +519,21 @@ def build_index(
     skips the segments the newest manifest already names; a crash
     before the publish leaves the previous version whole, and the rerun
     overwrites what the crashed run wrote (dynamic partition overwrite).
-    A run with nothing pending publishes nothing. `max_segments` limits
-    how many pending segments this invocation builds — used by the
-    resumability test to simulate a mid-build kill (FIXTURES.md §6).
+    A run with nothing pending publishes nothing.
 
-    `append=True` is the incremental-ingest mode (streaming.
-    index_append_sink): `pages` is a NEW batch occupying fresh segment
-    ids, checked against the index's seg_size. Every build after the
-    first publish folds only the new segments' postings into the
-    previous dictionary (_fold_term_stats, O(dictionary) per batch),
-    never re-reading old postings; the first one aggregates its own
-    postings (_write_term_stats_full). `_sink_batch` is the streaming
-    sink's micro-batch id, recorded in the manifest with the batch.
+    A build onto a published index must use its seg_size
+    (_check_geometry). The same call serves the incremental ingest
+    (streaming.index_append_sink), whose `pages` is a NEW batch on
+    fresh segment ids. Every build after the first publish folds only
+    the new segments' postings into the previous dictionary
+    (_fold_term_stats, O(dictionary) per batch), never re-reading old
+    postings; the first one aggregates its own postings. `_sink_batch`
+    is the streaming sink's micro-batch id, recorded in the manifest
+    with the batch.
     Appended segments need no bound upkeep: their block impacts are raw
     (tf, dl) pairs, so BM25 pruning derives valid block bounds under
     whatever corpus avgdl is current when a query runs.
     """
-    if append and not resume:
-        raise ValueError("append=True requires resume=True (checkpoint append)")
     if fields is None:
         fields = {"text": (text_col, "standard"), "_all": (text_col, "all")}
 
@@ -572,14 +565,6 @@ def build_index(
             )
         fn = analyzer if callable(analyzer) else ANALYZERS[analyzer]
         specs.append((i, tuple(udf_cols.index(c) for c in srcs_of[f]), fn))
-    if postings_shards is None:
-        # shards exist to bound one encode task's memory to ~64k docs'
-        # postings; small segments don't need the split, and each extra
-        # shard multiplies the explode+shuffle row count (one packed row
-        # per (doc, shard)) and the pandas group count. 2^20-doc
-        # segments keep the historical 16 shards; ≤64k-doc segments
-        # collapse to one group per segment.
-        postings_shards = max(1, min(16, seg_size // 65536))
     t0 = time.time()
     # a non-resuming build over an existing index dir starts a new
     # index: its manifest would make this build skip the segments it
@@ -590,8 +575,7 @@ def build_index(
     if not resume and fs_exists(spark, out_dir):
         fs_delete(spark, out_dir)
     prev = read_manifest(spark, out_dir)  # format gate included
-    if append:
-        _check_append_geometry(prev, seg_size)
+    _check_geometry(prev, seg_size)
     # dynamic partition overwrite (stage+move per partition dir) only
     # pays off when overwriting a partially-built index; fresh builds
     # use the cheap static path. Set per write, never on the session.
@@ -612,7 +596,7 @@ def build_index(
         tok_in = tok_in.repartition(par * 2)
     # packed blobs, not nested (term, tf, positions) structs: Arrow's
     # nested-struct conversion measured ~95% of the stage
-    dp_udf = make_doc_postings_udf(postings_shards, specs)
+    dp_udf = make_doc_postings_udf(_term_shards(seg_size), specs)
     docs = (
         tok_in.withColumn("_dp", dp_udf(*[F.col(c) for c in udf_cols]))
         # a null text field indexes as a token-free doc (dl 0, no
@@ -650,8 +634,6 @@ def build_index(
     live = set(prev.segments) if prev is not None else set()
     pending = [s for s in all_segs if s not in live]
     n_skipped = len(all_segs) - len(pending)
-    if max_segments is not None:
-        pending = pending[:max_segments]
 
     metrics = {
         "segments_total": len(all_segs),
@@ -667,7 +649,6 @@ def build_index(
         metrics.update(wall_sec=time.time() - t0, docs_per_sec=0.0)
         return metrics
 
-    pend_df = local_frame(spark, [(int(s),) for s in pending], "seg_id long")
     # a build that covers every input segment (every fresh build
     # and every append batch) needs no pending filter at all
     covers_all = len(pending) == len(all_segs)
@@ -705,7 +686,6 @@ def build_index(
         .select(
             "seg_id", F.col("m.n_docs").alias("n_docs"), "base_doc_id",
             F.col("m.dl_bin").alias("dl_bin"),
-            F.lit(None).cast("binary").alias("deleted_bin"),
         )
     )
 
@@ -770,62 +750,22 @@ def build_index(
         for f in futs:
             f.result()
 
-    # ---- lineage and term stats from the new segments' postings ----
-    # Both consumers aggregate only these five narrow columns — project
-    # BEFORE caching so the read-back scan prunes the posting/position
-    # blob columns (the overwhelming majority of the table's bytes).
-    # An append (and a partial build) reads only its segments'
-    # partitions: the sink's per-batch hot path never rescans the index.
-    # Lineage rows are written distributed (no per-segment collect — at
-    # 10^6 segments the driver never materializes the counts); the left
-    # join from pend_df keeps token-free segments.
-    post = read_index_table(spark, out_dir, "postings")
-    post_scope = (
-        filter_segments(post, pending) if append or not covers_all else post
-    ).select("seg_id", "field", "term", "df_local", "cf_local").cache()
-    wall = time.time() - t0
-    seg_counts = post_scope.groupBy("seg_id").agg(
-        F.sum("df_local").alias("n_postings_docs"), F.count("*").alias("n_terms")
-    )
-    ck = (
-        pend_df.join(seg_counts, "seg_id", "left")
-        .na.fill(0, ["n_postings_docs", "n_terms"])
-        .select(
-            "seg_id", "n_postings_docs", "n_terms",
-            F.lit(float(wall)).alias("wall_sec"),
-            F.lit("done").alias("status"),
-        )
-    )
-    ckpt_path = os.path.join(out_dir, "checkpoints")
-    ck_mode = "append" if fs_exists(spark, ckpt_path) else "overwrite"
-
     # ---- the new term_stats version: the previous version plus the new
     # segments' postings (_fold_term_stats — O(batch postings) +
     # O(dictionary), never a re-read of the old segments' postings), or
-    # the new postings alone on the first publish ----
+    # the new postings alone on the first publish. The fold reads only
+    # the four narrow columns (the scan prunes the posting/position
+    # blobs) of the new segments' partitions: the sink's per-batch hot
+    # path never rescans the index, and segments a crashed run left
+    # outside the manifest stay out of the dictionary ----
+    post = read_index_table(spark, out_dir, "postings")
+    post_scope = (
+        filter_segments(post, pending) if overwrite_mode == "dynamic" else post
+    ).select("field", "term", "df_local", "cf_local")
     version = prev.version + 1 if prev is not None else 1
     ts_path = os.path.join(out_dir, "term_stats", str(version))
-
-    def _ts_task():
-        if prev is not None:
-            _fold_term_stats(spark, out_dir, prev, post_scope, ts_path)
-        else:
-            _write_term_stats_full(post_scope, ts_path)
-
-    # lineage (ck) and term_stats are independent (they share the cached
-    # post_scope; concurrent computes of the same cached blocks are
-    # block-manager-serialized) — overlap them
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(_labeled, spark, "build:term-stats", _ts_task),
-            pool.submit(
-                _labeled, spark, "build:lineage",
-                write_table, ck, ckpt_path, mode=ck_mode,
-            ),
-        ]
-        for f in futs:
-            f.result()
-    post_scope.unpersist()
+    _labeled(spark, "build:term-stats", _fold_term_stats, spark, out_dir, prev,
+             post_scope, ts_path)
     docs.unpersist()
 
     # ---- publish: the commit point. Everything above is invisible to
@@ -846,8 +786,6 @@ def build_index(
     )
     publish_manifest(spark, out_dir, m)
     metrics.update(n_docs_total=m.n_docs, avgdl=m.stats.avgdl)
-    if append:
-        metrics["n_docs_batch"] = n_new
     metrics["wall_sec"] = time.time() - t0
     metrics["docs_per_sec"] = n_new / metrics["wall_sec"] if metrics["wall_sec"] else 0.0
     return metrics
@@ -863,8 +801,6 @@ def delete_docs_df(spark: SparkSession, index_dir: str, ids: DataFrame,
     out, so the table holds one row per deleted doc. Returns the count
     added: the distinct new ids, observed in the pass that writes them
     (no second read of `ids`)."""
-    from pyspark.sql import Observation
-
     seg_size = IndexCatalog(spark, index_dir).corpus_stats().seg_size
     doc_id = F.col(id_col).cast("long")
     df = ids.select((doc_id / F.lit(seg_size)).cast("long").alias("seg_id"), doc_id.alias("doc_id"))
@@ -876,12 +812,21 @@ def delete_docs_df(spark: SparkSession, index_dir: str, ids: DataFrame,
         # before the append adds any
         df = df.join(read_index_table(spark, index_dir, "tombstones"),
                      ["seg_id", "doc_id"], "left_anti")
-    # range-partitioned by seg_id: each file covers a narrow seg_id
-    # range, so a query task's min/max filter skips the other files
-    ranged = df.repartitionByRange("seg_id", "doc_id").distinct()
+    return _write_tombstones(df, path, mode)
+
+
+def _write_tombstones(df: DataFrame, path: str, mode: str = "overwrite") -> int:
+    """The one tombstones writer: `df`'s distinct (seg_id, doc_id) rows
+    at `path`, range-partitioned by seg_id and sorted, so each file
+    covers a narrow seg_id range and a query task's min/max filter skips
+    the other files. Returns the rows written, observed in the writing
+    pass."""
+    from pyspark.sql import Observation
+
     added = Observation()
     write_table(
-        ranged.observe(added, F.count(F.lit(1)).alias("n"))
+        df.repartitionByRange("seg_id", "doc_id").distinct()
+        .observe(added, F.count(F.lit(1)).alias("n"))
         .sortWithinPartitions("seg_id", "doc_id"),
         path, mode=mode,
     )
@@ -894,15 +839,13 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> int:
     NotImplemented; ours works uniformly). Appends (seg_id, doc_id)
     rows; each query task reads the tombstone files covering its own
     segments (`executor.run_per_segment`) and drops those docs, and a
-    merge expunges them. Returns count added.
+    merge expunges their postings and docs rows (the tombstone rows
+    stay). Returns count added.
 
     List-in convenience form of `delete_docs_df` (which is the scale
     path — nothing corpus-sized should pass through this driver list)."""
     df = local_frame(spark, [(int(d),) for d in sorted(set(doc_ids))], "doc_id long")
     return delete_docs_df(spark, index_dir, df)
-
-
-MERGE_SHARDS = 16  # term-hash shards per merged segment (task sizing)
 
 
 def merge_segments(
@@ -914,26 +857,29 @@ def merge_segments(
     Fully distributed — nothing corpus-sized ever touches the driver:
 
     1. seg_meta merges per new_seg (dl blobs placed at their offsets).
-    2. postings group by (new_seg, term-hash shard) and COGROUP with the
-       merged seg_meta (replicated per shard, ≤ MERGE_SHARDS copies of
-       each dl blob on the wire — never a driver collect/broadcast of
-       all blobs, which at 10^12 docs would be TB of driver memory).
-       Within a task, each (field, term)'s runs concatenate in old-seg
-       order — docIDs of adjacent segments are disjoint ascending
-       ranges, so concatenation preserves sort order and no renumbering
-       happens (the payoff of the seg_id*seg_size+local docID design);
-       the rows are re-encoded by the build's encoder
-       (_encode_group_batched), which takes each doc's length from the
-       merged dl array for the block impacts.
+    2. postings rows group by (new_seg, term-hash shard) together with
+       their segment's merged dl blob and purge blob (its tombstoned
+       local ids, delta-encoded), each replicated per shard
+       (_term_shards(new seg_size) copies on the wire — never a driver
+       collect/broadcast of all blobs, which at 10^12 docs would be TB
+       of driver memory): one union, one shuffle. Within a task, each
+       (field, term)'s runs concatenate in old-seg order — docIDs of
+       adjacent segments are disjoint ascending ranges, so
+       concatenation preserves sort order and no renumbering happens
+       (the payoff of the seg_id*seg_size+local docID design); the rows
+       are re-encoded by the build's encoder (_encode_group_batched),
+       which takes each doc's length from the merged dl array for the
+       block impacts.
     3. Tombstoned docs are EXPUNGED (Lucene expunges deletes at merge —
        the point of compaction): their postings entries, position
-       ranges and docs-table rows are dropped, and the tombstone table
-       is not carried over. Because docIDs are never renumbered, the
-       purged local ids are recorded in the merged seg_meta
-       (`deleted_bin`) so NOT/ALL universes exclude the holes. Corpus
-       term_stats / n_docs / avgdl carry over UNCHANGED, keeping every
-       query (BM25 scores included) byte-identical pre/post merge —
-       the same stats-lag Lucene accepts until a stats refresh.
+       ranges and docs-table rows are dropped. DocIDs are never
+       renumbered, so the tombstones stay the record of the holes: the
+       merged index's tombstones table holds the same doc ids under
+       their merged seg_id, and NOT/ALL universes exclude them as
+       before. Corpus term_stats / n_docs / avgdl carry over UNCHANGED,
+       keeping every query (BM25 scores included) byte-identical
+       pre/post merge — the same stats-lag Lucene accepts until a
+       stats refresh.
     4. The merged index is published like a build: its tables and a
        copy of the term_stats version first, then the next manifest of
        `out_dir`, naming the merged segments. The streaming sink's
@@ -971,76 +917,61 @@ def merge_segments(
             stacklevel=2,
         )
 
-    # ---- per-new-segment purge blobs: tombstoned LOCAL ids (plus any
-    # holes a previous purging merge already recorded in deleted_bin),
-    # delta+varint-encoded — one small blob per merged segment, joined
-    # (never collected) onto the meta stream ----
+    # ---- per-new-segment purge blobs: tombstoned LOCAL ids,
+    # delta+varint-encoded — one small blob per merged segment, sent
+    # (never collected) beside its dl blob to every shard ----
     tomb = cat_in.tombstones()
     tomb_new = None
     if tomb is not None:
         from yaii_spark.codec import delta_encode as _denc
 
+        # keyed by merged segment: the purge blobs' input, and the
+        # merged index's tombstones
+        tomb = tomb.select(
+            (F.col("doc_id") / F.lit(new_size)).cast("long").alias("seg_id"), "doc_id"
+        )
+
         def encode_tomb(pdf: pd.DataFrame) -> pd.DataFrame:
-            new_seg = int(pdf["new_seg"].iloc[0])
+            new_seg = int(pdf["seg_id"].iloc[0])
             local = np.unique(pdf["doc_id"].to_numpy(dtype=np.int64)) - new_seg * new_size
             return pd.DataFrame(
                 {"new_seg": [new_seg], "tomb_bin": [_denc(local.astype(np.uint64))]}
             )
 
-        tomb_new = (
-            tomb.select(
-                ((F.col("doc_id") / F.lit(new_size)).cast("long")).alias("new_seg"),
-                "doc_id",
-            )
-            .groupBy("new_seg")
-            .applyInPandas(encode_tomb, schema="new_seg long, tomb_bin binary")
+        tomb_new = tomb.groupBy("seg_id").applyInPandas(
+            encode_tomb, schema="new_seg long, tomb_bin binary"
         )
 
-    # ---- merged seg_meta: place old dl blobs at their offsets; fold
-    # prior deleted_bin holes and fresh tombstones into the merged
-    # deleted_bin ----
+    # ---- merged seg_meta: place old dl blobs at their offsets ----
     def merge_meta(pdf: pd.DataFrame) -> pd.DataFrame:
-        from yaii_spark.codec import delta_decode, delta_encode, varint_decode
+        from yaii_spark.codec import varint_decode
 
         pdf = pdf.sort_values("base_doc_id")
         new_seg = int(pdf["base_doc_id"].iloc[0]) // new_size
         new_base = new_seg * new_size
         top = int(pdf["base_doc_id"].iloc[-1]) + int(pdf["n_docs"].iloc[-1])
         dls = np.zeros(top - new_base, dtype=np.uint64)
-        purged = []
-        for _, r in pdf.iterrows():
-            off = int(r["base_doc_id"]) - new_base
-            d = varint_decode(r["dl_bin"])
+        for base, blob in zip(pdf["base_doc_id"], pdf["dl_bin"]):
+            off = int(base) - new_base
+            d = varint_decode(blob)
             dls[off : off + d.size] = d
-            if r.get("deleted_bin") is not None:
-                purged.append(delta_decode(r["deleted_bin"]).astype(np.int64) + off)
-        tb = pdf["tomb_bin"].iloc[0] if "tomb_bin" in pdf.columns else None
-        if tb is not None:
-            purged.append(delta_decode(tb).astype(np.int64))
-        dele = (
-            delta_encode(np.unique(np.concatenate(purged)).astype(np.uint64))
-            if purged
-            else None
-        )
         return pd.DataFrame(
             {
                 "seg_id": [new_seg],
                 "n_docs": [int(dls.size)],
                 "base_doc_id": [new_base],
                 "dl_bin": [varint_encode(dls)],
-                "deleted_bin": [dele],
             }
         )
 
-    meta_keyed = meta.withColumn("new_seg", (F.col("seg_id") / factor).cast("long"))
-    if tomb_new is not None:
-        meta_keyed = meta_keyed.join(tomb_new, "new_seg", "left")
-    new_meta = meta_keyed.groupBy("new_seg").applyInPandas(
-        merge_meta, schema=TABLE_SCHEMAS["seg_meta"]
+    new_meta = (
+        meta.withColumn("new_seg", (F.col("seg_id") / factor).cast("long"))
+        .groupBy("new_seg")
+        .applyInPandas(merge_meta, schema=TABLE_SCHEMAS["seg_meta"])
     )
     write_table(new_meta, os.path.join(out_dir, "seg_meta"), partition_by=["seg_id"])
 
-    def merge_shard(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         from yaii_spark.codec import (
             delta_decode,
             delta_decode_blocked,
@@ -1048,23 +979,21 @@ def merge_segments(
             varint_decode,
         )
 
+        # one (new_seg, shard) group: its postings rows, its segment's
+        # dl blob row and, if any doc was deleted, its purge blob row
+        post_pdf = pdf[pdf["field"].notna()]
         if post_pdf.empty:
-            # a (new_seg, shard) key can arrive meta-only from the cogroup
             return _encode_group_batched(0, [])
-        new_seg = int(post_pdf["new_seg"].iloc[0])
+        new_seg = int(pdf["new_seg"].iloc[0])
         base = new_seg * new_size
-        if meta_pdf.empty:
-            # cannot happen when keys align (meta is replicated to every
-            # shard); fail with the cause instead of an opaque iloc error
-            raise ValueError(
-                f"merge: no seg_meta for (new_seg={new_seg}) — cogroup "
-                "key misalignment"
-            )
-        dls = varint_decode(meta_pdf["dl_bin"].iloc[0]).astype(np.int64)
-        db = meta_pdf["deleted_bin"].iloc[0]
-        purged_local = (
-            delta_decode(db).astype(np.int64) if db is not None else None
-        )
+        dl = pdf["dl_bin"].dropna()
+        if dl.empty:
+            # cannot happen (every blob goes to every shard); fail with
+            # the cause instead of an opaque iloc error
+            raise ValueError(f"merge: no seg_meta for new_seg={new_seg}")
+        dls = varint_decode(dl.iloc[0]).astype(np.int64)
+        tb = pdf["tomb_bin"].dropna()
+        purged_local = delta_decode(tb.iloc[0]).astype(np.int64) if len(tb) else None
         post_pdf = post_pdf.sort_values(["field", "term", "seg_id"], kind="mergesort")
         items = []
         for key, g in post_pdf.groupby(["field", "term"], sort=False):
@@ -1096,23 +1025,28 @@ def merge_segments(
             items.append((key, (ids, tfs, dls[local], pos, plens)))
         return _encode_group_batched(new_seg, items)
 
-    shard = F.pmod(F.xxhash64("field", "term"), F.lit(MERGE_SHARDS))
-    posts = (
-        post.withColumn("new_seg", (F.col("seg_id") / factor).cast("long"))
-        .withColumn("shard", shard)
+    n_shards = _term_shards(new_size)
+    posts = post.withColumn(
+        "new_seg", (F.col("seg_id") / factor).cast("long")
+    ).withColumn("shard", F.pmod(F.xxhash64("field", "term"), F.lit(n_shards)))
+    blobs = read_index_table(spark, out_dir, "seg_meta").select(
+        F.col("seg_id").alias("new_seg"), "dl_bin",
+        F.lit(None).cast("binary").alias("tomb_bin"),
     )
-    # replicate each merged dl blob (and its purge blob) to every shard
-    # of its segment
-    meta_sharded = (
-        read_index_table(spark, out_dir, "seg_meta")
-        .select(F.col("seg_id").alias("new_seg"), "dl_bin", "deleted_bin")
-        .crossJoin(spark.range(MERGE_SHARDS).select(F.col("id").alias("shard")))
-    )
+    if tomb_new is not None:
+        blobs = blobs.unionByName(tomb_new, allowMissingColumns=True)
+    # every blob row goes to each shard of its segment
+    blobs = blobs.withColumn("shard", F.explode(F.sequence(
+        F.lit(0).cast("long"), F.lit(n_shards - 1).cast("long")
+    )))
+    # ONE shuffle, hashed by new_seg alone: that satisfies the
+    # (new_seg, shard) grouping, and the merged rows reach the
+    # partitioned write clustered by segment — one file per segment
     write_table(
-        posts.groupBy("new_seg", "shard")
-        .cogroup(meta_sharded.groupBy("new_seg", "shard"))
+        posts.unionByName(blobs, allowMissingColumns=True)
+        .repartition("new_seg")
+        .groupBy("new_seg", "shard")
         .applyInPandas(merge_shard, schema=TABLE_SCHEMAS["postings"])
-        .repartition("seg_id")
         .sortWithinPartitions("seg_id", "field", "term"),
         os.path.join(out_dir, "postings"),
         partition_by=["seg_id"],
@@ -1128,21 +1062,18 @@ def merge_segments(
         os.path.join(out_dir, "docs"),
         partition_by=["seg_id"],
     )
-    post_new = read_index_table(spark, out_dir, "postings")
-    ck = post_new.groupBy("seg_id").agg(
-        F.sum("df_local").alias("n_postings_docs"), F.count("*").alias("n_terms")
-    ).select(
-        "seg_id", "n_postings_docs", "n_terms",
-        F.lit(0.0).alias("wall_sec"), F.lit("done").alias("status"),
-    )
-    write_table(ck, os.path.join(out_dir, "checkpoints"))
+    # the tombstones stay the record of the expunged docs, under their
+    # merged seg_id (and none are left from an earlier index at out_dir)
+    tomb_path = os.path.join(out_dir, "tombstones")
+    if tomb is not None:
+        _write_tombstones(tomb, tomb_path)
+    else:
+        fs_delete(spark, tomb_path)
     # corpus-wide term stats / n_docs / avgdl carry over UNCHANGED even
     # when deletes are expunged (see docstring: keeps scores identical).
     # The parquet run is already sorted into disjoint files: copy them.
     # Iceberg metadata names its data files by absolute path, so that
-    # branch rewrites the run instead. NO tombstone carry-over: deletes
-    # were expunged above (holes are recorded in seg_meta.deleted_bin
-    # for the NOT/ALL universe).
+    # branch rewrites the run instead.
     out_prev = read_manifest(spark, out_dir)
     version = out_prev.version + 1 if out_prev is not None else 1
     ts_path = os.path.join(out_dir, "term_stats", str(version))

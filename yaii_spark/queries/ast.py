@@ -164,10 +164,6 @@ def token(term, field_name: str = "text") -> Node:
     return Token(term, field_name)
 
 
-def tokens_any(terms: list[str], field_name: str = "text") -> Node:
-    return Or([Token(t, field_name) for t in terms])
-
-
 def phrase(terms: list[str], field_name: str = "text", slop: int = 0) -> Node:
     return Phrase(terms, field_name, slop)
 

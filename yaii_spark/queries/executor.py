@@ -421,7 +421,7 @@ def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
     block = cat.corpus_stats().block_size  # delta restarts per block (v4)
 
     def _eval(post: pd.DataFrame, meta: dict, deleted: np.ndarray | None) -> pd.DataFrame:
-        from yaii_spark.codec import delta_decode, varint_decode
+        from yaii_spark.codec import varint_decode
 
         base = meta["base_doc_id"]
         postings = {
@@ -439,18 +439,14 @@ def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
                     tfs = varint_decode(tb).astype(np.int64)
                     pos_map[(f, t)] = _LazyPositions(postings[(f, t)], tfs, pb, po, block)
         ids = _eval_numpy(node, postings, meta["n_docs"], pos_map)
-        # deleted_bin: local-id holes a purging merge left behind — they
-        # must stay out of NOT/ALL universes (doc ids are never renumbered)
-        if meta["deleted_bin"] is not None:
-            purged = delta_decode(meta["deleted_bin"]).astype(np.int64)  # local ids
-            if purged.size:
-                ids = np.setdiff1d(ids, purged, assume_unique=False)
+        # tombstones, the purged docs of a merge included: they stay out
+        # of NOT/ALL universes (doc ids are never renumbered)
         if deleted is not None and deleted.size:
             ids = np.setdiff1d(ids, np.sort(deleted) - base, assume_unique=False)
         return pd.DataFrame({"doc_id": ids + base})
 
     return run_per_segment(
-        cat, _eval, "doc_id long", cols, ["n_docs", "base_doc_id", "deleted_bin"],
+        cat, _eval, "doc_id long", cols, ["n_docs", "base_doc_id"],
         terms, scans, every_segment=universe,
     )
 

@@ -7,12 +7,12 @@ declared schema (TABLE_SCHEMAS[...]):
     docs/            stored fields by seg_id — schema inferred
     postings/        ["postings"]: blocked posting rows by seg_id, each
                      block with its (tf, dl) impacts (the BM25 bound)
-    seg_meta/        ["seg_meta"]: one row per segment (dl_bin, holes)
+    seg_meta/        ["seg_meta"]: one row per segment (n_docs, dl_bin)
     term_stats/<v>/  ["term_stats"]: (df, cf) as one (field, term)-sorted
                      run, one directory per dictionary version
-    checkpoints/     ["checkpoints"]: one lineage row per built segment
-                     (written for operators, never read to decide)
-    tombstones/      ["tombstones"]: deleted (seg_id, doc_id) rows
+    tombstones/      ["tombstones"]: deleted (seg_id, doc_id) rows, the
+                     only record of deleted docs (a merge expunges their
+                     postings and keeps the rows)
 
 Every mutation (build, append commit, merge) first writes its new
 immutable files (segment partitions, a new term_stats version), then
@@ -26,7 +26,8 @@ segments and the term_stats version it names, so a crash anywhere
 before the publish leaves the previous version whole; the files such a
 crash wrote are ignored, then overwritten by the replay. Each publish
 deletes the manifests and term_stats versions it supersedes. Deletes
-append to ``tombstones`` and publish nothing.
+append to ``tombstones`` and publish nothing. Each fact has one record:
+nothing else repeats which segments are live or which docs are deleted.
 
 The term dictionary (term_stats) is one globally (field, term)-sorted
 run split into at most ``spark.sql.shuffle.partitions`` files whose key
@@ -76,7 +77,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 # per-block byte offsets / first doc ids (lazy MaxScore block decode)
 # v5: blocked POSITION stream (postings.block_pos_offs → lazy phrase
 # decode); seg_meta gains the build-time avgdl (pruning-safety under streaming
-# appends) and deleted_bin (holes left by purge-at-merge);
+# appends) and a blob of the holes left by purge-at-merge;
 # corpus_stats gains format_version
 # v6: term_stats is one (field, term)-sorted run of files (no bucket
 # partition directories, no bucket column)
@@ -87,7 +88,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 # v8: one manifest (_manifest/<n>) is the commit point; term_stats is
 # versioned (term_stats/<v>); corpus_stats, stats_ledger, sink_ledger,
 # the stats_folding marker and the fold's stage are gone
-FORMAT_VERSION = 8
+# v9: seg_meta's holes blob and the per-segment lineage table are gone;
+# a purging merge writes the purged docs as the merged index's tombstones
+FORMAT_VERSION = 9
 
 # The declared schema of every index table (DDL: the read, write and
 # applyInPandas-output schema alike; a partition column reads back
@@ -100,15 +103,8 @@ TABLE_SCHEMAS = {
         "block_id_offs array<int>, block_tf_offs array<int>, "
         "block_first_ids array<long>, block_pos_offs array<int>"
     ),
-    "seg_meta": (
-        "seg_id long, n_docs long, base_doc_id long, dl_bin binary, "
-        "deleted_bin binary"
-    ),
+    "seg_meta": "seg_id long, n_docs long, base_doc_id long, dl_bin binary",
     "term_stats": "field string, term string, df long, cf long",
-    "checkpoints": (
-        "seg_id long, n_postings_docs long, n_terms long, wall_sec double, "
-        "status string"
-    ),
     "tombstones": "seg_id long, doc_id long",
 }
 
@@ -535,9 +531,6 @@ class IndexCatalog:
 
     def term_stats(self) -> DataFrame:
         return self._table_df("term_stats")
-
-    def checkpoints(self) -> DataFrame:
-        return read_index_table(self.spark, self.root, "checkpoints")
 
     def segment_files(self) -> DataFrame:
         """(seg_id, postings files, seg_meta files) per live segment, a

@@ -233,7 +233,7 @@ def index_append_sink(
     **build_kwargs,
 ):
     """Durable streaming ingest: every micro-batch of arriving pages is
-    committed as NEW index segments via ``build_index(append=True)`` —
+    committed as NEW index segments by ``build_index`` onto the index —
     the streaming-commit half of the reference's "added" batches
     (base-inverted-index.ts:283-287 queues adds into the mutable
     segment; :511-534 commits it immutable). continuous_query covers
@@ -295,7 +295,7 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
         pages = assign_dense_ids(batch_df, start)
         try:
             build_index(
-                sp, pages, index_dir, seg_size=seg_size, append=True,
+                sp, pages, index_dir, seg_size=seg_size,
                 _sink_batch=int(batch_id), **build_kwargs,
             )
         finally:
