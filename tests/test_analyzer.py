@@ -1,7 +1,7 @@
 """Tokenizer parity suite (SURVEY.md §5 tier 1, §7.4.2).
 
 Oracle = pure-Python chain (yaii standardTokenizer + stopwordFilter
-semantics); engine path = pandas UDF through a real Spark roundtrip.
+semantics); engine path = the index build through a real Spark roundtrip.
 Byte-identical token streams required, incl. Unicode edges.
 """
 
@@ -15,8 +15,6 @@ from yaii_spark.analyzer import (
     remove_stopwords,
     tokenize,
     tokenize_all_field,
-    with_all_tokens,
-    with_tokens,
 )
 
 FIXTURES = [
@@ -57,15 +55,30 @@ def test_all_field_chain():
     assert tokenize_all_field("ufg about test") == ["ufg", "test"]
 
 
-def test_spark_udf_parity(spark):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(FIXTURES)], "id long, text string")
-    rows = {
-        r.id: (r.tokens, r.all_tokens)
-        for r in with_all_tokens(with_tokens(df)).collect()
-    }
+def test_build_path_parity(spark, tmp_path):
+    """An index built through the real Spark/Arrow path holds exactly
+    the oracle's token streams: each doc's `text` and `_all` postings,
+    read back in position order, equal tokenize and tokenize_all_field,
+    Unicode edges included."""
+    from yaii_spark.codec import decode_positions, delta_decode_blocked, varint_decode
+    from yaii_spark.indexer import build_index
+    from yaii_spark.storage import IndexCatalog
+
+    idx = str(tmp_path / "fixtures_idx")
+    df = spark.createDataFrame(list(enumerate(FIXTURES)), "doc_id long, text string")
+    build_index(spark, df, idx, seg_size=4)
+    cat = IndexCatalog(spark, idx)
+    block = cat.corpus_stats().block_size
+    streams = {}
+    for r in cat.postings().collect():
+        ids = delta_decode_blocked(r.doc_ids_bin, block)
+        for d, ps in zip(ids, decode_positions(r.pos_bin, varint_decode(r.tfs_bin))):
+            for p in ps:
+                streams.setdefault((r.field, int(d)), []).append((int(p), r.term))
     for i, t in enumerate(FIXTURES):
-        assert rows[i][0] == tokenize(t), f"tokens mismatch on {t!r}"
-        assert rows[i][1] == tokenize_all_field(t), f"all_tokens mismatch on {t!r}"
+        got = {f: [tk for _, tk in sorted(streams.get((f, i), []))] for f in ("text", "_all")}
+        assert got["text"] == tokenize(t), f"text mismatch on {t!r}"
+        assert got["_all"] == tokenize_all_field(t), f"_all mismatch on {t!r}"
 
 
 @settings(max_examples=50, deadline=None)
@@ -84,11 +97,11 @@ def test_tokenize_invariants(s):
     assert all(t not in STOPWORDS for t in remove_stopwords(toks))
 
 
-def test_rule_tokenizer(spark):
+def test_rule_tokenizer():
     """mooTokenizer re-expression (F4): rule priority + selective lowercase."""
     from yaii_spark.analyzer import make_rule_tokenizer
 
-    fn, udf = make_rule_tokenizer(
+    fn = make_rule_tokenizer(
         [
             ("ref", r"[@%&][A-Za-z0-9+/=]+\.[a-z0-9]+", False),
             ("word", r"[^\s\-,;:.]+", True),
@@ -96,9 +109,6 @@ def test_rule_tokenizer(spark):
     )
     text = "Hello @AbC123+/=.sha256 World-foo"
     assert fn(text) == ["hello", "@AbC123+/=.sha256", "world", "foo"]
-    df = spark.createDataFrame([(text,)], "text string")
-    rows = df.select(udf("text").alias("t")).collect()
-    assert rows[0].t == fn(text)
 
 
 def test_js_whitespace_parity_edges():
@@ -123,12 +133,12 @@ def test_rule_tokenizer_user_capturing_group():
     capturing groups (m.lastgroup would be None/wrong)."""
     from yaii_spark.analyzer import make_rule_tokenizer
 
-    fn, _ = make_rule_tokenizer([
+    fn = make_rule_tokenizer([
         ("pair", r"(aa|bb)X?", False),       # inner capturing group
         ("word", r"[A-Za-z]+", True),
     ])
     assert fn("aaX BB cc") == ["aaX", "bb", "cc"]
-    fn2, _ = make_rule_tokenizer([
+    fn2 = make_rule_tokenizer([
         ("num", r"([0-9]+)(\.[0-9]+)?", False),
         ("word", r"[A-Za-z]+", True),
     ])

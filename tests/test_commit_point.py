@@ -153,3 +153,19 @@ def test_merge_crash_before_publish(spark, tmp_path, monkeypatch):
     assert got == _answers(spark, ref)
     assert got[0].seg_size == 32 and got[1:] == before[1:]
     _one_version_left(out)
+
+
+def test_merge_onto_published_index_raises(spark, tmp_path):
+    """A merge writes its tables before it publishes, so a merge into a
+    directory holding a published index (the source's own included)
+    raises before any write, and both indexes answer as before."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    pages = gen_pages(spark, 64, include_fixtures=True)
+    for root in (src, out):
+        build_index(spark, pages, root, seg_size=16, stored_cols=STORED)
+    before = _answers(spark, out)
+    for dst in (out, src):
+        with pytest.raises(ValueError, match="published index"):
+            merge_segments(spark, src, dst, factor=2)
+    assert _answers(spark, out) == before
+    assert _answers(spark, src) == before

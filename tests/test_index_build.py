@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import yaii_spark.indexer as IX
 from yaii_spark.extract import extract_text, with_extracted_text
 from yaii_spark.indexer import build_index
 from yaii_spark.queries.bm25 import bm25_topk
@@ -26,6 +27,18 @@ def test_extraction_invariant_roundtrip(spark):
     # multi-paragraph round-trip
     t = "para one\npara two\n\nthird"
     assert extract_text(render_html(t)) == t
+
+
+def test_labeled_restores_caller_description(spark):
+    """A labeled build step sets its own job description and restores
+    the caller's on exit, instead of clearing it."""
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        assert IX._labeled(spark, "build:step", lambda: 7) == 7
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
 
 
 def _postings_snapshot(spark, idx_dir):
@@ -403,7 +416,7 @@ def test_custom_rule_field_indexes_and_queries(spark, work_dir):
     from yaii_spark.queries.executor import execute_boolean
     from yaii_spark.synth import EPOCH, PAGES_SCHEMA, render_html
 
-    ref_fn, ref_udf = make_rule_tokenizer([
+    ref_fn = make_rule_tokenizer([
         ("ref", r"[@%&][A-Za-z0-9+/=]+\.[a-z0-9]+", False),
         ("word", r"[^\s\-,;:.]+", True),
     ])
@@ -443,7 +456,7 @@ def test_custom_rule_field_indexes_and_queries(spark, work_dir):
     with pytest.raises(ValueError, match="pure"):
         build_index(
             spark, pages, f"{work_dir}/rule_udf_idx", seg_size=2,
-            fields={"refs": ("text", ref_udf)},
+            fields={"refs": ("text", F.udf(lambda s: ref_fn(s), "array<string>"))},
         )
 
 
@@ -503,7 +516,7 @@ def test_multivalue_field(spark, work_dir):
     ]
     pages = spark.createDataFrame(rows, schema)
     tag_rows = {d: [tags] for d, _, tags in rows}
-    mv_fn, _ = make_multivalue_analyzer()
+    mv_fn = make_multivalue_analyzer()
     idx = f"{work_dir}/mv_idx"
     build_index(
         spark, pages, idx, seg_size=2,
@@ -527,7 +540,7 @@ def test_multivalue_field(spark, work_dir):
     # can no longer straddle the element boundary — doc 3's cross-
     # element match flips to no-match, doc 0's within-element match
     # stays, and in-element positions are untouched
-    mv_gap, _ = make_multivalue_analyzer(position_gap=2)
+    mv_gap = make_multivalue_analyzer(position_gap=2)
     idx2 = f"{work_dir}/mv_gap_idx"
     build_index(
         spark, pages, idx2, seg_size=2,

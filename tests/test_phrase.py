@@ -15,7 +15,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from yaii_spark.indexer import build_index
-from yaii_spark.oracle import BruteForceIndex, _phrase_match
+from yaii_spark.oracle import BruteForceIndex, _has_phrase
 from yaii_spark.queries import ast as A
 from yaii_spark.queries.executor import _eval_phrase, execute_boolean
 from yaii_spark.storage import IndexCatalog
@@ -219,7 +219,7 @@ def test_phrase_numpy_matches_exhaustive(docs, terms, slop):
         for k, (ids_list, plists) in pos_map.items()
     }
     got = set(_eval_phrase(A.Phrase(terms, "text", slop), pos_map).tolist())
-    want = {d for d, toks in enumerate(docs) if _phrase_match(toks, terms, slop)}
+    want = {d for d, toks in enumerate(docs) if _has_phrase(toks, terms, slop)}
     assert got == want
 
 

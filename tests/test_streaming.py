@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from yaii_spark.queries import ast as A
-from yaii_spark.streaming import QueryMode, compile_predicate, continuous_query, windowed_ingest_stats
+from yaii_spark.streaming import QueryMode, continuous_query
 from yaii_spark.synth import PAGES_SCHEMA, gen_boolean_pages, gen_pages
 
 
@@ -96,78 +96,6 @@ def test_sorted_future_raises(spark, stream_dir):
         )
 
 
-def test_watermark_drops_late_events(spark, stream_dir, tmp_path):
-    """Late-data handling: once the watermark passes a window's end,
-    an event falling in that window is DROPPED — the closed window's
-    append-mode emission does not include it. Watermark state survives
-    across restarts via the checkpoint."""
-    import datetime as dt
-
-    from yaii_spark.synth import PAGES_SCHEMA, render_html
-
-    mk = lambda i, ts: (i, f"https://x/{i}", ts, render_html("x"), "x", "en", i)
-    t = lambda m, s: dt.datetime(2024, 1, 1, 10, m, s)
-
-    agg = windowed_ingest_stats(
-        spark, stream_dir, PAGES_SCHEMA, window="1 minute",
-        watermark="0 seconds",
-    )
-    # ONE long-lived query (watermark state lives in the running query;
-    # the memory sink cannot recover a checkpoint across restarts) —
-    # files appended between processAllAvailable calls are the "added"
-    # batches, and no-data micro-batches emit watermark-finalized
-    # windows
-    q = (
-        agg.writeStream.outputMode("append").format("memory")
-        .queryName("wm_out").trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        def feed(rows):
-            spark.createDataFrame(rows, PAGES_SCHEMA).write.mode(
-                "append"
-            ).parquet(stream_dir)
-            q.processAllAvailable()
-
-        # batch A: two on-time events; watermark advances to 10:01:10,
-        # closing window [10:00, 10:01)
-        feed([mk(0, t(0, 10)), mk(1, t(1, 10))])
-        # batch B: one LATE event into the closed 10:00 window (must be
-        # dropped) + one fresh event advancing the watermark past 10:02
-        feed([mk(2, t(0, 30)), mk(3, t(2, 30))])
-        # batch C: push the watermark far ahead so every earlier window
-        # finalizes and emits
-        feed([mk(4, t(9, 0))])
-        import time as _time
-
-        for _ in range(50):  # wait for the finalizing no-data batches
-            rows = spark.sql("SELECT * FROM wm_out").collect()
-            if len({r.start.minute for r in rows}) >= 3:
-                break
-            _time.sleep(0.2)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    counts = {r.start.minute: r.n_docs for r in rows}
-    assert counts[0] == 1, counts  # the late 10:00:30 event was dropped
-    assert counts[1] == 1 and counts[2] == 1, counts
-
-
-def test_windowed_ingest_stats(spark, stream_dir):
-    gen_pages(spark, 100, include_fixtures=False).write.mode("append").parquet(stream_dir)
-    agg = windowed_ingest_stats(spark, stream_dir, PAGES_SCHEMA, window="1 minute")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory").queryName("ingest_stats")
-        .trigger(availableNow=True).start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM ingest_stats").collect()
-    assert sum(r.n_docs for r in rows) == 100
-    assert all(r.text_bytes > 0 for r in rows)
-
-
 ALL_NODE_QUERIES = [
     ("token", lambda: A.token("abc")),
     ("token_all", lambda: A.token("abc", "_all")),
@@ -204,24 +132,71 @@ def bool_index(spark, work_dir):
     return IndexCatalog(spark, idx)
 
 
+@pytest.fixture(scope="module")
+def bool_stream_dir(spark, work_dir):
+    d = f"{work_dir}/bool_stream"
+    gen_boolean_pages(spark).write.parquet(d)
+    return d
+
+
+def _future_ids(spark, q, stream_dir, schema, name):
+    """Doc ids a real FUTURE stream (availableNow, memory sink) emits."""
+    sdf, _ = continuous_query(spark, q, QueryMode.FUTURE, stream_dir, schema)
+    return {r.doc_id for r in _run_stream(spark, sdf, name).collect()}
+
+
 @pytest.mark.parametrize("name,qf", ALL_NODE_QUERIES, ids=[n for n, _ in ALL_NODE_QUERIES])
-def test_compile_predicate_matches_engine(spark, bool_index, name, qf):
-    """The streaming per-batch predicate covers the FULL batch AST
-    (Phrase incl. slop, TokenRange, TextContains, attributes, boolean
-    composition) and agrees with the posting-based engine doc-for-doc —
-    a FUTURE continuous query accepts exactly the queries batch does."""
-    from yaii_spark.analyzer import tokenize_all_udf, tokenize_udf
+def test_future_stream_matches_engine(spark, bool_index, bool_stream_dir, name, qf):
+    """A FUTURE stream covers the FULL batch AST (Phrase incl. slop,
+    TokenRange, TextContains, attributes, boolean composition) and
+    agrees with execute_boolean over the same docs doc-for-doc — a
+    FUTURE continuous query accepts exactly the queries batch does."""
     from yaii_spark.queries.executor import execute_boolean
 
-    q = A.rewrite(qf())
-    engine = {r.doc_id for r in execute_boolean(bool_index, q).collect()}
-    tok = (
-        gen_boolean_pages(spark)
-        .withColumn("_tokens", tokenize_udf(F.col("text")))
-        .withColumn("_all_tokens", tokenize_all_udf(F.col("text")))
-    )
-    stream_form = {r.doc_id for r in tok.filter(compile_predicate(q)).collect()}
-    assert stream_form == engine, (name, stream_form, engine)
+    engine = {r.doc_id for r in execute_boolean(bool_index, qf()).collect()}
+    got = _future_ids(spark, qf(), bool_stream_dir, PAGES_SCHEMA, f"parity_{name}")
+    assert got == engine, (name, got, engine)
+
+
+# doc 1 has a null num_attr and doc 3 a null text: the engine keeps
+# both inside NOT (a complement over the docs), unlike SQL's NOT NULL
+NULL_DOCS = [(0, "abc bcd", 25), (1, "abc xyz", None), (2, "efg", 10), (3, None, 50)]
+NULL_QUERIES = [
+    ("not_number_eq", lambda: A.not_(A.number("num_attr", 25)), {1, 2, 3}),
+    ("not_number_range", lambda: A.not_(A.number_range("num_attr", 8, 30)), {1, 3}),
+    ("not_token", lambda: A.not_(A.token("abc")), {2, 3}),
+]
+
+
+@pytest.fixture(scope="module")
+def null_corpus(spark, work_dir):
+    from yaii_spark.indexer import build_index
+    from yaii_spark.storage import IndexCatalog
+
+    df = spark.createDataFrame(NULL_DOCS, "doc_id long, text string, num_attr long")
+    idx, d = f"{work_dir}/null_idx", f"{work_dir}/null_stream"
+    build_index(spark, df, idx, seg_size=2, stored_cols=["text", "num_attr"])
+    df.write.parquet(d)
+    return IndexCatalog(spark, idx), d, df.schema
+
+
+@pytest.mark.parametrize("name,qf,want", NULL_QUERIES, ids=[n for n, _, _ in NULL_QUERIES])
+def test_future_stream_nulls_match_engine(spark, null_corpus, name, qf, want):
+    from yaii_spark.queries.executor import execute_boolean
+
+    cat, stream_dir, schema = null_corpus
+    assert {r.doc_id for r in execute_boolean(cat, qf()).collect()} == want
+    assert _future_ids(spark, qf(), stream_dir, schema, f"nulls_{name}") == want
+
+
+def test_future_cached_filter_raises(spark, stream_dir):
+    """A filter cached over committed postings cannot hold a new
+    stream doc: a FUTURE query with one raises when it is built."""
+    with pytest.raises(TypeError, match="CachedFilter"):
+        continuous_query(
+            spark, A.and_(A.token("abc"), A.cached_filter("f")),
+            QueryMode.FUTURE, stream_dir, PAGES_SCHEMA,
+        )
 
 
 def test_index_append_sink_commits_segments(spark, stream_dir, tmp_path):
@@ -546,8 +521,7 @@ def test_append_after_merge_geometry_and_fold(spark, tmp_path):
 
 
 def test_future_mode_phrase(spark, stream_dir):
-    """A FUTURE continuous query with a phrase leaf (the round-2 gap:
-    compile_predicate used to raise on Phrase)."""
+    """A FUTURE continuous query with a phrase leaf."""
     sdf, _ = continuous_query(
         spark, A.phrase(["abc", "bcd"]), QueryMode.FUTURE, stream_dir, PAGES_SCHEMA,
     )

@@ -19,11 +19,10 @@ implementations here are numpy/pandas-vectorized batch code):
   is subsumed: standardTokenizer already lowercases.
 
 The pure-Python functions are both the test oracle and what the index
-build runs (inside its one inversion UDF, `doc_postings`); the pandas
-UDFs expose the same functions as column expressions, so parity is
-structural — the pytest suite (tests/test_analyzer.py) still asserts token-for-token
-equality through a real Spark roundtrip, including Unicode edges
-(SURVEY.md §7.4.2).
+build runs (inside its one inversion UDF, `doc_postings`), so parity is
+structural — the pytest suite (tests/test_analyzer.py) still asserts
+that an index built through a real Spark/Arrow roundtrip holds exactly
+these token streams, including Unicode edges (SURVEY.md §7.4.2).
 """
 
 from __future__ import annotations
@@ -81,33 +80,6 @@ def remove_stopwords(tokens: Iterable[str]) -> List[str]:
 def tokenize_all_field(text: str) -> List[str]:
     """Catch-all field chain: tokenizer + stopword filter (yaii-types.ts:42-45)."""
     return remove_stopwords(tokenize(text))
-
-
-# ---------------------------------------------------------------------------
-# Spark-side: vectorized Arrow UDFs (batch-at-a-time; no per-row Spark UDFs)
-# ---------------------------------------------------------------------------
-
-def _tokenize_series(s: pd.Series) -> pd.Series:
-    # list-comp over the Arrow batch; regex split is the irreducible
-    # Python part (Spark's split() can't mirror JS empty-edge semantics
-    # for the '' input case and we keep one shared implementation).
-    return pd.Series(
-        [tokenize(x) if x is not None else None for x in s],
-        index=s.index,
-        dtype=object,
-    )
-
-
-def _tokenize_all_series(s: pd.Series) -> pd.Series:
-    return pd.Series(
-        [tokenize_all_field(x) if x is not None else None for x in s],
-        index=s.index,
-        dtype=object,
-    )
-
-
-tokenize_udf = F.pandas_udf(_tokenize_series, T.ArrayType(T.StringType()))
-tokenize_all_udf = F.pandas_udf(_tokenize_all_series, T.ArrayType(T.StringType()))
 
 
 # ---------------------------------------------------------------------------
@@ -231,6 +203,45 @@ def doc_postings(
     return (len(toks) if toks is not None else None), bufs
 
 
+def unpack_postings(acc: dict, doc_id: int, dl: int, data) -> None:
+    """Read one packed blob (doc_postings layout) back into `acc`:
+    (field_id, term utf-8 bytes) → ([doc ids], [tfs], [dls],
+    [position bytes]), one entry per term appended in call order. The
+    build's segment encoder and the stream's per-batch segment share
+    this one parser."""
+    off = 0
+    n = len(data)
+    while off < n:
+        # header varints are single-byte in the common case
+        fid = data[off]
+        off += 1
+        if fid >= 0x80:
+            fid, off = varint_read(data, off - 1)
+        tl = data[off]
+        off += 1
+        if tl >= 0x80:
+            tl, off = varint_read(data, off - 1)
+        term = data[off : off + tl]
+        off += tl
+        tf = data[off]
+        off += 1
+        if tf >= 0x80:
+            tf, off = varint_read(data, off - 1)
+        pl = data[off]
+        off += 1
+        if pl >= 0x80:
+            pl, off = varint_read(data, off - 1)
+        pos = data[off : off + pl]
+        off += pl
+        e = acc.get((fid, term))
+        if e is None:
+            e = acc[(fid, term)] = ([], [], [], [])
+        e[0].append(doc_id)
+        e[1].append(tf)
+        e[2].append(dl)
+        e[3].append(pos)
+
+
 DOC_POSTINGS_TYPE = T.StructType(
     [
         T.StructField("dl", T.IntegerType()),
@@ -289,8 +300,8 @@ def make_rule_tokenizer(rules: list[tuple[str, str, bool]]):
     are not supported (group numbers shift inside the combined
     alternation).
 
-    Returns (pure_fn, pandas_udf) sharing one implementation; pure_fn
-    is what build_index's fields map takes as a field's analyzer.
+    Returns the pure function build_index's fields map takes as a
+    field's analyzer.
     """
     compiled = re.compile(
         "|".join(f"(?P<r{i}>(?:{pat}))" for i, (_, pat, _) in enumerate(rules))
@@ -309,12 +320,7 @@ def make_rule_tokenizer(rules: list[tuple[str, str, bool]]):
             out.append(tok.lower() if lower_flags[idx] else tok)
         return out
 
-    def _series(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [fn(x) if x is not None else None for x in s], index=s.index, dtype=object
-        )
-
-    return fn, F.pandas_udf(_series, T.ArrayType(T.StringType()))
+    return fn
 
 
 def make_multivalue_analyzer(per_value_fn=tokenize, position_gap: int = 0):
@@ -336,9 +342,9 @@ def make_multivalue_analyzer(per_value_fn=tokenize, position_gap: int = 0):
     indexes it, leaving the position gap behind (cost: N list slots per
     boundary, never an indexed posting).
 
-    Returns (pure_fn, pandas_udf); pure_fn is the analyzer to put in
-    build_index's fields map for an array<string> column. Scalar
-    strings are accepted too (single-element semantics)."""
+    Returns the pure function to put in build_index's fields map for
+    an array<string> column. Scalar strings are accepted too
+    (single-element semantics)."""
 
     def fn(values) -> List[str] | None:
         if values is None:
@@ -355,17 +361,5 @@ def make_multivalue_analyzer(per_value_fn=tokenize, position_gap: int = 0):
                 first = False
         return out
 
-    def _series(s: pd.Series) -> pd.Series:
-        return pd.Series([fn(x) for x in s], index=s.index, dtype=object)
+    return fn
 
-    return fn, F.pandas_udf(_series, T.ArrayType(T.StringType()))
-
-
-def with_tokens(df, text_col: str = "text", out_col: str = "tokens"):
-    """Add a token-array column (searchable-field chain, stopwords kept)."""
-    return df.withColumn(out_col, tokenize_udf(F.col(text_col)))
-
-
-def with_all_tokens(df, text_col: str = "text", out_col: str = "all_tokens"):
-    """Add the catch-all token column (stopwords removed)."""
-    return df.withColumn(out_col, tokenize_all_udf(F.col(text_col)))

@@ -110,7 +110,7 @@ def get_index(
         if variant == "rule":
             from yaii_spark.analyzer import make_rule_tokenizer
 
-            ref_fn, _ = make_rule_tokenizer(RULE_FIELD_RULES)
+            ref_fn = make_rule_tokenizer(RULE_FIELD_RULES)
             fields = {
                 "text": ("text", "standard"),
                 "_all": ("text", "all"),

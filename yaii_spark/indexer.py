@@ -82,7 +82,7 @@ from yaii_spark.analyzer import (
     make_doc_postings_udf,
     tokenize,
     tokenize_all_field,
-    varint_read,
+    unpack_postings,
 )
 from yaii_spark.codec import varint_encode, varint_lengths
 from yaii_spark.storage import (
@@ -240,7 +240,8 @@ def _encode_group_batched(seg: int, items: list) -> pd.DataFrame:
 
 def _make_packed_encoder(field_names: list[str]):
     """Per-(segment, shard) posting builder over packed per-doc blobs
-    (analyzer.doc_postings layout). Rows are processed in doc_id order,
+    (analyzer.doc_postings layout, read back by
+    analyzer.unpack_postings). Rows are processed in doc_id order,
     so each (field, term)'s doc ids accumulate already sorted; position
     bytes are concatenated verbatim (LEB128 deltas are concat-safe —
     identical bytes to codec.encode_positions). Codec work is batched
@@ -253,37 +254,7 @@ def _make_packed_encoder(field_names: list[str]):
         for doc_id, dl, data in zip(
             pdf["doc_id"].to_numpy(), pdf["dl"].to_numpy(), pdf["data"]
         ):
-            off = 0
-            n = len(data)
-            while off < n:
-                # header varints are single-byte in the common case
-                fid = data[off]
-                off += 1
-                if fid >= 0x80:
-                    fid, off = varint_read(data, off - 1)
-                tl = data[off]
-                off += 1
-                if tl >= 0x80:
-                    tl, off = varint_read(data, off - 1)
-                term = data[off : off + tl]
-                off += tl
-                tf = data[off]
-                off += 1
-                if tf >= 0x80:
-                    tf, off = varint_read(data, off - 1)
-                pl = data[off]
-                off += 1
-                if pl >= 0x80:
-                    pl, off = varint_read(data, off - 1)
-                pos = data[off : off + pl]
-                off += pl
-                e = acc.get((fid, term))
-                if e is None:
-                    e = acc[(fid, term)] = ([], [], [], [])
-                e[0].append(doc_id)
-                e[1].append(tf)
-                e[2].append(dl)
-                e[3].append(pos)
+            unpack_postings(acc, doc_id, dl, data)
         items = [
             (
                 (field_names[fid], term.decode("utf-8")),
@@ -402,13 +373,15 @@ def _labeled(spark: SparkSession, desc: str, fn, *args, **kwargs):
     (``PYSPARK_PIN_THREAD=true``, the default since Spark 3.2), where
     every Python thread maps to its own JVM thread. Without pinning the
     pool's threads share JVM threads and concurrent descriptions can
-    overwrite or clear each other (labels only; results are unaffected)."""
+    overwrite or clear each other (labels only; results are unaffected).
+    The caller's description, if any, is restored on exit."""
     sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)
     try:
         return fn(*args, **kwargs)
     finally:
-        sc.setJobDescription(None)
+        sc.setJobDescription(prev)
 
 
 def _term_shards(seg_size: int) -> int:
@@ -507,8 +480,8 @@ def build_index(
     columns, analyzer); defaults to {text: standard, _all:
     stopword-filtered} mirroring yaii's default field config +
     catch-all. The analyzer is an ANALYZERS name or a pure
-    ``str → list[str | None]`` function (e.g. the first element of
-    make_rule_tokenizer / make_multivalue_analyzer). Document length
+    ``str → list[str | None]`` function (e.g. what make_rule_tokenizer
+    / make_multivalue_analyzer return). Document length
     (dl, the BM25 norm) always comes from `text_col`'s standard
     tokenization.
 
@@ -560,8 +533,8 @@ def build_index(
             raise ValueError(
                 f"build_index: field {f!r} got a Spark UDF as its analyzer; "
                 "pass the pure str -> list[str | None] function instead "
-                "(the first element of make_rule_tokenizer(...) / "
-                "make_multivalue_analyzer(...))"
+                "(what make_rule_tokenizer(...) / "
+                "make_multivalue_analyzer(...) return)"
             )
         fn = analyzer if callable(analyzer) else ANALYZERS[analyzer]
         specs.append((i, tuple(udf_cols.index(c) for c in srcs_of[f]), fn))
@@ -881,11 +854,20 @@ def merge_segments(
        pre/post merge — the same stats-lag Lucene accepts until a
        stats refresh.
     4. The merged index is published like a build: its tables and a
-       copy of the term_stats version first, then the next manifest of
-       `out_dir`, naming the merged segments. The streaming sink's
-       committed batch id is not carried: a stream appending to
-       `out_dir` is a new stream.
+       copy of the term_stats version first, then manifest version 1
+       of `out_dir`, naming the merged segments. `out_dir` must hold
+       no published index (`index_dir` itself included): the merge
+       overwrites its tables before it publishes, so a crash would
+       leave that index's manifest naming segments whose files are
+       gone. A crashed merge's output has no manifest, so its re-run
+       is allowed. The streaming sink's committed batch id is not
+       carried: a stream appending to `out_dir` is a new stream.
     """
+    if read_manifest(spark, out_dir) is not None:
+        raise ValueError(
+            f"merge_segments: {out_dir!r} holds a published index; merge "
+            "into a directory without one"
+        )
     # reading the manifest enforces the format gate — merging an index
     # of another format must fail loudly, not emit garbage
     cat_in = IndexCatalog(spark, index_dir)
@@ -1063,7 +1045,7 @@ def merge_segments(
         partition_by=["seg_id"],
     )
     # the tombstones stay the record of the expunged docs, under their
-    # merged seg_id (and none are left from an earlier index at out_dir)
+    # merged seg_id (and none are left from a crashed merge at out_dir)
     tomb_path = os.path.join(out_dir, "tombstones")
     if tomb is not None:
         _write_tombstones(tomb, tomb_path)
@@ -1074,15 +1056,13 @@ def merge_segments(
     # The parquet run is already sorted into disjoint files: copy them.
     # Iceberg metadata names its data files by absolute path, so that
     # branch rewrites the run instead.
-    out_prev = read_manifest(spark, out_dir)
-    version = out_prev.version + 1 if out_prev is not None else 1
-    ts_path = os.path.join(out_dir, "term_stats", str(version))
+    ts_path = os.path.join(out_dir, "term_stats", "1")
     if iceberg_format(spark):
         _write_term_stats(read_index_table(spark, index_dir, m_in.term_stats_table), ts_path)
     else:
         fs_copy(spark, os.path.join(index_dir, m_in.term_stats_table), ts_path)
     publish_manifest(spark, out_dir, dataclasses.replace(
-        m_in, version=version, seg_size=new_size, segments=tuple(new_segs),
+        m_in, version=1, seg_size=new_size, segments=tuple(new_segs),
         sink_batch=None,
     ))
     return {"segments_before": n_before, "segments_after": n_after}

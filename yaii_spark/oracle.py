@@ -18,7 +18,7 @@ from yaii_spark.analyzer import tokenize, tokenize_all_field
 from yaii_spark.queries import ast as A
 
 
-def _phrase_match(tokens: list[str], terms: list[str], slop: int) -> bool:
+def _has_phrase(tokens: list[str], terms: list[str], slop: int) -> bool:
     """Brute-force phrase check: ∃ positions p_0 < … < p_{k-1} with
     tokens[p_j] == terms[j] and (p_last − p_0) − (k−1) ≤ slop. O(n·k)
     exhaustive recursion — the authority the vectorized engine path
@@ -62,7 +62,7 @@ class BruteForceIndex:
             return {
                 d
                 for d, toks in toks_by_doc.items()
-                if _phrase_match(toks, list(node.terms), node.slop)
+                if _has_phrase(toks, list(node.terms), node.slop)
             }
         if isinstance(node, A.TokenRange):
             toks_by_doc = self.field_tokens.get(node.field_name, {})

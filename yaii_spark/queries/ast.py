@@ -319,20 +319,24 @@ def rewrite(node: Node) -> Node:
     return node
 
 
+def leaves(node: Node) -> list:
+    """The tree's leaves, left to right."""
+    if isinstance(node, (And, Or)):
+        return [x for c in node.children for x in leaves(c)]
+    if isinstance(node, Not):
+        return leaves(node.child)
+    return [node]
+
+
 def collect_terms(node: Node) -> set[tuple[str, str]]:
     """All (field, term) pairs referenced by the tree."""
-    if isinstance(node, Token):
-        return {(node.field_name, node.term)}
-    if isinstance(node, Phrase):
-        return {(node.field_name, t) for t in node.terms}
-    if isinstance(node, (And, Or)):
-        out: set[tuple[str, str]] = set()
-        for c in node.children:
-            out |= collect_terms(c)
-        return out
-    if isinstance(node, Not):
-        return collect_terms(node.child)
-    return set()
+    out: set[tuple[str, str]] = set()
+    for n in leaves(node):
+        if isinstance(n, Token):
+            out.add((n.field_name, n.term))
+        elif isinstance(n, Phrase):
+            out.update((n.field_name, t) for t in n.terms)
+    return out
 
 
 def prune_absent_terms(node: Node, present: set[tuple[str, str]]) -> Node:
@@ -361,36 +365,5 @@ def prune_absent_terms(node: Node, present: set[tuple[str, str]]) -> Node:
 def is_token_only(node: Node) -> bool:
     """True if the subtree touches only posting lists (no attribute
     predicates) — eligible for the per-segment numpy set-algebra path."""
-    if isinstance(node, (Token, Phrase, TokenRange, TextContains, All, NoneNode)):
-        return True
-    if isinstance(node, (And, Or)):
-        return all(is_token_only(c) for c in node.children)
-    if isinstance(node, Not):
-        return is_token_only(node.child)
-    return False
-
-
-def needs_positions(node: Node) -> bool:
-    """True if evaluating the tree requires decoded positions (any
-    Phrase leaf) — the executor only ships pos_bin/tfs_bin when so."""
-    if isinstance(node, Phrase):
-        return True
-    if isinstance(node, (And, Or)):
-        return any(needs_positions(c) for c in node.children)
-    if isinstance(node, Not):
-        return needs_positions(node.child)
-    return False
-
-
-def collect_term_scans(node: Node) -> list:
-    """All TokenRange/TextContains leaves (dictionary-scan predicates)."""
-    if isinstance(node, (TokenRange, TextContains)):
-        return [node]
-    if isinstance(node, (And, Or)):
-        out = []
-        for c in node.children:
-            out.extend(collect_term_scans(c))
-        return out
-    if isinstance(node, Not):
-        return collect_term_scans(node.child)
-    return []
+    token_leaves = (Token, Phrase, TokenRange, TextContains, All, NoneNode)
+    return all(isinstance(n, token_leaves) for n in leaves(node))

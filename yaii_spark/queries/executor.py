@@ -124,7 +124,8 @@ class _LazyPositions:
 
 class _EagerPositions:
     """Adapter giving fully-decoded (ids, per-doc position lists) the
-    same surface as _LazyPositions (unit tests build these directly)."""
+    same surface as _LazyPositions: the stream's per-batch segment
+    (streaming._batch_ids) and unit tests hand phrases this form."""
 
     __slots__ = ("ids", "_plists")
 
@@ -233,7 +234,7 @@ def _eval_phrase(node: A.Phrase, pos_map: dict) -> np.ndarray:
         e = pos_map.get((node.field_name, t))
         if e is None:
             return np.empty(0, dtype=np.int64)
-        if isinstance(e, tuple):  # (ids, plists) — unit-test form
+        if isinstance(e, tuple):  # (ids, plists) — the eager form
             e = _EagerPositions(*e)
         entries.append(e)
     cand = entries[0].ids
@@ -266,32 +267,31 @@ def _term_in_range(t: str, node: A.TokenRange) -> bool:
     return True
 
 
-def _eval_numpy(node: A.Node, postings: dict, n_docs: int, pos_map: dict | None = None) -> np.ndarray:
+def _union(sets) -> np.ndarray:
+    """k-way merge of sorted id arrays (orMany)."""
+    sets = [s for s in sets if s.size]
+    return np.unique(np.concatenate(sets)) if sets else np.empty(0, dtype=np.int64)
+
+
+def _eval_numpy(node: A.Node, postings: dict, n_docs: int, pos_map: dict | None = None,
+                leaf: Callable[[A.Node], np.ndarray] | None = None) -> np.ndarray:
+    """Sorted local doc ids of one segment that match `node`. `leaf`
+    evaluates the leaves that are not posting lists (the stream's
+    attribute predicates); without it they raise TypeError."""
     if isinstance(node, A.Token):
         return postings.get((node.field_name, node.term), np.empty(0, dtype=np.int64))
     if isinstance(node, A.Phrase):
         return _eval_phrase(node, pos_map or {})
-    if isinstance(node, A.TokenRange):
-        # union of every dictionary term in range (P8 TOKEN_RANGE:
-        # the postings fetch already restricted the scan, this just
+    if isinstance(node, (A.TokenRange, A.TextContains)):
+        # union of every dictionary term the scan accepts (P8: the
+        # postings fetch already restricted the scan, this just
         # re-applies the predicate over the fetched rows)
-        sets = [
-            ids
-            for (f, t), ids in postings.items()
-            if f == node.field_name and _term_in_range(t, node) and ids.size
-        ]
-        if not sets:
-            return np.empty(0, dtype=np.int64)
-        return np.unique(np.concatenate(sets))
-    if isinstance(node, A.TextContains):
-        sets = [
-            ids
-            for (f, t), ids in postings.items()
-            if f == node.field_name and node.needle in t and ids.size
-        ]
-        if not sets:
-            return np.empty(0, dtype=np.int64)
-        return np.unique(np.concatenate(sets))
+        in_range = isinstance(node, A.TokenRange)
+        return _union(
+            ids for (f, t), ids in postings.items()
+            if f == node.field_name
+            and (_term_in_range(t, node) if in_range else node.needle in t)
+        )
     if isinstance(node, A.All):
         return np.arange(n_docs, dtype=np.int64)
     if isinstance(node, A.NoneNode):
@@ -302,7 +302,7 @@ def _eval_numpy(node: A.Node, postings: dict, n_docs: int, pos_map: dict | None 
         pos = [c for c in node.children if not isinstance(c, A.Not)]
         neg = [c.child for c in node.children if isinstance(c, A.Not)]
         if pos:
-            sets = sorted((_eval_numpy(c, postings, n_docs, pos_map) for c in pos), key=len)
+            sets = sorted((_eval_numpy(c, postings, n_docs, pos_map, leaf) for c in pos), key=len)
             acc = sets[0]
             for s in sets[1:]:
                 if acc.size == 0:
@@ -313,33 +313,18 @@ def _eval_numpy(node: A.Node, postings: dict, n_docs: int, pos_map: dict | None 
         for c in neg:  # andNot (operations.ts:184-226)
             if acc.size == 0:
                 return acc
-            s = _eval_numpy(c, postings, n_docs, pos_map)
+            s = _eval_numpy(c, postings, n_docs, pos_map, leaf)
             if s.size:
                 acc = np.setdiff1d(acc, s, assume_unique=True)
         return acc
     if isinstance(node, A.Or):
-        sets = [_eval_numpy(c, postings, n_docs, pos_map) for c in node.children]
-        sets = [s for s in sets if s.size]
-        if not sets:
-            return np.empty(0, dtype=np.int64)
-        return np.unique(np.concatenate(sets))  # k-way merge (orMany)
+        return _union(_eval_numpy(c, postings, n_docs, pos_map, leaf) for c in node.children)
     if isinstance(node, A.Not):
-        s = _eval_numpy(node.child, postings, n_docs, pos_map)
+        s = _eval_numpy(node.child, postings, n_docs, pos_map, leaf)
         return np.setdiff1d(np.arange(n_docs, dtype=np.int64), s, assume_unique=True)
+    if leaf is not None:
+        return leaf(node)
     raise TypeError(f"not a token-only node: {node!r}")
-
-
-def _collect_phrases(node: A.Node) -> list:
-    if isinstance(node, A.Phrase):
-        return [node]
-    if isinstance(node, (A.And, A.Or)):
-        out = []
-        for c in node.children:
-            out.extend(_collect_phrases(c))
-        return out
-    if isinstance(node, A.Not):
-        return _collect_phrases(node.child)
-    return []
 
 
 def _needs_universe(node: A.Node) -> bool:
@@ -405,16 +390,13 @@ def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
     term-pruned postings rows evaluated by _eval_numpy
     (run_per_segment)."""
     terms = sorted(A.collect_terms(node))
-    scans = A.collect_term_scans(node)
+    scans = [n for n in A.leaves(node) if isinstance(n, (A.TokenRange, A.TextContains))]
     universe = _needs_universe(node)  # NOT/ALL need every segment
     if not universe and not terms and not scans:
         return _empty_ids(cat.spark)
-    want_pos = A.needs_positions(node)
-    phrase_terms = {
-        (n.field_name, t)
-        for n in _collect_phrases(node)
-        for t in n.terms
-    }
+    phrases = [n for n in A.leaves(node) if isinstance(n, A.Phrase)]
+    want_pos = bool(phrases)  # pos_bin/tfs_bin ship only for phrases
+    phrase_terms = {(n.field_name, t) for n in phrases for t in n.terms}
     cols = ["field", "term", "doc_ids_bin"] + (
         ["tfs_bin", "pos_bin", "block_pos_offs"] if want_pos else []
     )

@@ -9,21 +9,29 @@ exact restriction (Spark can't global-sort an unbounded append stream
 either).
 
 Spark-first mapping: the "added event" stream is a Structured Streaming
-source over the incoming pages directory; the boolean filter is applied
-per micro-batch with the same tokenizer UDF + AST, compiled to a
-relational predicate (new docs aren't in the index yet — exactly like
-the reference, which scans the mutable segment's fresh batch rather
-than committed postings).
+source over the incoming pages directory. Each micro-batch is filtered
+by the engine itself, in one ``mapInPandas``: every Arrow batch is
+inverted into an in-memory segment by the build's own inverter and
+evaluated by the engine's one boolean/phrase evaluator
+(executor._eval_numpy). New docs aren't in the index yet — exactly like
+yaii, which evaluates FUTURE filters on the fresh mutable segment
+rather than on committed postings (yaii src/base-inverted-index.ts:457-489,
+lib/internal/segments/mutable-segment.ts:20,103-122).
 """
 
 from __future__ import annotations
 
 from enum import Enum
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from yaii_spark.analyzer import tokenize_all_udf, tokenize_udf
+from yaii_spark.analyzer import doc_postings, unpack_postings
+from yaii_spark.codec import varint_decode
+from yaii_spark.indexer import ANALYZERS, DEFAULT_FIELDS
 from yaii_spark.queries import ast as A
+from yaii_spark.queries.executor import _eval_numpy, search
 
 
 class QueryMode(Enum):
@@ -32,136 +40,68 @@ class QueryMode(Enum):
     FUTURE = "future"
 
 
-def _phrase_match(col: Column, terms: list[str], slop: int) -> Column:
-    """Relational phrase/proximity over a token-array column (pure
-    Catalyst HOFs — no Python in the per-batch hot path).
+def _batch_ids(q: A.Node, pdf: pd.DataFrame, text_col: str) -> np.ndarray:
+    """Positions of the rows of `pdf` that match `q`.
 
-    Engine semantics (executor._ordered_window): ∃ positions
-    p_0 < p_1 < … matching the terms in order with p_j ≥ p_{j-1}+1 and
-    p_{last} − p_0 ≤ slop + len − 1. Compiled as nested EXISTS over
-    per-term position windows: term k may sit anywhere in
-    (p_{k-1}, p_0 + slop + k] — the same existence condition the
-    engine's greedy minimal chain decides."""
-    size = F.size(col)
-    n = len(terms)
+    The batch becomes an in-memory segment whose local ids are the row
+    positions: the build's inverter (analyzer.doc_postings with the
+    default text/_all fields), read back by the build's parser
+    (analyzer.unpack_postings), gives {(field, term): sorted ids} and,
+    for a phrase, each term's (ids, position lists). _eval_numpy
+    evaluates it as it evaluates a committed segment. Attribute leaves
+    are id arrays from the batch's columns; a null matches no leaf, so
+    a row with a null attribute or text lands inside NOT (a complement
+    over the batch), as in execute_boolean."""
+    names = sorted(DEFAULT_FIELDS)
+    specs = [(i, (0,), ANALYZERS[DEFAULT_FIELDS[f][1]]) for i, f in enumerate(names)]
+    acc: dict = {}
+    term_cache: dict = {}
+    for i, text in enumerate(pdf[text_col]):
+        _, bufs = doc_postings((text,), 1, specs, term_cache)
+        if bufs:
+            unpack_postings(acc, i, 0, bytes(bufs[0]))
+    want_pos = any(isinstance(n, A.Phrase) for n in A.leaves(q))
+    postings, pos_map = {}, {}
+    for (fid, term), (ids, _tfs, _dls, poss) in acc.items():
+        key = (names[fid], term.decode("utf-8"))
+        postings[key] = np.asarray(ids, dtype=np.int64)
+        if want_pos:  # position bytes are LEB128 deltas from 0
+            pos_map[key] = (postings[key], [np.cumsum(varint_decode(p)) for p in poss])
 
-    def chain(k: int, prev: Column, p0: Column) -> Column:
-        if k == n:
-            return F.lit(True)
-        lo = prev + F.lit(1)
-        hi = F.least(p0 + F.lit(slop + k), size)
-        seq = F.when(hi >= lo, F.sequence(lo, hi)).otherwise(
-            F.array().cast("array<int>")
-        )
-        return F.exists(
-            seq,
-            lambda p: (F.element_at(col, p) == terms[k]) & chain(k + 1, p, p0),
-        )
-
-    starts = F.when(size >= 1, F.sequence(F.lit(1), size)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.exists(
-        starts, lambda p: (F.element_at(col, p) == terms[0]) & chain(1, p, p)
-    )
-
-
-def compile_predicate(node: A.Node, tokens_col: str = "_tokens") -> Column:
-    """Compile a boolean AST to a relational Column predicate over a
-    tokenized row — the per-batch evaluation form used for streams
-    (and usable as a full-scan fallback for batch). Covers the full
-    batch AST except CachedFilter, whose semantics are tied to the
-    indexed snapshot (a new stream doc can't be in a filter cached over
-    committed postings — parity with the reference, which evaluates
-    FUTURE filters on fresh batches only,
-    /root/reference/src/base-inverted-index.ts:457-489)."""
-
-    def tok_col(field_name: str) -> Column:
-        return F.col("_all_tokens" if field_name == "_all" else tokens_col)
-
-    if isinstance(node, A.Token):
-        return F.array_contains(tok_col(node.field_name), node.term)
-    if isinstance(node, A.Phrase):
-        return _phrase_match(tok_col(node.field_name), list(node.terms), node.slop)
-    if isinstance(node, A.TokenRange):
-        def in_range(t: Column) -> Column:
-            c = F.lit(True)
+    def leaf(node: A.Node) -> np.ndarray:
+        if not isinstance(node, (A.HasField, A.NumberEq, A.NumberRange)):
+            raise TypeError(f"unsupported node: {node!r}")
+        c = pdf[node.field_name]
+        hit = c.notna()
+        if isinstance(node, A.NumberEq):
+            hit &= c == node.value
+        elif isinstance(node, A.NumberRange):
             if node.lo is not None:
-                c = c & (t >= node.lo if node.lo_inclusive else t > node.lo)
+                hit &= c >= node.lo if node.lo_inclusive else c > node.lo
             if node.hi is not None:
-                c = c & (t <= node.hi if node.hi_inclusive else t < node.hi)
-            return c
+                hit &= c <= node.hi if node.hi_inclusive else c < node.hi
+        return np.flatnonzero(hit.to_numpy(dtype=bool))
 
-        return F.exists(tok_col(node.field_name), in_range)
-    if isinstance(node, A.TextContains):
-        return F.exists(
-            tok_col(node.field_name), lambda t: t.contains(node.needle)
-        )
-    if isinstance(node, A.All):
-        return F.lit(True)
-    if isinstance(node, A.NoneNode):
-        return F.lit(False)
-    if isinstance(node, A.And):
-        out = F.lit(True)
-        for c in node.children:
-            out = out & compile_predicate(c, tokens_col)
-        return out
-    if isinstance(node, A.Or):
-        out = F.lit(False)
-        for c in node.children:
-            out = out | compile_predicate(c, tokens_col)
-        return out
-    if isinstance(node, A.Not):
-        return ~compile_predicate(node.child, tokens_col)
-    if isinstance(node, A.NumberEq):
-        return F.col(node.field_name) == F.lit(node.value)
-    if isinstance(node, A.NumberRange):
-        c = F.col(node.field_name)
-        cond = F.lit(True)
-        if node.lo is not None:
-            cond = cond & (c >= node.lo if node.lo_inclusive else c > node.lo)
-        if node.hi is not None:
-            cond = cond & (c <= node.hi if node.hi_inclusive else c < node.hi)
-        return cond
-    if isinstance(node, A.HasField):
-        return F.col(node.field_name).isNotNull()
-    if isinstance(node, A.CachedFilter):
+    return _eval_numpy(q, postings, len(pdf), pos_map, leaf)
+
+
+def _matching_rows(df: DataFrame, query: A.Node, text_col: str) -> DataFrame:
+    """The rows of `df` (a stream or a snapshot) that match `query`,
+    with `df`'s schema: one mapInPandas keeps each Arrow batch's
+    _batch_ids rows."""
+    q = A.rewrite(query)
+    if any(isinstance(n, A.CachedFilter) for n in A.leaves(q)):
         raise TypeError(
             "CachedFilter is snapshot-scoped and cannot apply to future "
             "batches (a new stream doc is never in a filter cached over "
             "committed postings); evaluate the underlying query instead"
         )
-    raise TypeError(node)
 
+    def task(batches):
+        for pdf in batches:
+            yield pdf.iloc[_batch_ids(q, pdf, text_col)]
 
-def _token_fields(node: A.Node) -> set[str]:
-    """Field names whose token arrays the predicate actually reads."""
-    if isinstance(node, (A.Token, A.Phrase, A.TokenRange, A.TextContains)):
-        return {node.field_name}
-    if isinstance(node, (A.And, A.Or)):
-        out: set[str] = set()
-        for c in node.children:
-            out |= _token_fields(c)
-        return out
-    if isinstance(node, A.Not):
-        return _token_fields(node.child)
-    return set()
-
-
-def _filtered(df: DataFrame, query: A.Node, text_col: str) -> DataFrame:
-    q = A.rewrite(query)
-    fields = _token_fields(q)
-    # tokenize only the streams the predicate reads — per-batch UDF
-    # work is the stream's hot path, so an attribute-only or
-    # single-field query never pays for the unused token column
-    added = []
-    if any(f != "_all" for f in fields):
-        df = df.withColumn("_tokens", tokenize_udf(F.col(text_col)))
-        added.append("_tokens")
-    if "_all" in fields:
-        df = df.withColumn("_all_tokens", tokenize_all_udf(F.col(text_col)))
-        added.append("_all_tokens")
-    return df.filter(compile_predicate(q)).drop(*added)
+    return df.mapInPandas(task, df.schema)
 
 
 def continuous_query(
@@ -181,8 +121,14 @@ def continuous_query(
     caller attaches a sink (memory/foreachBatch) and starts it —
     keeping start/stop at the edge makes the plan testable.
 
-    The CURRENT side evaluates against either `current_df` (per-row
-    scan with the compiled predicate — the small/ad-hoc path) or
+    The FUTURE side filters each micro-batch in one mapInPandas
+    (_matching_rows): the batch is inverted into an in-memory segment
+    and evaluated by the engine's _eval_numpy, not compiled to a
+    Catalyst predicate, so it answers every query execute_boolean
+    answers, with the same results. CachedFilter raises TypeError.
+
+    The CURRENT side evaluates against either `current_df` (the same
+    per-batch filter over the snapshot — the small/ad-hoc path) or
     `current_catalog` (an IndexCatalog: the committed-index snapshot
     via the posting-list engine — the reference's CURRENT semantics,
     base-inverted-index.ts:457-489, where the snapshot IS the committed
@@ -197,16 +143,14 @@ def continuous_query(
     stream_df = None
     if mode in (QueryMode.FUTURE, QueryMode.CURRENT_AND_FUTURE):
         src = spark.readStream.schema(schema).parquet(stream_dir)
-        stream_df = _filtered(src, query, text_col)
+        stream_df = _matching_rows(src, query, text_col)
 
     cur = None
     if mode in (QueryMode.CURRENT, QueryMode.CURRENT_AND_FUTURE):
         if current_catalog is not None:
-            from yaii_spark.queries.executor import search as _search
-
-            cur = _search(current_catalog, query, sort=sort)
+            cur = search(current_catalog, query, sort=sort)
         elif current_df is not None:
-            cur = _filtered(current_df, query, text_col)
+            cur = _matching_rows(current_df, query, text_col)
             if sort:
                 cur = cur.orderBy(
                     *[
@@ -306,21 +250,3 @@ def make_append_committer(index_dir: str, seg_size: int = 1 << 20, **build_kwarg
 
     return commit
 
-
-def windowed_ingest_stats(
-    spark: SparkSession, stream_dir: str, schema,
-    ts_col: str = "warc_ts", window: str = "1 minute", watermark: str = "5 minutes",
-) -> DataFrame:
-    """Event-time windowed ingest metrics with late-data handling — new
-    surface beyond the reference (it has no watermarks/windows), used
-    for build monitoring: docs/bytes per event-time window."""
-    src = spark.readStream.schema(schema).parquet(stream_dir)
-    return (
-        src.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.length("text")).alias("text_bytes"),
-        )
-        .select("window.start", "window.end", "n_docs", "text_bytes")
-    )
