@@ -20,3 +20,16 @@ def work_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("index")
     yield str(d)
     shutil.rmtree(str(d), ignore_errors=True)
+
+
+@pytest.fixture(params=["driver", "job"])
+def placement(request, monkeypatch):
+    """Runs a test under each query placement (executor.run_per_segment):
+    "driver" leaves the threshold as shipped, so a small query runs on
+    the driver; "job" sets it to 0, so every query runs as one Spark
+    job."""
+    if request.param == "job":
+        from yaii_spark.queries import executor
+
+        monkeypatch.setattr(executor, "DRIVER_POSTINGS", 0)
+    return request.param

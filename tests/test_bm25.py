@@ -435,9 +435,10 @@ def test_bm25f_fielded_topk(corpus):
         assert abs(g.score - 2.0 * bse.score) <= 1e-9
 
 
-def test_more_like_this(corpus):
+def test_more_like_this(corpus, placement):
     """MLT == Python composition: top-5 tf·idf terms of the source doc
-    (tie term asc), disjunctive BM25 over them, source excluded."""
+    (tie term asc), disjunctive BM25 over them, source excluded, in
+    rank order under either placement."""
     import math
     from collections import Counter
 
@@ -466,11 +467,12 @@ def test_more_like_this(corpus):
         more_like_this(cat, 10**9)
 
 
-def test_bm25_batch_matches_single(corpus):
+def test_bm25_batch_matches_single(corpus, placement):
     """bm25_topk_batch: one postings pass for a whole query batch —
     per-query output must be rank- AND score-identical (exact float
-    equality: same sorted-term summation) to bm25_topk per query; a
-    query with only absent terms simply yields no rows."""
+    equality: same sorted-term summation) to bm25_topk per query, under
+    either placement (a pandas per-query top-k on the driver, a Window
+    in the job); a query with only absent terms simply yields no rows."""
     from yaii_spark.queries.bm25 import bm25_topk_batch
 
     cat, oracle = corpus
@@ -502,15 +504,24 @@ def test_bm25_batch_matches_single(corpus):
     ]
 
 
-def test_topk_huge_k_returns_every_match(corpus):
+def test_topk_huge_k_returns_every_match(corpus, placement):
     """A "return everything" k (10**9) must not plan the 2·k-slot
     TakeOrderedAndProject buffer that kills the driver JVM: bm25_topk
-    and bm25f_topk return every matching row in full rank order,
-    while a small k keeps the bounded top-k plan."""
+    and bm25f_topk return every matching row in full rank order, while
+    a small k keeps the bounded top-k plan as a job. On the driver the
+    threshold bounds the rows, and the result is a LocalTableScan."""
     from yaii_spark.queries.bm25 import bm25f_topk
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
+
+    def check_plans(huge, small):
+        if placement == "driver":
+            assert plan(huge).startswith("LocalTableScan"), plan(huge)
+            assert plan(small).startswith("LocalTableScan"), plan(small)
+        else:
+            assert "TakeOrderedAndProject" not in plan(huge)
+            assert "TakeOrderedAndProject" in plan(small)
 
     cat, oracle = corpus
     common, rare = _freq_ordered_terms(oracle)
@@ -518,15 +529,13 @@ def test_topk_huge_k_returns_every_match(corpus):
     want = oracle.bm25_topk(q, k=N_DOCS)
     assert 10 < len(want) < N_DOCS
     got = bm25_topk(cat, q, k=10**9)
-    assert "TakeOrderedAndProject" not in plan(got)
+    check_plans(got, bm25_topk(cat, q, k=10))
     assert_topk_equal(got.collect(), want)
-    assert "TakeOrderedAndProject" in plan(bm25_topk(cat, q, k=10))
 
     weights = {"text": 1.0, "_all": 0.5}
     fielded = bm25f_topk(cat, q, weights, k=10**9)
-    assert "TakeOrderedAndProject" not in plan(fielded)
+    check_plans(fielded, bm25f_topk(cat, q, weights, k=10))
     rows = [(r.doc_id, r.score) for r in fielded.collect()]
     # _all holds a subset of each doc's text tokens: the same docs match
     assert {d for d, _ in rows} == {d for d, _ in want}
     assert rows == sorted(rows, key=lambda r: (-r[1], r[0]))
-    assert "TakeOrderedAndProject" in plan(bm25f_topk(cat, q, weights, k=10))

@@ -3,7 +3,9 @@
 Each query runs on Spark over a small seeded `documents`/`events`
 corpus and is compared with its `oracle_sql()` statement run by DuckDB
 on the same parquet files: column names, row count and the
-order-insensitive value hash of `scripts/check_oracles.py`.
+order-insensitive value hash of `scripts/check_oracles.py`. Every query
+runs under both placements of the per-segment work (the ``placement``
+fixture): on the driver where it is small, and as one Spark job.
 """
 
 import datetime as dt
@@ -79,7 +81,7 @@ def gate(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("name", sorted(queries()))
-def test_query_matches_its_oracle(gate, name):
+def test_query_matches_its_oracle(gate, name, placement):
     spark, sf_dir, con = gate
     sdf = queries()[name](spark, sf_dir)
     s_cols = sdf.columns

@@ -1,9 +1,11 @@
 """Per-segment query execution: every boolean, phrase and BM25 query
-runs as one ``mapInPandas`` job over the index's segments
-(executor.run_per_segment), each task reading its own segments'
-postings, seg_meta row and tombstones by path.
+runs one task body per segment (executor.run_per_segment), reading the
+segment's postings, seg_meta row and tombstones by path — on the driver
+for a query under executor.DRIVER_POSTINGS postings, else in one
+``mapInPandas`` job over the index's segments.
 
-These tests pin that single plan on a 2-segment fixture:
+These tests pin both placements on a 2-segment fixture (the result
+tests run under each, through the ``placement`` fixture):
 - boolean/phrase results equal the exhaustive oracle
   (``BruteForceIndex.evaluate``) on the fresh index and, minus the
   deleted ids, after ``delete_docs`` — also when the deletes land
@@ -16,7 +18,10 @@ These tests pin that single plan on a 2-segment fixture:
   stage with no Exchange, no broadcast and no cross/nested-loop join,
   with and without tombstones;
 - a warm boolean, phrase, exact BM25 and pruned BM25 query each runs
-  exactly one Spark job;
+  no Spark job on the driver and exactly one as a job; a query at the
+  threshold, and a token-range or substring scan of any size, runs
+  one; a driver-placed BM25 with k above its match count returns every
+  match in (score desc, doc_id asc) order;
 - a table Spark lists no files for, or a path pyarrow cannot open,
   raises; segment directories outside the manifest are left out;
 - tombstone files are seg_id-ranged, so a task's min/max filter skips
@@ -34,6 +39,7 @@ from yaii_spark import storage
 from yaii_spark.indexer import build_index, delete_docs, merge_segments
 from yaii_spark.oracle import BruteForceIndex
 from yaii_spark.queries import ast as A
+from yaii_spark.queries import executor
 from yaii_spark.queries.bm25 import bm25_topk
 from yaii_spark.queries.executor import execute_boolean
 from yaii_spark.storage import IndexCatalog
@@ -124,7 +130,7 @@ def _bm25_all(cat):
     return out
 
 
-def test_boolean_matches_oracle_fresh(spark, fresh_index, brute):
+def test_boolean_matches_oracle_fresh(spark, fresh_index, brute, placement):
     got = _run_all(IndexCatalog(spark, fresh_index))
     want = {k: sorted(brute.evaluate(A.rewrite(q))) for k, q in QUERIES.items()}
     assert got == want
@@ -134,7 +140,7 @@ def test_boolean_matches_oracle_fresh(spark, fresh_index, brute):
     assert len(got["all"]) == N_DOCS
 
 
-def test_boolean_matches_oracle_after_delete(spark, tombstoned_index, brute):
+def test_boolean_matches_oracle_after_delete(spark, tombstoned_index, brute, placement):
     cat = IndexCatalog(spark, tombstoned_index)
     assert cat.tombstones() is not None  # the cogrouped plan runs
     got = _run_all(cat)
@@ -147,7 +153,7 @@ def test_boolean_matches_oracle_after_delete(spark, tombstoned_index, brute):
     assert len(got["all"]) == N_DOCS - len(DELETED)
 
 
-def test_tombstoned_equals_purged_merge(spark, tombstoned_index, work_dir):
+def test_tombstoned_equals_purged_merge(spark, tombstoned_index, work_dir, placement):
     """A purging merge expunges the tombstoned docs into one segment and
     keeps their ids as its tombstones; boolean results and BM25 (exact
     AND pruned) doc ids and scores must not change."""
@@ -155,7 +161,7 @@ def test_tombstoned_equals_purged_merge(spark, tombstoned_index, work_dir):
     base, base_bm25 = _run_all(cat), _bm25_all(cat)
     assert any(len(r) == 13 for r in base_bm25)  # k actually binds somewhere
 
-    merged = f"{work_dir}/seg_plan_merged"
+    merged = f"{work_dir}/seg_plan_merged_{placement}"
     with pytest.warns(RuntimeWarning):  # 1 seg < defaultParallelism
         merge_segments(spark, tombstoned_index, merged, factor=2)
     mcat = IndexCatalog(spark, merged)
@@ -192,11 +198,13 @@ def _assert_one_segment_stage(df):
     assert "Exchange" not in below, plan
 
 
-def test_plan_one_python_stage_per_query(spark, work_dir):
+def test_plan_one_python_stage_per_query(spark, work_dir, monkeypatch):
     """Fewer segments than cores (2) and a rare term next to a dense
     one — the skewed, over-merged case — still compile to the single
-    by-path shape (one MapInPandas over the segment files, no Exchange
-    or broadcast under it), with and without tombstones."""
+    by-path shape of the job placement (one MapInPandas over the
+    segment files, no Exchange or broadcast under it), with and without
+    tombstones."""
+    monkeypatch.setattr(executor, "DRIVER_POSTINGS", 0)
     hits = {37, 1200, 1901}
     texts = {
         i: "zzdense aa zzdense bb cc zzdense dd"
@@ -252,22 +260,80 @@ WARM_QUERIES = {
 
 
 @pytest.mark.parametrize("index", ["fresh_index", "tombstoned_index"])
-def test_warm_query_is_one_job(spark, request, index):
+def test_warm_query_job_count(spark, request, index, placement):
     """Once the catalog knows the query's terms, each query class runs
-    exactly one Spark job, tombstones or not: the by-path stage and
-    the merge above it (TakeOrderedAndProject for BM25)."""
+    no Spark job on the driver and exactly one as a job (the by-path
+    stage and the merge above it, TakeOrderedAndProject for BM25),
+    tombstones or not."""
     cat = IndexCatalog(spark, request.getfixturevalue(index))
+    want = 0 if placement == "driver" else 1
     for name, q in WARM_QUERIES.items():
         first = q(cat).collect()  # fills the term-dictionary cache
         jobs = _jobs_of(spark, lambda: q(cat).collect())
-        assert jobs == 1, (name, jobs)
+        assert jobs == want, (name, jobs)
         assert first, name
 
 
-def test_deletes_visible_through_one_catalog(spark, work_dir, brute):
+def test_query_at_threshold_runs_one_job(spark, fresh_index, monkeypatch):
+    """The placement counts a query's postings as Σ df over its keys,
+    cf for a phrase's keys (their positions decode), and n_docs more
+    for a NOT: at exactly DRIVER_POSTINGS the query runs one job, one
+    posting below it none."""
+    cat = IndexCatalog(spark, fresh_index)
+    stats = cat.term_stats_for(
+        [("text", t) for t in ("common", "w3", "alpha", "beta", "w1")]
+    )
+    df = {t: v[0] for (_, t), v in stats.items()}
+    cf = {t: v[1] for (_, t), v in stats.items()}
+    assert cf["alpha"] > df["alpha"]  # the phrase count really is cf
+    cases = [
+        (WARM_QUERIES["boolean"], df["common"] + df["w3"]),
+        (WARM_QUERIES["phrase"], cf["alpha"] + cf["beta"]),
+        (WARM_QUERIES["bm25"], df["common"] + df["w3"]),
+        (lambda cat: execute_boolean(cat, QUERIES["not"]), df["w1"] + N_DOCS),
+    ]
+    for q, size in cases:
+        want = q(cat).collect()
+        monkeypatch.setattr(executor, "DRIVER_POSTINGS", size)
+        assert _jobs_of(spark, lambda: q(cat).collect()) == 1, size
+        assert q(cat).collect() == want
+        monkeypatch.setattr(executor, "DRIVER_POSTINGS", size + 1)
+        assert _jobs_of(spark, lambda: q(cat).collect()) == 0, size
+
+
+@pytest.mark.parametrize("limit", [0, 10**12])
+def test_scan_query_runs_one_job(spark, fresh_index, brute, monkeypatch, limit):
+    """A token-range or substring scan has no dictionary count, so it
+    runs as one job whatever the threshold."""
+    monkeypatch.setattr(executor, "DRIVER_POSTINGS", limit)
+    cat = IndexCatalog(spark, fresh_index)
+    for q in (A.token_range("text", "w1", "w3"), A.prefix("rare"), A.text_contains("ph")):
+        rows = []
+        assert _jobs_of(spark, lambda: rows.extend(execute_boolean(cat, q).collect())) == 1
+        assert sorted(r.doc_id for r in rows) == sorted(brute.evaluate(A.rewrite(q))), q
+
+
+def test_driver_bm25_k_above_matches(spark, tombstoned_index, brute):
+    """A driver-placed BM25 whose k exceeds its match count returns
+    every live match, by (score desc, doc_id asc) with tied scores in
+    doc_id order, and runs no job."""
+    cat = IndexCatalog(spark, tombstoned_index)
+    terms = ["rareterm", "x", "alpha"]
+    want = {d for t in terms for d in brute.evaluate(A.token(t))} - set(DELETED)
+    bm25_topk(cat, terms, k=N_DOCS).collect()  # fills the term-dictionary cache
+    rows = []
+    jobs = _jobs_of(spark, lambda: rows.extend(bm25_topk(cat, terms, k=N_DOCS).collect()))
+    got = [(r.doc_id, r.score) for r in rows]
+    assert jobs == 0
+    assert {d for d, _ in got} == want and len(got) == len(want) < N_DOCS
+    assert got == sorted(got, key=lambda r: (-r[1], r[0]))
+    assert len({s for _, s in got}) < len(got)  # tied scores are ordered
+
+
+def test_deletes_visible_through_one_catalog(spark, work_dir, brute, placement):
     """Deletes issued between queries show up in the next query on the
     SAME catalog: the tombstone file list is never memoized."""
-    out = _build(spark, _texts(), f"{work_dir}/seg_plan_live_deletes", SEG)
+    out = _build(spark, _texts(), f"{work_dir}/seg_plan_live_deletes_{placement}", SEG)
     cat = IndexCatalog(spark, out)
     queries = {k: QUERIES[k] for k in ("and", "not", "phrase")}
 
@@ -284,7 +350,7 @@ def test_deletes_visible_through_one_catalog(spark, work_dir, brute):
         check(deleted)
 
 
-def test_unlisted_files_raise(spark, fresh_index, tombstoned_index, monkeypatch):
+def test_unlisted_files_raise(spark, fresh_index, tombstoned_index, monkeypatch, placement):
     """Tables that Spark lists no files for (an Iceberg table's
     ``inputFiles()`` is empty) and paths pyarrow cannot open make a
     query raise, instead of answering from no data."""
@@ -320,13 +386,15 @@ def test_unlisted_files_raise(spark, fresh_index, tombstoned_index, monkeypatch)
         execute_boolean(IndexCatalog(spark, tombstoned_index), q)
 
 
-def test_orphan_segment_outside_manifest_is_ignored(spark, fresh_index, work_dir, brute):
+def test_orphan_segment_outside_manifest_is_ignored(
+    spark, fresh_index, work_dir, brute, placement
+):
     """Segment directories the manifest does not name (the files of a
     commit that crashed before its publish) are left out of every query
     and every table the catalog reads."""
     import shutil
 
-    out = f"{work_dir}/seg_plan_orphan"
+    out = f"{work_dir}/seg_plan_orphan_{placement}"
     shutil.copytree(fresh_index, out)
     for table in ("docs", "postings", "seg_meta"):
         shutil.copytree(f"{out}/{table}/seg_id=1", f"{out}/{table}/seg_id=2")
@@ -340,7 +408,7 @@ def test_orphan_segment_outside_manifest_is_ignored(spark, fresh_index, work_dir
         assert {r.seg_id for r in table.select("seg_id").distinct().collect()} == {0, 1}
 
 
-def test_tombstone_files_are_seg_id_ranged(spark, fresh_index, work_dir, brute):
+def test_tombstone_files_are_seg_id_ranged(spark, fresh_index, work_dir, brute, placement):
     """delete_docs range-partitions tombstones by seg_id, so a query
     task's min/max filter on its segments skips other segments' files."""
     import shutil
@@ -349,7 +417,7 @@ def test_tombstone_files_are_seg_id_ranged(spark, fresh_index, work_dir, brute):
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    out = f"{work_dir}/seg_plan_ranged_tombstones"
+    out = f"{work_dir}/seg_plan_ranged_tombstones_{placement}"
     shutil.copytree(fresh_index, out)
     deleted = set(range(0, N_DOCS, 3))
     key = "spark.sql.adaptive.coalescePartitions.enabled"

@@ -189,6 +189,33 @@ def test_future_stream_nulls_match_engine(spark, null_corpus, name, qf, want):
     assert _future_ids(spark, qf(), stream_dir, schema, f"nulls_{name}") == want
 
 
+def test_future_non_default_field_raises(spark, stream_dir, bool_stream_dir):
+    """A stream batch is inverted into the default fields only, so a
+    FUTURE or current_df query with a token, phrase or scan leaf on
+    any other field (a rule field of build_index(fields=...)) raises,
+    naming the field, instead of matching no row; default-field
+    queries are unchanged."""
+    snapshot = spark.read.schema(PAGES_SCHEMA).parquet(bool_stream_dir)
+    for q in (
+        A.token("@AB12.pdf", "refs"),
+        A.and_(A.token("abc"), A.phrase(["a", "b"], "refs")),
+        A.or_(A.token("abc"), A.text_contains("x", "refs")),
+    ):
+        with pytest.raises(ValueError, match="'refs'"):
+            continuous_query(spark, q, QueryMode.FUTURE, stream_dir, PAGES_SCHEMA)
+        with pytest.raises(ValueError, match="'refs'"):
+            continuous_query(
+                spark, q, QueryMode.CURRENT, stream_dir, PAGES_SCHEMA,
+                current_df=snapshot,
+            )
+    q = A.and_(A.token("abc", "_all"), A.number_range("num_attr", None, 22))
+    _, cur = continuous_query(
+        spark, q, QueryMode.CURRENT, stream_dir, PAGES_SCHEMA, current_df=snapshot
+    )
+    assert {r.doc_id for r in cur.collect()} == {12}
+    assert _future_ids(spark, q, bool_stream_dir, PAGES_SCHEMA, "default_fields") == {12}
+
+
 def test_future_cached_filter_raises(spark, stream_dir):
     """A filter cached over committed postings cannot hold a new
     stream doc: a FUTURE query with one raises when it is built."""

@@ -7,16 +7,18 @@ base, /root/reference/readme.md:26; yaii itself has no scoring):
     score(d,q) = Σ_t idf(t) · tf / (tf + k1·(1 − b + b·dl/avgdl))
 
 Execution: the driver resolves term statistics (df, N, avgdl), then
-one ``mapInPandas`` job (executor.run_per_segment) runs the one exact
-scorer (`_score_segment`) per segment, each task reading its segments'
-postings rows, seg_meta row (``dl_bin``) and tombstones by path: the
-scorer decodes the query's (field, term) postings,
-accumulates w·idf·norm into a dense per-segment array **in sorted-key
-order** (float determinism across parallelism levels — SURVEY.md
-§7.4.1), takes a per-segment top-k, then a global
-``orderBy(score desc, doc_id asc).limit(k)`` merge — Catalyst's
-TakeOrderedAndProject, the distributed form of the reference's
-per-segment topBy + global topBy (base-inverted-index.ts:437-455).
+executor.run_per_segment runs the one exact scorer (`_score_segment`)
+per segment over its postings rows, seg_meta row (``dl_bin``) and
+tombstones, read by path: the scorer decodes the query's (field, term)
+postings, accumulates w·idf·norm into a dense per-segment array **in
+sorted-key order** (float determinism across parallelism levels —
+SURVEY.md §7.4.1) and takes a per-segment top-k; the global top-k by
+(score desc, doc_id asc) merges them, the reference's per-segment
+topBy + global topBy (base-inverted-index.ts:437-455). A query of
+fewer than executor.DRIVER_POSTINGS postings runs on the driver with
+a numpy merge and no Spark job; a larger one is one ``mapInPandas``
+job under Catalyst's TakeOrderedAndProject (a query_id Window for a
+batch).
 
 Pruning: a MaxScore/block-max pass (`prune=True`, Ding & Suel 2011)
 skips non-essential term lists using per-block upper bounds derived at
@@ -468,10 +470,9 @@ def bm25_topk(
             return _score_segment_pruned(pdf, idfs, k1, b, avgdl, k, block, deleted)
         return _score_one(pdf, coefs, k1, b, avgdl, k, mode, block, deleted)
 
-    per_seg = run_per_segment(
-        cat, score, "doc_id long, score double", cols, _META, sorted(coefs)
+    return run_per_segment(
+        cat, score, "doc_id long, score double", cols, _META, sorted(coefs), top=k
     )
-    return per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
 def bm25f_topk(
@@ -499,10 +500,9 @@ def bm25f_topk(
     Disjunctive, exact (no MaxScore — the combined per-(field, term)
     bounds it needs aren't materialized): a batch of one through the
     same per-segment scorer as bm25_topk, with each key's coefficient
-    w_f·idf_f(t), and the same per-segment top-k + global
-    TakeOrderedAndProject merge. The combined per-segment top-k is
-    rank-safe because each segment task sees every field's postings
-    for its segment."""
+    w_f·idf_f(t), and the same per-segment top-k + global merge. The
+    combined per-segment top-k is rank-safe because each segment's
+    task body sees every field's postings for its segment."""
     spark = cat.spark
     stats = cat.corpus_stats()
     uniq = sorted(set(terms))
@@ -520,10 +520,9 @@ def bm25f_topk(
     def score(post: pd.DataFrame, meta: dict, deleted: np.ndarray | None) -> pd.DataFrame:
         return _score_one(post.assign(**meta), coefs, k1, b, avgdl, k, "or", block, deleted)
 
-    per_seg = run_per_segment(
-        cat, score, "doc_id long, score double", _COLS, _META, sorted(coefs)
+    return run_per_segment(
+        cat, score, "doc_id long, score double", _COLS, _META, sorted(coefs), top=k
     )
-    return per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
 def more_like_this(
@@ -569,12 +568,11 @@ def more_like_this(
     terms = [t for t, _ in ranked[: max(1, top_terms)]]
     if not terms:
         return local_frame(cat.spark, [], "doc_id long, score double")
+    # bm25_topk's rows are already in (score desc, doc_id asc) order;
+    # a filter and a limit keep it, and over a driver-placed result
+    # they fold into its LocalRelation (a sort there would be a job)
     out = bm25_topk(cat, terms, k=k + 1, mode="or")
-    return (
-        out.filter(F.col("doc_id") != int(doc_id))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+    return out.filter(F.col("doc_id") != int(doc_id)).limit(k)
 
 
 def bm25_topk_batch(
@@ -594,12 +592,11 @@ def bm25_topk_batch(
     into one by-path postings read per segment (same row-group-pruned
     read as a single query), the segment runs the one exact scorer over the whole
     batch — every key decodes ONCE and serves every query that names
-    it — with a per-(segment, query) top-k, then ONE window-ranked
-    global merge partitioned by query_id. Per-query output is rank- AND
+    it — with a per-(segment, query) top-k, then ONE global merge per
+    query_id (a pandas group-wise top-k on the driver, a Window in the
+    job placement). Per-query output is rank- AND
     score-identical to bm25_topk (same scorer, same sorted-key
     summation; pinned in pytest)."""
-    from pyspark.sql import Window
-
     spark = cat.spark
     stats = cat.corpus_stats()
     all_terms = sorted({t for ts in queries.values() for t in ts})
@@ -628,15 +625,7 @@ def bm25_topk_batch(
             post.assign(**meta), qb.value, k1, b, avgdl, k, mode, block, deleted
         )
 
-    per_seg = run_per_segment(
+    return run_per_segment(
         cat, score, "query_id string, doc_id long, score double", _COLS, _META,
-        [(field, t) for t in sorted(idfs)],
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        per_seg.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
+        [(field, t) for t in sorted(idfs)], top=k,
     )

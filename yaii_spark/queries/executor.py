@@ -2,10 +2,12 @@
 
 Two evaluation paths, chosen per subtree (SURVEY.md §7.1 M4):
 
-1. **Token-only subtrees** → per-segment numpy set algebra in one
-   ``mapInPandas`` job whose tasks read their own segments' postings,
-   seg_meta row and tombstones by path (run_per_segment; no join, no
-   shuffle): decoded posting arrays are
+1. **Token-only subtrees** → per-segment numpy set algebra over each
+   segment's postings, seg_meta row and tombstones, read by path
+   (run_per_segment; no join, no shuffle) — on the driver when the
+   query's postings number fewer than DRIVER_POSTINGS (a LocalRelation
+   result, no Spark job), else in one ``mapInPandas`` job: decoded
+   posting arrays are
    intersected/unioned/differenced exactly like the reference's
    DocIdIterable algebra (conjunction leads with the smallest-cost
    list — /root/reference/src/lib/internal/datastructs/
@@ -31,11 +33,11 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from yaii_spark.codec import delta_decode_blocked
 from yaii_spark.queries import ast as A
-from yaii_spark.storage import IndexCatalog, local_frame, postings_filter
+from yaii_spark.storage import IndexCatalog, column_frame, local_frame, postings_filter
 
 
 def _empty_ids(spark) -> DataFrame:
@@ -335,6 +337,16 @@ def _needs_universe(node: A.Node) -> bool:
     return False
 
 
+#: A query whose postings number fewer than this runs on the driver
+#: (run_per_segment); the count is Σ df over its (field, term) keys, cf
+#: for phrase keys, plus n_docs when it needs the universe. It sits at
+#: the phrase crossover with one Spark job that scripts/probe_placement.py
+#: measures (32,768-65,536 positions on a 4-core host; AND/OR cross at
+#: 131,072-262,144 postings), and it bounds the driver's memory for any
+#: k or limit.
+DRIVER_POSTINGS = 50_000
+
+
 def run_per_segment(
     cat: IndexCatalog,
     fn: Callable[[pd.DataFrame, dict, np.ndarray | None], pd.DataFrame],
@@ -344,16 +356,29 @@ def run_per_segment(
     field_terms: list[tuple[str, str]],
     scans: list | None = None,
     every_segment: bool = False,
+    pos_terms: set | frozenset = frozenset(),
+    top: int | None = None,
 ) -> DataFrame:
-    """Run ``fn(post, meta, deleted)`` per segment in one ``mapInPandas``
-    over ``cat.segment_files()`` — the single execution shape of every
-    boolean, phrase and BM25 query: one job, no shuffle, at most one
-    task per core over a contiguous run of segments. Each task reads
-    by path, per segment, `post`: its postings rows for `field_terms`
-    / `scans` (`columns` only, row-group pruned); `meta`: its seg_meta
-    row (`meta_columns`) as a dict; `deleted`: its tombstoned GLOBAL
-    doc ids (int64) or None. A segment without matching postings rows
-    is skipped unless `every_segment` (NOT/ALL universes)."""
+    """Run ``fn(post, meta, deleted)`` per segment over
+    ``cat.segment_file_list()`` — the single execution shape of every
+    boolean, phrase and BM25 query. Per segment, `post` is its postings
+    rows for `field_terms` / `scans` (`columns` only, row-group pruned);
+    `meta` its seg_meta row (`meta_columns`) as a dict; `deleted` its
+    tombstoned GLOBAL doc ids (int64) or None, all read by path with
+    pyarrow. A segment without matching postings rows is skipped unless
+    `every_segment` (NOT/ALL universes).
+
+    The same task body has two placements. A query of fewer than
+    DRIVER_POSTINGS postings (`pos_terms` are the keys whose positions
+    decode) runs it on the driver and returns one Arrow-built
+    LocalRelation: collecting it runs no Spark job. A larger query, and
+    any `scans` query (the dictionary has no count for it), runs it in
+    one ``mapInPandas`` job, no shuffle, at most one task per core over
+    a contiguous run of segments.
+
+    `top=k` keeps the k best rows by (score desc, doc_id asc), per
+    query_id when the schema has one: a numpy/pandas reduce on the
+    driver; TakeOrderedAndProject (or a query_id Window) in the job."""
     flt = postings_filter(field_terms, scans)
     tomb_files = cat.tombstone_files()  # never memoized: delete_docs appends
 
@@ -382,7 +407,32 @@ def run_per_segment(
                 (meta,) = read_files(list(meta_files), meta_columns).to_pylist()
                 yield fn(post, meta, deleted.get(seg))
 
-    return cat.segment_files().mapInPandas(task, schema)
+    size = sum(
+        cf if ft in pos_terms else df
+        for ft, (df, cf) in cat.term_stats_for(field_terms).items()
+    ) + (cat.corpus_stats().n_docs if every_segment else 0)
+    by = ["query_id"] if schema.startswith("query_id") else []
+    if scans or size >= DRIVER_POSTINGS:
+        out = cat.segment_files().mapInPandas(task, schema)
+        if top is None:
+            return out
+        order = [F.col("score").desc(), F.col("doc_id").asc()]
+        if not by:
+            return out.orderBy(*order).limit(top)
+        rank = F.row_number().over(Window.partitionBy(*by).orderBy(*order))
+        return out.withColumn("_rk", rank).filter(F.col("_rk") <= top).drop("_rk")
+    segs = pd.DataFrame(
+        cat.segment_file_list(), columns=["seg_id", "postings", "seg_meta"]
+    )
+    parts = list(task([segs] if len(segs) else []))
+    if not parts:
+        return local_frame(cat.spark, [], schema)
+    out = pd.concat(parts, ignore_index=True)
+    if top is not None:
+        asc = [True] * len(by) + [False, True]
+        out = out.sort_values(by + ["score", "doc_id"], ascending=asc)
+        out = out.groupby(by).head(top) if by else out.head(top)
+    return column_frame(cat.spark, {c: out[c].to_numpy() for c in out.columns}, schema)
 
 
 def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
@@ -429,7 +479,7 @@ def _eval_token_tree(cat: IndexCatalog, node: A.Node) -> DataFrame:
 
     return run_per_segment(
         cat, _eval, "doc_id long", cols, ["n_docs", "base_doc_id"],
-        terms, scans, every_segment=universe,
+        terms, scans, every_segment=universe, pos_terms=phrase_terms,
     )
 
 

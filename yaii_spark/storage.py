@@ -40,8 +40,9 @@ Postings files are (field, term)-sorted inside each seg_id partition.
 Frames the driver builds from Python lists (segment lists) are JVM
 LocalRelations (``local_frame``).
 
-Query tasks read their segments' files by path (``segment_files``,
-``read_files``, ``postings_filter``).
+Query tasks read their segments' files by path (``segment_file_list``,
+``read_files``, ``postings_filter``), inside a Spark task or on the
+driver (``executor.run_per_segment``).
 
 Index tables are read by ``read_index_table`` with the declared schema
 (no footer inference, so no Spark job per read, and seg_id reads back
@@ -122,15 +123,28 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     broadcast, a join, a write) runs without a Python task.
     ``spark.createDataFrame(<list>)`` builds a parallelized Python RDD
     instead, and each use of it launches Python workers."""
+    names = _ddl_schema(schema)[0].names
+    cols = {n: [r[i] for r in rows] for i, n in enumerate(names)}
+    return column_frame(spark, cols, schema)
+
+
+def column_frame(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
+    """``local_frame`` from columns (lists or numpy arrays by name): the
+    Arrow table is built column-wise, with no per-row Python object."""
     import pyarrow as pa
+
+    struct, arrow = _ddl_schema(schema)
+    return spark.createDataFrame(pa.Table.from_pydict(columns, schema=arrow), struct)
+
+
+@functools.cache
+def _ddl_schema(schema: str):
+    """(StructType, Arrow schema) of a DDL string, parsed once."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     struct = StructType.fromDDL(schema)
-    table = pa.Table.from_pylist(
-        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
-    )
-    return spark.createDataFrame(table, struct)
+    return struct, to_arrow_schema(struct)
 
 
 def read_files(paths: list[str], columns: list[str], filter=None):
@@ -472,7 +486,8 @@ class IndexCatalog:
         # Tombstones are deliberately NOT cached (delete_docs appends
         # between queries).
         self._tables: dict[str, DataFrame] = {}
-        self._seg_files: DataFrame | None = None
+        self._seg_files: list | None = None
+        self._seg_frame: DataFrame | None = None
         self._tomb_dir = None  # (Hadoop FileSystem, Path) of tombstones/
 
     def manifest(self) -> Manifest:
@@ -533,11 +548,22 @@ class IndexCatalog:
         return self._table_df("term_stats")
 
     def segment_files(self) -> DataFrame:
-        """(seg_id, postings files, seg_meta files) per live segment, a
-        ``local_frame`` from ``inputFiles()`` of the cached frames (no
-        job, no new listing) keyed by each file's ``seg_id=<n>``
-        directory; memoized like the frames. Files of segments the
-        manifest does not name are left out."""
+        """``segment_file_list()`` as a ``local_frame`` (memoized): the
+        input of a query's ``mapInPandas``."""
+        if self._seg_frame is None:
+            self._seg_frame = local_frame(
+                self.spark,
+                self.segment_file_list(),
+                "seg_id long, postings array<string>, seg_meta array<string>",
+            )
+        return self._seg_frame
+
+    def segment_file_list(self) -> list[tuple[int, list, list]]:
+        """(seg_id, postings files, seg_meta files) per live segment,
+        from ``inputFiles()`` of the cached frames (no job, no new
+        listing) keyed by each file's ``seg_id=<n>`` directory; memoized
+        like the frames. Files of segments the manifest does not name
+        are left out."""
         if self._seg_files is None:
             live = set(self.manifest().segments)
             by_seg: dict[int, tuple[list, list]] = {s: ([], []) for s in live}
@@ -547,11 +573,7 @@ class IndexCatalog:
                     seg = int(re.search(r"/seg_id=(-?\d+)/", f).group(1))
                     if seg in live:
                         by_seg[seg][i].append(f)
-            self._seg_files = local_frame(
-                self.spark,
-                [(s, *by_seg[s]) for s in sorted(by_seg)],
-                "seg_id long, postings array<string>, seg_meta array<string>",
-            )
+            self._seg_files = [(s, *by_seg[s]) for s in sorted(by_seg)]
         return self._seg_files
 
     def tombstones(self) -> DataFrame | None:

@@ -88,7 +88,8 @@ def _batch_ids(q: A.Node, pdf: pd.DataFrame, text_col: str) -> np.ndarray:
 def _matching_rows(df: DataFrame, query: A.Node, text_col: str) -> DataFrame:
     """The rows of `df` (a stream or a snapshot) that match `query`,
     with `df`'s schema: one mapInPandas keeps each Arrow batch's
-    _batch_ids rows."""
+    _batch_ids rows. A token, phrase or scan leaf on a field outside
+    DEFAULT_FIELDS raises ValueError."""
     q = A.rewrite(query)
     if any(isinstance(n, A.CachedFilter) for n in A.leaves(q)):
         raise TypeError(
@@ -96,6 +97,15 @@ def _matching_rows(df: DataFrame, query: A.Node, text_col: str) -> DataFrame:
             "batches (a new stream doc is never in a filter cached over "
             "committed postings); evaluate the underlying query instead"
         )
+    token_leaves = (A.Token, A.Phrase, A.TokenRange, A.TextContains)
+    for n in A.leaves(q):
+        if isinstance(n, token_leaves) and n.field_name not in DEFAULT_FIELDS:
+            # _batch_ids inverts only the default fields: any other
+            # field would match no row
+            raise ValueError(
+                f"field {n.field_name!r} is not one a stream batch is "
+                f"inverted into ({', '.join(sorted(DEFAULT_FIELDS))})"
+            )
 
     def task(batches):
         for pdf in batches:
