@@ -1,8 +1,9 @@
 """Per-segment query execution: every boolean, phrase and BM25 query
 runs one task body per segment (executor.run_per_segment), reading the
 segment's postings, seg_meta row and tombstones by path — on the driver
-for a query under executor.DRIVER_POSTINGS postings, else in one
-``mapInPandas`` job over the index's segments.
+for a query whose postings and files count under
+executor.DRIVER_POSTINGS, else in one ``mapInPandas`` job over the
+index's segments.
 
 These tests pin both placements on a 2-segment fixture (the result
 tests run under each, through the ``placement`` fixture):
@@ -19,9 +20,10 @@ tests run under each, through the ``placement`` fixture):
   with and without tombstones;
 - a warm boolean, phrase, exact BM25 and pruned BM25 query each runs
   no Spark job on the driver and exactly one as a job; a query at the
-  threshold, and a token-range or substring scan of any size, runs
-  one; a driver-placed BM25 with k above its match count returns every
-  match in (score desc, doc_id asc) order;
+  threshold (its postings and its files counted), and a token-range or
+  substring scan of any size, runs one; a driver-placed BM25 with k
+  above its match count returns every match in (score desc, doc_id
+  asc) order;
 - a table Spark lists no files for, or a path pyarrow cannot open,
   raises; segment directories outside the manifest are left out;
 - tombstone files are seg_id-ranged, so a task's min/max filter skips
@@ -274,23 +276,32 @@ def test_warm_query_job_count(spark, request, index, placement):
         assert first, name
 
 
-def test_query_at_threshold_runs_one_job(spark, fresh_index, monkeypatch):
-    """The placement counts a query's postings as Σ df over its keys,
-    cf for a phrase's keys (their positions decode), and n_docs more
-    for a NOT: at exactly DRIVER_POSTINGS the query runs one job, one
-    posting below it none."""
-    cat = IndexCatalog(spark, fresh_index)
+@pytest.mark.parametrize("index", ["fresh_index", "tombstoned_index"])
+def test_query_at_threshold_runs_one_job(spark, request, index, monkeypatch):
+    """The placement counts Σ df over a query's keys, df + cf for a
+    phrase's keys (their positions decode), n_docs more for a NOT, and
+    FILE_POSTINGS per postings, seg_meta and tombstone file: at exactly
+    DRIVER_POSTINGS the query runs one job, one below it none."""
+    cat = IndexCatalog(spark, request.getfixturevalue(index))
     stats = cat.term_stats_for(
         [("text", t) for t in ("common", "w3", "alpha", "beta", "w1")]
     )
     df = {t: v[0] for (_, t), v in stats.items()}
     cf = {t: v[1] for (_, t), v in stats.items()}
-    assert cf["alpha"] > df["alpha"]  # the phrase count really is cf
+    assert cf["alpha"] > df["alpha"]  # the phrase count really adds cf
+    n_files = len(cat.tombstone_files()) + sum(
+        len(p) + len(m) for _, p, m in cat.segment_file_list()
+    )
+    assert n_files >= 4 + (index == "tombstoned_index")
+    files = executor.FILE_POSTINGS * n_files
     cases = [
-        (WARM_QUERIES["boolean"], df["common"] + df["w3"]),
-        (WARM_QUERIES["phrase"], cf["alpha"] + cf["beta"]),
-        (WARM_QUERIES["bm25"], df["common"] + df["w3"]),
-        (lambda cat: execute_boolean(cat, QUERIES["not"]), df["w1"] + N_DOCS),
+        (WARM_QUERIES["boolean"], df["common"] + df["w3"] + files),
+        (WARM_QUERIES["phrase"], sum(df[t] + cf[t] for t in ("alpha", "beta")) + files),
+        (WARM_QUERIES["bm25"], df["common"] + df["w3"] + files),
+        (
+            lambda cat: execute_boolean(cat, QUERIES["not"]),
+            df["w1"] + cat.corpus_stats().n_docs + files,
+        ),
     ]
     for q, size in cases:
         want = q(cat).collect()

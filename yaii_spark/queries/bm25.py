@@ -14,11 +14,11 @@ postings, accumulates w·idf·norm into a dense per-segment array **in
 sorted-key order** (float determinism across parallelism levels —
 SURVEY.md §7.4.1) and takes a per-segment top-k; the global top-k by
 (score desc, doc_id asc) merges them, the reference's per-segment
-topBy + global topBy (base-inverted-index.ts:437-455). A query of
-fewer than executor.DRIVER_POSTINGS postings runs on the driver with
-a numpy merge and no Spark job; a larger one is one ``mapInPandas``
-job under Catalyst's TakeOrderedAndProject (a query_id Window for a
-batch).
+topBy + global topBy (base-inverted-index.ts:437-455). A query
+whose postings and files count below executor.DRIVER_POSTINGS runs on
+the driver with a numpy merge and no Spark job; a larger one is one
+``mapInPandas`` job under Catalyst's TakeOrderedAndProject (a query_id
+Window for a batch).
 
 Pruning: a MaxScore/block-max pass (`prune=True`, Ding & Suel 2011)
 skips non-essential term lists using per-block upper bounds derived at
@@ -543,7 +543,8 @@ def more_like_this(
 
     Everything driver-side is bounded by ONE document's size: the text
     collect is 1 row, the dictionary lookup ≤ |doc| terms. The scoring
-    pass is the existing distributed per-segment scorer."""
+    pass is bm25_topk's, on either placement of run_per_segment (the
+    driver or one Spark job)."""
     from collections import Counter
 
     from yaii_spark.analyzer import tokenize
@@ -613,16 +614,13 @@ def bm25_topk_batch(
         for q, ts in queries.items()
         if mode != "and" or all(t in idfs for t in ts)
     }
-    # explicit broadcast variable, not task-closure capture: at the
-    # thousands-of-query workloads this function is for, the query
-    # structures are re-serialized into EVERY task closure (once per
-    # task, per stage) when captured — a broadcast ships them to each
-    # executor once and the closure carries only the handle
-    qb = spark.sparkContext.broadcast(batch)
+    # captured, not an explicit broadcast: the driver placement ships
+    # nothing, and in the job PySpark broadcasts a pickled function
+    # larger than spark.broadcast.UDFCompressionThreshold (1 MiB) itself
 
     def score(post: pd.DataFrame, meta: dict, deleted: np.ndarray | None) -> pd.DataFrame:
         return _score_segment(
-            post.assign(**meta), qb.value, k1, b, avgdl, k, mode, block, deleted
+            post.assign(**meta), batch, k1, b, avgdl, k, mode, block, deleted
         )
 
     return run_per_segment(

@@ -5,9 +5,9 @@ Two evaluation paths, chosen per subtree (SURVEY.md §7.1 M4):
 1. **Token-only subtrees** → per-segment numpy set algebra over each
    segment's postings, seg_meta row and tombstones, read by path
    (run_per_segment; no join, no shuffle) — on the driver when the
-   query's postings number fewer than DRIVER_POSTINGS (a LocalRelation
-   result, no Spark job), else in one ``mapInPandas`` job: decoded
-   posting arrays are
+   query's postings and files count below DRIVER_POSTINGS (a
+   LocalRelation result, no Spark job), else in one ``mapInPandas``
+   job: decoded posting arrays are
    intersected/unioned/differenced exactly like the reference's
    DocIdIterable algebra (conjunction leads with the smallest-cost
    list — /root/reference/src/lib/internal/datastructs/
@@ -337,14 +337,21 @@ def _needs_universe(node: A.Node) -> bool:
     return False
 
 
-#: A query whose postings number fewer than this runs on the driver
-#: (run_per_segment); the count is Σ df over its (field, term) keys, cf
-#: for phrase keys, plus n_docs when it needs the universe. It sits at
-#: the phrase crossover with one Spark job that scripts/probe_placement.py
-#: measures (32,768-65,536 positions on a 4-core host; AND/OR cross at
-#: 131,072-262,144 postings), and it bounds the driver's memory for any
-#: k or limit.
-DRIVER_POSTINGS = 50_000
+#: A query runs on the driver (run_per_segment) while its count stays
+#: below DRIVER_POSTINGS: Σ df over its (field, term) keys, df + cf for
+#: a phrase key (its positions decode too), n_docs more when it needs
+#: the universe, and FILE_POSTINGS per file the task body opens
+#: (postings, seg_meta and tombstone files: on the driver one after
+#: another, in the job spread over the cores). scripts/probe_placement.py
+#: on a 4-core host puts the crossover with one Spark job at
+#: 131,072-262,144 postings for AND/OR, 65,536-131,072 positions for a
+#: phrase (so df + cf: 131,072-262,144), and 32-64 files for a query of
+#: a few hundred postings; BM25 top-10 (a 10-row result) stays cheaper
+#: on the driver up to about 10**6 postings and knowingly runs as a job
+#: from DRIVER_POSTINGS on. The count also bounds the driver's memory
+#: for any k or limit.
+DRIVER_POSTINGS = 131_072
+FILE_POSTINGS = 2_048
 
 
 def run_per_segment(
@@ -368,9 +375,9 @@ def run_per_segment(
     pyarrow. A segment without matching postings rows is skipped unless
     `every_segment` (NOT/ALL universes).
 
-    The same task body has two placements. A query of fewer than
-    DRIVER_POSTINGS postings (`pos_terms` are the keys whose positions
-    decode) runs it on the driver and returns one Arrow-built
+    The same task body has two placements. A query whose postings and
+    files count below DRIVER_POSTINGS (`pos_terms` are the keys whose
+    positions decode) runs it on the driver and returns one Arrow-built
     LocalRelation: collecting it runs no Spark job. A larger query, and
     any `scans` query (the dictionary has no count for it), runs it in
     one ``mapInPandas`` job, no shuffle, at most one task per core over
@@ -407,10 +414,12 @@ def run_per_segment(
                 (meta,) = read_files(list(meta_files), meta_columns).to_pylist()
                 yield fn(post, meta, deleted.get(seg))
 
+    seg_files = cat.segment_file_list()
+    n_files = len(tomb_files) + sum(len(p) + len(m) for _, p, m in seg_files)
     size = sum(
-        cf if ft in pos_terms else df
+        df + (cf if ft in pos_terms else 0)
         for ft, (df, cf) in cat.term_stats_for(field_terms).items()
-    ) + (cat.corpus_stats().n_docs if every_segment else 0)
+    ) + (cat.corpus_stats().n_docs if every_segment else 0) + FILE_POSTINGS * n_files
     by = ["query_id"] if schema.startswith("query_id") else []
     if scans or size >= DRIVER_POSTINGS:
         out = cat.segment_files().mapInPandas(task, schema)
@@ -421,9 +430,7 @@ def run_per_segment(
             return out.orderBy(*order).limit(top)
         rank = F.row_number().over(Window.partitionBy(*by).orderBy(*order))
         return out.withColumn("_rk", rank).filter(F.col("_rk") <= top).drop("_rk")
-    segs = pd.DataFrame(
-        cat.segment_file_list(), columns=["seg_id", "postings", "seg_meta"]
-    )
+    segs = pd.DataFrame(seg_files, columns=["seg_id", "postings", "seg_meta"])
     parts = list(task([segs] if len(segs) else []))
     if not parts:
         return local_frame(cat.spark, [], schema)
